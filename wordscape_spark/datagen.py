@@ -450,10 +450,6 @@ def ensure_interleaved(sf: float, base_dir: os.PathLike | str = BASE_DIR) -> str
     return str(out)
 
 
-def interleaved_path_for(sf_dir: str) -> str:
-    return ensure_interleaved(sf_from_dir(sf_dir))
-
-
 if __name__ == "__main__":
     import sys
 

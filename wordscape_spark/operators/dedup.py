@@ -189,12 +189,16 @@ def minhash_duplicate_pairs(
                         .withColumnRenamed("sh", "sh_a"), "doc_a")
         .join(sh.withColumnRenamed("doc_id", "doc_b")
               .withColumnRenamed("sh", "sh_b"), "doc_b")
+        # sh is array_distinct'd, so |A∪B| = |A|+|B|−|A∩B|: one hash-set
+        # operation per pair, its size bound once via the
+        # single-element-array lambda trick
         .withColumn(
             "jaccard",
             F.expr(
-                "round(CASE WHEN size(array_union(sh_a, sh_b)) = 0 THEN 0D "
-                "ELSE CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE) / "
-                "size(array_union(sh_a, sh_b)) END, 6)"
+                "round(transform(array(size(array_intersect(sh_a, sh_b))), "
+                "i -> CASE WHEN size(sh_a) + size(sh_b) - i = 0 THEN 0D "
+                "ELSE CAST(i AS DOUBLE) / (size(sh_a) + size(sh_b) - i) "
+                "END)[0], 6)"
             ),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -344,78 +348,93 @@ def simhash_expr_duck(text_col: str) -> str:
 def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     """Connected components over near-duplicate pairs → (doc_id, cluster_id).
 
-    cluster_id = the smallest doc_id reachable through duplicate edges
-    (min-label propagation, a.k.a. hash-to-min).  Each iteration is one
-    self-join + aggregate, converging in O(diameter) rounds — duplicate
-    clusters are tiny in practice, so 2-3 rounds.  The loop runs on the
-    driver but all data stays distributed (no collect); iteration count is
-    checked with a single count() per round on an aggregated (small) frame.
+    cluster_id = the smallest doc_id (string order for string ids) in the
+    doc's component, for every doc that appears in at least one pair.
 
-    Each round truncates lineage with an eager ``localCheckpoint`` —
-    ``labels`` is referenced twice per iteration (neighbor join + change
-    probe), so without truncation the *logical plan* doubles every round
-    and Catalyst analysis goes exponential (a 2 GB plan string by round
-    ~20) even though the data itself is cached.  ``localCheckpoint``
-    stores the materialized partitions and replaces the plan with a leaf;
-    on a real cluster with executor loss, set ``spark.checkpoint.dir``
-    and switch to ``checkpoint()`` for replayability — the label frame is
-    (doc_id, cluster_id) over duplicate docs only, so it is small either
-    way.
+    Lineage is truncated once, at entry: the symmetric edge frame (plus one
+    self-loop per doc) is built from ``pairs`` and eagerly
+    ``localCheckpoint``-ed, so every round plans over a leaf instead of
+    the caller's whole pair-generation plan.  The labels start at the
+    first hop — each doc's smallest closed neighbour, one aggregate over
+    that leaf.  Each round then
 
-    Raises RuntimeError when the label propagation has not converged after
-    ``max_iterations`` (a duplicate chain longer than the budget) rather
-    than silently returning split clusters.
+    * hops: m(v) = the smallest label in v's closed neighbourhood;
+    * hooks: v and its label L(v) both take m(v), so a whole labelled tree
+      joins a smaller neighbour at once (Shiloach–Vishkin / Liu–Tarjan
+      parent-connect);
+    * jumps pointers: L(v) ← L(L(v)).
+
+    The round's labels and a per-doc change flag are one eager
+    ``localCheckpoint``, and the convergence probe reads only that flag.
+    Without the hook, hop + jump alone needs hundreds of rounds on a
+    1024-doc chain whose ids are in random order; with it a component of
+    n docs settles in O(log n) rounds — at most ⌈log2 n⌉, counting the
+    round that finds no change, on chains, trees, cycles, grids and random
+    graphs of up to 4096 docs in any id order (a pure-Python simulation of
+    these rounds).  A pair, or any cluster whose smallest doc duplicates
+    all the others, settles in the first round.
+
+    Only the round loop and its probe run in Python; all data stays
+    distributed (no collect).  The checkpoints are executor-local; on a
+    cluster that loses executors, set ``spark.checkpoint.dir`` and use
+    ``checkpoint()`` for replayability — both frames cover duplicate docs
+    only.
+
+    Raises RuntimeError when the labels have not converged after
+    ``max_iterations`` rounds rather than silently returning split
+    clusters.
     """
+    a, b = F.col("doc_a"), F.col("doc_b")
     edges = (
-        pairs.selectExpr("doc_a AS a", "doc_b AS b")
-        .unionByName(pairs.selectExpr("doc_b AS a", "doc_a AS b"))
+        pairs.select(F.inline(F.array(*[
+            F.struct(x.alias("v"), y.alias("w"))
+            for x, y in ((a, b), (b, a), (a, a), (b, b))
+        ])))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
-    # initial label: own id
-    labels = (
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .persist()
+    labels = edges.groupBy(F.col("v").alias("doc_id")).agg(
+        F.min("w").alias("cluster_id")
     )
-    changed = 0
     for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["doc_id"])
-            .groupBy(edges["a"].alias("doc_id"))
-            .agg(F.min("cluster_id").alias("neighbor_cluster"))
+        # the self-loop row carries v's own label as prev
+        hop = (
+            edges.join(labels.withColumnRenamed("doc_id", "w"), "w")
+            .groupBy("v")
+            .agg(
+                F.min("cluster_id").alias("m"),
+                F.min(
+                    F.when(F.col("v") == F.col("w"), F.col("cluster_id"))
+                ).alias("prev"),
+            )
         )
-        new_labels = (
-            labels.join(neighbor_min, "doc_id", "left")
+        # a hook row's prev is its target x = L(v) ≥ L(x), so the min
+        # over x's rows keeps prev = L(x)
+        hooked = (
+            hop.select(F.inline(F.array(
+                F.struct(F.col("v").alias("doc_id"), "m", "prev"),
+                F.struct(F.col("prev").alias("doc_id"), "m", "prev"),
+            )))
+            .groupBy("doc_id")
+            .agg(F.min("m").alias("cluster_id"), F.min("prev").alias("prev"))
+        )
+        p, q = hooked.alias("p"), hooked.alias("q")
+        labels = (
+            p.join(q, F.col("p.cluster_id") == F.col("q.doc_id"))
             .select(
-                "doc_id",
-                F.least(
-                    "cluster_id",
-                    F.coalesce("neighbor_cluster", "cluster_id"),
-                ).alias("cluster_id"),
+                F.col("p.doc_id").alias("doc_id"),
+                F.col("q.cluster_id").alias("cluster_id"),
+                (F.col("q.cluster_id") != F.col("p.prev")).alias("changed"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter("n.cluster_id != o.cluster_id")
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iterations} "
-            "iterations — raise max_iterations (a duplicate chain longer "
-            "than the budget exists)"
-        )
-    return labels
+        if labels.filter("changed").isEmpty():
+            return labels.select("doc_id", "cluster_id")
+    raise RuntimeError(
+        f"duplicate_clusters did not converge in {max_iterations} "
+        "iterations — raise max_iterations (a duplicate component larger "
+        "than the budget allows exists)"
+    )
 
 
 def keep_cluster_representatives(

@@ -29,10 +29,6 @@ def remap_kinds(
     return spans.withColumn("kind", F.expr(expr))
 
 
-def drop_classes(spans: DataFrame, drop: tuple[str, ...]) -> DataFrame:
-    return spans.filter(~F.col("kind").isin(list(drop)))
-
-
 def class_minimum_filter(spans: DataFrame, min_count: int) -> DataFrame:
     """Keep only classes with at least ``min_count`` spans corpus-wide —
     one tiny aggregate broadcast back (never a window over all spans)."""

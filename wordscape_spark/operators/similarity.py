@@ -535,7 +535,8 @@ def semantic_dedup(
     corpus scale: the pair join is an equi-join on the cell id, never a
     full cross join).  Plan shape: one scan for assignment (native
     expression), a cell-keyed self-join bounded by cell size, then the
-    O(diameter) min-label rounds of ``duplicate_clusters``.
+    O(log n) hop/hook/pointer-jump rounds of ``duplicate_clusters`` over
+    its checkpointed edge frame.
 
     ``nlist`` defaults to ``semantic_nlist(corpus.count())`` — cells sized
     for ~10^3 docs each.  Cells that still exceed ``max_cell_size`` (skewed

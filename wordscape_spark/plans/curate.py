@@ -16,8 +16,10 @@ Scale shape (100 TB):
 * exact dedup aggregates (bytehash, doc_id) only and rejoins by doc_id —
   the text column never shuffles for it;
 * near-dedup shuffles MinHash signatures and band keys, never text
-  (operators/dedup.py scale notes); cluster labels are (doc_id,
-  cluster_id) over duplicate docs only;
+  (operators/dedup.py scale notes); the cluster stage checkpoints the
+  verified pairs once as a symmetric edge frame, which cuts the upstream
+  lineage, then labels components in O(log n) rounds over that leaf.
+  Its labels are (doc_id, cluster_id) over duplicate docs only;
 * the token budget is the stream-decomposed window (no per-language
   single-partition sort — operators/shaping.py);
 * each stage consumes the previous one lazily.  The funnel table
