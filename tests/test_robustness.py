@@ -1,0 +1,142 @@
+"""Adversarial-but-legal inputs: every case either matches the single-pass
+oracle or fails with a named error — never a task failure."""
+
+import dataclasses
+import random
+import re
+
+import pytest
+
+from wordscape_spark import datagen
+from wordscape_spark.config import DEFAULT_CONFIG
+from wordscape_spark.operators import extract as X
+from wordscape_spark.operators import similarity as SIM
+
+SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+
+# every doc below has more than salt_threshold spans, so SALTED sends all
+# of them down the chunked mega-doc path and SMALL sends none
+SALTED = dataclasses.replace(
+    DEFAULT_CONFIG, salt_threshold=8, salt_chunk_spans=6, max_doc_spans=100
+)
+SMALL = dataclasses.replace(SALTED, salt_threshold=DEFAULT_CONFIG.salt_threshold)
+
+
+@pytest.fixture(scope="module")
+def base_spans():
+    """An ordinary generated doc that classifies ok, 40-80 spans long."""
+    import pyarrow.parquet as pq
+
+    for row in pq.read_table(datagen.ensure_interleaved(0.001)).to_pylist():
+        spans = [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in row["spans"]
+        ]
+        if 40 <= len(spans) <= 80 and X._safe_classify_tuples(spans, SALTED).ok:
+            return spans
+    pytest.fail("no 40-80 span doc that classifies ok in the fixture")
+
+
+@pytest.fixture(scope="module")
+def mega_docs(base_spans):
+    n = len(base_spans)
+    null_kind = list(base_spans)
+    null_kind[n // 2] = (None,) + null_kind[n // 2][1:]
+    shuffled = list(base_spans)
+    random.Random(7).shuffle(shuffled)
+    return {
+        "control": base_spans,
+        "null_kind": null_kind,
+        "null_text": [
+            (k, None if i % 3 == 0 else t, m, o)
+            for i, (k, t, m, o) in enumerate(base_spans)
+        ],
+        # three copies back to back: over SALTED.max_doc_spans
+        "oversized": [
+            (k, t, m, o + c * n) for c in range(3) for k, t, m, o in base_spans
+        ],
+        # offsets arrive out of order
+        "shuffled": shuffled,
+    }
+
+
+def _surface(ok, reject_reason, spans, text):
+    return ok, reject_reason, [tuple(s) for s in spans], text
+
+
+def _extracted(spark, docs, cfg):
+    df = spark.createDataFrame(list(docs.items()), SCHEMA)
+    return {
+        r["doc_id"]: _surface(
+            r["ok"], r["reject_reason"],
+            [(s["kind"], s["text"], s["media_ref"], s["offset"])
+             for s in r["spans"]],
+            r["text"],
+        )
+        for r in X.extract(df, cfg).collect()
+    }
+
+
+def test_salted_adversarial_docs_match_small_path_and_oracle(spark, mega_docs):
+    oracle = {}
+    for doc_id, spans in mega_docs.items():
+        res = X._safe_classify_tuples(spans, SALTED)
+        oracle[doc_id] = _surface(res.ok, res.reject_reason, res.spans, res.text)
+    # each case exercises what it claims
+    assert len(mega_docs["oversized"]) > SALTED.max_doc_spans
+    assert oracle["oversized"][1] == "too_many_spans"
+    assert oracle["null_kind"][1].startswith("error:")
+    assert oracle["control"][0] and oracle["shuffled"][0]
+    assert oracle["shuffled"] == oracle["control"]
+
+    assert _extracted(spark, mega_docs, SALTED) == oracle
+    assert _extracted(spark, mega_docs, SMALL) == oracle
+
+
+def test_salted_null_spans_behind_n_spans_rejects(spark):
+    """A maintained n_spans column can route a NULL spans array to the
+    salted path; it must come back as the small path's null_spans reject,
+    not fail the chunk task."""
+    df = spark.createDataFrame(
+        [("nullish", None, 50)], SCHEMA + ", n_spans int"
+    )
+    for fn in (X.extract, X.extract_slim):
+        got = [(r["doc_id"], r["ok"], r["reject_reason"])
+               for r in fn(df, SALTED).collect()]
+        assert got == [("nullish", False, "null_spans")], fn.__name__
+
+
+def test_salted_branch_plan_shape(spark, mega_docs):
+    """chunk → salt shuffle → classify → merge: three Python nodes, no
+    cached frame and no broadcast join."""
+    df = spark.createDataFrame(list(mega_docs.items()), SCHEMA)
+    plan = (
+        X._extract_salted(df, SALTED)._jdf.queryExecution()
+        .executedPlan().toString()
+    )
+    python_nodes = re.findall(
+        r"\b(?:MapInPandas|MapInArrow|FlatMapGroupsIn(?:Pandas|Arrow)|"
+        r"(?:Arrow|Batch)EvalPython)\b",
+        plan,
+    )
+    assert sorted(python_nodes) == [
+        "FlatMapGroupsInPandas", "MapInPandas", "MapInPandas"
+    ], plan
+    assert "InMemory" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
+def test_ann_query_side_over_bound_raises(spark, monkeypatch):
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    monkeypatch.setattr(SIM, "_MAX_QUERY_ROWS", 5)
+    with pytest.raises(SIM.QuerySideTooLarge, match="more than 5 rows"):
+        SIM.brute_force_topk(emb, emb, k=2)
+    # at the bound the query side is still accepted
+    monkeypatch.setattr(SIM, "_MAX_QUERY_ROWS", 6)
+    assert len(SIM.brute_force_topk(emb, emb, k=2).collect()) == 12

@@ -382,11 +382,6 @@ def _doc_content(
     )
 
 
-def extract_doc_text(data: bytes) -> str:
-    """Main-document text of a .doc byte string (piece-table reassembly)."""
-    return _doc_content(data)[0]
-
-
 def _fc_of_cp(cp: int, piece_map: list) -> int | None:
     """CP → real WordDocument-stream byte offset through the piece table."""
     for cp_s, cp_e, byte_off, bpc in piece_map:

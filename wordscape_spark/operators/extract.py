@@ -3,19 +3,24 @@
 Execution strategy (designed for 10^12-row scale):
 
 * The input table has one row per document, so the normal path is a pure
-  ``mapInPandas`` — **zero shuffle**: each Arrow batch of documents is
-  classified independently.  (The reference's per-document two-pass heuristic
-  would force a ``groupBy(doc_id)`` only if spans arrived exploded.)
-* Skewed mega-documents (``size(spans) > cfg.salt_threshold``) would stall a
-  task the way one huge doc stalls a reference worker (SURVEY §4.1).  They
-  take the *salted path*: spans are chunked at element boundaries, the
-  per-document font-heuristic state (which is additive per paragraph) is
-  computed per chunk and merged, broadcast-joined back to the chunks, chunks
-  are classified in parallel, and partial results are re-merged in chunk
-  order.  Results are bit-identical to the single-pass path (tested).
-* Oversized documents are rejected *natively* (``F.size < …``) before any
-  Python executes — the cheap-gate-first ordering the reference hand-rolls
-  (annotator_process.py:292-319) expressed as Catalyst-visible predicates.
+  ``mapInArrow`` kernel — **zero shuffle**: each Arrow batch of documents is
+  decoded column-wise and classified independently.  (The reference's
+  per-document two-pass heuristic would force a ``groupBy(doc_id)`` only if
+  spans arrived exploded.)
+* Skewed mega-documents (more than ``cfg.salt_threshold`` spans) would
+  stall a task the way one huge doc stalls a reference worker (SURVEY
+  §4.1).  They take the *salted path*: a ``mapInPandas`` task chunks each
+  mega-doc at element boundaries and computes the doc's font-heuristic
+  state (additive per paragraph, so one pass in chunk order), which rides
+  on every chunk row; a ``repartition`` over (doc_id, chunk_idx) spreads
+  the chunks over the cluster (the salt); a second ``mapInPandas``
+  classifies chunks in parallel, and a grouped ``applyInPandas`` re-merges
+  the partial results in chunk order.  Results are bit-identical to the
+  single-pass path (tested).
+* Oversized documents (more than ``cfg.max_doc_spans`` spans) are rejected
+  inside the Python pass that first sees them — the kernel
+  (``classify_document``) or the chunk UDF — before any classification
+  work, so the gate costs no extra scan of the input.
 """
 
 from __future__ import annotations
@@ -134,13 +139,6 @@ _CHUNK_SCHEMA = StructType(
     ]
 )
 
-_FONTMAP_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("font_state", StringType()),
-    ]
-)
-
 _PARTIAL_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -190,9 +188,11 @@ def _result_row(doc_id: str, res: C.DocResult, metrics=None) -> dict:
     # passes over multi-MB mega-doc texts straggle; see operators/text.py
     # metrics_exprs for the SQL-side twin used by the oracle.)  Batch callers
     # pass precomputed ``metrics`` (one vectorized text_metrics_batch pass
-    # per Arrow batch instead of two regex subs + a translate per doc).
+    # per Arrow batch instead of two regex subs + a translate per doc); the
+    # salted merge passes none, and the vectorized pass over its one
+    # mega-doc text is still ~6x faster than the scalar form.
     if metrics is None:
-        metrics = C.text_metrics(res.text if res.ok else "")
+        metrics = C.text_metrics_batch([res.text if res.ok else ""])[0]
     return {
         "doc_id": doc_id,
         "ok": res.ok,
@@ -213,38 +213,6 @@ def _result_row(doc_id: str, res: C.DocResult, metrics=None) -> dict:
         "alnum_prop": float(metrics["alnum_prop"]),
         "alph_to_num_ratio": float(metrics["alph_to_num_ratio"]),
     }
-
-
-def _safe_classify(spans, cfg: ExtractConfig) -> C.DocResult:
-    """Per-document fault isolation: a malformed document becomes a reject
-    row instead of failing the task (the reference's failed_*.jsonl model,
-    annotator_process.py:199-282 — at 10^12 rows one bad doc must never
-    kill a job)."""
-    if spans is None:
-        # NULL spans array (producer wrote a null, not []): a distinct
-        # marker, not error:TypeError from inside the classifier
-        return C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
-    try:
-        return C.classify_document(_spans_to_tuples(spans), cfg)
-    except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
-        return C.DocResult(
-            False, f"error:{type(exc).__name__}", [], "", {}, 0.0, {}
-        )
-
-
-def _make_classify_fn(cfg: ExtractConfig):
-    def classify_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _result_row(doc_id, _safe_classify(spans, cfg))
-                for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-            ]
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return classify_batches
 
 
 def _slim_record_batch(results, arrow_schema):
@@ -548,7 +516,10 @@ def _make_classify_arrow_fn(
 def _safe_classify_tuples(
     tuples: list[tuple], cfg: ExtractConfig
 ) -> C.DocResult:
-    """_safe_classify for pre-built (kind, text, media_ref, offset) tuples
+    """Per-document fault isolation: a malformed document becomes a reject
+    row instead of failing the task (the reference's failed_*.jsonl model,
+    annotator_process.py:199-282 — at 10^12 rows one bad doc must never
+    kill a job).  Takes pre-built (kind, text, media_ref, offset) tuples
     (the flat-child Arrow decode path)."""
     try:
         return C.classify_document(tuples, cfg)
@@ -559,7 +530,8 @@ def _safe_classify_tuples(
 
 
 def _safe_classify_rows(spans: list[dict], cfg: ExtractConfig) -> C.DocResult:
-    """_safe_classify for plain list-of-dict spans (Arrow to_pylist form)."""
+    """_safe_classify_tuples for plain list-of-dict spans (Arrow to_pylist
+    form); a NULL spans array is a distinct ``null_spans`` reject."""
     if spans is None:
         return C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
     try:
@@ -618,11 +590,15 @@ def _chunk_spans(spans: list[tuple], target: int) -> list[list[tuple]]:
     return chunks
 
 
-def _font_state_of(elements: list, cfg: ExtractConfig) -> str:
+def _font_state_of(chunks: list[list[tuple]], cfg: ExtractConfig) -> str:
+    """The document's font-heuristic state as JSON.  The state is additive
+    over paragraphs in document order, so one pass over the chunks' elements
+    in chunk order yields exactly the single-pass state."""
     h = C.FontHeuristics(cfg)
-    for el in elements:
-        if isinstance(el, C.BodyPar):
-            h._evaluate_paragraph(el)
+    for chunk in chunks:
+        for el in C.parse_elements(chunk):
+            if isinstance(el, C.BodyPar):
+                h._evaluate_paragraph(el)
     return json.dumps(
         {
             "counts": h.font_size_count,
@@ -633,71 +609,44 @@ def _font_state_of(elements: list, cfg: ExtractConfig) -> str:
 
 
 def _make_chunk_fn(cfg: ExtractConfig):
+    """Split each mega-doc into chunks and put the whole doc's font state on
+    every chunk row.  A doc that cannot be chunked becomes one marker row
+    (``chunk_idx`` -1, ``REJ:``/``ERR:`` state), resolved at the merge."""
+
     def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                if len(spans) > cfg.max_doc_spans:
+                marker = None
+                if spans is None:
+                    # NULL spans behind a maintained n_spans: same reject
+                    # as the small path
+                    marker = "REJ:null_spans"
+                elif len(spans) > cfg.max_doc_spans:
                     # oversized-doc gate (B1/C1 analog): reject without
-                    # classifying — marker chunk, resolved at merge
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_idx": -1,
-                            "spans": [],
-                            "font_state": "REJ:too_many_spans",
-                        }
-                    )
-                    continue
-                try:
-                    tuples = _spans_to_tuples(spans)
-                    doc_rows = []
-                    for idx, chunk in enumerate(
-                        _chunk_spans(tuples, cfg.salt_chunk_spans)
-                    ):
-                        elements = C.parse_elements(chunk)
-                        doc_rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "chunk_idx": idx,
-                                "spans": _spans_to_rows(chunk),
-                                "font_state": _font_state_of(elements, cfg),
-                            }
+                    # classifying
+                    marker = "REJ:too_many_spans"
+                else:
+                    try:
+                        chunks = _chunk_spans(
+                            _spans_to_tuples(spans), cfg.salt_chunk_spans
                         )
-                    rows.extend(doc_rows)
-                except Exception as exc:  # noqa: BLE001 — fault isolation
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_idx": -1,
-                            "spans": [],
-                            "font_state": f"ERR:{type(exc).__name__}",
-                        }
-                    )
+                        state = _font_state_of(chunks, cfg)
+                    except Exception as exc:  # noqa: BLE001 — fault isolation
+                        marker = f"ERR:{type(exc).__name__}"
+                if marker is not None:
+                    rows.append({"doc_id": doc_id, "chunk_idx": -1,
+                                 "spans": [], "font_state": marker})
+                    continue
+                rows.extend(
+                    {"doc_id": doc_id, "chunk_idx": idx,
+                     "spans": _spans_to_rows(chunk), "font_state": state}
+                    for idx, chunk in enumerate(chunks)
+                )
             if rows:
                 yield pd.DataFrame(rows)
 
     return chunk_batches
-
-
-def _merge_font_states(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("chunk_idx")  # insertion order must match 1-pass
-    counts: dict[str, int] = {}
-    apps: dict[str, int] = {}
-    tracker: list = []
-    for state_json in pdf["font_state"]:
-        if state_json.startswith(("ERR:", "REJ:")):
-            return pd.DataFrame(
-                [{"doc_id": key[0], "font_state": state_json}]
-            )
-        st = json.loads(state_json)
-        for k, v in st["counts"].items():
-            counts[k] = counts.get(k, 0) + v
-        for k, v in st["apps"].items():
-            apps[k] = apps.get(k, 0) + v
-        tracker.extend(st["tracker"])
-    merged = json.dumps({"counts": counts, "apps": apps, "tracker": tracker})
-    return pd.DataFrame([{"doc_id": key[0], "font_state": merged}])
 
 
 def _heuristics_from_state(state_json: str, cfg: ExtractConfig) -> C.FontHeuristics:
@@ -721,7 +670,7 @@ def _make_chunk_classify_fn(cfg: ExtractConfig):
         for pdf in batches:
             rows = []
             for doc_id, chunk_idx, spans, state in zip(
-                pdf["doc_id"], pdf["chunk_idx"], pdf["spans"], pdf["doc_font_state"]
+                pdf["doc_id"], pdf["chunk_idx"], pdf["spans"], pdf["font_state"]
             ):
                 try:
                     if state.startswith(("ERR:", "REJ:")) or chunk_idx < 0:
@@ -887,7 +836,11 @@ def ensure_parallelism(
     File scans — the only input kind that exists at 100 TB — are already
     split by the session confs (``spark.sql.files.minPartitionNum`` ≥ cores,
     ``maxPartitionBytes``), and AQE coalesces over-splitting at runtime, so
-    no dynamic check is needed: this is a no-op.  For non-file inputs
+    no dynamic check is needed: this is a no-op.  Those confs cannot split
+    below one parquet row group, the smallest scan split: a file written as
+    one row group (the ``curate`` benchmark input) is read by one task, so
+    every narrow stage over it — the quality gate, the MinHash signatures —
+    runs on one busy task while the other cores idle.  For non-file inputs
     (in-memory test frames, post-aggregation locals) pass ``min_partitions``
     to force an explicit round-robin repartition."""
     if min_partitions is not None:
@@ -952,31 +905,31 @@ def _extract_salted(
     row_fn=_result_row,
     out_schema: StructType = EXTRACTED_SCHEMA,
 ) -> DataFrame:
-    """The salted mega-doc path: chunk → merge font state → broadcast join
-    → classify → merge partials.  The groupBy keys are mega-doc ids only
-    (few), so the shuffles here touch a tiny fraction of the data.  The
-    chunk stage is persisted: it feeds both the font-state merge and the
-    classify join, and would otherwise be recomputed per consumer.
+    """The salted mega-doc path: chunk → salt shuffle → classify → merge
+    partials, three Python stages and two shuffles.
+
+    The chunk task holds the whole doc and parses every chunk anyway, so it
+    also computes the doc's font state and puts it on every chunk row: no
+    per-chunk states to merge, no join back to the chunks, and no persist
+    of a frame read twice.  The salt shuffle is sized to
+    ``defaultParallelism``: a count-less ``repartition`` is coalesced by AQE
+    into one task for a few small chunk rows (the whole point of salting
+    lost), a fixed count leaves tasks empty on small clusters, and one task
+    per core spreads a doc's chunks over the cluster.  The merge groups by
+    mega-doc id only (few), so the shuffles touch a tiny fraction of the
+    data.
 
     ``row_fn``/``out_schema`` choose the output surface (full vs slim) at
     the final merge, so slim consumers never pay the fat Arrow return leg
     even for mega-docs."""
-    chunks = (
+    classified = (
         ensure_parallelism(big.select("doc_id", "spans"))
         .mapInPandas(_make_chunk_fn(cfg), schema=_CHUNK_SCHEMA)
         # spread one doc's chunks across the cluster — this IS the salt
-        .repartition("doc_id", "chunk_idx")
-        .persist()
-    )
-    font_maps = (
-        chunks.select("doc_id", "chunk_idx", "font_state")
-        .groupBy("doc_id")
-        .applyInPandas(_merge_font_states, schema=_FONTMAP_SCHEMA)
-        .withColumnRenamed("font_state", "doc_font_state")
-    )
-    classified = (
-        chunks.drop("font_state")
-        .join(F.broadcast(font_maps), "doc_id")
+        .repartition(
+            big.sparkSession.sparkContext.defaultParallelism,
+            "doc_id", "chunk_idx",
+        )
         .mapInPandas(_make_chunk_classify_fn(cfg), schema=_PARTIAL_SCHEMA)
     )
     return classified.groupBy("doc_id").applyInPandas(

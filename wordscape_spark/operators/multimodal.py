@@ -123,23 +123,6 @@ def media_table(docs: DataFrame) -> DataFrame:
     return figs.mapInArrow(gen_bytes, schema=MEDIA_SCHEMA)
 
 
-def _surrogate_features(b: bytes) -> dict:
-    """Deterministic byte-level feature surrogate (SQL-reproducible).
-
-    The byte sum runs through NumPy (exact integer sum, same division and
-    rounding) — ``sum(bytes)`` iterates boxed Python ints and was the
-    hottest line of the feature stage at bench scale."""
-    return {
-        "n_bytes": len(b),
-        "byte_mean": (
-            round(int(np.frombuffer(b, dtype=np.uint8).sum()) / len(b), 6)
-            if b
-            else 0.0
-        ),
-        "phash": hashlib.md5(b).hexdigest()[:16],
-    }
-
-
 def extract_features(
     media: DataFrame,
     decoder=None,

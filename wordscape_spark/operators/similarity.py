@@ -101,12 +101,24 @@ def brute_force_topk(
 _PRUNE_MARGIN = 5e-4
 
 
+# Query-side row bound of ``_prune_candidates``: the query side is
+# collected to the driver and broadcast, so it must stay a small relation.
+# Every query side in queries.py and the tests is 1/97 of the corpus or
+# less (~200 rows at sf1.0); 100k rows of 1k-dim vectors is ~0.8 GB.
+_MAX_QUERY_ROWS = 100_000
+
+
+class QuerySideTooLarge(ValueError):
+    """The query side of a brute-force top-k is too big to broadcast."""
+
+
 def _prune_candidates(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     """Superset-of-top-k candidate pairs: (neighbor_id, cvec, query_id).
 
     The query side is gathered once (the same bounded relation the
     all-pairs form broadcast) and shipped to the pruning tasks via a Spark
-    broadcast variable.  Corpus rows whose vector is NULL or whose length
+    broadcast variable; more than ``_MAX_QUERY_ROWS`` query rows raise
+    ``QuerySideTooLarge``.  Corpus rows whose vector is NULL or whose length
     differs from the query dimension are emitted unpruned for every query
     (their NULL cosine can still be ranked when a query has fewer than k
     well-formed competitors — identical to the all-pairs semantics)."""
@@ -114,9 +126,18 @@ def _prune_candidates(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     from pyspark.sql.types import ArrayType, StructField, StructType
 
     spark = c.sparkSession
-    q_rows = q.collect()
-    q_ids = [r["query_id"] for r in q_rows]
-    q_vecs = [r["qvec"] for r in q_rows]
+    # limit(bound + 1) brings at most one row past the bound to the driver.
+    # toArrow runs it as one job; collect() would plan a CollectLimit that
+    # scans the partitions in growing rounds, one job each.
+    q_tbl = q.limit(_MAX_QUERY_ROWS + 1).toArrow()
+    if q_tbl.num_rows > _MAX_QUERY_ROWS:
+        raise QuerySideTooLarge(
+            f"brute_force_topk: the query side has more than "
+            f"{_MAX_QUERY_ROWS} rows; it is collected to the driver and "
+            f"broadcast; split the query set into smaller batches"
+        )
+    q_ids = q_tbl.column("query_id").to_pylist()
+    q_vecs = q_tbl.column("qvec").to_pylist()
     dims = {len(v) for v in q_vecs if v is not None}
     d = dims.pop() if len(dims) == 1 else None
     if d is not None and q_vecs and all(v is not None for v in q_vecs):

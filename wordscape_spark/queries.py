@@ -1981,12 +1981,6 @@ def q_whitelist_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _metrics_select_duck(col: str) -> str:
-    return ", ".join(
-        f"{expr} AS {name}" for name, expr in T.metrics_exprs(col, "duckdb").items()
-    )
-
-
 def _gopher_duck_ctes(src: str) -> str:
     """DuckDB CTE chain (spliced after WITH) computing the Gopher metric
     battery + gopher_pass per doc of relation ``src`` — an independent

@@ -286,15 +286,6 @@ def fontprop_string(size: float, bold: bool | None, italic: bool | None) -> str:
     return cached
 
 
-def resolve_run_props(run: RunSignal) -> tuple[float, bool | None, bool | None]:
-    """Run props with paragraph-prop fallback for unknowns
-    (ref: heuristics/utils.py:237-249)."""
-    size = run.size if run.size != FONT_UNKNOWN else run.par_size
-    bold = run.bold if run.bold is not None else run.par_bold
-    italic = run.italic if run.italic is not None else run.par_italic
-    return size, bold, italic
-
-
 def is_whitespace(text: str) -> bool:
     """A run is whitespace if empty after removing space/newline/tab/CR
     (ref: heuristics/utils.py:200-213).  strip() of exactly those chars is

@@ -99,29 +99,3 @@ def stream_dedup_extract(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_quality_metrics(
-    spark: SparkSession,
-    input_dir: str,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-):
-    """Windowed streaming metrics (the reference monitor's sliding pages/s,
-    annotate_run.py:65-156, as a watermarked windowed aggregation).
-
-    Returns a streaming DataFrame: per 10s processing-time window, docs
-    processed, ok-rate, mean quality.  Start it with foreachBatch/memory sink.
-    """
-    docs = read_doc_stream(spark, input_dir)
-    extracted = docs.select("doc_id", "spans").mapInArrow(
-        X._make_classify_arrow_fn(cfg), schema=X.EXTRACTED_SCHEMA
-    )
-    stamped = extracted.withColumn("ts", F.current_timestamp())
-    return (
-        stamped.withWatermark("ts", "30 seconds")
-        .groupBy(F.window("ts", "10 seconds"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.avg(F.col("ok").cast("double")).alias("ok_rate"),
-            F.avg("quality").alias("mean_quality"),
-        )
-    )
