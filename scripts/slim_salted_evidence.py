@@ -5,8 +5,8 @@
 * before (r4 shape): full ``extract`` then project to the slim columns —
   every mega-doc pays the fat EXTRACTED_SCHEMA Arrow return leg
   (doc text + per-page text + metrics roughly triple the string volume);
-* after (r5 shape): ``_extract_salted(..., _result_row_slim,
-  EXTRACTED_SLIM_SCHEMA)`` — slim rows at the chunk merge.
+* after (r5 shape): ``_extract_salted(..., EXTRACTED_SLIM_SCHEMA)`` —
+  slim rows at the chunk merge.
 
 Mega docs only exist at the larger scale factors; run at sf0.8.
 Writes BENCH/SLIM_SALTED.md.
@@ -60,11 +60,7 @@ def main() -> None:
 
     def after():
         noop(
-            X._extract_salted(
-                big, cfg,
-                row_fn=X._result_row_slim,
-                out_schema=X.EXTRACTED_SLIM_SCHEMA,
-            )
+            X._extract_salted(big, cfg, X.EXTRACTED_SLIM_SCHEMA)
         )
 
     # warmup both paths once, then interleave measured passes

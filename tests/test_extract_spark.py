@@ -118,34 +118,83 @@ def test_salted_slim_equals_salted_full(spark, docs_path):
     }
 
 
-def test_null_spans_doc_rejects_not_vanishes(spark):
+def test_null_spans_doc_rejects_not_vanishes(spark, docs_path):
     """size(NULL) is NULL since Spark 3.0: without the guard, a NULL
     spans array satisfies neither side of the small/salted split and the
     doc silently vanishes.  It must surface as a 'null_spans' reject on
     BOTH the full and slim paths (and with/without a maintained n_spans
-    column)."""
+    column).  A NULL spans array mid-batch must not shift the flat-child
+    decode of its neighbours: ordinary docs before and after it (and a
+    batch of NULLs only) classify exactly like the oracle."""
+    import pyarrow.parquet as pq
+
     schema = (
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>"
     )
-    rows = [
-        ("ok_empty", []),
-        ("nullish", None),
-    ]
-    base = spark.createDataFrame(rows, schema)
-    with_meta = base.withColumn("n_spans", F.size("spans"))  # NULL for b2
-    for docs in (base, with_meta):
-        for fn in (X.extract, X.extract_slim):
-            got = {
-                r["doc_id"]: r["reject_reason"]
-                for r in fn(docs).select("doc_id", "reject_reason").collect()
-            }
-            assert set(got) == {"ok_empty", "nullish"}, (fn.__name__, got)
-            assert got["nullish"] == "null_spans", fn.__name__
+    base = spark.createDataFrame([("ok_empty", []), ("nullish", None)], schema)
+
+    # content spans only: every datagen doc opens with look-alike meta
+    # spans that never reach the output, which would hide a shifted slice
+    ordinary = []
+    for row in pq.read_table(docs_path).to_pylist():
+        spans = [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in row["spans"]
+            if not s["kind"].startswith("meta;")
+        ]
+        if len(spans) >= 3 and C.classify_document(spans, DEFAULT_CONFIG).ok:
+            ordinary.append((row["doc_id"], spans))
+        if len(ordinary) == 4:
+            break
+    assert len(ordinary) == 4
+    oracle = {
+        d: C.classify_document(sp, DEFAULT_CONFIG) for d, sp in ordinary
+    }
+    # one partition, 5-row Arrow batches: [o0, o1, NULL, o2, o3] then a
+    # batch of NULLs only
+    nulls = [f"null_{i}" for i in range(5)]
+    mixed = spark.createDataFrame(
+        ordinary[:2] + [("nullish", None)] + ordinary[2:]
+        + [(d, None) for d in nulls],
+        schema,
+    ).coalesce(1)
+
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "5")
+    try:
+        for raw in (base, mixed):
+            with_meta = raw.withColumn("n_spans", F.size("spans"))
+            for docs in (raw, with_meta):
+                for fn in (X.extract, X.extract_slim):
+                    got = {r["doc_id"]: r for r in fn(docs).collect()}
+                    assert got["nullish"]["reject_reason"] == "null_spans", (
+                        fn.__name__
+                    )
+                    if raw is base:
+                        assert set(got) == {"ok_empty", "nullish"}, (
+                            fn.__name__, got
+                        )
+                        continue
+                    assert set(got) == {"nullish", *nulls, *oracle}, (
+                        fn.__name__, sorted(got)
+                    )
+                    for d in nulls:
+                        assert got[d]["reject_reason"] == "null_spans", d
+                    for d, expected in oracle.items():
+                        assert got[d]["ok"], (fn.__name__, d)
+                        assert [
+                            (s["kind"], s["text"], s["media_ref"],
+                             s["offset"])
+                            for s in got[d]["spans"]
+                        ] == expected.spans, (fn.__name__, d)
+    finally:
+        spark.conf.set(batch_conf, prev)
 
 
 def test_colwise_record_batch_matches_from_pylist():
-    """The column-wise Arrow builders must be byte-identical to
+    """The column-wise Arrow builder must be byte-identical to
     RecordBatch.from_pylist over the row dicts — including reject rows,
     empty spans, None media_refs and unicode."""
     import pyarrow as pa
@@ -184,7 +233,7 @@ def test_colwise_record_batch_matches_from_pylist():
     slim_schema = to_arrow_schema(X.EXTRACTED_SLIM_SCHEMA)
     rows_slim = [X._result_row_slim(d, r) for d, r in results]
     expect_slim = pa.RecordBatch.from_pylist(rows_slim, schema=slim_schema)
-    assert X._slim_record_batch(results, slim_schema).equals(expect_slim)
+    assert X._record_batch(results, slim_schema).equals(expect_slim)
 
     full_schema = to_arrow_schema(X.EXTRACTED_SCHEMA)
     metrics = C.text_metrics_batch(
@@ -194,6 +243,4 @@ def test_colwise_record_batch_matches_from_pylist():
         X._result_row(d, r, m) for (d, r), m in zip(results, metrics)
     ]
     expect_full = pa.RecordBatch.from_pylist(rows_full, schema=full_schema)
-    assert X._full_record_batch(results, metrics, full_schema).equals(
-        expect_full
-    )
+    assert X._record_batch(results, full_schema).equals(expect_full)

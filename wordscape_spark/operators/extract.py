@@ -26,6 +26,7 @@ Execution strategy (designed for 10^12-row scale):
 from __future__ import annotations
 
 import json
+from itertools import accumulate
 from typing import Iterator
 
 import pandas as pd
@@ -186,11 +187,12 @@ def _result_row(doc_id: str, res: C.DocResult, metrics=None) -> dict:
     # parallelize with classification at zero extra Arrow traffic.  (A native
     # column-expression variant was measured slower end-to-end — JVM string
     # passes over multi-MB mega-doc texts straggle; see operators/text.py
-    # metrics_exprs for the SQL-side twin used by the oracle.)  Batch callers
-    # pass precomputed ``metrics`` (one vectorized text_metrics_batch pass
-    # per Arrow batch instead of two regex subs + a translate per doc); the
-    # salted merge passes none, and the vectorized pass over its one
-    # mega-doc text is still ~6x faster than the scalar form.
+    # metrics_exprs for the SQL-side twin used by the oracle.)  The kernel's
+    # column-wise twin ``_record_batch`` runs one vectorized
+    # text_metrics_batch pass per Arrow batch, and callers mirroring it pass
+    # those ``metrics`` in; the salted merge passes none, and the vectorized
+    # pass over its one mega-doc text is still ~6x faster than the scalar
+    # form.
     if metrics is None:
         metrics = C.text_metrics_batch([res.text if res.ok else ""])[0]
     return {
@@ -215,16 +217,23 @@ def _result_row(doc_id: str, res: C.DocResult, metrics=None) -> dict:
     }
 
 
-def _slim_record_batch(results, arrow_schema):
-    """Column-wise Arrow assembly of slim rows (doc_id, DocResult pairs).
+def _record_batch(results, arrow_schema):
+    """Column-wise Arrow assembly of (doc_id, DocResult) pairs into either
+    output surface, chosen by ``arrow_schema``: the slim schema ends after
+    the span columns, the full one goes on with doc text, pages, maps and
+    the D10 text metrics (one vectorized ``text_metrics_batch`` pass per
+    batch instead of per-doc regex work).
 
     Byte-identical to ``RecordBatch.from_pylist`` over ``_result_row_slim``
-    rows (pinned by test) without materializing a dict per row and per span
-    — from_pylist re-hashes every field name for every span."""
+    / ``_result_row`` rows (map entry order = dict insertion order; pinned
+    by test) without materializing a dict per row and per span —
+    from_pylist re-hashes every field name for every span."""
     import pyarrow as pa
 
     S = pa.string()
     I32 = pa.int32()
+    I64 = pa.int64()
+    F64 = pa.float64()
     doc_ids = []
     oks = []
     rejects = []
@@ -254,261 +263,143 @@ def _slim_record_batch(results, arrow_schema):
             sp.extend(pages)
             stot += len(spans)
         soff.append(stot)
-    spans_arr = pa.ListArray.from_arrays(
-        pa.array(soff, I32),
-        pa.StructArray.from_arrays(
-            [pa.array(sk, S), pa.array(st, S), pa.array(sm, S),
-             pa.array(so, I32), pa.array(sp, I32)],
-            names=["kind", "text", "media_ref", "offset", "page"],
+    columns = [
+        pa.array(doc_ids, S),
+        pa.array(oks, pa.bool_()),
+        pa.array(rejects, S),
+        pa.ListArray.from_arrays(
+            pa.array(soff, I32),
+            pa.StructArray.from_arrays(
+                [pa.array(sk, S), pa.array(st, S), pa.array(sm, S),
+                 pa.array(so, I32), pa.array(sp, I32)],
+                names=["kind", "text", "media_ref", "offset", "page"],
+            ),
         ),
-    )
-    return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, S), pa.array(oks, pa.bool_()),
-         pa.array(rejects, S), spans_arr],
-        schema=arrow_schema,
-    )
+    ]
+    if len(arrow_schema) == len(columns):  # the slim span surface
+        return pa.RecordBatch.from_arrays(columns, schema=arrow_schema)
+
+    docs = [r for _, r in results]
+    metrics = C.text_metrics_batch([r.text if r.ok else "" for r in docs])
+    page_recs = [pg for r in docs for pg in r.pages]
+    columns += [
+        pa.ListArray.from_arrays(
+            pa.array(list(accumulate((len(r.pages) for r in docs), initial=0)),
+                     I32),
+            pa.StructArray.from_arrays(
+                [pa.array([p for p, _, _ in page_recs], I32),
+                 pa.array([t for _, t, _ in page_recs], S),
+                 _map_array([c for _, _, c in page_recs], I64)],
+                names=["page", "text", "counts"],
+            ),
+        ),
+        pa.array([r.text for r in docs], S),
+        _map_array([r.counts for r in docs], I64),
+        pa.array([r.quality for r in docs], F64),
+        _map_array([r.builtin_props for r in docs], F64),
+        _map_array([r.props for r in docs], S),
+        pa.ListArray.from_arrays(
+            pa.array(
+                list(accumulate((len(r.lang_tags) for r in docs), initial=0)),
+                I32,
+            ),
+            pa.array([t for r in docs for t in r.lang_tags], S),
+        ),
+    ]
+    # the remaining fields are the D10 text metrics, named like their keys
+    columns += [
+        pa.array([m[f.name] for m in metrics], f.type)
+        for f in list(arrow_schema)[len(columns):]
+    ]
+    return pa.RecordBatch.from_arrays(columns, schema=arrow_schema)
 
 
-def _full_record_batch(results, metrics, arrow_schema):
-    """Column-wise Arrow assembly of full EXTRACTED_SCHEMA rows — the
-    column-by-column twin of ``_result_row`` + ``from_pylist`` (map entry
-    order = dict insertion order, exactly like from_pylist; pinned by
-    test)."""
+def _map_array(dicts, value_type):
+    """One Arrow map column from per-row dicts, entries in dict order."""
     import pyarrow as pa
 
-    S = pa.string()
-    I32 = pa.int32()
-    I64 = pa.int64()
-    F64 = pa.float64()
-    doc_ids = []
-    oks = []
-    rejects = []
-    texts = []
-    quality = []
-    sk: list = []
-    st: list = []
-    sm: list = []
-    so: list = []
-    sp: list = []
-    soff = [0]
-    pg_num: list = []
-    pg_text: list = []
-    pgoff = [0]
-    pgc_k: list = []
-    pgc_v: list = []
-    pgcoff = [0]
-    cnt_k: list = []
-    cnt_v: list = []
-    cntoff = [0]
-    bp_k: list = []
-    bp_v: list = []
-    bpoff = [0]
-    pr_k: list = []
-    pr_v: list = []
-    proff = [0]
-    lt: list = []
-    ltoff = [0]
-    nw = []
-    nc = []
-    nal = []
-    nnu = []
-    nan_ = []
-    ap = []
-    ar = []
-    stot = ptot = pctot = ctot = btot = prtot = ltot = 0
-    for (d, r), m in zip(results, metrics):
-        doc_ids.append(d)
-        oks.append(r.ok)
-        rejects.append(r.reject_reason)
-        texts.append(r.text)
-        quality.append(float(r.quality))
-        spans = r.spans
-        if spans:
-            pages = (
-                r.span_pages
-                if len(r.span_pages) == len(spans)
-                else [1] * len(spans)
-            )
-            ks, ts, ms, os_ = zip(*spans)
-            sk.extend(ks)
-            st.extend(ts)
-            sm.extend(ms)
-            so.extend(os_)
-            sp.extend(pages)
-            stot += len(spans)
-        soff.append(stot)
-        for p, t_, c in r.pages:
-            pg_num.append(p)
-            pg_text.append(t_)
-            for k, v in c.items():
-                pgc_k.append(k)
-                pgc_v.append(int(v))
-                pctot += 1
-            pgcoff.append(pctot)
-            ptot += 1
-        pgoff.append(ptot)
-        for k, v in r.counts.items():
-            cnt_k.append(k)
-            cnt_v.append(int(v))
-            ctot += 1
-        cntoff.append(ctot)
-        for k, v in r.builtin_props.items():
-            bp_k.append(k)
-            bp_v.append(v)
-            btot += 1
-        bpoff.append(btot)
-        for k, v in r.props.items():
-            pr_k.append(k)
-            pr_v.append(v)
-            prtot += 1
-        proff.append(prtot)
-        lt.extend(r.lang_tags)
-        ltot += len(r.lang_tags)
-        ltoff.append(ltot)
-        nw.append(int(m["num_words"]))
-        nc.append(int(m["num_chars"]))
-        nal.append(int(m["num_alph_chars"]))
-        nnu.append(int(m["num_numeric_chars"]))
-        nan_.append(int(m["num_alphnum_chars"]))
-        ap.append(float(m["alnum_prop"]))
-        ar.append(float(m["alph_to_num_ratio"]))
-    spans_arr = pa.ListArray.from_arrays(
-        pa.array(soff, I32),
-        pa.StructArray.from_arrays(
-            [pa.array(sk, S), pa.array(st, S), pa.array(sm, S),
-             pa.array(so, I32), pa.array(sp, I32)],
-            names=["kind", "text", "media_ref", "offset", "page"],
-        ),
-    )
-    pages_arr = pa.ListArray.from_arrays(
-        pa.array(pgoff, I32),
-        pa.StructArray.from_arrays(
-            [
-                pa.array(pg_num, I32),
-                pa.array(pg_text, S),
-                pa.MapArray.from_arrays(
-                    pa.array(pgcoff, I32),
-                    pa.array(pgc_k, S),
-                    pa.array(pgc_v, I64),
-                ),
-            ],
-            names=["page", "text", "counts"],
-        ),
-    )
-    counts_map = pa.MapArray.from_arrays(
-        pa.array(cntoff, I32), pa.array(cnt_k, S), pa.array(cnt_v, I64)
-    )
-    bp_map = pa.MapArray.from_arrays(
-        pa.array(bpoff, I32), pa.array(bp_k, S), pa.array(bp_v, F64)
-    )
-    pr_map = pa.MapArray.from_arrays(
-        pa.array(proff, I32), pa.array(pr_k, S), pa.array(pr_v, S)
-    )
-    lt_arr = pa.ListArray.from_arrays(pa.array(ltoff, I32), pa.array(lt, S))
-    return pa.RecordBatch.from_arrays(
-        [pa.array(doc_ids, S), pa.array(oks, pa.bool_()),
-         pa.array(rejects, S), spans_arr, pages_arr, pa.array(texts, S),
-         counts_map, pa.array(quality, F64), bp_map, pr_map, lt_arr,
-         pa.array(nw, I64), pa.array(nc, I64), pa.array(nal, I64),
-         pa.array(nnu, I64), pa.array(nan_, I64), pa.array(ap, F64),
-         pa.array(ar, F64)],
-        schema=arrow_schema,
+    offsets = [0]
+    keys: list = []
+    values: list = []
+    for d in dicts:
+        keys.extend(d)
+        values.extend(d.values())
+        offsets.append(len(keys))
+    return pa.MapArray.from_arrays(
+        pa.array(offsets, pa.int32()),
+        pa.array(keys, pa.string()),
+        pa.array(values, value_type),
     )
 
 
 def _make_classify_arrow_fn(
-    cfg: ExtractConfig, row_fn=None, out_schema=None
+    cfg: ExtractConfig, out_schema: StructType = EXTRACTED_SCHEMA
 ):
     """mapInArrow variant of the classifier — the hot path.
 
     Skips the Arrow↔pandas round-trip entirely: the nested spans column is
-    read with ``to_pylist()`` (one C-level pass) and results are rebuilt as
-    a RecordBatch with an explicit schema (no pandas object-column
+    decoded one leaf column at a time and results are rebuilt as a
+    RecordBatch with an explicit schema (no pandas object-column
     inference).  Measured ~2× end-to-end extraction throughput vs
     mapInPandas on this schema — pandas materializes every nested struct as
     object arrays of dicts twice (in and out).
 
-    ``row_fn``/``out_schema`` select the output shape: the full
-    EXTRACTED_SCHEMA row (default) or the slim span-surface row
-    (``extract_slim``)."""
-    import pyarrow as pa
-
-    if row_fn is None:
-        row_fn = _result_row
-    if out_schema is None:
-        out_schema = EXTRACTED_SCHEMA
-
-    # the full-row surface computes D10 text metrics: batch them (one
-    # vectorized pass per Arrow batch) instead of per-doc regex work
-    batch_metrics = row_fn is _result_row
+    ``out_schema`` selects the output surface: the full EXTRACTED_SCHEMA row
+    (default) or the slim span-surface row (``extract_slim``)."""
 
     def classify_batches(batches):
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(out_schema)
         for batch in batches:
             doc_ids = batch.column(0).to_pylist()
             spans_col = batch.column(1)
-            results = []
-            if spans_col.null_count == 0:
-                # flat-child decode: one to_pylist per LEAF column instead
-                # of materializing a dict per span (nested to_pylist) —
-                # measured 16% faster end-to-end on the sf0.8 mix, and the
-                # classifier consumes tuples directly with no dict hop
-                offsets = spans_col.offsets.to_pylist()
-                flat = spans_col.flatten()
-                # field access is BY NAME: a conforming table whose struct
-                # children are ordered differently (read_docs normalizes,
-                # but callers can hand extract() any DataFrame) must not be
-                # silently decoded in the wrong order.
-                # kind strings repeat heavily (~6× at the corpus mix):
-                # dictionary-encode so each distinct kind materializes ONE
-                # Python string (fewer allocations, and the shared objects
-                # make the parse-cache dict lookups identity-fast).  A NULL
-                # kind (malformed producer) keeps the plain decode so it
-                # still fails per-document inside _safe_classify_tuples.
-                kind_arr = flat.field("kind")
-                if kind_arr.null_count == 0:
-                    enc = kind_arr.dictionary_encode()
-                    uniq = enc.dictionary.to_pylist()
-                    kinds = [uniq[i] for i in enc.indices.to_numpy(
-                        zero_copy_only=False).tolist()]
-                else:
-                    kinds = kind_arr.to_pylist()
-                texts = flat.field("text").to_pylist()
-                refs = flat.field("media_ref").to_pylist()
-                offs = flat.field("offset").to_pylist()
-                base = offsets[0]
-                for i, doc_id in enumerate(doc_ids):
-                    lo = offsets[i] - base
-                    hi = offsets[i + 1] - base
-                    tuples = list(
-                        zip(kinds[lo:hi], texts[lo:hi],
-                            refs[lo:hi], offs[lo:hi])
-                    )
-                    results.append(
-                        (doc_id, _safe_classify_tuples(tuples, cfg))
-                    )
-            else:  # null spans arrays: keep the error-reject semantics
-                for doc_id, spans in zip(doc_ids, spans_col.to_pylist()):
-                    results.append(
-                        (doc_id, _safe_classify_rows(spans, cfg))
-                    )
-            if not results:
-                continue
-            # column-wise Arrow assembly for the two known surfaces (byte-
-            # identical to from_pylist over the row dicts — pinned by test);
-            # any other row_fn keeps the generic row-dict path
-            if batch_metrics:
-                metrics = C.text_metrics_batch(
-                    [res.text if res.ok else "" for _, res in results]
-                )
-                yield _full_record_batch(results, metrics, arrow_schema)
-            elif row_fn is _result_row_slim:
-                yield _slim_record_batch(results, arrow_schema)
+            # flat-child decode: one to_pylist per LEAF column instead of
+            # materializing a dict per span (nested to_pylist) — measured
+            # 16% faster end-to-end on the sf0.8 mix, and the classifier
+            # consumes tuples directly with no dict hop.  flatten() skips
+            # the child segments behind NULL spans arrays, so per-doc
+            # bounds come from the list lengths with NULL counted as 0.
+            valid = spans_col.is_valid().to_pylist()
+            lengths = pc.list_value_length(spans_col).fill_null(0).to_pylist()
+            flat = spans_col.flatten()
+            # field access is BY NAME: a conforming table whose struct
+            # children are ordered differently (read_docs normalizes, but
+            # callers can hand extract() any DataFrame) must not be
+            # silently decoded in the wrong order.
+            # kind strings repeat heavily (~6× at the corpus mix):
+            # dictionary-encode so each distinct kind materializes ONE
+            # Python string (fewer allocations, and the shared objects make
+            # the parse-cache dict lookups identity-fast).  A NULL kind
+            # (malformed producer) keeps the plain decode so it still fails
+            # per-document inside _safe_classify_tuples.
+            kind_arr = flat.field("kind")
+            if kind_arr.null_count == 0:
+                enc = kind_arr.dictionary_encode()
+                uniq = enc.dictionary.to_pylist()
+                kinds = [uniq[i] for i in enc.indices.to_numpy(
+                    zero_copy_only=False).tolist()]
             else:
-                rows = [row_fn(doc_id, res) for doc_id, res in results]
-                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+                kinds = kind_arr.to_pylist()
+            texts = flat.field("text").to_pylist()
+            refs = flat.field("media_ref").to_pylist()
+            offs = flat.field("offset").to_pylist()
+            results = []
+            hi = 0
+            for doc_id, is_valid, n in zip(doc_ids, valid, lengths):
+                lo, hi = hi, hi + n
+                if not is_valid:
+                    res = C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
+                else:
+                    res = _safe_classify_tuples(
+                        list(zip(kinds[lo:hi], texts[lo:hi],
+                                 refs[lo:hi], offs[lo:hi])),
+                        cfg,
+                    )
+                results.append((doc_id, res))
+            if results:
+                yield _record_batch(results, arrow_schema)
 
     return classify_batches
 
@@ -523,25 +414,6 @@ def _safe_classify_tuples(
     (the flat-child Arrow decode path)."""
     try:
         return C.classify_document(tuples, cfg)
-    except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
-        return C.DocResult(
-            False, f"error:{type(exc).__name__}", [], "", {}, 0.0, {}
-        )
-
-
-def _safe_classify_rows(spans: list[dict], cfg: ExtractConfig) -> C.DocResult:
-    """_safe_classify_tuples for plain list-of-dict spans (Arrow to_pylist
-    form); a NULL spans array is a distinct ``null_spans`` reject."""
-    if spans is None:
-        return C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
-    try:
-        return C.classify_document(
-            [
-                (s["kind"], s["text"], s["media_ref"], s["offset"])
-                for s in spans
-            ],
-            cfg,
-        )
     except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
         return C.DocResult(
             False, f"error:{type(exc).__name__}", [], "", {}, 0.0, {}
@@ -743,13 +615,19 @@ class _ChunkError(Exception):
     pass
 
 
-def _make_merge_partials_fn(cfg: ExtractConfig, row_fn=_result_row):
-    """``row_fn`` picks the output surface: ``_result_row`` (full
-    EXTRACTED_SCHEMA) or ``_result_row_slim`` (span surface only) — the
-    merge logic is identical, only the returned row (and therefore the
-    Arrow return-leg volume) differs."""
+def _make_merge_partials_fn(cfg: ExtractConfig, out_schema: StructType):
+    """``out_schema`` picks the output surface: EXTRACTED_SCHEMA (full
+    ``_result_row``) or EXTRACTED_SLIM_SCHEMA (span surface only,
+    ``_result_row_slim``) — the merge logic is identical, only the returned
+    row (and therefore the Arrow return-leg volume) differs."""
+    row_fn = (
+        _result_row_slim if out_schema == EXTRACTED_SLIM_SCHEMA
+        else _result_row
+    )
 
-    def merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated on purpose: applyInPandas infers the UDF eval type from
+    # complete type hints and warns on every call for partial ones
+    def merge_partials(key, pdf):
         pdf = pdf.sort_values("chunk_idx")
         for marker in pdf["char_counter"]:
             if marker.startswith("ERR:"):
@@ -826,34 +704,34 @@ def _make_merge_partials_fn(cfg: ExtractConfig, row_fn=_result_row):
 # ---------------------------------------------------------------------------
 
 
-def ensure_parallelism(
-    df: DataFrame, min_partitions: int | None = None
-) -> DataFrame:
-    """Guarantee the downstream Python stage is parallel — without touching
-    ``df.rdd`` (converting the plan to an RDD just to read a partition count
-    forces a full plan-to-RDD translation per call).
-
-    File scans — the only input kind that exists at 100 TB — are already
-    split by the session confs (``spark.sql.files.minPartitionNum`` ≥ cores,
-    ``maxPartitionBytes``), and AQE coalesces over-splitting at runtime, so
-    no dynamic check is needed: this is a no-op.  Those confs cannot split
-    below one parquet row group, the smallest scan split: a file written as
-    one row group (the ``curate`` benchmark input) is read by one task, so
-    every narrow stage over it — the quality gate, the MinHash signatures —
-    runs on one busy task while the other cores idle.  For non-file inputs
-    (in-memory test frames, post-aggregation locals) pass ``min_partitions``
-    to force an explicit round-robin repartition."""
-    if min_partitions is not None:
-        return df.repartition(min_partitions)
-    return df
-
-
 def extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     """Classify every document; returns the EXTRACTED_SCHEMA DataFrame.
 
     ``docs`` must have (doc_id string, spans array<struct<kind,text,
     media_ref,offset>>).
     """
+    return _extract(docs, cfg, EXTRACTED_SCHEMA)
+
+
+def extract_slim(
+    docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """Classify every document, emitting ONLY the span-equality surface
+    (EXTRACTED_SLIM_SCHEMA) — for pipelines that consume classified spans
+    without the metadata columns.  Catalyst cannot prune columns through an
+    opaque mapInArrow, so a caller that wants only spans must choose the
+    slim function, not project afterward.  Same classifier, same salted
+    mega-doc handling — the salted branch shares the full path's
+    chunk/classify/merge pipeline but emits slim rows at the final merge,
+    so mega-doc-heavy tables skip the fat return leg too."""
+    return _extract(docs, cfg, EXTRACTED_SLIM_SCHEMA)
+
+
+def _extract(
+    docs: DataFrame, cfg: ExtractConfig, out_schema: StructType
+) -> DataFrame:
+    """Both output surfaces: the small/salted split, then each branch emits
+    ``out_schema`` rows."""
     # Exactly TWO scans of the input: the small path and the salted path.
     # The oversized-document gate (too_many_spans, no Python classification)
     # is folded into the chunk UDF as a reject marker so it does not cost a
@@ -867,42 +745,34 @@ def extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG) -> DataFrame:
     # the whole multi-GB spans column a second time (evidence:
     # BENCH/PRUNING.md).  Tables without the column fall back to
     # ``size(spans)``, which both branches must compute post-scan.
+    #
+    # A NULL size satisfies neither predicate: NULL n_spans (imperfect
+    # producer metadata), or size(NULL), which is NULL (not -1) since Spark
+    # 3.0.  Route it down the small path so no row is silently dropped (the
+    # kernel rejects a NULL spans array per-doc); IsNotNull on the big
+    # branch still pushes down.
     if "n_spans" in docs.columns:
-        # NULL n_spans (imperfect producer metadata) satisfies neither
-        # predicate — route NULLs down the small path so no row is silently
-        # dropped; IsNotNull on the big branch still pushes down.
         n_spans = F.col("n_spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | n_spans.isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
     else:
-        # size(NULL) is NULL (not -1) since Spark 3.0: a NULL spans array
-        # would satisfy neither predicate and vanish — route it small,
-        # like the maintained-column branch (kernel rejects it per-doc)
         n_spans = F.size("spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | F.col("spans").isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
+    small = docs.filter(
+        (n_spans <= F.lit(cfg.salt_threshold)) | n_spans.isNull()
+    )
+    big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
 
     # (A heavy-first two-branch scan — union the >8k-span docs first so
     # their tasks start in wave 1 — was A/B-measured at pinned 16 cores and
     # showed no gain over the plain scan: 256 splits / 16 waves already
     # absorb the ~110k-span stragglers.  Kept out to avoid an extra scan.)
-    small_out = ensure_parallelism(small.select("doc_id", "spans")).mapInArrow(
-        _make_classify_arrow_fn(cfg), schema=EXTRACTED_SCHEMA
+    small_out = small.select("doc_id", "spans").mapInArrow(
+        _make_classify_arrow_fn(cfg, out_schema), schema=out_schema
     )
-
-    big_out = _extract_salted(big, cfg)
-
-    return small_out.unionByName(big_out)
+    return small_out.unionByName(_extract_salted(big, cfg, out_schema))
 
 
 def _extract_salted(
     big: DataFrame,
     cfg: ExtractConfig,
-    row_fn=_result_row,
     out_schema: StructType = EXTRACTED_SCHEMA,
 ) -> DataFrame:
     """The salted mega-doc path: chunk → salt shuffle → classify → merge
@@ -919,11 +789,11 @@ def _extract_salted(
     mega-doc id only (few), so the shuffles touch a tiny fraction of the
     data.
 
-    ``row_fn``/``out_schema`` choose the output surface (full vs slim) at
-    the final merge, so slim consumers never pay the fat Arrow return leg
-    even for mega-docs."""
+    ``out_schema`` chooses the output surface (full vs slim) at the final
+    merge, so slim consumers never pay the fat Arrow return leg even for
+    mega-docs."""
     classified = (
-        ensure_parallelism(big.select("doc_id", "spans"))
+        big.select("doc_id", "spans")
         .mapInPandas(_make_chunk_fn(cfg), schema=_CHUNK_SCHEMA)
         # spread one doc's chunks across the cluster — this IS the salt
         .repartition(
@@ -933,47 +803,8 @@ def _extract_salted(
         .mapInPandas(_make_chunk_classify_fn(cfg), schema=_PARTIAL_SCHEMA)
     )
     return classified.groupBy("doc_id").applyInPandas(
-        _make_merge_partials_fn(cfg, row_fn), schema=out_schema
+        _make_merge_partials_fn(cfg, out_schema), schema=out_schema
     )
-
-
-def extract_slim(
-    docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Classify every document, emitting ONLY the span-equality surface
-    (EXTRACTED_SLIM_SCHEMA) — for pipelines that consume classified spans
-    without the metadata columns.  Catalyst cannot prune columns through an
-    opaque mapInArrow, so a caller that wants only spans must choose the
-    slim function, not project afterward.  Same classifier, same salted
-    mega-doc handling — the salted branch shares the full path's
-    chunk/classify/merge pipeline but emits slim rows at the final merge,
-    so mega-doc-heavy tables skip the fat return leg too."""
-    if "n_spans" in docs.columns:
-        n_spans = F.col("n_spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | n_spans.isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
-    else:
-        # size(NULL) is NULL (not -1) since Spark 3.0: a NULL spans array
-        # would satisfy neither predicate and vanish — route it small,
-        # like the maintained-column branch (kernel rejects it per-doc)
-        n_spans = F.size("spans")
-        small = docs.filter(
-            (n_spans <= F.lit(cfg.salt_threshold)) | F.col("spans").isNull()
-        )
-        big = docs.filter(n_spans > F.lit(cfg.salt_threshold))
-
-    small_out = ensure_parallelism(small.select("doc_id", "spans")).mapInArrow(
-        _make_classify_arrow_fn(
-            cfg, row_fn=_result_row_slim, out_schema=EXTRACTED_SLIM_SCHEMA
-        ),
-        schema=EXTRACTED_SLIM_SCHEMA,
-    )
-    big_out = _extract_salted(
-        big, cfg, row_fn=_result_row_slim, out_schema=EXTRACTED_SLIM_SCHEMA
-    )
-    return small_out.unionByName(big_out)
 
 
 def spans_out(extracted: DataFrame) -> DataFrame:
