@@ -187,23 +187,31 @@ def test_end_to_end_minhash_clustering(spark):
         assert not (orig in kept_ids and copy in kept_ids)
 
 
-def test_shingles_tokenizer_bound_once(spark):
+@pytest.mark.parametrize(
+    "build, once",
+    [
+        (
+            lambda df: df.withColumn(
+                "sh", F.expr(D.shingles_expr("text", "spark"))
+            ),
+            ("split(",),
+        ),
+        (D.simhash, ("split(", "md5(")),
+    ],
+    ids=["shingles_expr", "simhash"],
+)
+def test_shingles_tokenizer_bound_once(spark, build, once):
     """The shingle transform must bind the token array once: CollapseProject
     inlining the split() into the per-shingle lambda re-tokenizes the
     document per element — O(tokens²) per doc (measured 9.2 s → 0.4 s on a
-    50k-doc corpus when fixed).  Same guard as simhash/winnowing."""
-    import pyspark.sql.functions as F
-
-    from wordscape_spark.operators import dedup as D
-
+    50k-doc corpus when fixed).  SimHash binds its token hashes the same
+    way: inlining `hs` into the per-bit lambda re-tokenizes and re-hashes
+    once per bit (the 15× trap in its docstring), so its plan must hold one
+    split() and one md5()."""
     df = spark.createDataFrame([("d", "a b c d e")], "doc_id string, text string")
-    optimized = (
-        df.withColumn("sh", F.expr(D.shingles_expr("text", "spark")))
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert optimized.count("split(") == 1, optimized
+    optimized = build(df)._jdf.queryExecution().optimizedPlan().toString()
+    for needle in once:
+        assert optimized.count(needle) == 1, (needle, optimized)
 
 
 def test_dsir_grams_tokenizer_bound_once(spark):

@@ -140,3 +140,36 @@ def test_ann_query_side_over_bound_raises(spark, monkeypatch):
     # at the bound the query side is still accepted
     monkeypatch.setattr(SIM, "_MAX_QUERY_ROWS", 6)
     assert len(SIM.brute_force_topk(emb, emb, k=2).collect()) == 12
+
+
+def test_empty_and_sparse_partitions(spark, base_spans):
+    """A zero-row frame and 3 docs spread over 16 partitions (most of them
+    empty) through extract, extract_slim and curate, on the small and the
+    salted path."""
+    from wordscape_spark.plans import curate as CU
+
+    salting = dataclasses.replace(
+        DEFAULT_CONFIG, salt_threshold=5, salt_chunk_spans=4
+    )
+    empty = spark.createDataFrame([], SCHEMA)
+    sparse = spark.createDataFrame(
+        [(f"d{i}", base_spans) for i in range(3)], SCHEMA
+    ).repartition(16)
+    for cfg in (DEFAULT_CONFIG, salting):
+        for fn in (X.extract, X.extract_slim):
+            assert fn(empty, cfg).collect() == [], fn.__name__
+            got = sorted(r["doc_id"] for r in fn(sparse, cfg).collect())
+            assert got == ["d0", "d1", "d2"], (fn.__name__, cfg)
+
+    text_schema = "doc_id string, lang string, text string"
+    funnel = CU.funnel(CU.curate(spark.createDataFrame([], text_schema)))
+    assert [tuple(r) for r in funnel.orderBy("stage_order").collect()] == [
+        (i, stage, 0, 0) for i, stage in enumerate(CU.STAGES)
+    ]
+    text = " ".join(t for _, t, _, _ in base_spans if t)
+    sparse_text = spark.createDataFrame(
+        [(f"d{i}", "en", f"{text} {i}") for i in range(3)], text_schema
+    ).repartition(16)
+    funnel = CU.funnel(CU.curate(sparse_text)).orderBy("stage_order").collect()
+    assert [r["stage"] for r in funnel] == list(CU.STAGES)
+    assert funnel[0]["n_docs"] == 3

@@ -99,7 +99,10 @@ def test_ivf_cell_assignment_covers_corpus(spark, emb):
 
 def test_semantic_dedup_keeps_one_per_component(spark):
     """Planted semantic duplicates: three near-identical vectors collapse
-    to the lowest id; an isolated vector survives."""
+    to the lowest id; an isolated vector survives.  A cell over
+    ``max_cell_size`` is excluded from pairing, so all its docs are kept
+    (lower-bound semantics); the derived ``nlist`` grows with the corpus
+    between ``IVF_NLIST`` and ``SEMDEDUP_NLIST_CAP``."""
     import pyspark.sql.functions as F
 
     from wordscape_spark.operators import similarity as S
@@ -119,6 +122,17 @@ def test_semantic_dedup_keeps_one_per_component(spark):
         for r in S.semantic_dedup(df, threshold=0.9, nlist=1).collect()
     )
     assert kept == [1, 10]
+    over_cap = sorted(
+        r["doc_id"]
+        for r in S.semantic_dedup(
+            df, threshold=0.9, nlist=1, max_cell_size=3
+        ).collect()
+    )
+    assert over_cap == [1, 2, 3, 10]
+
+    assert S.semantic_nlist(100) == S.IVF_NLIST == 8
+    assert S.semantic_nlist(100_000) == 98
+    assert S.semantic_nlist(10**9) == S.SEMDEDUP_NLIST_CAP == 65_536
 
 
 def test_training_sample_mirror_parity(spark, emb):

@@ -59,24 +59,8 @@ def _dep_hash() -> str:
     return h.hexdigest()[:12]
 
 
-# Round-7 optimization freeze: ``oracle_sql()`` text is fingerprinted
-# against the round start, and the golden directory name (the _dep_hash of
-# the modules above) is embedded in the golden-backed oracle strings.  This
-# round changed several dep modules for PERFORMANCE ONLY — every golden
-# table was verified row-identical between the round-start directory
-# (v4-d08ea0bc0587, materialized by the round-start code) and the
-# current-code hash directory — so the oracle path is pinned to the
-# round-start name, keeping the SQL text byte-identical to the round-start
-# fingerprint while the content-hash mechanism stays in place underneath.
-#
-# NEXT BUILD ROUND: remove the pin (set to None) — any semantic change to a
-# dep module must re-key the directory again, and a build round is allowed
-# to change oracle text.
-_ORACLE_DIR_PIN: str | None = "d08ea0bc0587"
-
-
 def _golden_dir_segment() -> str:
-    return f"v{datagen.DATAGEN_VERSION}-{_ORACLE_DIR_PIN or _dep_hash()}"
+    return f"v{datagen.DATAGEN_VERSION}-{_dep_hash()}"
 
 
 def round_half_up(x: float, ndigits: int) -> float:
