@@ -19,9 +19,9 @@ Local smoke:
 
 The input table needs (doc_id, lang, text) columns.  At cluster scale,
 size ``--n-streams`` ≫ executor-thread count (each budget stream is one
-sort partition) and persist the two dedup survivor frames or point
-``--output`` at an Iceberg table so the funnel aggregates don't re-derive
-upstream stages.
+sort partition).  The plan persists the gated and the two dedup survivor
+frames itself, and the funnel is computed once, so neither the write nor
+the read-out below re-derives upstream stages.
 """
 
 from __future__ import annotations

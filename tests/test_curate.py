@@ -49,8 +49,23 @@ def test_stage_order_and_containment(stages):
     assert "901" not in ids["near_dedup"] and "5" in ids["near_dedup"]
 
 
-def test_funnel_matches_stage_counts(stages):
-    funnel = {r["stage"]: r for r in CU.funnel(stages).collect()}
+def test_funnel_matches_stage_counts(spark, stages):
+    """funnel() runs its aggregates in its own action: collecting the
+    frame it returns starts no Spark job, and its rows equal the
+    per-stage aggregates."""
+    sc = spark.sparkContext
+    frame = CU.funnel(stages)
+    group = "test-funnel-collect"
+    sc.setJobGroup(group, "collect the funnel")
+    try:
+        rows = frame.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert frame.schema.simpleString() == (
+        "struct<stage_order:int,stage:string,n_docs:bigint,n_tokens:bigint>"
+    )
+    funnel = {r["stage"]: r for r in rows}
     assert [funnel[s]["stage_order"] for s in CU.STAGES] == [0, 1, 2, 3, 4]
     for name, df in stages.items():
         agg = df.agg(
@@ -80,3 +95,59 @@ def test_keep_cols_passthrough_zero_exchange(spark):
     assert row["text"].startswith("the ship")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # the gate flag stays per-row with keep_cols
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _build_nodes(df):
+    """The physical nodes that build ``df``'s cache, through AQE wrappers
+    and query stages; another cached relation is a leaf (its scan is
+    listed, its build is not entered)."""
+    rel = df._jdf.queryExecution().withCachedData()
+    assert rel.getClass().getSimpleName() == "InMemoryRelation"
+    todo, nodes = [rel.cacheBuilder().cachedPlan()], []
+    while todo:
+        p = todo.pop()
+        kind = p.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(p.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(p.plan())
+        elif kind == "ReusedExchangeExec":
+            todo.append(p.child())
+        else:
+            nodes.append(p)
+            todo.extend(_seq(p.children()))
+    return nodes
+
+
+def _gate_filters(nodes):
+    # the Gopher gate is curate's only filter over the text column
+    return [
+        n for n in nodes
+        if n.getClass().getSimpleName() == "FilterExec"
+        and "text" in {a.name() for a in _seq(n.condition().references().toSeq())}
+    ]
+
+
+def test_gate_runs_once_in_the_cached_quality_frame(stages):
+    """The gated frame is cached, and the two dedup frames reach the gate
+    only through it: building their caches scans the quality (or exact)
+    cache and evaluates no gate of its own."""
+    for name in CU.STAGES[1:4]:
+        assert stages[name].is_cached, name
+    quality = _build_nodes(stages["quality"])
+    assert len(_gate_filters(quality)) == 1
+    builder = {
+        name: stages[name]._jdf.queryExecution().withCachedData().cacheBuilder()
+        for name in ("quality", "exact_dedup")
+    }
+    for name, upstream in (("exact_dedup", "quality"),
+                           ("near_dedup", "exact_dedup")):
+        nodes = _build_nodes(stages[name])
+        assert _gate_filters(nodes) == [], name
+        scans = [n.relation().cacheBuilder() for n in nodes
+                 if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
+        assert scans and all(s.equals(builder[upstream]) for s in scans), name

@@ -1,6 +1,8 @@
 """Gopher/C4 quality rules: hand-checkable values per rule and the
 all-native plan (no Python UDF)."""
 
+import pyspark.sql.functions as F
+
 from wordscape_spark.operators import quality_rules as QR
 
 
@@ -556,6 +558,32 @@ def test_lexical_stats_matches_math(spark):
         math.log(3) - (2 * math.log(2)) / 3, 6
     )
     assert got[6]["n_words"] == 4 and got[6]["n_unique"] == 2
+
+
+def test_lexical_stats_entropy_is_the_direct_sum(spark):
+    """The run-length scan adds one ``c*ln(c)`` per distinct word, as the
+    oracle's direct sum does, so the unrounded entropy of a highly
+    repetitive doc matches Python's direct sum to 1e-12.  (A sum that
+    telescopes ``run*ln(run) - (run-1)*ln(run-1)`` per word drifts by
+    ~1.3e-12 on 200,000 copies of one word.)"""
+    import math
+    from collections import Counter
+
+    docs = ["spam " * 200_000, "buy now " * 60_000 + "cheap " * 30_001]
+    df = spark.createDataFrame([(d,) for d in docs], "text string")
+    s = QR._word_count_log_sum("words")
+    got = (
+        df.select(F.split(F.trim("text"), " ").alias("words"))
+        .select(F.expr(f"ln(size(words)) - {s} / size(words)").alias("h"))
+        .collect()
+    )
+    for doc, row in zip(docs, got):
+        words = doc.split()
+        n = len(words)
+        want = math.log(n) - sum(
+            c * math.log(c) for c in Counter(words).values()
+        ) / n
+        assert abs(row["h"] - want) <= 1e-12, (row["h"], want)
 
 
 def test_lexical_stats_plan_no_exchange(spark):

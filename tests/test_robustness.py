@@ -173,3 +173,46 @@ def test_empty_and_sparse_partitions(spark, base_spans):
     funnel = CU.funnel(CU.curate(sparse_text)).orderBy("stage_order").collect()
     assert [r["stage"] for r in funnel] == list(CU.STAGES)
     assert funnel[0]["n_docs"] == 3
+
+
+def test_dense_duplicate_corpus_curates(spark):
+    """Almost every doc is an exact or near copy of one of four texts, so
+    every exact-dedup survivor is an LSH candidate and the verify
+    prefilter's id set is the whole stage.  curate keeps one doc per
+    group, and the funnel equals the hand count."""
+    from wordscape_spark.plans import curate as CU
+
+    groups, exact_copies, near_texts = 4, 40, 30
+    rows = []
+    for g in range(groups):
+        base = (
+            "the quick document speaks of shipping and ports and carries "
+            "enough plain words that have been set to clear the gates "
+            + " ".join(f"g{g}w{j}" for j in range(24))
+        )
+        # each near text appends one word; it and its exact copy both
+        # come after the group's original in id order
+        texts = [base] * (1 + exact_copies) + [
+            f"{base} extra{j}" for j in range(near_texts) for _ in range(2)
+        ]
+        rows += [(f"{g}{i:04d}", "en", t) for i, t in enumerate(texts)]
+    junk = [("90000", "en", "@@@ ### !!!"), ("90001", "de", "... ...")]
+    df = spark.createDataFrame(rows + junk, "doc_id string, lang string, text string")
+
+    stages = CU.curate(df, budget_per_lang=10**9, n_streams=4)
+    funnel = CU.funnel(stages).orderBy("stage_order").collect()
+
+    def count(texts):
+        return len(texts), sum(len(t.split()) for t in texts)
+
+    texts = [t for _, _, t in rows]
+    originals = [r for r in rows if r[0].endswith("0000")]
+    assert [(r["stage"], r["n_docs"], r["n_tokens"]) for r in funnel] == [
+        ("input", *count(texts + [t for _, _, t in junk])),
+        ("quality", *count(texts)),
+        ("exact_dedup", *count(set(texts))),
+        ("near_dedup", *count([t for _, _, t in originals])),
+        ("token_budget", *count([t for _, _, t in originals])),
+    ]
+    survivors = {r["doc_id"] for r in stages["token_budget"].collect()}
+    assert survivors == {r[0] for r in originals}

@@ -761,6 +761,23 @@ def dup_ngram_coverage(
     ).mapInPandas(batch_fn, schema=schema)
 
 
+def _word_count_log_sum(words: str) -> str:
+    """SQL for ``sum(c * ln(c))`` over the distinct words of ``words``, an
+    array of non-empty strings (c = the word's count): one run-length scan
+    of the sorted array that adds a run's term when the run ends."""
+    # the initial state's empty run adds 0 (ln(0) is NULL in Spark,
+    # hence the greatest)
+    ended = "a.s + a.run * ln(greatest(a.run, 1L))"
+    return (
+        f"aggregate(array_sort({words}), "
+        "named_struct('prev', CAST('' AS STRING), 'run', 0L, 's', 0.0D), "
+        "(a, x) -> IF(x = a.prev, "
+        "named_struct('prev', x, 'run', a.run + 1L, 's', a.s), "
+        f"named_struct('prev', x, 'run', 1L, 's', {ended})), "
+        f"a -> {ended})"
+    )
+
+
 def lexical_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -772,27 +789,17 @@ def lexical_stats(
 
     Entirely per-row, zero Exchange: the per-word counts come from a
     run-length scan over the SORTED word array with an ``aggregate``
-    state (the ``top_ngram_metrics`` shape) — the entropy sum
-    telescopes as ``run*ln(run) - (run-1)*ln(run-1)`` per step, so no
-    per-word map is ever materialized.  ``H = ln(n) - s/n`` with
-    ``s = sum(c_i * ln(c_i))``.  Docs with no words are dropped (both
+    state (the ``top_ngram_metrics`` shape) — each run adds its
+    ``c*ln(c)`` once, when it ends, so no per-word map is ever
+    materialized and the sum has the oracle's terms.  ``H = ln(n) - s/n``
+    with ``s = sum(c_i * ln(c_i))``.  Docs with no words are dropped (both
     dialects).  The oracle is an INDEPENDENT relational re-derivation
     (explode -> group -> sum), not a transliteration."""
     words = (
         f"filter(split(lower(coalesce({text_col}, '')), '\\\\s+'),"
         " w -> w != '')"
     )
-    run = "IF(x = a.prev, a.run + 1L, 1L)"
-    s = (
-        "aggregate(array_sort(words), "
-        "named_struct('prev', CAST('' AS STRING), 'run', 0L, 's', 0.0D), "
-        "(a, x) -> named_struct("
-        "'prev', x, "
-        f"'run', {run}, "
-        f"'s', a.s + {run} * ln({run}) "
-        f"- ({run} - 1L) * ln(greatest({run} - 1L, 1L))), "
-        "a -> a.s)"
-    )
+    s = _word_count_log_sum("words")
     return (
         df.select(
             F.col(id_col).alias("doc_id"),
@@ -810,9 +817,9 @@ def lexical_stats(
             F.expr(
                 "round(CAST(n_unique AS DOUBLE) / n_words, 6)"
             ).alias("ttr"),
-            # greatest(...): entropy is mathematically >= 0; the
-            # telescoped float sum can land at -1e-16, which round()
-            # would keep as -0.0 ('-0' in the driver's value hash)
+            # greatest(...): entropy is mathematically >= 0; the float
+            # difference can land at -1e-16, which round() would keep as
+            # -0.0 (hashed as '-0' by a value comparison)
             F.expr(
                 f"round(greatest(ln(n_words) - {s} / n_words, 0.0D), 6)"
             ).alias("entropy"),

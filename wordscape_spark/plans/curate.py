@@ -22,11 +22,12 @@ Scale shape (100 TB):
   Its labels are (doc_id, cluster_id) over duplicate docs only;
 * the token budget is the stream-decomposed window (no per-language
   single-partition sort — operators/shaping.py);
-* each stage consumes the previous one lazily.  The funnel table
-  aggregates every stage, which re-derives upstream stages once per
-  aggregate — at sf this is free; on a real run wrap stage boundaries in
-  plans.checkpoint-style bucket commits (stage outputs are also the
-  natural resume points) or persist() the two dedup survivor frames.
+* the gated frame and the two dedup survivor frames are persisted, so a
+  pass evaluates the gate and each dedup join once however many
+  consumers read them; the funnel runs its five aggregates in one action
+  over those pins.  On a real run the stage boundaries can commit through
+  plans.checkpoint-style bucket commits instead (stage outputs are also
+  the natural resume points).
 """
 
 from __future__ import annotations
@@ -69,23 +70,25 @@ def curate(
         "tokens", F.expr(T.token_exprs("text", "spark")["tokens_ws"])
     )
 
+    # three pinned frames: the gated frame feeds the exact-dedup keep
+    # aggregate, its semi-join and the funnel; exact feeds the MinHash
+    # stage, the survivor join and the funnel; near feeds the budget and
+    # the funnel.  Unpinned, each consumer re-runs the upstream chain: the
+    # gate would run four times per pass, each a single task on a
+    # one-row-group input.  On a real 100 TB run the stage boundaries
+    # commit through plans.checkpoint instead.
     quality = (
         QR.gopher_quality(
             base, min_words=min_words, keep_cols=("lang", "text", "tokens")
         )
         .filter("gopher_pass")
         .select("doc_id", "lang", "text", "tokens")
+        .persist()
     )
 
     keep = D.exact_duplicate_groups(quality).select(
         F.col("keep_doc_id").alias("doc_id")
     )
-    # persist the two dedup survivor frames: they each feed three
-    # consumers (the next stage, the budget chain, and one funnel
-    # aggregate per downstream stage), and without the pin every funnel
-    # row re-derives the whole upstream chain — measured 18 s → ~7 s for
-    # the funnel at the correctness scale.  On a real 100 TB run the
-    # stage boundaries commit through plans.checkpoint instead.
     exact = quality.join(keep, "doc_id", "semi").persist()
 
     pairs = D.minhash_duplicate_pairs(exact, threshold=jaccard_threshold)
@@ -108,8 +111,10 @@ def curate(
 def funnel(stages: dict[str, DataFrame]) -> DataFrame:
     """(stage_order, stage, n_docs, n_tokens) — one row per stage, the
     job's audit record (the analog of the reference's per-stage log
-    tallies).  Single-row aggregates unioned; no data motion beyond each
-    stage's own plan."""
+    tallies).  Runs ONE Spark action — the five single-row aggregates
+    unioned, no data motion beyond each stage's own plan — and returns
+    its rows as a local 5-row table, so writing and collecting the result
+    start no job over the stage frames."""
     parts = [
         df.agg(
             F.count("*").alias("n_docs"),
@@ -124,4 +129,7 @@ def funnel(stages: dict[str, DataFrame]) -> DataFrame:
         )
         for i, (name, df) in enumerate(stages.items())
     ]
-    return reduce(DataFrame.unionByName, parts)
+    counts = reduce(DataFrame.unionByName, parts)
+    # an Arrow table becomes a LocalRelation; a list of Rows would be
+    # parallelized into an RDD, and collecting that is a job again
+    return counts.sparkSession.createDataFrame(counts.toArrow(), counts.schema)

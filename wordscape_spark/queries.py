@@ -1653,7 +1653,7 @@ def q_lexical_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc lexical diversity (type-token ratio + unigram entropy in
     nats): the spam/template tail detector.  Entirely per-row — the
     per-word counts come from a run-length scan over the sorted word
-    array (telescoped entropy sum), zero Exchange.  The oracle is an
+    array (one c*ln(c) term per run), zero Exchange.  The oracle is an
     independent relational re-derivation (explode -> group -> sum)."""
     from wordscape_spark.operators import quality_rules as QR
 
