@@ -9,7 +9,10 @@ Cluster usage (north rule: multi-executor, resumable, lineage'd):
         --input /path/or/iceberg://db.docs --output /path/out \
         --buckets 256
 
-Local smoke: python scripts/run_extract.py --input data/interleaved/sf0.001/docs.parquet --output /tmp/out
+Local smoke (the input is written by ``datagen.ensure_interleaved(0.001)``):
+
+    PYTHONPATH=. python scripts/run_extract.py --master "local[$(nproc)]" \
+        --input data/interleaved/v4/sf0.001/docs.parquet --output /tmp/out
 """
 
 from __future__ import annotations

@@ -15,17 +15,31 @@ from wordscape_spark.operators import shaping
 # ------------------------------------------------------ python reference
 
 
+def _merge_word(parts, lhs, rhs):
+    """One merge over a token list: a left-to-right scan that joins each
+    (lhs, rhs) occurrence and resumes after it (learn_bpe's scan-merge)."""
+    out, i = [], 0
+    while i < len(parts):
+        if i + 1 < len(parts) and (parts[i], parts[i + 1]) == (lhs, rhs):
+            out.append(lhs + rhs)
+            i += 2
+        else:
+            out.append(parts[i])
+            i += 1
+    return out
+
+
 def _py_train(texts, k):
     words = Counter()
     for t in texts:
         for w in (t or "").lower().strip().split():
             words[w] += 1
-    toks = {w: " " + "".join(c + " " for c in w) for w in words}
+    toks = {w: list(w) for w in words}
     merges = []
     for rank in range(1, k + 1):
         pairs = Counter()
         for w, cnt in words.items():
-            parts = toks[w].split()
+            parts = toks[w]
             for a, b in zip(parts, parts[1:]):
                 pairs[(a, b)] += cnt
         if not pairs:
@@ -35,16 +49,18 @@ def _py_train(texts, k):
         )
         merges.append((rank, lhs, rhs, freq))
         for w in toks:
-            toks[w] = toks[w].replace(f" {lhs} {rhs} ", f" {lhs}{rhs} ")
+            toks[w] = _merge_word(toks[w], lhs, rhs)
     return merges
 
 
 def _py_encode(text, merges):
-    ws = (text or "").lower().strip().split()
-    s = " " + " ".join("".join(c + " " for c in w) for w in ws)
-    for _, lhs, rhs, _ in merges:
-        s = s.replace(f" {lhs} {rhs} ", f" {lhs}{rhs} ")
-    return len(s.split())
+    n = 0
+    for w in (text or "").lower().strip().split():
+        parts = list(w)
+        for _, lhs, rhs, _ in merges:
+            parts = _merge_word(parts, lhs, rhs)
+        n += len(parts)
+    return n
 
 
 CORPUS = [
@@ -56,6 +72,7 @@ CORPUS = [
     (5, "   spaced    out\ttabs  "),
     (6, "punct, punct. punct! (punct)"),
     (7, "the the the thethe"),
+    (8, "abab aaaaaa"),  # repeats right after a merge
 ]
 K = 6
 
@@ -94,12 +111,58 @@ def test_no_cross_word_merges(spark):
     assert got == {0: 3, 1: 2}  # 'ab' x3 merged; 'a b' stays two tokens
 
 
+def test_adjacent_repeats_merge_every_occurrence(spark):
+    """A merge must not consume the delimiter the next occurrence needs:
+    'abab' under (a, b) is [ab, ab], and 'aaaaaa' under (a, a) is
+    [aa, aa, aa] — in the Python reference, on Spark, and in the DuckDB
+    train and encode chains."""
+    import duckdb
+
+    rows = [(0, "abab"), (1, "aaaaaa")]
+    assert _merge_word(list("abab"), "a", "b") == ["ab", "ab"]
+    assert _merge_word(list("aaaaaa"), "a", "a") == ["aa", "aa", "aa"]
+    want = [(1, "a", "a", 5), (2, "a", "b", 2), (3, "aa", "aa", 2),
+            (4, "aaaa", "aa", 1), (5, "ab", "ab", 1)]
+    assert _py_train([t for _, t in rows], 5) == want
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert bpe.bpe_train(df, n_merges=5) == want
+    one = {
+        r["doc_id"]: r["n_tokens"]
+        for r in bpe.bpe_encode(df, [(1, "a", "b", 2)]).collect()
+    }
+    assert one == {0: 2, 1: 6}
+    first = {
+        r["doc_id"]: r["n_tokens"]
+        for r in bpe.bpe_encode(df, want[:1]).collect()
+    }
+    assert first == {0: 4, 1: 3}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    ctes, union = bpe.train_ctes("documents", 5)
+    got = con.execute(
+        f"WITH {ctes} SELECT rank, lhs, rhs, freq FROM ({union}) ORDER BY rank"
+    ).fetchall()
+    assert [tuple(r) for r in got] == want
+    ctes, final = bpe.encode_ctes("documents", 1)
+    assert dict(con.execute(f"WITH {ctes} {final}").fetchall()) == first
+
+
 def test_early_stop_no_pairs(spark):
-    df = spark.createDataFrame(
-        [(0, "a b c"), (1, "a a b")], "doc_id long, text string"
-    )
+    import duckdb
+
+    rows = [(0, "a b c"), (1, "a a b")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     # singleton words have no adjacent pairs: training stops early
     assert bpe.bpe_train(df, n_merges=5) == []
+    # and the DuckDB encode chain, which has no early stop, still keeps
+    # every document
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    ctes, final = bpe.encode_ctes("documents", 5)
+    assert dict(con.execute(f"WITH {ctes} {final}").fetchall()) == {0: 3, 1: 3}
 
 
 def test_max_vocab_words_cap(docs):
@@ -181,5 +244,10 @@ def test_train_oracle_fuzz_vs_python():
             ).fetchall()
         ]
         # the SQL chain has no early stop: rounds past pair exhaustion
-        # emit no row (LIMIT 1 over empty), so got is want's prefix-equal
+        # emit no row (LIMIT 1 over empty), so got equals want
         assert got == want, (trial, corpus, k)
+        ctes, final = bpe.encode_ctes("documents", k)
+        enc = dict(con.execute(f"WITH {ctes} {final}").fetchall())
+        assert enc == {i: _py_encode(t, want) for i, t in corpus}, (
+            trial, corpus, k
+        )

@@ -16,18 +16,19 @@ The tokenizer-training step of an LLM data pipeline, Spark-first:
   ``operators/similarity.py``), then a per-row literal string replace.
   No corpus re-scan, no window, no growing shuffle.
 * **Tokenization state is a delimited string**, not a list: a word's
-  current segmentation is ``' t1 t2 ... tn '`` (single spaces, leading/
-  trailing space).  Merging pair ``(a, b)`` is then the literal replace
-  ``' a b ' -> ' ab '``, whose left-to-right non-overlapping semantics
-  are identical in Python, Spark and DuckDB — which is what makes the
-  training loop *relationally replayable*: the oracle unrolls the k
+  current segmentation is ``' t1  t2  ...  tn '``, every token in its
+  OWN pair of spaces, so adjacent tokens share no delimiter and merging
+  ``(a, b)`` as the literal replace ``' a  b ' -> ' ab '`` is exactly a
+  left-to-right scan-merge (``'abab'`` -> ``ab ab``, not ``ab a b``).
+  That replace is identical in Python, Spark and DuckDB — which makes
+  the training loop *relationally replayable*: the oracle unrolls the k
   rounds as generated CTEs and must reproduce the merge table exactly
   (see ``queries.build_oracle_sql['bpe_train']``).
 
 Encoding applies the learned merges in rank order to whole documents:
-words are char-seeded and joined with DOUBLE spaces, so the single-
-space merge patterns can never fire across a word boundary — one
-chained per-row expression, zero Exchange.
+words are char-seeded and joined by one EXTRA space, so no two-space
+merge pattern can fire across the three-space word gap — one chained
+per-row expression, zero Exchange.
 
 Overlap semantics match the BPE reference implementation: pair counts
 include overlapping occurrences (``'aaa'`` counts ``(a,a)`` twice) and
@@ -51,10 +52,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-# seed segmentation of one word: every character followed by a space,
-# then a leading space prepended -> ' c1 c2 ... cn '
-_SEED_SPARK = "concat(' ', regexp_replace({w}, '(.)', '$1 '))"
-_SEED_DUCK = "' ' || regexp_replace({w}, '(.)', '\\1 ', 'g')"
+# seed segmentation of one word: every character wrapped in its own
+# spaces -> ' c1  c2  ...  cn '
+_SEED_SPARK = "regexp_replace({w}, '(.)', ' $1 ')"
+_SEED_DUCK = "regexp_replace({w}, '(.)', ' \\1 ', 'g')"
 
 
 def words_expr(text_col: str, dialect: str) -> str:
@@ -115,7 +116,7 @@ def bpe_train(
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         best = (
-            cur.select("cnt", F.split(F.trim("toks"), " ").alias("l"))
+            cur.select("cnt", F.split(F.trim("toks"), " +").alias("l"))
             .filter(F.size("l") >= 2)
             .select(
                 "cnt",
@@ -138,7 +139,7 @@ def bpe_train(
         merges.append((rank, lhs, rhs, freq))
         cur = cur.withColumn(
             "toks",
-            F.replace("toks", F.lit(f" {lhs} {rhs} "), F.lit(f" {lhs}{rhs} ")),
+            F.replace("toks", F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs}{rhs} ")),
         )
     # unpersist the CACHED seeded histogram — ``cur`` is reassigned every
     # round, so unpersisting it would leak the cache entry for the rest of
@@ -157,17 +158,17 @@ def merges_table(
 
 def doc_seed_expr(text_col: str, dialect: str) -> str:
     """Whole-document seed segmentation: each word char-seeded, words
-    joined by a DOUBLE space so single-space merge patterns can never
-    match across a word boundary."""
+    joined by one extra space so merge patterns can never match across a
+    word boundary."""
     if dialect == "spark":
-        per_word = "regexp_replace(w, '(.)', '$1 ')"
+        per_word = _SEED_SPARK.format(w="w")
         return (
-            f"concat(' ', concat_ws(' ', "
-            f"transform({words_expr(text_col, 'spark')}, w -> {per_word})))"
+            f"concat_ws(' ', "
+            f"transform({words_expr(text_col, 'spark')}, w -> {per_word}))"
         )
-    per_word = "regexp_replace(w, '(.)', '\\1 ', 'g')"
+    per_word = _SEED_DUCK.format(w="w")
     return (
-        f"' ' || array_to_string(list_transform("
+        f"array_to_string(list_transform("
         f"{words_expr(text_col, 'duckdb')}, w -> {per_word}), ' ')"
     )
 
@@ -189,7 +190,7 @@ def bpe_encode(
     for _, lhs, rhs, _ in sorted(merges):
         out = out.withColumn(
             "_bpe_s",
-            F.replace("_bpe_s", F.lit(f" {lhs} {rhs} "), F.lit(f" {lhs}{rhs} ")),
+            F.replace("_bpe_s", F.lit(f" {lhs}  {rhs} "), F.lit(f" {lhs}{rhs} ")),
         )
     return out.select(
         "doc_id",
@@ -210,7 +211,8 @@ def train_ctes(src: str, n_merges: int) -> tuple[str, str]:
     primitive (histogram, pair zip, ORDER BY tie-break, left-to-right
     literal replace) has identical semantics in both dialects.
     MATERIALIZED pins keep DuckDB from re-inlining the chain (each t{i}
-    is referenced twice)."""
+    is referenced twice).  A round past pair exhaustion has no ``b{i}``
+    row; the LEFT JOIN then passes t{i-1} through unchanged."""
     seed = _SEED_DUCK.format(w="word")
     ctes = [
         f"""words AS MATERIALIZED (
@@ -225,7 +227,7 @@ def train_ctes(src: str, n_merges: int) -> tuple[str, str]:
       SELECT p.l AS lhs, p.r AS rhs, SUM(cnt) AS freq FROM (
         SELECT cnt, unnest(list_transform(range(1, len(lst)),
           j -> {{'l': lst[j], 'r': lst[j + 1]}})) AS p
-        FROM (SELECT cnt, regexp_split_to_array(trim(toks), ' ') AS lst
+        FROM (SELECT cnt, regexp_split_to_array(trim(toks), ' +') AS lst
               FROM t{i - 1})
         WHERE len(lst) >= 2
       ) GROUP BY 1, 2
@@ -235,9 +237,9 @@ def train_ctes(src: str, n_merges: int) -> tuple[str, str]:
       ORDER BY freq DESC, lhs ASC, rhs ASC LIMIT 1
     )""")
         ctes.append(f"""t{i} AS MATERIALIZED (
-      SELECT replace(toks, ' ' || b.lhs || ' ' || b.rhs || ' ',
-                     ' ' || b.lhs || b.rhs || ' ') AS toks, cnt
-      FROM t{i - 1}, b{i} b
+      SELECT coalesce(replace(toks, ' ' || b.lhs || '  ' || b.rhs || ' ',
+                              ' ' || b.lhs || b.rhs || ' '), toks) AS toks, cnt
+      FROM t{i - 1} LEFT JOIN b{i} b ON TRUE
     )""")
     union = " UNION ALL ".join(
         f"SELECT * FROM b{i}" for i in range(1, n_merges + 1)
@@ -265,9 +267,10 @@ def encode_ctes(
     ]
     for i in range(1, n_merges + 1):
         ctes.append(
-            f"d{i} AS (SELECT {cols}doc_id, replace(s, "
-            f"' ' || b.lhs || ' ' || b.rhs || ' ', "
-            f"' ' || b.lhs || b.rhs || ' ') AS s FROM d{i - 1}, b{i} b)"
+            f"d{i} AS (SELECT {cols}doc_id, coalesce(replace(s, "
+            f"' ' || b.lhs || '  ' || b.rhs || ' ', "
+            f"' ' || b.lhs || b.rhs || ' '), s) AS s "
+            f"FROM d{i - 1} LEFT JOIN b{i} b ON TRUE)"
         )
     final = (
         f"SELECT {cols}doc_id, "

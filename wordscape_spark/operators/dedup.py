@@ -15,7 +15,10 @@ Scale notes (100 TB):
 * the LSH band join shuffles only (band_key, doc_id) pairs — band keys are
   md5 strings, well distributed, AQE handles residual skew;
 * candidate verification joins shingle sets only for candidate pairs (a tiny
-  fraction), never all-pairs.
+  fraction), never all-pairs.  The ids of docs in candidate pairs are
+  broadcast, so that broadcast grows with the number of such docs, up to
+  the whole corpus at high duplicate density; without it, both verify
+  joins would shuffle every doc's shingle set.
 """
 
 from __future__ import annotations
