@@ -165,3 +165,29 @@ def test_empty_bucket_crash_window_recovers(spark, docs, tmp_path):
     lineage = {r["bucket"]: r for r in CP.read_lineage(spark, str(out)).collect()}
     assert sorted(lineage) == list(range(8))
     assert lineage[victim]["n_docs"] == 0
+
+
+def test_returned_frame_reads_listed_bucket_dirs(spark, docs, tmp_path):
+    """The returned frame reads the committed ``bucket=<n>`` dirs, not a
+    literal ``bucket=*`` glob, and a kill-and-resume returns the same rows
+    as an uninterrupted run."""
+    clean = tmp_path / "clean"
+    baseline = CP.run_extract_checkpointed(spark, docs, str(clean), n_buckets=4)
+    resumed_dir = tmp_path / "resumed"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        CP.run_extract_checkpointed(
+            spark, docs, str(resumed_dir), n_buckets=4, fail_after=2
+        )
+    resumed = CP.run_extract_checkpointed(
+        spark, docs, str(resumed_dir), n_buckets=4
+    )
+    for out, df in ((clean, baseline), (resumed_dir, resumed)):
+        files = [pathlib.Path(f.removeprefix("file://")) for f in df.inputFiles()]
+        assert files
+        for f in files:
+            bucket = f.parent
+            assert bucket.parent == out and bucket.is_dir(), f
+            assert bucket.name.startswith("bucket="), f
+            assert bucket.name.removeprefix("bucket=").isdigit(), f
+    assert "bucket" not in resumed.columns
+    assert _collect(baseline) == _collect(resumed)

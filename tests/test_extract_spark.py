@@ -193,6 +193,53 @@ def test_null_spans_doc_rejects_not_vanishes(spark, docs_path):
         spark.conf.set(batch_conf, prev)
 
 
+def _out_spans_to_rows(spans, span_pages):
+    pages = span_pages if len(span_pages) == len(spans) else [1] * len(spans)
+    return [
+        {"kind": k, "text": t, "media_ref": m, "offset": o, "page": p}
+        for (k, t, m, o), p in zip(spans, pages)
+    ]
+
+
+def _pages_to_rows(pages):
+    return [
+        {"page": p, "text": t, "counts": {k: int(v) for k, v in c.items()}}
+        for (p, t, c) in pages
+    ]
+
+
+def _result_row_slim(doc_id, res):
+    return {
+        "doc_id": doc_id,
+        "ok": res.ok,
+        "reject_reason": res.reject_reason,
+        "spans": _out_spans_to_rows(res.spans, res.span_pages),
+    }
+
+
+def _result_row(doc_id, res, metrics):
+    return {
+        "doc_id": doc_id,
+        "ok": res.ok,
+        "reject_reason": res.reject_reason,
+        "spans": _out_spans_to_rows(res.spans, res.span_pages),
+        "pages": _pages_to_rows(res.pages),
+        "text": res.text,
+        "counts": {k: int(v) for k, v in res.counts.items()},
+        "quality": float(res.quality),
+        "builtin_props": res.builtin_props,
+        "props": res.props,
+        "lang_tags": list(res.lang_tags),
+        "num_words": int(metrics["num_words"]),
+        "num_chars": int(metrics["num_chars"]),
+        "num_alph_chars": int(metrics["num_alph_chars"]),
+        "num_numeric_chars": int(metrics["num_numeric_chars"]),
+        "num_alphnum_chars": int(metrics["num_alphnum_chars"]),
+        "alnum_prop": float(metrics["alnum_prop"]),
+        "alph_to_num_ratio": float(metrics["alph_to_num_ratio"]),
+    }
+
+
 def test_colwise_record_batch_matches_from_pylist():
     """The column-wise Arrow builder must be byte-identical to
     RecordBatch.from_pylist over the row dicts — including reject rows,
@@ -231,7 +278,7 @@ def test_colwise_record_batch_matches_from_pylist():
     assert any(not r.ok for _, r in results)  # rejects are exercised
 
     slim_schema = to_arrow_schema(X.EXTRACTED_SLIM_SCHEMA)
-    rows_slim = [X._result_row_slim(d, r) for d, r in results]
+    rows_slim = [_result_row_slim(d, r) for d, r in results]
     expect_slim = pa.RecordBatch.from_pylist(rows_slim, schema=slim_schema)
     assert X._record_batch(results, slim_schema).equals(expect_slim)
 
@@ -240,7 +287,7 @@ def test_colwise_record_batch_matches_from_pylist():
         [r.text if r.ok else "" for _, r in results]
     )
     rows_full = [
-        X._result_row(d, r, m) for (d, r), m in zip(results, metrics)
+        _result_row(d, r, m) for (d, r), m in zip(results, metrics)
     ]
     expect_full = pa.RecordBatch.from_pylist(rows_full, schema=full_schema)
     assert X._record_batch(results, full_schema).equals(expect_full)

@@ -487,3 +487,32 @@ def test_domain_cap_validation(spark):
 
     with _pt.raises(ValueError):
         U.domain_cap(df, max_per_domain=0)
+
+
+@pytest.mark.parametrize(
+    "module, attr",
+    [
+        ("datagen", "DATA_DIR"),
+        ("datagen", "BASE_DIR"),
+        ("golden", "GOLDEN_BASE"),
+        ("watgen", "BASE_DIR"),
+        ("docxgen", "BASE_DIR"),
+        ("odtgen", "BASE_DIR"),
+        ("pdfgen", "BASE_DIR"),
+        ("rtfgen", "BASE_DIR"),
+        ("docgen_doc", "BASE_DIR"),
+        ("queries", "STREAM_GATE_DIR"),
+    ],
+)
+def test_data_roots_live_beside_the_package(module, attr):
+    """Generated inputs, goldens and scratch sinks resolve under the data/
+    dir of the checkout the package was imported from, so a second
+    checkout never reads or writes another one's data."""
+    import importlib
+    import pathlib
+
+    mod = importlib.import_module(f"wordscape_spark.{module}")
+    checkout = pathlib.Path(mod.__file__).resolve().parents[1]
+    root = getattr(mod, attr)
+    assert root.is_absolute()
+    assert root.resolve().is_relative_to(checkout / "data"), root

@@ -110,8 +110,8 @@ def test_salted_null_spans_behind_n_spans_rejects(spark):
 
 
 def test_salted_branch_plan_shape(spark, mega_docs):
-    """chunk → salt shuffle → classify → merge: three Python nodes, no
-    cached frame and no broadcast join."""
+    """chunk → salt shuffle → classify → merge: three Arrow Python nodes,
+    no pandas node, no cached frame and no broadcast join."""
     df = spark.createDataFrame(list(mega_docs.items()), SCHEMA)
     plan = (
         X._extract_salted(df, SALTED)._jdf.queryExecution()
@@ -123,8 +123,9 @@ def test_salted_branch_plan_shape(spark, mega_docs):
         plan,
     )
     assert sorted(python_nodes) == [
-        "FlatMapGroupsInPandas", "MapInPandas", "MapInPandas"
+        "FlatMapGroupsInArrow", "MapInArrow", "MapInArrow"
     ], plan
+    assert "InPandas" not in plan, plan
     assert "InMemory" not in plan, plan
     assert "BroadcastExchange" not in plan, plan
 

@@ -24,7 +24,9 @@ import pyarrow.parquet as pq
 
 from wordscape_spark import signal as sig
 
-BASE_DIR = pathlib.Path("/root/repo/data/interleaved")
+# generated inputs and goldens live in the data/ dir beside the package
+DATA_DIR = pathlib.Path(__file__).resolve().parents[1] / "data"
+BASE_DIR = DATA_DIR / "interleaved"
 # bump when the generator's output changes: the interleaved table is cached
 # on disk per (version, sf), and goldens/oracles key off the same version
 # v4: maintained n_spans column (the Iceberg-metadata analog the extract

@@ -37,13 +37,14 @@ fidelity the reference gets by converting through LibreOffice
 from __future__ import annotations
 
 import os
-import pathlib
 import re
 import struct
 import tempfile
 
 from wordscape_spark import datagen
 from wordscape_spark import signal as sig
+
+BASE_DIR = datagen.DATA_DIR / "doc_legacy"
 
 _ENDOFCHAIN = 0xFFFFFFFE
 _FREESECT = 0xFFFFFFFF
@@ -692,7 +693,7 @@ def ensure_doc(sf: float) -> str:
     # same interleaved input (v2: CHPX bold/size formatting runs;
     # v3: STSH stylesheet + PAPX istd runs — paragraph style names)
     out_dir = (
-        pathlib.Path("/root/repo/data/doc_legacy")
+        BASE_DIR
         / f"v{datagen.DATAGEN_VERSION}.3"
         / f"sf{sf:g}"
     )

@@ -20,13 +20,14 @@ from __future__ import annotations
 import hashlib
 import io
 import os
-import pathlib
 import tempfile
 import zipfile
 from xml.sax.saxutils import escape, quoteattr
 
 from wordscape_spark import datagen
 from wordscape_spark import signal as sig
+
+BASE_DIR = datagen.DATA_DIR / "docx"
 
 _W_NS = (
     'xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main" '
@@ -395,7 +396,7 @@ def ensure_docx(sf: float) -> str:
     import pyarrow.parquet as pq
 
     out_dir = (
-        pathlib.Path("/root/repo/data/docx")
+        BASE_DIR
         / f"v{datagen.DATAGEN_VERSION}"
         / f"sf{sf:g}"
     )

@@ -30,7 +30,7 @@ import pyarrow.parquet as pq
 from wordscape_spark import datagen
 from wordscape_spark.config import DEFAULT_CONFIG
 
-GOLDEN_BASE = pathlib.Path("/root/repo/data/golden")
+GOLDEN_BASE = datagen.DATA_DIR / "golden"
 
 # every module whose semantics the goldens embody — content-hashed into the
 # golden dir name (auto-invalidation)

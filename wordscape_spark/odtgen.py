@@ -50,12 +50,13 @@ from __future__ import annotations
 
 import hashlib
 import os
-import pathlib
 import tempfile
 import zipfile
 
 from wordscape_spark import datagen
 from wordscape_spark.rtfgen import spans_to_rtf_items
+
+BASE_DIR = datagen.DATA_DIR / "odt"
 
 MIMETYPE = b"application/vnd.oasis.opendocument.text"
 
@@ -333,7 +334,7 @@ def ensure_odt(sf: float) -> str:
     import pyarrow.parquet as pq
 
     out_dir = (
-        pathlib.Path("/root/repo/data/odt")
+        BASE_DIR
         / f"v{datagen.DATAGEN_VERSION}.1"
         / f"sf{sf:g}"
     )

@@ -9,14 +9,16 @@ Execution strategy (designed for 10^12-row scale):
   spans arrived exploded.)
 * Skewed mega-documents (more than ``cfg.salt_threshold`` spans) would
   stall a task the way one huge doc stalls a reference worker (SURVEY
-  §4.1).  They take the *salted path*: a ``mapInPandas`` task chunks each
+  §4.1).  They take the *salted path*: a ``mapInArrow`` task chunks each
   mega-doc at element boundaries and computes the doc's font-heuristic
   state (additive per paragraph, so one pass in chunk order), which rides
-  on every chunk row; a ``repartition`` over (doc_id, chunk_idx) spreads
-  the chunks over the cluster (the salt); a second ``mapInPandas``
-  classifies chunks in parallel, and a grouped ``applyInPandas`` re-merges
-  the partial results in chunk order.  Results are bit-identical to the
-  single-pass path (tested).
+  on every chunk row as typed columns; a ``repartition`` over (doc_id,
+  chunk_idx) spreads the chunks over the cluster (the salt); a second
+  ``mapInArrow`` classifies chunks in parallel, and a grouped
+  ``applyInArrow`` re-merges the partial results in chunk order.  Every
+  Python stage decodes spans with the same flat-child Arrow decode, and
+  both paths build their output rows with the one ``_record_batch``
+  builder.  Results are bit-identical to the single-pass path (tested).
 * Oversized documents (more than ``cfg.max_doc_spans`` spans) are rejected
   inside the Python pass that first sees them — the kernel
   (``classify_document``) or the chunk UDF — before any classification
@@ -25,11 +27,9 @@ Execution strategy (designed for 10^12-row scale):
 
 from __future__ import annotations
 
-import json
+from collections import OrderedDict
 from itertools import accumulate
-from typing import Iterator
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -122,21 +122,21 @@ EXTRACTED_SLIM_SCHEMA = StructType(
 )
 
 
-def _result_row_slim(doc_id: str, res: C.DocResult) -> dict:
-    return {
-        "doc_id": doc_id,
-        "ok": res.ok,
-        "reject_reason": res.reject_reason,
-        "spans": _out_spans_to_rows(res.spans, res.span_pages),
-    }
-
-
+# the salted path's intermediate rows.  A chunk row carries the whole doc's
+# font-heuristic state (FontHeuristics' additive accumulators); a doc that
+# cannot be chunked is one marker row (chunk_idx -1, reject_reason set).
 _CHUNK_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("chunk_idx", IntegerType()),
         StructField("spans", ArrayType(SPAN_TYPE)),
-        StructField("font_state", StringType()),
+        StructField("font_counts", MapType(StringType(), LongType())),
+        StructField("font_apps", MapType(StringType(), LongType())),
+        StructField("font_tracker", ArrayType(StructType([
+            StructField("fp", StringType()),
+            StructField("level", IntegerType()),
+        ]))),
+        StructField("reject_reason", StringType()),
     ]
 )
 
@@ -144,90 +144,97 @@ _PARTIAL_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("chunk_idx", IntegerType()),
+        StructField("reject_reason", StringType()),
         StructField("spans", ArrayType(OUT_SPAN_TYPE)),  # page is chunk-local
         StructField("pages", ArrayType(PAGE_TYPE)),      # chunk-local pages
         StructField("text", StringType()),
         StructField("counts", MapType(StringType(), LongType())),
-        StructField("char_counter", StringType()),
-        StructField("meta_json", StringType()),  # props/lang_tags of chunk
+        # builtin / heuristic char mass per entity id
+        StructField(
+            "char_counter", MapType(IntegerType(), ArrayType(DoubleType()))
+        ),
+        StructField("props", MapType(StringType(), StringType())),
+        StructField("lang_tags", ArrayType(StringType())),
     ]
 )
 
 
-def _spans_to_tuples(spans) -> list[tuple]:
-    return [
-        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans
+def _struct_rows(list_col, fields=("kind", "text", "media_ref", "offset")):
+    """Decode a list<struct> Arrow column: per row, the list of ``fields``
+    tuples, or None for a NULL list.
+
+    Flat-child decode: one to_pylist per LEAF column instead of
+    materializing a dict per span (nested to_pylist) — measured 16% faster
+    end-to-end on the sf0.8 mix, and the classifier consumes tuples
+    directly with no dict hop.  flatten() skips the child segments behind
+    NULL lists, so per-row bounds come from the list lengths with NULL
+    counted as 0.  Field access is BY NAME: a conforming table whose struct
+    children are ordered differently (read_docs normalizes, but callers
+    can hand extract() any DataFrame) must not be silently decoded in the
+    wrong order."""
+    import pyarrow.compute as pc
+
+    valid = list_col.is_valid().to_pylist()
+    lengths = pc.list_value_length(list_col).fill_null(0).to_pylist()
+    flat = list_col.flatten()
+    leaves = [
+        _kinds(flat.field(name)) if name == "kind"
+        else flat.field(name).to_pylist()
+        for name in fields
     ]
+    hi = 0
+    for is_valid, n in zip(valid, lengths):
+        lo, hi = hi, hi + n
+        yield list(zip(*(leaf[lo:hi] for leaf in leaves))) if is_valid else None
 
 
-def _spans_to_rows(spans: list[tuple]) -> list[dict]:
-    return [
-        {"kind": k, "text": t, "media_ref": m, "offset": o}
-        for (k, t, m, o) in spans
-    ]
+def _kinds(arr) -> list:
+    """The kind leaf, dictionary-decoded: kind strings repeat heavily (~6×
+    at the corpus mix), so each distinct kind materializes ONE Python
+    string (fewer allocations, and the shared objects make the parse-cache
+    dict lookups identity-fast).  A NULL kind (malformed producer) keeps
+    the plain decode so it still fails per-document inside the
+    classifier."""
+    if arr.null_count:
+        return arr.to_pylist()
+    enc = arr.dictionary_encode()
+    uniq = enc.dictionary.to_pylist()
+    return [uniq[i] for i in enc.indices.to_numpy(zero_copy_only=False).tolist()]
 
 
-def _out_spans_to_rows(spans: list[tuple], span_pages: list[int]) -> list[dict]:
-    pages = span_pages if len(span_pages) == len(spans) else [1] * len(spans)
-    return [
-        {"kind": k, "text": t, "media_ref": m, "offset": o, "page": p}
-        for (k, t, m, o), p in zip(spans, pages)
-    ]
+def _rows_batch(rows: list[tuple], schema: StructType):
+    """A RecordBatch of the salted path's intermediate ``schema`` from row
+    tuples in field order: nested lists as lists of field tuples, maps as
+    dicts (both convert in C++ with no per-span dict)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-
-def _pages_to_rows(pages: list[tuple]) -> list[dict]:
-    return [
-        {"page": p, "text": t, "counts": {k: int(v) for k, v in c.items()}}
-        for (p, t, c) in pages
-    ]
-
-
-def _result_row(doc_id: str, res: C.DocResult, metrics=None) -> dict:
-    # D10 metrics are computed here, inside the classification UDF: they
-    # parallelize with classification at zero extra Arrow traffic.  (A native
-    # column-expression variant was measured slower end-to-end — JVM string
-    # passes over multi-MB mega-doc texts straggle; see operators/text.py
-    # metrics_exprs for the SQL-side twin used by the oracle.)  The kernel's
-    # column-wise twin ``_record_batch`` runs one vectorized
-    # text_metrics_batch pass per Arrow batch, and callers mirroring it pass
-    # those ``metrics`` in; the salted merge passes none, and the vectorized
-    # pass over its one mega-doc text is still ~6x faster than the scalar
-    # form.
-    if metrics is None:
-        metrics = C.text_metrics_batch([res.text if res.ok else ""])[0]
-    return {
-        "doc_id": doc_id,
-        "ok": res.ok,
-        "reject_reason": res.reject_reason,
-        "spans": _out_spans_to_rows(res.spans, res.span_pages),
-        "pages": _pages_to_rows(res.pages),
-        "text": res.text,
-        "counts": {k: int(v) for k, v in res.counts.items()},
-        "quality": float(res.quality),
-        "builtin_props": res.builtin_props,
-        "props": res.props,
-        "lang_tags": list(res.lang_tags),
-        "num_words": int(metrics["num_words"]),
-        "num_chars": int(metrics["num_chars"]),
-        "num_alph_chars": int(metrics["num_alph_chars"]),
-        "num_numeric_chars": int(metrics["num_numeric_chars"]),
-        "num_alphnum_chars": int(metrics["num_alphnum_chars"]),
-        "alnum_prop": float(metrics["alnum_prop"]),
-        "alph_to_num_ratio": float(metrics["alph_to_num_ratio"]),
-    }
+    arrow_schema = to_arrow_schema(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(col), f.type) for col, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
 
 
 def _record_batch(results, arrow_schema):
     """Column-wise Arrow assembly of (doc_id, DocResult) pairs into either
     output surface, chosen by ``arrow_schema``: the slim schema ends after
     the span columns, the full one goes on with doc text, pages, maps and
-    the D10 text metrics (one vectorized ``text_metrics_batch`` pass per
-    batch instead of per-doc regex work).
+    the D10 text metrics.  The one output builder of both the small path
+    (one call per Arrow batch) and the salted merge (one call per mega-doc).
 
-    Byte-identical to ``RecordBatch.from_pylist`` over ``_result_row_slim``
-    / ``_result_row`` rows (map entry order = dict insertion order; pinned
-    by test) without materializing a dict per row and per span —
-    from_pylist re-hashes every field name for every span."""
+    The D10 metrics are computed here, inside the classification UDF: they
+    parallelize with classification at zero extra Arrow traffic, in one
+    vectorized ``text_metrics_batch`` pass per batch instead of per-doc
+    regex work.  (A native column-expression variant was measured slower
+    end-to-end — JVM string passes over multi-MB mega-doc texts straggle;
+    see operators/text.py metrics_exprs for the SQL-side twin used by the
+    oracle.)
+
+    Byte-identical to ``RecordBatch.from_pylist`` over one dict per row
+    (map entry order = dict insertion order; pinned by test) without
+    materializing a dict per row and per span — from_pylist re-hashes every
+    field name for every span."""
     import pyarrow as pa
 
     S = pa.string()
@@ -348,56 +355,16 @@ def _make_classify_arrow_fn(
     (default) or the slim span-surface row (``extract_slim``)."""
 
     def classify_batches(batches):
-        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(out_schema)
         for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            spans_col = batch.column(1)
-            # flat-child decode: one to_pylist per LEAF column instead of
-            # materializing a dict per span (nested to_pylist) — measured
-            # 16% faster end-to-end on the sf0.8 mix, and the classifier
-            # consumes tuples directly with no dict hop.  flatten() skips
-            # the child segments behind NULL spans arrays, so per-doc
-            # bounds come from the list lengths with NULL counted as 0.
-            valid = spans_col.is_valid().to_pylist()
-            lengths = pc.list_value_length(spans_col).fill_null(0).to_pylist()
-            flat = spans_col.flatten()
-            # field access is BY NAME: a conforming table whose struct
-            # children are ordered differently (read_docs normalizes, but
-            # callers can hand extract() any DataFrame) must not be
-            # silently decoded in the wrong order.
-            # kind strings repeat heavily (~6× at the corpus mix):
-            # dictionary-encode so each distinct kind materializes ONE
-            # Python string (fewer allocations, and the shared objects make
-            # the parse-cache dict lookups identity-fast).  A NULL kind
-            # (malformed producer) keeps the plain decode so it still fails
-            # per-document inside _safe_classify_tuples.
-            kind_arr = flat.field("kind")
-            if kind_arr.null_count == 0:
-                enc = kind_arr.dictionary_encode()
-                uniq = enc.dictionary.to_pylist()
-                kinds = [uniq[i] for i in enc.indices.to_numpy(
-                    zero_copy_only=False).tolist()]
-            else:
-                kinds = kind_arr.to_pylist()
-            texts = flat.field("text").to_pylist()
-            refs = flat.field("media_ref").to_pylist()
-            offs = flat.field("offset").to_pylist()
-            results = []
-            hi = 0
-            for doc_id, is_valid, n in zip(doc_ids, valid, lengths):
-                lo, hi = hi, hi + n
-                if not is_valid:
-                    res = C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
-                else:
-                    res = _safe_classify_tuples(
-                        list(zip(kinds[lo:hi], texts[lo:hi],
-                                 refs[lo:hi], offs[lo:hi])),
-                        cfg,
-                    )
-                results.append((doc_id, res))
+            results = [
+                (doc_id, _safe_classify_tuples(spans, cfg))
+                for doc_id, spans in zip(
+                    batch.column(0).to_pylist(), _struct_rows(batch.column(1))
+                )
+            ]
             if results:
                 yield _record_batch(results, arrow_schema)
 
@@ -405,13 +372,15 @@ def _make_classify_arrow_fn(
 
 
 def _safe_classify_tuples(
-    tuples: list[tuple], cfg: ExtractConfig
+    tuples: list[tuple] | None, cfg: ExtractConfig
 ) -> C.DocResult:
     """Per-document fault isolation: a malformed document becomes a reject
     row instead of failing the task (the reference's failed_*.jsonl model,
     annotator_process.py:199-282 — at 10^12 rows one bad doc must never
     kill a job).  Takes pre-built (kind, text, media_ref, offset) tuples
-    (the flat-child Arrow decode path)."""
+    (the flat-child Arrow decode path), or None for a NULL spans array."""
+    if tuples is None:
+        return C.DocResult(False, "null_spans", [], "", {}, 0.0, {})
     try:
         return C.classify_document(tuples, cfg)
     except Exception as exc:  # noqa: BLE001 — intentional isolation boundary
@@ -462,120 +431,105 @@ def _chunk_spans(spans: list[tuple], target: int) -> list[list[tuple]]:
     return chunks
 
 
-def _font_state_of(chunks: list[list[tuple]], cfg: ExtractConfig) -> str:
-    """The document's font-heuristic state as JSON.  The state is additive
-    over paragraphs in document order, so one pass over the chunks' elements
-    in chunk order yields exactly the single-pass state."""
+def _font_state_of(
+    chunks: list[list[tuple]], cfg: ExtractConfig
+) -> C.FontHeuristics:
+    """The document's font-heuristic state, not yet built.  The state is
+    additive over paragraphs in document order, so one pass over the
+    chunks' elements in chunk order yields exactly the single-pass state."""
     h = C.FontHeuristics(cfg)
     for chunk in chunks:
         for el in C.parse_elements(chunk):
             if isinstance(el, C.BodyPar):
                 h._evaluate_paragraph(el)
-    return json.dumps(
-        {
-            "counts": h.font_size_count,
-            "apps": h.font_size_appearances,
-            "tracker": h.builtin_heading_tracker,
-        }
-    )
+    return h
 
 
 def _make_chunk_fn(cfg: ExtractConfig):
     """Split each mega-doc into chunks and put the whole doc's font state on
     every chunk row.  A doc that cannot be chunked becomes one marker row
-    (``chunk_idx`` -1, ``REJ:``/``ERR:`` state), resolved at the merge."""
+    (``chunk_idx`` -1, ``reject_reason`` set), resolved at the merge."""
 
-    def chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def chunk_batches(batches):
+        for batch in batches:
             rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                marker = None
+            for doc_id, spans in zip(
+                batch.column(0).to_pylist(), _struct_rows(batch.column(1))
+            ):
+                reason = None
                 if spans is None:
                     # NULL spans behind a maintained n_spans: same reject
                     # as the small path
-                    marker = "REJ:null_spans"
+                    reason = "null_spans"
                 elif len(spans) > cfg.max_doc_spans:
                     # oversized-doc gate (B1/C1 analog): reject without
                     # classifying
-                    marker = "REJ:too_many_spans"
+                    reason = "too_many_spans"
                 else:
                     try:
-                        chunks = _chunk_spans(
-                            _spans_to_tuples(spans), cfg.salt_chunk_spans
-                        )
-                        state = _font_state_of(chunks, cfg)
+                        chunks = _chunk_spans(spans, cfg.salt_chunk_spans)
+                        h = _font_state_of(chunks, cfg)
                     except Exception as exc:  # noqa: BLE001 — fault isolation
-                        marker = f"ERR:{type(exc).__name__}"
-                if marker is not None:
-                    rows.append({"doc_id": doc_id, "chunk_idx": -1,
-                                 "spans": [], "font_state": marker})
+                        reason = f"error:{type(exc).__name__}"
+                if reason is not None:
+                    rows.append((doc_id, -1, [], {}, {}, [], reason))
                     continue
                 rows.extend(
-                    {"doc_id": doc_id, "chunk_idx": idx,
-                     "spans": _spans_to_rows(chunk), "font_state": state}
+                    (doc_id, idx, chunk, h.font_size_count,
+                     h.font_size_appearances, h.builtin_heading_tracker, None)
                     for idx, chunk in enumerate(chunks)
                 )
             if rows:
-                yield pd.DataFrame(rows)
+                yield _rows_batch(rows, _CHUNK_SCHEMA)
 
     return chunk_batches
 
 
-def _heuristics_from_state(state_json: str, cfg: ExtractConfig) -> C.FontHeuristics:
-    st = json.loads(state_json)
+def _heuristics_at(batch, i: int, cfg: ExtractConfig) -> C.FontHeuristics:
+    """The built font heuristics from chunk row ``i``'s typed state."""
     h = C.FontHeuristics(cfg)
-    h.merge_state(st["counts"], st["apps"], [tuple(t) for t in st["tracker"]])
+    h.merge_state(
+        dict(batch.column("font_counts")[i].as_py()),
+        dict(batch.column("font_apps")[i].as_py()),
+        [(t["fp"], t["level"]) for t in batch.column("font_tracker")[i].as_py()],
+    )
     h.build()
     return h
 
 
 def _make_chunk_classify_fn(cfg: ExtractConfig):
-    def classify_chunks(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from collections import OrderedDict
-
+    def classify_chunks(batches):
         # bounded per-task LRU: evict one entry at a time so a task
         # interleaving chunks of >64 mega-docs re-derives only the coldest
         # heuristics map, not all of them
         heuristics_cache: OrderedDict[str, C.FontHeuristics] = OrderedDict()
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for doc_id, chunk_idx, spans, state in zip(
-                pdf["doc_id"], pdf["chunk_idx"], pdf["spans"], pdf["font_state"]
-            ):
-                try:
-                    if state.startswith(("ERR:", "REJ:")) or chunk_idx < 0:
-                        raise _ChunkError(state)
-                    h = heuristics_cache.get(doc_id)
-                    if h is None:
-                        h = _heuristics_from_state(state, cfg)
-                        heuristics_cache[doc_id] = h
-                        if len(heuristics_cache) > 64:
-                            heuristics_cache.popitem(last=False)
-                    else:
-                        heuristics_cache.move_to_end(doc_id)
-                    elements = C.parse_elements(_spans_to_tuples(spans))
-                    out_spans, char_counter, counts, span_pages, pages = (
-                        C.classify_elements(elements, h)
-                    )
-                except Exception as exc:  # noqa: BLE001 — fault isolation
-                    marker = (
-                        state if state.startswith(("ERR:", "REJ:"))
-                        else f"ERR:{type(exc).__name__}"
-                    )
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "chunk_idx": int(chunk_idx),
-                            "spans": [],
-                            "pages": [],
-                            "text": "",
-                            "counts": {},
-                            "char_counter": marker,
-                            "meta_json": "{}",
-                        }
-                    )
+            for i, (doc_id, chunk_idx, reason, spans) in enumerate(zip(
+                batch.column("doc_id").to_pylist(),
+                batch.column("chunk_idx").to_pylist(),
+                batch.column("reject_reason").to_pylist(),
+                _struct_rows(batch.column("spans")),
+            )):
+                if reason is None:
+                    try:
+                        h = heuristics_cache.get(doc_id)
+                        if h is None:
+                            h = _heuristics_at(batch, i, cfg)
+                            heuristics_cache[doc_id] = h
+                            if len(heuristics_cache) > 64:
+                                heuristics_cache.popitem(last=False)
+                        else:
+                            heuristics_cache.move_to_end(doc_id)
+                        elements = C.parse_elements(spans)
+                        out_spans, char_counter, counts, span_pages, pages = (
+                            C.classify_elements(elements, h)
+                        )
+                    except Exception as exc:  # noqa: BLE001 — fault isolation
+                        reason = f"error:{type(exc).__name__}"
+                if reason is not None:
+                    rows.append((doc_id, chunk_idx, reason, [], [], "",
+                                 {}, {}, {}, []))
                     continue
                 props: dict[str, str] = {}
                 lang_tags: list[str] = []
@@ -585,118 +539,109 @@ def _make_chunk_classify_fn(cfg: ExtractConfig):
                             lang_tags.append(el.value)
                         elif el.key:
                             props[el.key] = el.value
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "chunk_idx": int(chunk_idx),
-                        "spans": [
-                            {"kind": k, "text": t, "media_ref": m,
-                             "offset": i, "page": p}
-                            for i, ((k, t, m), p) in enumerate(
-                                zip(out_spans, span_pages)
-                            )
-                        ],
-                        "pages": _pages_to_rows(pages),
-                        "text": C.serialize_text(elements),
-                        "counts": {k: int(v) for k, v in counts.items()},
-                        "char_counter": json.dumps(char_counter),
-                        "meta_json": json.dumps(
-                            {"props": props, "lang_tags": lang_tags}
-                        ),
-                    }
-                )
+                rows.append((
+                    doc_id,
+                    chunk_idx,
+                    None,
+                    [(k, t, m, j, p) for j, ((k, t, m), p) in enumerate(
+                        zip(out_spans, span_pages))],
+                    pages,
+                    C.serialize_text(elements),
+                    counts,
+                    char_counter,
+                    props,
+                    lang_tags,
+                ))
             if rows:
-                yield pd.DataFrame(rows)
+                yield _rows_batch(rows, _PARTIAL_SCHEMA)
 
     return classify_chunks
 
 
-class _ChunkError(Exception):
-    pass
-
-
 def _make_merge_partials_fn(cfg: ExtractConfig, out_schema: StructType):
-    """``out_schema`` picks the output surface: EXTRACTED_SCHEMA (full
-    ``_result_row``) or EXTRACTED_SLIM_SCHEMA (span surface only,
-    ``_result_row_slim``) — the merge logic is identical, only the returned
-    row (and therefore the Arrow return-leg volume) differs."""
-    row_fn = (
-        _result_row_slim if out_schema == EXTRACTED_SLIM_SCHEMA
-        else _result_row
-    )
+    """The grouped ``applyInArrow`` merge of one mega-doc's chunk results:
+    the first reject in chunk order rejects the doc, otherwise the partial
+    spans, pages, counts, char counters and metadata are summed in chunk
+    order into one ``C.DocResult``, which ``_record_batch`` turns into an
+    ``out_schema`` row (full or slim: the merge logic is identical, only the
+    returned row, and therefore the Arrow return-leg volume, differs)."""
 
-    # unannotated on purpose: applyInPandas infers the UDF eval type from
-    # complete type hints and warns on every call for partial ones
-    def merge_partials(key, pdf):
-        pdf = pdf.sort_values("chunk_idx")
-        for marker in pdf["char_counter"]:
-            if marker.startswith("ERR:"):
-                res = C.DocResult(
-                    False, f"error:{marker[4:]}", [], "", {}, 0.0, {}
-                )
-                return pd.DataFrame([row_fn(key[0], res)])
-            if marker.startswith("REJ:"):
-                res = C.DocResult(False, marker[4:], [], "", {}, 0.0, {})
-                return pd.DataFrame([row_fn(key[0], res)])
-        text = "\n".join(t for t in pdf["text"] if len(t) > 0)
-        if len(text) < cfg.min_text_chars:
-            res = C.DocResult(False, "min_text", [], text, {}, 0.0, {})
-            return pd.DataFrame([row_fn(key[0], res)])
-        spans: list[tuple] = []
-        span_pages: list[int] = []
-        counts: dict[str, int] = {}
-        counter: dict[int, list[float]] = {}
-        # page renumbering: chunk-local pages are 1-based; chunk i's page 1
-        # continues the last page of chunk i-1 (a chunk boundary is never a
-        # page break), so the running offset grows by (chunk_pages - 1)
-        page_offset = 0
-        merged_pages: dict[int, tuple[list[str], dict[str, int]]] = {}
-        doc_props: dict[str, str] = {}
-        lang_tags: set[str] = set()
-        for chunk_spans, chunk_pages, chunk_counts, counter_json, meta_json in zip(
-            pdf["spans"], pdf["pages"], pdf["counts"],
-            pdf["char_counter"], pdf["meta_json"],
-        ):
-            for s in chunk_spans:
-                spans.append((s["kind"], s["text"], s["media_ref"]))
-                span_pages.append(int(s["page"]) + page_offset)
-            for p in chunk_pages:
-                g = int(p["page"]) + page_offset
-                rec = merged_pages.setdefault(g, ([], {}))
-                if p["text"]:
-                    rec[0].append(p["text"])
-                for k, v in (p["counts"] or {}).items():
-                    rec[1][k] = rec[1].get(k, 0) + int(v)
-            page_offset += max(len(chunk_pages) - 1, 0)
-            for k, v in chunk_counts.items():
-                counts[k] = counts.get(k, 0) + int(v)
-            for ent_id, (b, h) in json.loads(counter_json).items():
-                slot = counter.setdefault(int(ent_id), [0.0, 0.0])
-                slot[0] += b
-                slot[1] += h
-            meta = json.loads(meta_json)
-            doc_props.update(meta.get("props", {}))
-            lang_tags.update(meta.get("lang_tags", []))
-        quality, builtin_props = C.quality_from_counter(counter, counts)
-        res = C.DocResult(
-            True,
-            None,
-            [(k, t, m, i) for i, (k, t, m) in enumerate(spans)],
-            text,
-            counts,
-            quality,
-            builtin_props,
-            span_pages=span_pages,
-            pages=[
-                (p, "\n".join(parts), pc)
-                for p, (parts, pc) in sorted(merged_pages.items())
-            ],
-            props=doc_props,
-            lang_tags=sorted(lang_tags),
+    def merge_partials(key, table):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        [batch] = table.sort_by("chunk_idx").combine_chunks().to_batches()
+        res = _merged_result(batch, cfg)
+        return pa.Table.from_batches(
+            [_record_batch([(key[0].as_py(), res)], to_arrow_schema(out_schema))]
         )
-        return pd.DataFrame([row_fn(key[0], res)])
 
     return merge_partials
+
+
+def _merged_result(batch, cfg: ExtractConfig) -> C.DocResult:
+    """One mega-doc's DocResult from its ``_PARTIAL_SCHEMA`` rows in chunk
+    order."""
+    for reason in batch.column("reject_reason").to_pylist():
+        if reason is not None:
+            return C.DocResult(False, reason, [], "", {}, 0.0, {})
+    text = "\n".join(t for t in batch.column("text").to_pylist() if len(t) > 0)
+    if len(text) < cfg.min_text_chars:
+        return C.DocResult(False, "min_text", [], text, {}, 0.0, {})
+    spans: list[tuple] = []
+    span_pages: list[int] = []
+    counts: dict[str, int] = {}
+    counter: dict[int, list[float]] = {}
+    # page renumbering: chunk-local pages are 1-based; chunk i's page 1
+    # continues the last page of chunk i-1 (a chunk boundary is never a
+    # page break), so the running offset grows by (chunk_pages - 1)
+    page_offset = 0
+    merged_pages: dict[int, tuple[list[str], dict[str, int]]] = {}
+    doc_props: dict[str, str] = {}
+    lang_tags: set[str] = set()
+    for chunk_spans, chunk_pages, chunk_counts, chunk_counter, props, tags in zip(
+        _struct_rows(batch.column("spans"), ("kind", "text", "media_ref", "page")),
+        _struct_rows(batch.column("pages"), ("page", "text", "counts")),
+        batch.column("counts").to_pylist(),
+        batch.column("char_counter").to_pylist(),
+        batch.column("props").to_pylist(),
+        batch.column("lang_tags").to_pylist(),
+    ):
+        for k, t, m, p in chunk_spans:
+            spans.append((k, t, m, len(spans)))
+            span_pages.append(p + page_offset)
+        for p, t, page_counts in chunk_pages:
+            rec = merged_pages.setdefault(p + page_offset, ([], {}))
+            if t:
+                rec[0].append(t)
+            for k, v in page_counts:
+                rec[1][k] = rec[1].get(k, 0) + v
+        page_offset += max(len(chunk_pages) - 1, 0)
+        for k, v in chunk_counts:
+            counts[k] = counts.get(k, 0) + v
+        for ent_id, (b, h) in chunk_counter:
+            slot = counter.setdefault(ent_id, [0.0, 0.0])
+            slot[0] += b
+            slot[1] += h
+        doc_props.update(props)
+        lang_tags.update(tags)
+    quality, builtin_props = C.quality_from_counter(counter, counts)
+    return C.DocResult(
+        True,
+        None,
+        spans,
+        text,
+        counts,
+        quality,
+        builtin_props,
+        span_pages=span_pages,
+        pages=[
+            (p, "\n".join(parts), pc)
+            for p, (parts, pc) in sorted(merged_pages.items())
+        ],
+        props=doc_props,
+        lang_tags=sorted(lang_tags),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -775,34 +720,37 @@ def _extract_salted(
     cfg: ExtractConfig,
     out_schema: StructType = EXTRACTED_SCHEMA,
 ) -> DataFrame:
-    """The salted mega-doc path: chunk → salt shuffle → classify → merge
-    partials, three Python stages and two shuffles.
+    """The salted mega-doc path: ``mapInArrow`` chunk → salt shuffle →
+    ``mapInArrow`` classify → grouped ``applyInArrow`` merge, three Python
+    stages and two shuffles.
 
     The chunk task holds the whole doc and parses every chunk anyway, so it
-    also computes the doc's font state and puts it on every chunk row: no
-    per-chunk states to merge, no join back to the chunks, and no persist
-    of a frame read twice.  The salt shuffle is sized to
-    ``defaultParallelism``: a count-less ``repartition`` is coalesced by AQE
-    into one task for a few small chunk rows (the whole point of salting
-    lost), a fixed count leaves tasks empty on small clusters, and one task
-    per core spreads a doc's chunks over the cluster.  The merge groups by
-    mega-doc id only (few), so the shuffles touch a tiny fraction of the
-    data.
+    also computes the doc's font state and puts it on every chunk row as
+    typed columns (``map<string,bigint>`` counts and appearances, an
+    ``array<struct<fp,level>>`` heading tracker): no per-chunk states to
+    merge, no join back to the chunks, and no persist of a frame read
+    twice.  A doc's fault travels as a nullable ``reject_reason`` column to
+    the merge.  The salt shuffle is sized to ``defaultParallelism``: a
+    count-less ``repartition`` is coalesced by AQE into one task for a few
+    small chunk rows (the whole point of salting lost), a fixed count
+    leaves tasks empty on small clusters, and one task per core spreads a
+    doc's chunks over the cluster.  The merge groups by mega-doc id only
+    (few), so the shuffles touch a tiny fraction of the data.
 
     ``out_schema`` chooses the output surface (full vs slim) at the final
     merge, so slim consumers never pay the fat Arrow return leg even for
     mega-docs."""
     classified = (
         big.select("doc_id", "spans")
-        .mapInPandas(_make_chunk_fn(cfg), schema=_CHUNK_SCHEMA)
+        .mapInArrow(_make_chunk_fn(cfg), schema=_CHUNK_SCHEMA)
         # spread one doc's chunks across the cluster — this IS the salt
         .repartition(
             big.sparkSession.sparkContext.defaultParallelism,
             "doc_id", "chunk_idx",
         )
-        .mapInPandas(_make_chunk_classify_fn(cfg), schema=_PARTIAL_SCHEMA)
+        .mapInArrow(_make_chunk_classify_fn(cfg), schema=_PARTIAL_SCHEMA)
     )
-    return classified.groupBy("doc_id").applyInPandas(
+    return classified.groupBy("doc_id").applyInArrow(
         _make_merge_partials_fn(cfg, out_schema), schema=out_schema
     )
 

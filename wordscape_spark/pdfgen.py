@@ -60,12 +60,13 @@ from __future__ import annotations
 
 import hashlib
 import os
-import pathlib
 import re
 import tempfile
 import zlib
 
 from wordscape_spark import datagen
+
+BASE_DIR = datagen.DATA_DIR / "pdf"
 
 _DEFAULT_SIZE = 11.0
 
@@ -494,7 +495,7 @@ def ensure_pdf(sf: float) -> str:
     import pyarrow.parquet as pq
 
     out_dir = (
-        pathlib.Path("/root/repo/data/pdf")
+        BASE_DIR
         / f"v{datagen.DATAGEN_VERSION}.2"
         / f"sf{sf:g}"
     )

@@ -267,10 +267,14 @@ def run_extract_checkpointed(
     # drop the discovered partition column: callers get EXTRACTED_SCHEMA
     # parity with a plain extract() (unionByName / contract writes must not
     # see an extra int column that only exists because of the checkpoint
-    # layout)
+    # layout).  The committed bucket dirs are listed here, not passed as the
+    # literal ``bucket=*`` glob: Spark's file-sink metadata probe stats a
+    # single read path as given and logs a FileNotFoundException trace for
+    # a glob on every call.
+    buckets = sorted(str(p) for p in out.glob("bucket=*") if p.is_dir())
     return (
         spark.read.option("basePath", str(out))
-        .parquet(str(out / "bucket=*"))
+        .parquet(*buckets)
         .drop("bucket")
     )
 

@@ -6,7 +6,7 @@ Conventions:
   to the same name the oracle SQL uses;
 * float outputs are rounded identically on both sides (6 dp; cosine 4 dp);
 * extraction queries run over the deterministic interleaved table derived
-  from the sf (generated on demand under /root/repo/data/interleaved);
+  from the sf (generated on demand under the repo's data/interleaved);
   their oracles read the same parquet via read_parquet();
 * genuinely non-SQL-expressible ops (the classifier itself, pandas-UDF
   media features, LSH/IVF ANN) are pinned by golden parquet: their
@@ -34,6 +34,7 @@ from wordscape_spark.operators import bpe as BPE
 from wordscape_spark.operators import urls as U
 
 ORACLE_SF_DIR = "/root/testdata/sf0.01"  # the driver's comparison scale
+STREAM_GATE_DIR = datagen.DATA_DIR / "stream_gate"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -991,14 +992,13 @@ def _stream_run(spark: SparkSession, sf_dir: str, dedup: bool) -> DataFrame:
     """Run the streaming extraction (availableNow) into a scratch sink and
     return the materialized output — the driver-gate harness for the
     Structured Streaming path (streaming/stream.py)."""
-    import pathlib
     import shutil
 
     from wordscape_spark.streaming import stream as ST
 
     in_file = datagen.ensure_interleaved(datagen.sf_from_dir(sf_dir))
     tag = "dedup" if dedup else "plain"
-    base = pathlib.Path("/root/repo/data/stream_gate") / (
+    base = STREAM_GATE_DIR / (
         f"sf{datagen.sf_from_dir(sf_dir):g}-{tag}"
     )
     shutil.rmtree(base, ignore_errors=True)

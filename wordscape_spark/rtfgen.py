@@ -40,11 +40,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import pathlib
 import re
 import tempfile
 
 from wordscape_spark import datagen
+
+BASE_DIR = datagen.DATA_DIR / "rtf"
 
 _PAR_RE = re.compile(r"[;^]p=(\d+)")
 _SZ_RE = re.compile(r";sz=([^;]+)")
@@ -221,7 +222,7 @@ def ensure_rtf(sf: float) -> str:
     import pyarrow.parquet as pq
 
     out_dir = (
-        pathlib.Path("/root/repo/data/rtf")
+        BASE_DIR
         / f"v{datagen.DATAGEN_VERSION}.1"
         / f"sf{sf:g}"
     )

@@ -28,7 +28,6 @@ from __future__ import annotations
 import gzip
 import json
 import os
-import pathlib
 import random
 import tempfile
 
@@ -37,7 +36,7 @@ import pyarrow.parquet as pq
 
 from wordscape_spark import datagen
 
-BASE_DIR = pathlib.Path("/root/repo/data/wat")
+BASE_DIR = datagen.DATA_DIR / "wat"
 WATGEN_VERSION = 1
 
 _TLDS = ["com", "org", "net", "edu", "gov"]
