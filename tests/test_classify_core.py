@@ -509,12 +509,12 @@ def test_page_model_hand_oracle():
     assert res.pages[1][2] == {"title": 1, "figure": 1}
 
 
-def test_text_metrics_batch_parity_and_fallbacks():
+def test_text_metrics_batch_parity_and_fallbacks(monkeypatch):
     """The vectorized batch form must equal the scalar reference form
     element-for-element, including the unicode corners its lookup tables
     must inherit (Arabic-Indic digits are \\d, superscripts are not,
-    NBSP/ideographic space split words) and the astral/surrogate
-    wholesale fallbacks."""
+    NBSP/ideographic space split words), lone surrogates, the astral
+    wholesale fallback, and sub-batch boundaries inside a batch."""
     import random
 
     texts = [
@@ -532,10 +532,19 @@ def test_text_metrics_batch_parity_and_fallbacks():
         for _ in range(150)
     ]
     assert C.text_metrics_batch(texts) == [C.text_metrics(t) for t in texts]
-    # a batch that cannot be utf-32 encoded (lone surrogate) must fall
-    # back rather than raise
-    bad = ["ok", "\ud800 lone surrogate"]
+    # lone surrogates are ordinary BMP entries of the tables
+    bad = ["ok", "\ud800 lone surrogate", "a\udfff\ud800 b"]
     assert C.text_metrics_batch(bad) == [C.text_metrics(t) for t in bad]
+    # without the astral texts the batch takes the vectorized path, also
+    # when the char cap splits it into sub-batches of a few texts each
+    bmp = [t for t in texts if all(ord(c) < 0x10000 for c in t)]
+    assert len(bmp) == len(texts) - 2
+    assert C.text_metrics_batch(bmp) == [C.text_metrics(t) for t in bmp]
+    monkeypatch.setattr(C, "_TM_BATCH_CHAR_CAP", 40)
+    for batch in (bmp, texts):
+        assert C.text_metrics_batch(batch) == [
+            C.text_metrics(t) for t in batch
+        ]
 
 
 def test_parse_run_rest_cache_parity():

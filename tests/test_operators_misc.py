@@ -516,3 +516,33 @@ def test_data_roots_live_beside_the_package(module, attr):
     root = getattr(mod, attr)
     assert root.is_absolute()
     assert root.resolve().is_relative_to(checkout / "data"), root
+
+
+def test_generators_fail_loudly_inside_the_zip(tmp_path):
+    """Imported from the spark-submit zip (scripts/package.sh), DATA_DIR
+    lies inside the archive file: a generator must say to run from a
+    checkout, not fail on an unrelated mkdir."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+    import zipfile
+
+    pkg = pathlib.Path(datagen.__file__).resolve().parent
+    archive = tmp_path / "wordscape_spark.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        for p in pkg.rglob("*.py"):
+            zf.write(p, p.relative_to(pkg.parent).as_posix())
+    r = subprocess.run(
+        [sys.executable, "-c",
+         "from wordscape_spark import datagen; "
+         "assert '.zip' in datagen.__file__, datagen.__file__; "
+         "datagen.ensure_interleaved(0.001)"],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(archive)},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert r.returncode != 0
+    assert "RuntimeError" in r.stderr and "run from a checkout" in r.stderr

@@ -1159,124 +1159,135 @@ def text_metrics(text: str) -> dict[str, float]:
     }
 
 
-# Vectorized batch form of ``text_metrics``: the per-doc regex passes were
-# ~85% of the extraction operator's row-build time (two re.sub string
-# allocations + a translate per doc).  The batch form makes ONE pass: docs
-# are joined with '\n' separators, decoded to a code-point array, class
-# membership is a table lookup, and per-doc sums come from add.reduceat.
-# The lookup tables are derived at first use FROM THE SAME regexes /
-# str methods the scalar form uses (``_NON_ALPHA.sub`` over all BMP chars,
-# ``str.isspace``, ``string.punctuation``), so the two forms cannot drift;
-# any batch containing astral (>= U+10000) code points or unencodable
-# surrogates falls back to the scalar form wholesale.  Parity is pinned by
-# tests over the corpus plus unicode fuzz.
+# One vectorized segment-count kernel serves every per-text count in the
+# package: the D10 metrics of the extraction kernel (``text_metrics_batch``)
+# and the hybrid ``with_metrics`` / ``with_whitelist_metrics`` operators in
+# ``operators/``.  The per-doc regex passes were ~85% of the extraction
+# operator's row-build time; the kernel makes ONE pass instead: texts are
+# joined, decoded to a code-point array, class membership is a table lookup
+# and per-text sums come from ``np.add.reduceat``.  Each caller's tables
+# are derived FROM ITS REFERENCE FORM, so the two cannot drift: here from
+# the very regexes / str methods ``text_metrics`` uses (BMP-sized, so
+# worker init stays cheap; a batch holding an astral char falls back to
+# the scalar form), in ``operators/text.py`` from the SQL's literal
+# alphabets and Java/RE2's ASCII ``\s`` (full code-point range, no
+# fallback).  Lone surrogates need no fallback: ``surrogatepass`` decodes
+# them to ordinary BMP indices whose entries come from the same source.
+# Parity is pinned by tests over the corpus plus unicode fuzz.
+#
+# Count and drop tables are uint8: the per-character gathers write 1 byte
+# per character instead of 8 (sums go through ``dtype=int64``, so no
+# overflow), and the pass is memory-bandwidth-bound, so narrower scratch
+# is directly faster.  Every table has one entry past its code range, the
+# sentinel written after each text: it reads 0/False in every table, so it
+# counts nothing, is never dropped (no segment is empty for ``reduceat``)
+# and ends every run.
+#
+# The pass holds up to ~12 bytes of scratch per character (the 4-byte
+# codes, twice while the encoded bytes are copied to a writable array, then
+# the filtered codes plus 1-byte masks), so texts are processed in
+# sub-batches of at most this many characters: 32M chars ≈ 400 MB peak,
+# bounded regardless of row count (a longer text is its own sub-batch).
+_TM_BATCH_CHAR_CAP = 1 << 25
+
+
+def segment_counts(texts: Sequence[str], counts: Sequence, drop, run):
+    """Per-text int64 arrays ``(length, *sums, runs)``, or None when a code
+    point lies beyond the tables.
+
+    ``counts``: uint8 class tables, summed per text in order.  ``drop``:
+    uint8 table (or None) of code points removed before runs are counted.
+    ``run``: bool table of run members; ``runs`` counts maximal runs of
+    them (words for a non-space table, whitespace runs for a space one).
+    All tables share one length, the code range plus the sentinel."""
+    import numpy as np
+
+    n = len(texts)
+    lengths = np.fromiter(map(len, texts), dtype=np.int64, count=n)
+    ends = np.cumsum(lengths)
+    out = np.zeros((len(counts) + 1, n), dtype=np.int64)
+    sentinel = len(run) - 1
+    lo = 0
+    while lo < n:
+        base = ends[lo - 1] if lo else 0
+        hi = max(
+            lo + 1,
+            int(np.searchsorted(ends, base + _TM_BATCH_CHAR_CAP, "right")),
+        )
+        # "\x00" only holds each sentinel's place ([*, ""] adds the last)
+        codes = np.frombuffer(
+            "\x00".join([*texts[lo:hi], ""]).encode(
+                "utf-32-le", "surrogatepass"
+            ),
+            dtype=np.uint32,
+        ).copy()
+        if sentinel <= 0x10FFFF and codes.max() >= sentinel:
+            return None
+        seg = lengths[lo:hi] + 1
+        starts = np.cumsum(seg) - seg
+        codes[starts + seg - 1] = sentinel
+        for k, table in enumerate(counts):
+            out[k, lo:hi] = np.add.reduceat(
+                table[codes], starts, dtype=np.int64
+            )
+        if drop is not None:
+            dm = drop[codes]
+            ndrop = np.add.reduceat(dm, starts, dtype=np.int64)
+            starts -= np.cumsum(ndrop) - ndrop
+            codes = codes[dm == 0]
+        w = run[codes]
+        heads = w.copy()
+        heads[1:] &= ~w[:-1]
+        out[-1, lo:hi] = np.add.reduceat(
+            heads.view(np.uint8), starts, dtype=np.int64
+        )
+        lo = hi
+    return (lengths, *out)
+
+
 _TM_LUT = None
 
 
 def _tm_luts():
+    """(alpha, digit, punct, word) tables for ``text_metrics_batch``."""
     global _TM_LUT
     if _TM_LUT is None:
         import numpy as np
 
-        # uint8 class tables: the per-character gathers write 1 byte per
-        # character instead of 8 (the per-segment sums go through
-        # ``np.add.reduceat(..., dtype=int64)``, so no overflow) — the pass
-        # is memory-bandwidth-bound, so narrower scratch is directly faster
         bmp = "".join(map(chr, range(0x10000)))
-        alpha = np.zeros(0x10000, dtype=np.uint8)
-        digit = np.zeros(0x10000, dtype=np.uint8)
+        alpha = np.zeros(0x10001, dtype=np.uint8)
+        digit = np.zeros(0x10001, dtype=np.uint8)
         for ch in _NON_ALPHA.sub("", bmp):
             alpha[ord(ch)] = 1
         for ch in _NON_NUM.sub("", bmp):
             digit[ord(ch)] = 1
-        space = np.zeros(0x10000, dtype=bool)
+        word = np.ones(0x10001, dtype=bool)
+        word[0x10000] = False  # the sentinel
         for cp in range(0x10000):
             if chr(cp).isspace():
-                space[cp] = True
-        punct = np.zeros(0x10000, dtype=np.uint8)
+                word[cp] = False
+        punct = np.zeros(0x10001, dtype=np.uint8)
         for ch in _string.punctuation:
             punct[ord(ch)] = 1
-        _TM_LUT = (alpha, digit, space, punct)
+        _TM_LUT = (alpha, digit, punct, word)
     return _TM_LUT
 
 
-# cap the characters processed per vectorized sub-batch: the pass
-# materializes ~12 bytes of scratch per character (utf-32 codes + masks),
-# so an Arrow batch of 10k near-salt-threshold documents must not be
-# joined wholesale (32M chars ≈ 400 MB peak scratch, bounded regardless
-# of row count)
-_TM_BATCH_CHAR_CAP = 1 << 25
-
-
 def text_metrics_batch(texts: list[str]) -> list[dict[str, float]]:
-    """``[text_metrics(t) for t in texts]``, one vectorized pass
-    (size-bounded sub-batches; results identical to the scalar form)."""
+    """``[text_metrics(t) for t in texts]`` from one ``segment_counts``
+    pass (the scalar form for a batch holding an astral char)."""
     if not texts:
         return []
-    total = 0
-    for i, t in enumerate(texts):
-        total += len(t)
-        if total > _TM_BATCH_CHAR_CAP and i + 1 < len(texts):
-            out: list[dict[str, float]] = []
-            lo = 0
-            run = 0
-            for j, tj in enumerate(texts):
-                run += len(tj)
-                if run > _TM_BATCH_CHAR_CAP and j > lo:
-                    out.extend(_text_metrics_batch_one(texts[lo:j]))
-                    lo = j
-                    run = len(tj)
-            out.extend(_text_metrics_batch_one(texts[lo:]))
-            return out
-    return _text_metrics_batch_one(texts)
-
-
-def _text_metrics_batch_one(texts: list[str]) -> list[dict[str, float]]:
-    """One unchunked vectorized pass (see text_metrics_batch)."""
-    import numpy as np
-
-    if not texts:
-        return []
-    try:
-        joined = "\n".join(texts) + "\n"
-        codes = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
-    except UnicodeEncodeError:  # lone surrogates: scalar fallback
+    alpha, digit, punct, word = _tm_luts()
+    res = segment_counts(texts, (alpha, digit), punct, word)
+    if res is None:
         return [text_metrics(t) for t in texts]
-    if codes.size and int(codes.max()) >= 0x10000:  # astral: fallback
-        return [text_metrics(t) for t in texts]
-    alpha, digit, space, punct = _tm_luts()
-    lengths = np.fromiter(
-        (len(t) for t in texts), dtype=np.int64, count=len(texts)
-    )
-    starts = np.zeros(len(texts), dtype=np.int64)
-    np.cumsum(lengths[:-1] + 1, out=starts[1:])
-    n_alph = np.add.reduceat(alpha[codes], starts, dtype=np.int64)
-    n_num = np.add.reduceat(digit[codes], starts, dtype=np.int64)
-    # words: drop ascii punctuation, then count runs of
-    # non-whitespace.  The '\n' separators are never punctuation, so
-    # every doc's (filtered) segment stays non-empty and no run
-    # crosses a doc boundary.  Start positions in the punctuation-
-    # filtered array are derived from the per-doc punctuation counts
-    # (a cumsum over n_docs elements) instead of a full-length cumsum.
-    pm = punct[codes]
-    npunct = np.add.reduceat(pm, starts, dtype=np.int64)
-    kstarts = starts.copy()
-    if len(texts) > 1:
-        kstarts[1:] -= np.cumsum(npunct[:-1])
-    fcodes = codes[pm == 0]
-    w = ~space[fcodes]
-    runs = w.copy()
-    runs[1:] &= ~w[:-1]
-    n_words = np.add.reduceat(runs.view(np.uint8), kstarts, dtype=np.int64)
     out = []
-    for i in range(len(texts)):
-        na = int(n_alph[i])
-        nn = int(n_num[i])
-        nc = int(lengths[i])
+    for nc, na, nn, nw in zip(*(a.tolist() for a in res)):
         nan = na + nn
         out.append(
             {
-                "num_words": float(int(n_words[i])),
+                "num_words": float(nw),
                 "num_chars": float(nc),
                 "num_alph_chars": float(na),
                 "num_numeric_chars": float(nn),

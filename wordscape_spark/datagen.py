@@ -427,6 +427,20 @@ def sf_from_dir(sf_dir: str) -> float:
     return float(m.group(1)) if m else 0.01
 
 
+def make_data_dir(path: os.PathLike | str) -> pathlib.Path:
+    """``mkdir -p path`` for generated data, failing loudly where nothing
+    can be written: imported from ``scripts/package.sh``'s zip, the
+    package's ``DATA_DIR`` lies inside the archive file."""
+    path = pathlib.Path(path)
+    if any(p.is_file() for p in path.parents):
+        raise RuntimeError(
+            f"cannot generate data under {path}: it lies inside a file "
+            "(the package was imported from a zip); run from a checkout"
+        )
+    path.mkdir(parents=True, exist_ok=True)
+    return path
+
+
 def ensure_interleaved(sf: float, base_dir: os.PathLike | str = BASE_DIR) -> str:
     """Idempotently materialize the interleaved table for a scale factor.
 
@@ -437,7 +451,7 @@ def ensure_interleaved(sf: float, base_dir: os.PathLike | str = BASE_DIR) -> str
     out = out_dir / "docs.parquet"
     if out.exists():
         return str(out)
-    out_dir.mkdir(parents=True, exist_ok=True)
+    make_data_dir(out_dir)
     table = generate_table(sf)
     fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
     os.close(fd)

@@ -461,7 +461,7 @@ def ensure_golden(sf_dir: str) -> str:
     marker = out_dir / "_DONE"
     if marker.exists():
         return str(out_dir)
-    out_dir.parent.mkdir(parents=True, exist_ok=True)
+    datagen.make_data_dir(out_dir.parent)
     tmp = pathlib.Path(
         tempfile.mkdtemp(dir=out_dir.parent, prefix=f"sf{sf:g}.tmp")
     )

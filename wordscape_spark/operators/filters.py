@@ -20,6 +20,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from wordscape_spark.core import classify as C
+from wordscape_spark.operators.text import _mb_luts, count_columns
+
 
 PERCENTILE_ACCURACY = 100_000
 
@@ -54,6 +57,15 @@ def pseudo_perplexity_expr(col: str, dialect: str) -> str:
     )
 
 
+def _whitelist_counts(texts: list[str]) -> tuple:
+    alpha, digit, _punct, _nonws, ws = _mb_luts()
+    trimmed = [t.strip(" ") for t in texts]  # SQL trim(): spaces only
+    ntrim, n_alph, n_num, wsruns = C.segment_counts(
+        trimmed, (alpha, digit), None, ws
+    )
+    return [len(t) for t in texts], ntrim, wsruns, n_alph, n_num
+
+
 def with_whitelist_metrics(df: DataFrame, col: str = "text") -> DataFrame:
     """``pseudo_perplexity`` + ``quality`` (alnum_prop) columns,
     bit-identical to ``pseudo_perplexity_expr`` / ``alnum_prop_expr``.
@@ -61,100 +73,14 @@ def with_whitelist_metrics(df: DataFrame, col: str = "text") -> DataFrame:
     Same hybrid shape as ``text.with_metrics``: the INTEGER inputs (char
     count, trimmed length, java-``\\s`` run count over the trimmed text,
     letter/digit counts from the SQL's literal alphabets) come from one
-    vectorized NumPy pass per Arrow batch; the rounded ratios keep the
-    exact SQL expressions over those integers (pinned by test).  The JVM
-    previously paid two translate passes plus trim+regexp_count per row —
-    twice, because this frame feeds both the threshold aggregate and the
-    filtered output."""
-    import numpy as np
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from wordscape_spark.operators.text import _mb_luts
-
+    ``C.segment_counts`` pass per Arrow batch, appended by
+    ``text.count_columns``; the rounded ratios keep the exact SQL
+    expressions over those integers (pinned by test).  The JVM previously
+    paid two translate passes plus trim+regexp_count per row — twice,
+    because this frame feeds both the threshold aggregate and the filtered
+    output."""
     tmp = ["_wm_nchars", "_wm_ntrim", "_wm_wsruns", "_wm_alph", "_wm_num"]
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(n, LongType()) for n in tmp]
-    )
-    col_idx = df.columns.index(col)
-    out_names = [f.name for f in out_schema.fields]
-
-    def add_counts(batches):
-        import pyarrow as pa
-
-        alpha, digit, _punct, ws = _mb_luts()
-        for batch in batches:
-            raw = batch.column(col_idx).to_pylist()
-            nchars = []
-            ntrims = []
-            trimmed = []
-            for t in raw:
-                if t is None:
-                    nchars.append(None)
-                    ntrims.append(None)
-                    trimmed.append("")
-                else:
-                    nchars.append(len(t))
-                    s = t.strip(" ")  # SQL trim(): spaces only
-                    ntrims.append(len(s))
-                    trimmed.append(s)
-            try:
-                # '\x00' separator: not a letter/digit/whitespace, so it
-                # cleanly splits ws runs and adds no counts
-                joined = "\x00".join(trimmed) + "\x00"
-                codes = np.frombuffer(
-                    joined.encode("utf-32-le"), dtype=np.uint32
-                )
-                lengths = np.fromiter(
-                    (len(t) for t in trimmed),
-                    dtype=np.int64,
-                    count=len(trimmed),
-                )
-                starts = np.zeros(len(trimmed), dtype=np.int64)
-                np.cumsum(lengths[:-1] + 1, out=starts[1:])
-                n_alph = np.add.reduceat(
-                    alpha[codes], starts, dtype=np.int64
-                ).tolist()
-                n_num = np.add.reduceat(
-                    digit[codes], starts, dtype=np.int64
-                ).tolist()
-                w = ws[codes]
-                runs = w.copy()
-                runs[1:] &= ~w[:-1]
-                wsruns = np.add.reduceat(
-                    runs.view(np.uint8), starts, dtype=np.int64
-                ).tolist()
-            except UnicodeEncodeError:  # lone surrogates: per-char twin
-                import re
-
-                ws_runs_re = re.compile("[ \t\n\x0b\f\r]+")
-                from wordscape_spark.operators.text import (
-                    _DIGITS,
-                    _LETTERS,
-                )
-
-                lset = set(_LETTERS)
-                dset = set(_DIGITS)
-                n_alph = [sum(1 for c in s if c in lset) for s in trimmed]
-                n_num = [sum(1 for c in s if c in dset) for s in trimmed]
-                wsruns = [
-                    len(ws_runs_re.findall(s)) for s in trimmed
-                ]
-            if any(c is None for c in nchars):
-                for vals in (n_alph, n_num, wsruns):
-                    for i, c in enumerate(nchars):
-                        if c is None:
-                            vals[i] = None
-            out = batch
-            for i, vals in enumerate(
-                (nchars, ntrims, wsruns, n_alph, n_num)
-            ):
-                out = out.append_column(
-                    "_c%d" % i, pa.array(vals, pa.int64())
-                )
-            yield out.rename_columns(out_names)
-
-    df = df.mapInArrow(add_counts, schema=out_schema)
+    df = count_columns(df, col, tmp, _whitelist_counts)
     df = df.withColumn(
         "pseudo_perplexity",
         F.expr(

@@ -1,10 +1,13 @@
 """Text operators: normalization (E2), metrics (D10), language ID (E1),
 token counting, fingerprinting.
 
-All are pure column expressions (JVM-side, whole-stage codegen) — no Python
-in the hot path.  Each has a documented DuckDB-SQL twin used by the driver's
-correctness oracle; where an expression appears in both engines the dialect
-generator below emits it for each, so the two sides cannot drift.
+All are column expressions (JVM-side, whole-stage codegen), except that
+``with_metrics`` and ``with_langid`` take their integer counts from one
+Python pass per Arrow batch (``count_columns``) and keep the SQL ratio
+expressions over them.  Each has a documented DuckDB-SQL twin used by the
+driver's correctness oracle; where an expression appears in both engines
+the dialect generator below emits it for each, so the two sides cannot
+drift.
 
 Reference semantics:
 * normalization — /root/reference/app/src/quality/text_normalizer.py:52-81
@@ -18,9 +21,12 @@ Reference semantics:
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from wordscape_spark.core import classify as C
 from wordscape_spark.datagen import VOCAB
 
 # ----------------------------------------------------------- normalization
@@ -159,127 +165,44 @@ def alnum_prop_expr(col: str, dialect: str) -> str:
     )
 
 
-# vectorized twin of the metric COUNTS: lookup tables built from the very
-# same literal alphabets the SQL expressions embed (_LETTERS / _DIGITS /
-# _PUNCT_CHARS) plus Java/RE2's ASCII \s class — NOT Python's unicode
-# str.isspace/isalpha — so the integer counts are bit-equal to the
-# translate/regexp_count SQL form on EVERY input, not just the corpus
-# alphabet.  Tables cover the full code-point range, so no astral fallback
-# is needed; only a (theoretically unreachable via Arrow) lone surrogate
-# falls back to a per-char scalar twin.
+# class tables of the SQL metric and whitelist forms for
+# ``C.segment_counts``: the literal alphabets the SQL embeds and Java/RE2's
+# ASCII \s, over the full code-point range plus the sentinel
 _JAVA_WS = " \t\n\x0b\f\r"  # java.util.regex / RE2 \s without UNICODE flag
 _MB_LUT = None
 
 
 def _mb_luts():
+    """(alpha, digit, punct, non-space, space) tables."""
     global _MB_LUT
     if _MB_LUT is None:
         import numpy as np
 
-        alpha = np.zeros(0x110000, dtype=np.uint8)
-        for ch in _LETTERS:
-            alpha[ord(ch)] = 1
-        digit = np.zeros(0x110000, dtype=np.uint8)
-        for ch in _DIGITS:
-            digit[ord(ch)] = 1
-        punct = np.zeros(0x110000, dtype=np.uint8)
-        for ch in _PUNCT_CHARS:
-            punct[ord(ch)] = 1
-        ws = np.zeros(0x110000, dtype=bool)
-        for ch in _JAVA_WS:
-            ws[ord(ch)] = True
-        _MB_LUT = (alpha, digit, punct, ws)
+        def table(chars, dtype=np.uint8):
+            t = np.zeros(0x110001, dtype=dtype)
+            t[[ord(ch) for ch in chars]] = 1
+            return t
+
+        ws = table(_JAVA_WS, bool)
+        nonws = ~ws
+        nonws[-1] = False  # the sentinel
+        _MB_LUT = (
+            table(_LETTERS), table(_DIGITS), table(_PUNCT_CHARS), nonws, ws
+        )
     return _MB_LUT
 
 
-def _metrics_counts_scalar(t: str) -> tuple[int, int, int, int]:
-    """Per-char twin for the (unreachable) surrogate fallback."""
-    letters = set(_LETTERS)
-    digits = set(_DIGITS)
-    punct = set(_PUNCT_CHARS)
-    ws = set(_JAVA_WS)
-    n_alph = sum(1 for c in t if c in letters)
-    n_num = sum(1 for c in t if c in digits)
-    words = 0
-    in_word = False
-    for c in t:
-        if c in punct:
-            continue
-        if c in ws:
-            in_word = False
-        elif not in_word:
-            words += 1
-            in_word = True
-    return len(t), n_alph, n_num, words
-
-
-def metrics_counts_batch(
-    texts: list,
-) -> tuple[list, list, list, list]:
-    """(num_chars, num_alph, num_numeric, num_words) per text — one
-    vectorized pass, integer-exact twin of the SQL counting expressions."""
-    import numpy as np
-
-    n = len(texts)
-    if n == 0:
-        return [], [], [], []
-    try:
-        joined = "\n".join(texts) + "\n"
-        codes = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
-    except UnicodeEncodeError:  # lone surrogates
-        out = [_metrics_counts_scalar(t or "") for t in texts]
-        return (
-            [o[0] for o in out],
-            [o[1] for o in out],
-            [o[2] for o in out],
-            [o[3] for o in out],
-        )
-    alpha, digit, punct, ws = _mb_luts()
-    lengths = np.fromiter((len(t) for t in texts), dtype=np.int64, count=n)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(lengths[:-1] + 1, out=starts[1:])
-    n_alph = np.add.reduceat(alpha[codes], starts, dtype=np.int64)
-    n_num = np.add.reduceat(digit[codes], starts, dtype=np.int64)
-    pm = punct[codes]
-    npunct = np.add.reduceat(pm, starts, dtype=np.int64)
-    kstarts = starts.copy()
-    if n > 1:
-        kstarts[1:] -= np.cumsum(npunct[:-1])
-    fcodes = codes[pm == 0]
-    w = ~ws[fcodes]
-    runs = w.copy()
-    runs[1:] &= ~w[:-1]
-    n_words = np.add.reduceat(runs.view(np.uint8), kstarts, dtype=np.int64)
-    return (
-        lengths.tolist(),
-        n_alph.tolist(),
-        n_num.tolist(),
-        n_words.tolist(),
-    )
-
-
-def with_metrics(df: DataFrame, col: str = "text") -> DataFrame:
-    """D10 metric columns, numerically identical to ``metrics_exprs``.
-
-    The four base counts come from one vectorized NumPy pass per Arrow
-    batch (``metrics_counts_batch`` — integer-exact twin of the translate /
-    regexp_count SQL; the three ``translate`` evaluations plus the regex
-    pass cost ~40 µs/row in the JVM and dominated this operator at bench
-    scale), appended to the passthrough batch as int64 columns.  The
-    derived ratio columns keep the EXACT SQL expressions over those integer
-    counts, so the 6-dp HALF_UP rounding is unchanged and results stay
-    bit-identical to the pure-SQL form (pinned by test)."""
+def count_columns(
+    df: DataFrame, col: str, names: list[str], counts
+) -> DataFrame:
+    """``df`` plus int64 columns ``names``, filled per Arrow batch by
+    ``counts(texts)`` (one sequence per name) over ``col``'s strings.
+    NULL text ⇒ NULL counts, exactly like ``length(NULL)`` in SQL, so the
+    SQL ratio expressions over the counts propagate NULL identically."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    base_names = [
-        "num_words",
-        "num_chars",
-        "num_alph_chars",
-        "num_numeric_chars",
-    ]
     out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(name, LongType()) for name in base_names]
+        list(df.schema.fields) + [StructField(n, LongType()) for n in names]
     )
     col_idx = df.columns.index(col)
     out_names = [f.name for f in out_schema.fields]
@@ -288,26 +211,45 @@ def with_metrics(df: DataFrame, col: str = "text") -> DataFrame:
         import pyarrow as pa
 
         for batch in batches:
-            raw = batch.column(col_idx).to_pylist()
-            # NULL text ⇒ NULL metrics, exactly like length(NULL) in the
-            # SQL form (the derived ratio expressions then propagate NULL
-            # through CASE/round identically)
-            nulls = [t is None for t in raw]
-            texts = [t if t is not None else "" for t in raw]
-            nc, na, nn, nw = metrics_counts_batch(texts)
-            if any(nulls):
-                for vals in (nc, na, nn, nw):
-                    for i, isnull in enumerate(nulls):
-                        if isnull:
-                            vals[i] = None
-            out = batch
-            for vals in (nw, nc, na, nn):
-                out = out.append_column(
-                    "_c%d" % out.num_columns, pa.array(vals, pa.int64())
-                )
-            yield out.rename_columns(out_names)
+            text = batch.column(col_idx)
+            mask = (
+                text.is_null().to_numpy(zero_copy_only=False)
+                if text.null_count
+                else None
+            )
+            vals = counts(["" if t is None else t for t in text.to_pylist()])
+            yield pa.RecordBatch.from_arrays(
+                batch.columns
+                + [pa.array(v, pa.int64(), mask=mask) for v in vals],
+                names=out_names,
+            )
 
-    out = df.mapInArrow(add_counts, schema=out_schema)
+    return df.mapInArrow(add_counts, schema=out_schema)
+
+
+def _metric_counts(texts: list[str]) -> tuple:
+    alpha, digit, punct, nonws, _ws = _mb_luts()
+    nc, na, nn, nw = C.segment_counts(texts, (alpha, digit), punct, nonws)
+    return nw, nc, na, nn
+
+
+def with_metrics(df: DataFrame, col: str = "text") -> DataFrame:
+    """D10 metric columns, numerically identical to ``metrics_exprs``.
+
+    The four base counts come from one ``C.segment_counts`` pass per Arrow
+    batch (integer-exact twin of the translate / regexp_count SQL; the
+    three ``translate`` evaluations plus the regex pass cost ~40 µs/row in
+    the JVM and dominated this operator at bench scale), appended by
+    ``count_columns``.  The derived ratio columns keep the EXACT SQL
+    expressions over those integer counts, so the 6-dp HALF_UP rounding is
+    unchanged and results stay bit-identical to the pure-SQL form (pinned
+    by test)."""
+    out = count_columns(
+        df,
+        col,
+        ["num_words", "num_chars", "num_alph_chars", "num_numeric_chars"],
+        _metric_counts,
+    )
     exprs = metrics_exprs(col, "spark")
     for name in ("num_alphnum_chars", "alnum_prop", "alph_to_num_ratio"):
         out = out.withColumn(name, F.expr(exprs[name]))
@@ -409,6 +351,22 @@ def langid_topk_expr(dialect: str, k: int = 5) -> str:
     )
 
 
+_java_ws_split = re.compile(f"[{_JAVA_WS}]+").split
+_STOP_SETS = tuple(frozenset(_STOPWORDS[lang]) for lang in LANGS)
+
+
+def _langid_counts(texts: list[str]) -> list[list[int]]:
+    """Token count, then stopword hits per language, of each text."""
+    ntoks = []
+    hits = [[] for _ in LANGS]
+    for t in texts:
+        toks = _java_ws_split(t.lower())
+        ntoks.append(len(toks))
+        for h, ss in zip(hits, _STOP_SETS):
+            h.append(sum(1 for tk in toks if tk in ss))
+    return [ntoks, *hits]
+
+
 def with_langid(df: DataFrame, col: str = "text") -> DataFrame:
     # The integer token/stopword-hit counts come from one Python pass per
     # Arrow batch (the former split-once SQL form still re-ran the
@@ -420,50 +378,9 @@ def with_langid(df: DataFrame, col: str = "text") -> DataFrame:
     # membership.  The score/argmax/top-k columns keep the EXACT SQL
     # expressions over those integer columns, so rounding and tie-breaks
     # are unchanged (bit-identical to the pure-SQL form — pinned by test).
-    from pyspark.sql.types import LongType, StructField, StructType
-
     exprs = langid_exprs(col, "spark")
     tmp_names = ["_liq_ntok"] + [f"_liq_hits_{lang}" for lang in LANGS]
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(n, LongType()) for n in tmp_names]
-    )
-    col_idx = df.columns.index(col)
-    out_names = [f.name for f in out_schema.fields]
-    stop_sets = tuple(frozenset(_STOPWORDS[lang]) for lang in LANGS)
-
-    def add_counts(batches):
-        import re
-
-        import pyarrow as pa
-
-        split = re.compile("[ \t\n\x0b\f\r]+").split  # java/RE2 \s
-        n_langs = len(stop_sets)
-        for batch in batches:
-            raw = batch.column(col_idx).to_pylist()
-            ntoks = []
-            hits = [[] for _ in range(n_langs)]
-            for t in raw:
-                if t is None:
-                    # NULL text ⇒ NULL counts (size(split(NULL)) is NULL)
-                    ntoks.append(None)
-                    for h in hits:
-                        h.append(None)
-                    continue
-                toks = split(t.lower())
-                ntoks.append(len(toks))
-                for h, ss in zip(hits, stop_sets):
-                    h.append(sum(1 for tk in toks if tk in ss))
-            out = batch.append_column(
-                "_c0", pa.array(ntoks, pa.int64())
-            )
-            for i, h in enumerate(hits):
-                out = out.append_column(
-                    "_c%d" % (i + 1), pa.array(h, pa.int64())
-                )
-            yield out.rename_columns(out_names)
-
-    df = df.mapInArrow(add_counts, schema=out_schema)
+    df = count_columns(df, col, tmp_names, _langid_counts)
     for lang in LANGS:
         df = df.withColumn(
             f"score_{lang}",

@@ -1004,7 +1004,7 @@ def _stream_run(spark: SparkSession, sf_dir: str, dedup: bool) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     # the file stream source consumes a directory listing
     in_dir = base / "in"
-    in_dir.mkdir(parents=True)
+    datagen.make_data_dir(in_dir)
     shutil.copy(in_file, in_dir / "docs.parquet")
     out_dir, ckpt = str(base / "out"), str(base / "ckpt")
     fn = ST.stream_dedup_extract if dedup else ST.stream_extract

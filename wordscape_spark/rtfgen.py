@@ -229,7 +229,7 @@ def ensure_rtf(sf: float) -> str:
     out = out_dir / "docs.parquet"
     if out.exists():
         return str(out)
-    out_dir.mkdir(parents=True, exist_ok=True)
+    datagen.make_data_dir(out_dir)
     table = pq.read_table(datagen.ensure_interleaved(sf)).to_pylist()
     rows = [
         {

@@ -147,7 +147,7 @@ def ensure_wat(sf: float) -> tuple[str, str]:
     truth = out_dir / "links.parquet"
     if truth.exists():
         return str(out_dir), str(truth)
-    out_dir.mkdir(parents=True, exist_ok=True)
+    datagen.make_data_dir(out_dir)
     file_bytes, rows = generate(sf)
     for i, data in enumerate(file_bytes):
         fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
