@@ -513,8 +513,8 @@ def test_text_metrics_batch_parity_and_fallbacks(monkeypatch):
     """The vectorized batch form must equal the scalar reference form
     element-for-element, including the unicode corners its lookup tables
     must inherit (Arabic-Indic digits are \\d, superscripts are not,
-    NBSP/ideographic space split words), lone surrogates, the astral
-    wholesale fallback, and sub-batch boundaries inside a batch."""
+    NBSP/ideographic space split words), lone surrogates, the per-text
+    astral fallback, and sub-batch boundaries inside a batch."""
     import random
 
     texts = [
@@ -532,6 +532,15 @@ def test_text_metrics_batch_parity_and_fallbacks(monkeypatch):
         for _ in range(150)
     ]
     assert C.text_metrics_batch(texts) == [C.text_metrics(t) for t in texts]
+    # only the two astral texts take the scalar form
+    calls = []
+    scalar = C.text_metrics
+    monkeypatch.setattr(
+        C, "text_metrics", lambda t: calls.append(t) or scalar(t)
+    )
+    C.text_metrics_batch(texts)
+    assert calls == ["👍 emoji doc", "\U00010400 deseret"]
+    monkeypatch.setattr(C, "text_metrics", scalar)
     # lone surrogates are ordinary BMP entries of the tables
     bad = ["ok", "\ud800 lone surrogate", "a\udfff\ud800 b"]
     assert C.text_metrics_batch(bad) == [C.text_metrics(t) for t in bad]

@@ -83,15 +83,19 @@ def test_control_chars_normalized_and_marks_stripped():
 
 def test_corrupt_bytes_become_reject_rows(spark):
     rows = [("good", build_doc(["A" * 300])), ("bad", b"\x00" * 64),
-            ("truncated", build_doc(["B" * 300])[:100])]
+            ("truncated", build_doc(["B" * 300])[:100]), ("null", None)]
     df = spark.createDataFrame(rows, "doc_id string, content binary")
-    out = X.extract(doc_to_spans(df)).select(
+    spans = doc_to_spans(df)
+    plan = spans._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "InPandas" not in plan
+    out = X.extract(spans).select(
         "doc_id", "ok", "reject_reason"
     ).collect()
     got = {r["doc_id"]: (r["ok"], r["reject_reason"]) for r in out}
     assert got["good"] == (True, None)
     assert got["bad"][0] is False
     assert got["truncated"][0] is False
+    assert got["null"][0] is False
 
 
 def test_interleaved_render_groups_split_paragraphs():

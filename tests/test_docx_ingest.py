@@ -102,12 +102,17 @@ def test_docx_ingest_spark(spark, docs):
 
 
 def test_malformed_docx_rejects(spark):
-    """Garbage bytes must become an empty-spans row (then a min_text reject
-    downstream), never a task failure."""
+    """Garbage bytes and a NULL content must become an empty-spans row
+    (then a min_text reject downstream), never a task failure."""
     df = spark.createDataFrame(
-        [("junk-1", b"not a zip"), ("junk-2", b"PK\x03\x04corrupt")],
+        [("junk-1", b"not a zip"), ("junk-2", b"PK\x03\x04corrupt"),
+         ("junk-3", None)],
         "doc_id string, content binary",
     )
-    rows = X.extract(DX.docx_to_spans(df)).collect()
-    assert sorted(r["doc_id"] for r in rows) == ["junk-1", "junk-2"]
+    spans = DX.docx_to_spans(df)
+    plan = spans._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "InPandas" not in plan
+    assert all(r["spans"] == [] for r in spans.collect())
+    rows = X.extract(spans).collect()
+    assert sorted(r["doc_id"] for r in rows) == ["junk-1", "junk-2", "junk-3"]
     assert all(not r["ok"] for r in rows)

@@ -1,6 +1,7 @@
 """Mixed-format ingestion router (sources/ingest.py): magic-byte
 dispatch to the .docx / ODT / legacy-.doc / PDF / RTF parsers in one
-mapInPandas pass, with per-document fault isolation across formats."""
+``binary_to_rows`` (mapInArrow) pass, with per-document fault isolation
+across formats."""
 
 from wordscape_spark.docgen_doc import build_doc
 from wordscape_spark.odtgen import build_odt
@@ -75,11 +76,12 @@ def test_mixed_to_spans_single_pass(spark):
         ("e_unknown", b"just text"),
         ("f_rtf", build_rtf([rpar("gamma rtf body")])),
         ("g_odt", build_odt([rpar("delta odt body")])),
+        ("h_null", None),
     ]
     df = spark.createDataFrame(rows, "doc_id string, content binary")
     out = mixed_to_spans(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert "Exchange" not in plan and "InPandas" not in plan
     got = {r["doc_id"]: r for r in out.collect()}
     assert got["a_pdf"]["format"] == "pdf"
     assert got["a_pdf"]["spans"][0]["text"] == "alpha pdf body"
@@ -96,3 +98,5 @@ def test_mixed_to_spans_single_pass(spark):
     assert got["f_rtf"]["spans"][0]["text"] == "gamma rtf body"
     assert got["g_odt"]["format"] == "odt"
     assert got["g_odt"]["spans"][0]["text"] == "delta odt body"
+    assert got["h_null"]["format"] == "unknown"
+    assert got["h_null"]["spans"] == []

@@ -224,13 +224,13 @@ def test_spark_roundtrip(spark):
     rows = [
         (row["doc_id"], render_doc(row["doc_id"], row["spans"]))
         for row in table[:40]
-    ] + [("broken", b"PK\x03\x04garbage"), ("empty", b"")]
+    ] + [("broken", b"PK\x03\x04garbage"), ("empty", b""), ("null", None)]
     df = spark.createDataFrame(rows, "doc_id string, content binary")
-    got = {
-        r["doc_id"]: r["spans"]
-        for r in odt_to_spans(df).collect()
-    }
-    assert got["broken"] == [] and got["empty"] == []
+    out = odt_to_spans(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "InPandas" not in plan
+    got = {r["doc_id"]: r["spans"] for r in out.collect()}
+    assert got["broken"] == [] and got["empty"] == [] and got["null"] == []
     for row in table[:40]:
         # the writer renders body runs, figures and page breaks (the
         # same surface the pdf/rtf writers render); fig media_refs and

@@ -213,11 +213,13 @@ def test_rtf_to_spans_fault_isolation_and_plan(spark):
         ("ok", build_rtf([par("good document body")])),
         ("bad", b"{\\rtf1 truncated"),
         ("empty", b""),
+        ("null", None),
     ]
     df = spark.createDataFrame(rows, "doc_id string, content binary")
     out = rtf_to_spans(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # ingestion never shuffles
+    assert "InPandas" not in plan  # one mapInArrow step, no pandas hop
     got = {r["doc_id"]: r["spans"] for r in out.collect()}
     assert len(got["ok"]) == 1 and got["ok"][0]["text"] == "good document body"
-    assert got["empty"] == []
+    assert got["empty"] == [] and got["null"] == []

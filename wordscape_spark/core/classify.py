@@ -1168,8 +1168,8 @@ def text_metrics(text: str) -> dict[str, float]:
 # and per-text sums come from ``np.add.reduceat``.  Each caller's tables
 # are derived FROM ITS REFERENCE FORM, so the two cannot drift: here from
 # the very regexes / str methods ``text_metrics`` uses (BMP-sized, so
-# worker init stays cheap; a batch holding an astral char falls back to
-# the scalar form), in ``operators/text.py`` from the SQL's literal
+# worker init stays cheap; only a text holding an astral char falls back
+# to the scalar form), in ``operators/text.py`` from the SQL's literal
 # alphabets and Java/RE2's ASCII ``\s`` (full code-point range, no
 # fallback).  Lone surrogates need no fallback: ``surrogatepass`` decodes
 # them to ordinary BMP indices whose entries come from the same source.
@@ -1192,20 +1192,24 @@ _TM_BATCH_CHAR_CAP = 1 << 25
 
 
 def segment_counts(texts: Sequence[str], counts: Sequence, drop, run):
-    """Per-text int64 arrays ``(length, *sums, runs)``, or None when a code
-    point lies beyond the tables.
+    """Per-text int64 arrays ``(length, *sums, runs)`` and a bool array
+    ``beyond`` that flags the texts holding a code point past the tables.
 
     ``counts``: uint8 class tables, summed per text in order.  ``drop``:
     uint8 table (or None) of code points removed before runs are counted.
     ``run``: bool table of run members; ``runs`` counts maximal runs of
     them (words for a non-space table, whitespace runs for a space one).
-    All tables share one length, the code range plus the sentinel."""
+    All tables share one length, the code range plus the sentinel.  A
+    flagged text's counts read its out-of-range code points as the
+    sentinel, so the caller counts it another way; the flags cost nothing
+    unless a sub-batch's largest code reaches the sentinel."""
     import numpy as np
 
     n = len(texts)
     lengths = np.fromiter(map(len, texts), dtype=np.int64, count=n)
     ends = np.cumsum(lengths)
     out = np.zeros((len(counts) + 1, n), dtype=np.int64)
+    beyond = np.zeros(n, dtype=bool)
     sentinel = len(run) - 1
     lo = 0
     while lo < n:
@@ -1221,10 +1225,12 @@ def segment_counts(texts: Sequence[str], counts: Sequence, drop, run):
             ),
             dtype=np.uint32,
         ).copy()
-        if sentinel <= 0x10FFFF and codes.max() >= sentinel:
-            return None
         seg = lengths[lo:hi] + 1
         starts = np.cumsum(seg) - seg
+        if codes.max() >= sentinel:
+            wide = codes >= sentinel
+            beyond[lo:hi] = np.logical_or.reduceat(wide, starts)
+            codes[wide] = sentinel
         codes[starts + seg - 1] = sentinel
         for k, table in enumerate(counts):
             out[k, lo:hi] = np.add.reduceat(
@@ -1242,7 +1248,7 @@ def segment_counts(texts: Sequence[str], counts: Sequence, drop, run):
             heads.view(np.uint8), starts, dtype=np.int64
         )
         lo = hi
-    return (lengths, *out)
+    return (lengths, *out, beyond)
 
 
 _TM_LUT = None
@@ -1275,15 +1281,18 @@ def _tm_luts():
 
 def text_metrics_batch(texts: list[str]) -> list[dict[str, float]]:
     """``[text_metrics(t) for t in texts]`` from one ``segment_counts``
-    pass (the scalar form for a batch holding an astral char)."""
+    pass (the scalar form for each text holding an astral char)."""
     if not texts:
         return []
     alpha, digit, punct, word = _tm_luts()
-    res = segment_counts(texts, (alpha, digit), punct, word)
-    if res is None:
-        return [text_metrics(t) for t in texts]
+    *res, beyond = segment_counts(texts, (alpha, digit), punct, word)
     out = []
-    for nc, na, nn, nw in zip(*(a.tolist() for a in res)):
+    for t, nc, na, nn, nw, wide in zip(
+        texts, *(a.tolist() for a in res), beyond.tolist()
+    ):
+        if wide:
+            out.append(text_metrics(t))
+            continue
         nan = na + nn
         out.append(
             {

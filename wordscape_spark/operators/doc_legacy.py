@@ -44,12 +44,12 @@ from __future__ import annotations
 
 import bisect
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wordscape_spark import signal as sig
+from wordscape_spark.operators.extract import INPUT_SCHEMA
+from wordscape_spark.sources.ingest import binary_to_rows
 
 CFB_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
@@ -517,27 +517,9 @@ def parse_doc_bytes(data: bytes) -> list[dict]:
     ]
 
 
-def doc_to_spans(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def doc_to_spans(df: DataFrame) -> DataFrame:
     """Arrow-batched legacy-.doc ingestion: (doc_id, content binary) →
     (doc_id, spans).  Zero shuffle; per-document fault isolation — a
     corrupt compound file yields an empty spans array (rejected downstream
     as min_text) instead of failing the task."""
-    from wordscape_spark.operators.extract import INPUT_SCHEMA
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    spans = parse_doc_bytes(bytes(content))
-                except Exception:  # noqa: BLE001 — isolation boundary
-                    spans = []
-                rows.append({"doc_id": doc_id, "spans": spans})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return df.mapInPandas(parse_batches, schema=INPUT_SCHEMA)
+    return binary_to_rows(df, parse_doc_bytes, INPUT_SCHEMA)

@@ -44,13 +44,13 @@ from __future__ import annotations
 import io
 import re
 import zipfile
-from typing import Iterator
 from xml.etree import ElementTree as ET
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wordscape_spark import signal as sig
+from wordscape_spark.operators.extract import INPUT_SCHEMA
+from wordscape_spark.sources.ingest import binary_to_rows
 
 W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 R = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -460,30 +460,13 @@ def parse_docx_bytes(data: bytes) -> list[dict]:
     ]
 
 
-def docx_to_spans(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def docx_to_spans(df: DataFrame) -> DataFrame:
     """Arrow-batched .docx ingestion: (doc_id, content binary) →
     (doc_id, spans) in the interleaved input schema.
 
-    Zero shuffle (mapInPandas over whatever partitioning the binary source
-    provides); per-document fault isolation — an unreadable zip or
-    malformed XML yields an empty spans array (downstream extract() rejects
-    it as min_text) instead of failing the task."""
-    from wordscape_spark.operators.extract import INPUT_SCHEMA
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    spans = parse_docx_bytes(bytes(content))
-                except Exception:  # noqa: BLE001 — isolation boundary
-                    spans = []
-                rows.append({"doc_id": doc_id, "spans": spans})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return df.mapInPandas(parse_batches, schema=INPUT_SCHEMA)
+    Zero shuffle (one ``binary_to_rows`` pass over whatever partitioning
+    the binary source provides); per-document fault isolation — an
+    unreadable zip or malformed XML yields an empty spans array
+    (downstream extract() rejects it as min_text) instead of failing the
+    task."""
+    return binary_to_rows(df, parse_docx_bytes, INPUT_SCHEMA)

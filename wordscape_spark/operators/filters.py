@@ -60,7 +60,7 @@ def pseudo_perplexity_expr(col: str, dialect: str) -> str:
 def _whitelist_counts(texts: list[str]) -> tuple:
     alpha, digit, _punct, _nonws, ws = _mb_luts()
     trimmed = [t.strip(" ") for t in texts]  # SQL trim(): spaces only
-    ntrim, n_alph, n_num, wsruns = C.segment_counts(
+    ntrim, n_alph, n_num, wsruns, _ = C.segment_counts(
         trimmed, (alpha, digit), None, ws
     )
     return [len(t) for t in texts], ntrim, wsruns, n_alph, n_num

@@ -29,9 +29,10 @@ Document content maps onto the span grammar exactly like the RTF reader
   (``xlink:href`` under ``Pictures/``) carries its media_ref as
   ``draw:name``; a linked picture's href IS the media_ref.
 
-Scale shape: mapInPandas over the binary column — zero shuffle,
-per-document fault isolation (malformed packages yield empty span
-arrays, rejected downstream as min_text, never task failures).
+Scale shape: one ``sources.ingest.binary_to_rows`` (``mapInArrow``) pass
+over the binary column — zero shuffle, per-document fault isolation
+(malformed packages yield empty span arrays, rejected downstream as
+min_text, never task failures).
 
 Reference surface this replaces: WordScape converts Word-family
 binaries through LibreOffice, whose native format is ODF
@@ -45,12 +46,12 @@ import io
 import re
 import xml.etree.ElementTree as ET
 import zipfile
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wordscape_spark import signal as sig
+from wordscape_spark.operators.extract import INPUT_SCHEMA
+from wordscape_spark.sources.ingest import binary_to_rows
 
 _NS_OFFICE = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
 _NS_TEXT = "urn:oasis:names:tc:opendocument:xmlns:text:1.0"
@@ -276,27 +277,7 @@ def parse_odt_bytes(data: bytes) -> list[dict]:
     return out
 
 
-def odt_to_spans(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def odt_to_spans(df: DataFrame) -> DataFrame:
     """Arrow-batched ODT ingestion: (doc_id, content binary) →
     (doc_id, spans).  Zero shuffle; per-document fault isolation."""
-    from wordscape_spark.operators.extract import INPUT_SCHEMA
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = []
-            for doc_id, content in zip(
-                pdf_batch[id_col], pdf_batch[content_col]
-            ):
-                try:
-                    spans = parse_odt_bytes(bytes(content))
-                except Exception:  # noqa: BLE001 — isolation boundary
-                    spans = []
-                out.append({"doc_id": doc_id, "spans": spans})
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(parse_batches, schema=INPUT_SCHEMA)
+    return binary_to_rows(df, parse_odt_bytes, INPUT_SCHEMA)

@@ -61,10 +61,11 @@ import re
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wordscape_spark import signal as sig
+from wordscape_spark.operators.extract import INPUT_SCHEMA
+from wordscape_spark.sources.ingest import binary_to_rows
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -730,35 +731,9 @@ def parse_pdf_bytes(
     return out
 
 
-def pdf_to_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-    reading_order: str = "layout",
-) -> DataFrame:
+def pdf_to_spans(df: DataFrame) -> DataFrame:
     """Arrow-batched PDF ingestion: (doc_id, content binary) →
-    (doc_id, spans).  Zero shuffle; per-document fault isolation — a
-    malformed file yields an empty spans array (rejected downstream as
-    min_text) instead of failing the task.  ``reading_order`` as in
-    :func:`parse_pdf_bytes` (default: geometry-sorted layout order)."""
-    from wordscape_spark.operators.extract import INPUT_SCHEMA
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = []
-            for doc_id, content in zip(
-                pdf_batch[id_col], pdf_batch[content_col]
-            ):
-                try:
-                    spans = parse_pdf_bytes(
-                        bytes(content), reading_order=reading_order
-                    )
-                except Exception:  # noqa: BLE001 — isolation boundary
-                    spans = []
-                out.append({"doc_id": doc_id, "spans": spans})
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(parse_batches, schema=INPUT_SCHEMA)
+    (doc_id, spans) in geometry-sorted layout order.  Zero shuffle;
+    per-document fault isolation — a malformed file yields an empty spans
+    array (rejected downstream as min_text) instead of failing the task."""
+    return binary_to_rows(df, parse_pdf_bytes, INPUT_SCHEMA)

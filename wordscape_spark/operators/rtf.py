@@ -26,9 +26,10 @@ Document content maps onto the span grammar exactly like the PDF reader
   arrives as an ``INCLUDEPICTURE "ref"`` field instruction
   (``{\\field{\\*\\fldinst ...}}``).
 
-Scale shape: mapInPandas over the binary column — zero shuffle,
-per-document fault isolation (malformed streams yield empty span
-arrays, rejected downstream as min_text, never task failures).
+Scale shape: one ``sources.ingest.binary_to_rows`` (``mapInArrow``) pass
+over the binary column — zero shuffle, per-document fault isolation
+(malformed streams yield empty span arrays, rejected downstream as
+min_text, never task failures).
 
 Reference surface this replaces: WordScape routes downloaded Word-family
 payloads per format (app/src/data_sources/download_process.py); RTF is
@@ -38,12 +39,12 @@ the third Word-family container next to .doc/.docx.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from wordscape_spark import signal as sig
+from wordscape_spark.operators.extract import INPUT_SCHEMA
+from wordscape_spark.sources.ingest import binary_to_rows
 
 #: destinations whose content is discarded
 _DEST_SKIP = {
@@ -310,27 +311,7 @@ def parse_rtf_bytes(data: bytes) -> list[dict]:
     return out
 
 
-def rtf_to_spans(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def rtf_to_spans(df: DataFrame) -> DataFrame:
     """Arrow-batched RTF ingestion: (doc_id, content binary) →
     (doc_id, spans).  Zero shuffle; per-document fault isolation."""
-    from wordscape_spark.operators.extract import INPUT_SCHEMA
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            out = []
-            for doc_id, content in zip(
-                pdf_batch[id_col], pdf_batch[content_col]
-            ):
-                try:
-                    spans = parse_rtf_bytes(bytes(content))
-                except Exception:  # noqa: BLE001 — isolation boundary
-                    spans = []
-                out.append({"doc_id": doc_id, "spans": spans})
-            if out:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(parse_batches, schema=INPUT_SCHEMA)
+    return binary_to_rows(df, parse_rtf_bytes, INPUT_SCHEMA)

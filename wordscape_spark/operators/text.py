@@ -229,7 +229,7 @@ def count_columns(
 
 def _metric_counts(texts: list[str]) -> tuple:
     alpha, digit, punct, nonws, _ws = _mb_luts()
-    nc, na, nn, nw = C.segment_counts(texts, (alpha, digit), punct, nonws)
+    nc, na, nn, nw, _ = C.segment_counts(texts, (alpha, digit), punct, nonws)
     return nw, nc, na, nn
 
 

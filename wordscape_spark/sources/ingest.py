@@ -5,10 +5,11 @@ legacy .doc compound file, PDF, RTF).
 The reference's download pipeline sniffs fetched payloads and routes
 them to per-format handling (reference
 app/src/data_sources/download_process.py content-type/extension gates);
-this is the Spark-side analog: a single ``mapInPandas`` pass over the
+this is the Spark-side analog: one :func:`binary_to_rows` pass over the
 ``(doc_id, content: binary)`` table that detects each row's container by
 magic bytes and invokes the matching parser, emitting the interleaved
-span grammar plus a ``format`` audit column.
+span grammar plus a ``format`` audit column.  The same helper is the one
+ingestion step of every per-format front door (``docx_to_spans`` & co.).
 
 Why per-row dispatch instead of three filtered DataFrame branches: all
 three parsers are Python-side anyway (the bytes must cross into Arrow
@@ -16,14 +17,12 @@ once either way), and a branch-per-format plan re-scans the source table
 once per format — at 10^12 rows the single pass wins and nothing is lost
 to Catalyst (there are no per-format columns to prune).  Zero shuffle;
 per-document fault isolation (a corrupt container of ANY format yields
-an empty spans array + its detected format, never a task failure).
+an empty spans array + its detected format, never a task failure; a
+NULL content reads as an empty, ``unknown`` payload).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -98,9 +97,44 @@ def parse_any_bytes(data: bytes) -> tuple[str, list[dict]]:
         return fmt, []
 
 
-def mixed_to_spans(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
+def binary_to_rows(df: DataFrame, parse, schema: StructType) -> DataFrame:
+    """The one binary-ingestion step: (doc_id, content binary) → ``schema``
+    rows in one ``mapInArrow`` pass, zero shuffle.
+
+    ``parse(content)`` returns the row's columns after ``doc_id``: the spans
+    list alone when ``schema`` has two columns, else a tuple of them.  A
+    NULL content parses as ``b""``.  Per-document fault isolation: a parse
+    that raises yields empty spans (NULL for any other column) instead of
+    failing the task.  Each output column is one ``pa.array`` against the
+    schema's Arrow type, so the nested spans convert in C++ without pandas."""
+    width = len(schema.fields) - 1
+
+    def parse_one(content: bytes | None) -> tuple:
+        try:
+            row = parse(b"" if content is None else content)
+        except Exception:  # noqa: BLE001 — isolation boundary
+            return (None,) * (width - 1) + ([],)
+        return row if width > 1 else (row,)
+
+    def parse_batches(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for batch in batches:
+            rows = [parse_one(c) for c in batch.column(1).to_pylist()]
+            if not rows:
+                continue
+            cols = [batch.column(0)] + [
+                pa.array(col, t)
+                for col, t in zip(zip(*rows), arrow_schema.types[1:])
+            ]
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    return df.select("doc_id", "content").mapInArrow(parse_batches, schema)
+
+
+def mixed_to_spans(df: DataFrame) -> DataFrame:
     """Arrow-batched mixed-format ingestion: (doc_id, content binary) →
     (doc_id, format, spans) in one pass."""
     from wordscape_spark.operators.extract import INPUT_SCHEMA
@@ -109,20 +143,4 @@ def mixed_to_spans(
         [INPUT_SCHEMA[0], StructField("format", StringType(), False),
          INPUT_SCHEMA[1]]
     )
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, content in zip(
-                pdf_batch[id_col], pdf_batch[content_col]
-            ):
-                fmt, spans = parse_any_bytes(bytes(content))
-                rows.append(
-                    {"doc_id": doc_id, "format": fmt, "spans": spans}
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return df.mapInPandas(parse_batches, schema=out_schema)
+    return binary_to_rows(df, parse_any_bytes, out_schema)
