@@ -6,6 +6,7 @@ gate plan must stay broadcast + per-row (no probe-side shuffle)."""
 import hashlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from wordscape_spark.operators import bloom
 
@@ -64,20 +65,25 @@ def test_bitmap_matches_python(words_df):
     assert got == _py_words()
 
 
+def _verdicts(probe_df, words_df) -> dict[str, bool]:
+    """(url → seen) per probe row: ``seen_expr`` over the broadcast bitmap,
+    the predicate ``bloom_new`` negates."""
+    rows = (
+        probe_df.crossJoin(F.broadcast(bloom._bitmap_map(words_df)))
+        .select("url", F.expr(bloom.seen_expr("url", "_bloom_map", M, K)))
+        .collect()
+    )
+    return {r[0]: r[1] for r in rows}
+
+
 def test_no_false_negatives(probe_df, words_df):
-    verdicts = {
-        r["key"]: r["seen"]
-        for r in bloom.bloom_gate(probe_df, words_df, "url", M, K).collect()
-    }
+    verdicts = _verdicts(probe_df, words_df)
     for key in SEEN[:7]:
         assert verdicts[key] is True, key
 
 
 def test_verdicts_match_python_bloom_exactly(probe_df, words_df):
-    verdicts = {
-        r["key"]: r["seen"]
-        for r in bloom.bloom_gate(probe_df, words_df, "url", M, K).collect()
-    }
+    verdicts = _verdicts(probe_df, words_df)
     assert len(verdicts) == len(PROBE)
     for key in PROBE:
         assert verdicts[key] == _py_seen(key), key

@@ -11,15 +11,23 @@ from wordscape_spark import datagen
 from wordscape_spark.docgen_doc import (
     build_doc,
     ensure_doc,
-    spans_to_paragraph_items,
+    spans_to_styled_items,
 )
 from wordscape_spark.operators import extract as X
 from wordscape_spark.operators.doc_legacy import (
     CfbFile,
     doc_to_spans,
-    extract_doc_paragraphs,
+    extract_doc_paragraph_runs,
     parse_doc_bytes,
 )
+
+
+def extract_doc_paragraphs(data: bytes) -> list[str | None]:
+    """Paragraph texts in document order; ``None`` marks a page break."""
+    return [
+        item if item is None else item[0]
+        for item in extract_doc_paragraph_runs(data)
+    ]
 
 
 def test_roundtrip_small_doc_uses_ministream():
@@ -112,7 +120,11 @@ def test_interleaved_render_groups_split_paragraphs():
         {"kind": "r;p=1;s=normal", "text": "second", "offset": 4,
          "media_ref": None},
     ]
-    assert spans_to_paragraph_items(spans) == ["first part", None, "second"]
+    items = [
+        item if item is None else item["text"]
+        for item in spans_to_styled_items(spans)
+    ]
+    assert items == ["first part", None, "second"]
 
 
 def test_sf0001_doc_chain_matches_interleaved_serialization(spark):

@@ -1,7 +1,7 @@
 """Iceberg integration — gated on the iceberg-spark runtime jar.
 
 The engine's north rule targets an Iceberg table of interleaved documents
-(``read_docs("iceberg://db.table")``, sources/tables.py:89) and the
+(``read_docs("iceberg://db.table")``, sources/tables.py:79) and the
 checkpoint plan leans on Iceberg's snapshot/commit semantics at cluster
 scale (plans/checkpoint.py).  The sandbox ships no iceberg-spark runtime
 jar, so this module SKIPS there; on a host that has one (see README

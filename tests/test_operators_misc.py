@@ -39,24 +39,13 @@ def test_deterministic_sample_stable(spark, docs):
     assert 0 < len(a) < docs.count()
 
 
-def test_stratified_sample(spark):
-    spans = spark.createDataFrame(
-        [(f"d{i}", k) for i in range(200) for k in ("text", "figure")],
-        "doc_id string, kind string",
-    )
-    out = SH.stratified_sample(spans, {"text": 25})
-    counts = {r["kind"]: r["n"] for r in
-              out.groupBy("kind").agg(F.count("*").alias("n")).collect()}
-    assert counts["figure"] == 200  # unsampled class kept whole
-    assert 20 <= counts["text"] <= 90  # ~25%
-
-
 def test_maldoc_indicators(spark):
     media = spark.createDataFrame(
         [
             ("d1", "m1", bytearray(b"clean bytes here")),
             ("d2", "m2", bytearray(b"xxVBAxx")),
             ("d3", "m3", bytearray(b"ooENCoo")),
+            ("d4", "m4", None),
         ],
         "doc_id string, media_ref string, content binary",
     )
@@ -64,8 +53,10 @@ def test_maldoc_indicators(spark):
     assert not rows["d1"]["malicious"]
     assert rows["d2"]["malicious"] and rows["d2"]["ind_vba"]
     assert rows["d3"]["malicious"] and rows["d3"]["ind_encrypted"]
-    clean = MD.reject_malicious(media)
-    assert [r["doc_id"] for r in clean.collect()] == ["d1"]
+    # a NULL payload reads as b"": a row with no indicator set
+    d4 = rows["d4"].asDict()
+    assert not d4.pop("malicious")
+    assert not any(v for k, v in d4.items() if k.startswith("ind_"))
 
 
 def test_perplexity_matches_python(spark, docs):
@@ -84,23 +75,27 @@ def test_perplexity_matches_python(spark, docs):
     )
 
 
-def test_sources_roundtrip(spark, tmp_path):
+def test_sources_roundtrip(spark):
     docs = SRC.read_docs(spark, datagen.ensure_interleaved(0.001))
     assert docs.count() == 200
-    SRC.write_sharded(docs, str(tmp_path / "out"), max_records_per_file=50)
-    import glob
 
-    files = glob.glob(str(tmp_path / "out" / "*.parquet"))
-    assert len(files) >= 4  # shard rotation happened
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 200
+
+def _with_null_payload(spark, media):
+    """``media`` plus one row whose ``content`` is NULL."""
+    null = spark.createDataFrame(
+        [("null-doc", "m0", None, "png", 300, 200)], MM.MEDIA_SCHEMA
+    )
+    return media.unionByName(null)
 
 
 def test_media_pipeline_end_to_end(spark):
     docs = SRC.read_docs(spark, datagen.ensure_interleaved(0.001))
     media = MM.media_table(docs)
-    feats = MM.extract_features(media)
-    row = feats.first()
+    feats = MM.extract_features(_with_null_payload(spark, media))
+    row = feats.filter("doc_id != 'null-doc'").first()
     assert row["n_bytes"] > 0 and len(row["phash"]) == 16
+    null = feats.filter("doc_id = 'null-doc'").collect()
+    assert [(r["n_bytes"], r["byte_mean"]) for r in null] == [(0, 0.0)]
     with pytest.raises(Exception):
         MM.extract_features(media, decode_real=True).count()
 
@@ -123,8 +118,9 @@ def test_media_features_fused_matches_unfused(spark):
 
 def test_media_resize_and_frames(spark):
     docs = SRC.read_docs(spark, datagen.ensure_interleaved(0.001))
-    media = MM.media_table(docs).persist()
+    media = _with_null_payload(spark, MM.media_table(docs)).persist()
     resized = MM.resize_media(media, max_dim=256).collect()
+    assert [r["content"] for r in resized if r["doc_id"] == "null-doc"] == [None]
     for r in resized:
         assert max(r["out_width"], r["out_height"]) <= 256
         if max(r["width"], r["height"]) <= 256:
@@ -144,6 +140,9 @@ def test_media_resize_and_frames(spark):
         .collect()
     )
     assert all(1 <= r["n"] <= 4 for r in counts)
+    # a NULL payload reads as b"": one empty frame
+    null = frames.filter("doc_id = 'null-doc'").collect()
+    assert [(r["frame_idx"], bytes(r["frame_bytes"])) for r in null] == [(0, b"")]
     with pytest.raises(Exception):
         MM.resize_media(media, decode_real=True).count()
     with pytest.raises(Exception):

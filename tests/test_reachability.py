@@ -1,0 +1,122 @@
+"""Program code reaches every top-level name in ``wordscape_spark/``.
+
+A top-level ``def``, ``class`` or module-level assigned name that only tests
+call is code nobody runs: it drifts from the paths the queries take and still
+costs a reader.  This scan parses the program sources (the package,
+``scripts/``, ``__spark_entry__.py``, ``bench.py`` and ``perfbench/``) with
+``ast`` and fails on any name that no program source references outside its
+own definition, unless ``ALLOWLIST`` says why it stays.
+
+The same parse pins the pandas UDF call sites per module, so a new one fails
+here and each Arrow port lowers the pin.
+"""
+import ast
+from collections import Counter, defaultdict
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "wordscape_spark"
+PROGRAM = sorted(
+    [*PKG.rglob("*.py"), *(ROOT / "scripts").rglob("*.py"),
+     ROOT / "__spark_entry__.py", ROOT / "bench.py",
+     *(ROOT / "perfbench").glob("*.py")]
+)
+
+# Public seams no program code calls, each kept for the reason given.
+ALLOWLIST = {
+    "fasttext_classifier": "import-guarded fastText seam for with_langid's classifier=, documented in README",
+    "kenlm_scorer": "import-guarded KenLM seam for perplexity scoring, documented in README",
+    "oleid_indicators": "import-guarded oletools seam for maldoc_check's indicator=, documented in README",
+    "pil_feature_decoder": "import-guarded Pillow seam for media_features' decoder=, documented in README",
+    "pil_resampler": "import-guarded Pillow seam for resize_media's resampler=, documented in README",
+    "urllib_fetcher": "stdlib network seam for acquire's fetcher=, documented in README",
+    "extract_features": "unfused reference that tests compare media_features against, and its decoder= seam",
+    "tables_from_counts": "serve half of the registered langid_train query",
+}
+
+PANDAS_UDFS = {"mapInPandas", "applyInPandas", "applyInPandasWithState", "pandas_udf"}
+PANDAS_SITES = {
+    "sources/wat.py": 1,
+    "sources/http.py": 1,
+    "operators/maldoc.py": 1,
+    "operators/quality_rules.py": 1,
+    "operators/multimodal.py": 3,
+    "operators/urls.py": 1,
+    "operators/perplexity.py": 1,
+    "operators/langid_trigram.py": 1,
+}
+
+
+def _trees():
+    return {p: ast.parse(p.read_text(), filename=str(p)) for p in PROGRAM}
+
+
+def _definitions(tree):
+    """(name, first line, last line) of each top-level def, class and assignment."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name, node.lineno, node.end_lineno
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                        yield n.id, node.lineno, node.end_lineno
+
+
+def _references(tree):
+    """(name, line) of each Name, Attribute, import alias and identifier
+    string.  A bare Name that the file itself defines at top level is
+    that file's own name, so another module's same-named definition does
+    not count it."""
+    own = {name for name, _, _ in _definitions(tree)}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            yield n.id, n.lineno, n.id in own
+        elif isinstance(n, ast.Attribute):
+            yield n.attr, n.lineno, False
+        elif isinstance(n, ast.alias):
+            for part in n.name.split("."):
+                yield part, n.lineno, False
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            yield n.value, n.lineno, False
+
+
+def _unreached():
+    """``{name: "path:line"}`` of package names no program source references."""
+    trees = _trees()
+    refs = defaultdict(list)
+    for path, tree in trees.items():
+        for name, line, local in _references(tree):
+            refs[name].append((path, line, local))
+    unreached = {}
+    for path, tree in trees.items():
+        if PKG not in path.parents:
+            continue
+        for name, lo, hi in _definitions(tree):
+            if all(
+                lo <= line <= hi if p == path else local
+                for p, line, local in refs[name]
+            ):
+                unreached[name] = f"{path.relative_to(ROOT)}:{lo}"
+    return unreached
+
+
+def test_every_top_level_name_is_reached_from_program_code():
+    unreached = _unreached()
+    dead = sorted(f"{where} {name}" for name, where in unreached.items() if name not in ALLOWLIST)
+    assert not dead, "only tests reach these; delete them or allowlist with a reason:\n" + "\n".join(dead)
+    # An entry that program code now reaches, or that is gone, is stale.
+    assert set(ALLOWLIST) <= set(unreached), set(ALLOWLIST) - set(unreached)
+
+
+def test_pandas_udf_sites_are_pinned_per_module():
+    sites = Counter()
+    for path, tree in _trees().items():
+        if PKG not in path.parents:
+            continue
+        for n in ast.walk(tree):
+            name = n.attr if isinstance(n, ast.Attribute) else n.id if isinstance(n, ast.Name) else None
+            if name in PANDAS_UDFS:
+                sites[path.relative_to(PKG).as_posix()] += 1
+    assert dict(sites) == PANDAS_SITES

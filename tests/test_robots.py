@@ -1,5 +1,5 @@
 """robots.txt gate (operators/robots.py): group selection, wildcard/
-anchor matching, longest-match precedence and the parser must match an
+anchor matching, longest-match precedence must match an
 independent pure-Python RFC 9309 implementation; the broadcast verdict
 plan must never shuffle the URL corpus."""
 
@@ -152,71 +152,3 @@ def test_broadcast_plan_never_shuffles_urls(urls_df, rules_df):
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "host" in line, line  # only the rules fold/anti-join
-
-
-PARSE_CASES = [
-    (
-        "h1",
-        """
-# comment-only preamble
-User-agent: WordScape
-Disallow: /a   # trailing comment
-Allow: /a/b
-
-User-agent: other
-User-agent: *
-Disallow: /c
-Crawl-delay: 10
-Sitemap: https://h1/sitemap.xml
-""",
-        [
-            ("h1", "wordscape", "disallow", "/a"),
-            ("h1", "wordscape", "allow", "/a/b"),
-            ("h1", "other", "disallow", "/c"),
-            ("h1", "*", "disallow", "/c"),
-        ],
-    ),
-    # a User-agent line AFTER rules starts a fresh group
-    (
-        "h2",
-        "User-agent: a\nDisallow: /x\nUser-agent: b\nDisallow: /y\n",
-        [("h2", "a", "disallow", "/x"), ("h2", "b", "disallow", "/y")],
-    ),
-    ("h3", "", []),
-    ("h3b", None, []),
-    # rules before any User-agent line belong to no group → dropped
-    ("h4", "Disallow: /orphan\nUser-agent: *\nAllow: /ok\n",
-     [("h4", "*", "allow", "/ok")]),
-]
-
-
-def test_parse_robots_txt(spark):
-    bodies = spark.createDataFrame(
-        [(h, b) for h, b, _ in PARSE_CASES], "host string, body string"
-    )
-    got = sorted(
-        tuple(r) for r in robots.parse_robots_txt(bodies).collect()
-    )
-    want = sorted(t for _, _, ts in PARSE_CASES for t in ts)
-    assert got == want
-
-
-def test_parsed_rules_drive_the_gate(spark):
-    """End-to-end: raw robots.txt bodies → parsed rules → verdicts."""
-    bodies = spark.createDataFrame(
-        [("g.example", "User-agent: *\nDisallow: /no\n")],
-        "host string, body string",
-    )
-    urls = spark.createDataFrame(
-        [("https://g.example/no/1",), ("https://g.example/yes/1",)],
-        "url string",
-    )
-    rules = robots.parse_robots_txt(bodies)
-    got = {
-        r["url"]: r["allowed"]
-        for r in robots.robots_verdicts(urls, rules).collect()
-    }
-    assert got == {
-        "https://g.example/no/1": False,
-        "https://g.example/yes/1": True,
-    }

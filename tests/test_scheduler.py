@@ -61,11 +61,6 @@ def test_politeness_invariant(scheduled):
         seen.add(key)
 
 
-def test_histogram_proves_invariant(scheduled):
-    for r in scheduler.wave_histogram(scheduled).collect():
-        assert r["n_urls"] == r["n_hosts"], r
-
-
 def test_mega_host_finishes_in_bounded_waves(scheduled):
     """Max wave on the mega-host = (max stream occupancy − 1)·n_streams
     + stream < max_occupancy·n_streams — streams are md5-hashed, so the

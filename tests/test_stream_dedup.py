@@ -16,7 +16,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     pq.write_table(table, str(indir / "wave1.parquet"))
 
     outdir, cpdir = str(tmp_path / "out"), str(tmp_path / "cp")
-    q = S.stream_dedup_extract(spark, str(indir), outdir, cpdir)
+    q = S.stream_extract(spark, str(indir), outdir, cpdir, dedup=True)
     q.awaitTermination(300)
     n1 = spark.read.parquet(outdir).count()
     assert n1 == 40  # first wave: all unique contents
@@ -29,7 +29,7 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     fresh = pq.read_table(src).slice(40, 10)
     pq.write_table(pa.concat_tables([dup, fresh]), str(indir / "wave2.parquet"))
 
-    q2 = S.stream_dedup_extract(spark, str(indir), outdir, cpdir)
+    q2 = S.stream_extract(spark, str(indir), outdir, cpdir, dedup=True)
     q2.awaitTermination(300)
     out = spark.read.parquet(outdir)
     # dedup applies to accepted docs only; rejects pass through untouched

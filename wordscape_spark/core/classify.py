@@ -1139,7 +1139,6 @@ _PUNCT_DELETE = str.maketrans("", "", _string.punctuation)
 # likewise holds for the generated corpus and is range-tested in unit tests.
 _NON_ALPHA = _re.compile(r"[\W\d_]+", _re.UNICODE)
 _NON_NUM = _re.compile(r"\D+", _re.UNICODE)
-_WS = _re.compile(r"\s+")
 
 
 def text_metrics(text: str) -> dict[str, float]:

@@ -674,14 +674,6 @@ def spans_to_styled_items(spans: list[dict]) -> list[dict | None]:
     return items
 
 
-def spans_to_paragraph_items(spans: list[dict]) -> list[str | None]:
-    """Text-only view of ``spans_to_styled_items``."""
-    return [
-        item if item is None else item["text"]
-        for item in spans_to_styled_items(spans)
-    ]
-
-
 def ensure_doc(sf: float) -> str:
     """Materialize a (doc_id, content) parquet of real .doc bytes rendered
     from the interleaved table — the legacy-binary twin of

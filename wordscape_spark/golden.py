@@ -275,8 +275,8 @@ def _gen_media_tables(sf: float, out: pathlib.Path) -> None:
 
 
 def _plane_component(plane: int, dim: int) -> float:
-    """Bit-identical twin of similarity._plane_component (md5-derived
-    pseudo-gaussian)."""
+    """Bit-identical twin of the plane component in
+    similarity.with_lsh_signature (md5-derived pseudo-gaussian)."""
     h = hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()[:8]
     return int(h, 16) / 2147483648.0 - 1.0
 

@@ -111,27 +111,6 @@ def _bitmap_map(filter_words: DataFrame) -> DataFrame:
     )
 
 
-def bloom_gate(
-    probe: DataFrame,
-    filter_words: DataFrame,
-    key_col: str,
-    m: int = DEFAULT_M,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """(key, seen) verdict per probe row: ``seen`` iff every one of the
-    key's bits is set in the filter (bloom semantics — no false
-    negatives, deterministic false positives).  The bitmap rides in as
-    a one-row broadcast crossJoin and the verdict is a per-row
-    expression — the probe side NEVER shuffles."""
-    return (
-        probe.select(F.col(key_col).alias("key"))
-        .crossJoin(F.broadcast(_bitmap_map(filter_words)))
-        .select(
-            "key", F.expr(seen_expr("key", "_bloom_map", m, k)).alias("seen")
-        )
-    )
-
-
 def bloom_new(
     probe: DataFrame,
     filter_words: DataFrame,

@@ -27,7 +27,7 @@ Reader structure:
 
 * ``CfbFile`` — [MS-CFB] v3/v4: DIFAT → FAT chains, directory tree,
   miniFAT + ministream for streams under the 4096-byte cutoff.
-* ``extract_doc_paragraphs`` — [MS-DOC]: FIB (wIdent 0xA5EC, fWhichTblStm
+* ``extract_doc_paragraph_runs`` — [MS-DOC]: FIB (wIdent 0xA5EC, fWhichTblStm
   flag → 0Table/1Table, ccpText, fcClx/lcbClx), CLX walk (Prc skip → Pcdt),
   PlcPcd piece table with per-piece fCompressed (cp1252 at fc/2) vs
   UTF-16LE decoding, reassembled main text cut to ccpText.
@@ -475,14 +475,6 @@ def extract_doc_paragraph_runs(
     if buf:
         flush()
     return out
-
-
-def extract_doc_paragraphs(data: bytes) -> list[str | None]:
-    """Paragraph texts in document order; ``None`` marks a page break."""
-    return [
-        item if item is None else item[0]
-        for item in extract_doc_paragraph_runs(data)
-    ]
 
 
 def parse_doc_bytes(data: bytes) -> list[dict]:

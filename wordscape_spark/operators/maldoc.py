@@ -32,7 +32,7 @@ _INDICATORS = {
     "ext_rels": b"\x52\x45\x4c",   # 'REL'
     "flash": b"\x46\x57\x53",      # 'FWS' (swf magic)
 }
-FATAL = frozenset(_INDICATORS)
+
 
 def surrogate_indicators(content: bytes) -> "dict[str, bool]":
     """Default indicator backend: deterministic byte-pattern OleID stand-in."""
@@ -48,9 +48,6 @@ def maldoc_schema(names: "list[str]") -> StructType:
             StructField("malicious", BooleanType()),
         ]
     )
-
-
-MALDOC_SCHEMA = maldoc_schema(sorted(_INDICATORS))
 
 
 def maldoc_check(
@@ -86,7 +83,7 @@ def maldoc_check(
             for doc_id, ref, content in zip(
                 pdf["doc_id"], pdf["media_ref"], pdf["content"]
             ):
-                inds = indicators(bytes(content))
+                inds = indicators(bytes(content or b""))  # NULL reads as b""
                 rows.append(
                     {
                         "doc_id": doc_id,
@@ -100,13 +97,3 @@ def maldoc_check(
             yield pd.DataFrame(rows)
 
     return media.mapInPandas(scan, schema=maldoc_schema(names))
-
-
-def reject_malicious(media: DataFrame) -> DataFrame:
-    """The gate: keep only clean media (join back on the verdict)."""
-    verdicts = maldoc_check(media).select("doc_id", "media_ref", "malicious")
-    return (
-        media.join(verdicts, ["doc_id", "media_ref"])
-        .filter(~verdicts["malicious"])
-        .drop("malicious")
-    )

@@ -163,7 +163,7 @@ def extract_features(
                         {
                             "doc_id": doc_id,
                             "media_ref": ref,
-                            **fn(bytes(content)),
+                            **fn(bytes(content or b"")),
                         }
                     )
                 yield pd.DataFrame(rows)
@@ -187,7 +187,7 @@ def extract_features(
             doc_ids = batch.column(0)
             refs = batch.column(1)
             contents = batch.column(2)
-            blobs = contents.to_pylist()
+            blobs = [b or b"" for b in contents.to_pylist()]  # NULL: b""
             lens = [len(b) for b in blobs]
             if sum(lens):
                 data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
@@ -341,7 +341,7 @@ def resize_media(
             out["out_height"] = out_h.astype("int32")
             if resampler is not None:
                 out["content"] = [
-                    resampler(bytes(c), int(ow), int(oh))
+                    resampler(bytes(c or b""), int(ow), int(oh))
                     for c, ow, oh in zip(pdf["content"], out_w, out_h)
                 ]
             else:
@@ -394,7 +394,7 @@ def frame_sample(
             for doc_id, ref, content in zip(
                 pdf["doc_id"], pdf["media_ref"], pdf["content"]
             ):
-                b = bytes(content)
+                b = bytes(content or b"")  # NULL: one empty frame
                 if frame_decoder is not None:
                     # defensive slice: the documented contract is "up to
                     # max_frames" regardless of what the injected backend

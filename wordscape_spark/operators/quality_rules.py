@@ -218,21 +218,6 @@ def word_metrics(
     return out
 
 
-def dup_line_metrics(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, dup_line_frac, dup_line_char_frac) — document-local exact
-    line repetition, by line count and by character mass.
-
-    In-row since r6 (``_dup_line_stats``): Catalyst prunes the unused
-    word-metric columns, so this is one projection over the lines array —
-    zero Exchange, one row per input doc (line-less docs get 0.0, the
-    value the old no-row + left-join-fillna path produced downstream)."""
-    return word_metrics(df, text_col=text_col, id_col=id_col).select(
-        "doc_id", "dup_line_frac", "dup_line_char_frac"
-    )
-
-
 C4_BAD_PHRASES = ("lorem ipsum", "javascript", "cookie policy",
                   "terms of use", "privacy policy")
 C4_MIN_LINE_WORDS = 3

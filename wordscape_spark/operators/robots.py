@@ -11,7 +11,7 @@ Semantics implemented (RFC 9309 §2):
   ``*`` group does; a host with neither allows everything.
 - **rule matching** (§2.2.2): patterns match the URL path from its
   first octet; ``*`` matches any span, a trailing ``$`` anchors the
-  end; an empty pattern imposes no restriction (dropped at parse).
+  end; an empty pattern imposes no restriction (dropped in rule prep).
 - **precedence** (§2.2.2): the longest matching pattern wins; if an
   allow and a disallow tie, allow wins.  No matching rule → allowed.
 
@@ -174,51 +174,3 @@ def robots_gate(
     return robots_verdicts(urls, rules, url_col, agent, broadcast_rules).filter(
         F.col("allowed")
     ).drop("allowed")
-
-
-def parse_robots_txt(
-    bodies: DataFrame, host_col: str = "host", body_col: str = "body"
-) -> DataFrame:
-    """(host, agent, rule, pattern) lines from raw robots.txt bodies —
-    the ingestion leg in front of the relational gate.  Grouping is the
-    RFC 9309 §2.2 line grammar: consecutive ``User-agent`` lines open a
-    group shared by the ``Allow``/``Disallow`` lines that follow;
-    comments strip at ``#``; unknown directives are ignored; a
-    ``User-agent`` line after rules starts a NEW group.  Runs as
-    ``mapInPandas`` (vectorized, zero shuffle — parsing is per-host
-    row-local)."""
-    import pandas as pd
-
-    def parse_one(host: str, body: str):
-        agents: list[str] = []
-        open_group = True
-        for raw in (body or "").splitlines():
-            line = raw.split("#", 1)[0].strip()
-            if not line or ":" not in line:
-                continue
-            key, _, val = line.partition(":")
-            key = key.strip().lower()
-            val = val.strip()
-            if key == "user-agent":
-                if not open_group:
-                    agents, open_group = [], True
-                agents.append(val.lower())
-            elif key in ("allow", "disallow"):
-                open_group = False
-                for a in agents:
-                    yield (host, a, key, val)
-
-    def batches(it):
-        for pdf in it:
-            rows = [
-                r
-                for host, body in zip(pdf[host_col], pdf[body_col])
-                for r in parse_one(host, body)
-            ]
-            yield pd.DataFrame(
-                rows, columns=["host", "agent", "rule", "pattern"]
-            )
-
-    return bodies.mapInPandas(
-        batches, "host string, agent string, rule string, pattern string"
-    )

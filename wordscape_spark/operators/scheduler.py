@@ -65,17 +65,3 @@ def schedule_waves(
         )
         .drop("_sched_stream", "_sched_key")
     )
-
-
-def wave_histogram(scheduled: DataFrame, host_col: str = "host") -> DataFrame:
-    """(wave, n_hosts, n_urls) — the fetch plan's shape: how many hosts
-    are active and how many requests fire per wave.  Politeness holds
-    iff n_urls == n_hosts on every row (≤1 URL per host per wave)."""
-    return (
-        scheduled.groupBy("wave")
-        .agg(
-            F.countDistinct(host_col).alias("n_hosts"),
-            F.count(F.lit(1)).alias("n_urls"),
-        )
-        .orderBy("wave")
-    )

@@ -1,7 +1,7 @@
 """Dataset shaping (E10) — the reference's extension-dataset filters
 (README_EXTENSIONS.md:62-78, wordscape_yolo_formatter.py:15-93):
 entity-class drops, class merges (heading_1..9 → heading), quality/language
-thresholds, per-class minimum counts, stratified sampling.
+thresholds, per-class minimum counts, deterministic sampling.
 
 Sampling is *hash-based*, not ``sample()``: ``pmod(hash(doc_id), 100) <
 pct`` is deterministic under any partitioning/retry (a requirement the
@@ -221,18 +221,6 @@ def pack_sequences(
              - F.col("_ps_k") * L).cast("int").alias("seq_off"),
         )
     )
-
-
-def stratified_sample(
-    spans: DataFrame, pct_per_kind: dict[str, int], id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-class sampling rates (the reference's per-class dataset shaping)."""
-    bucket = _bucket_expr(id_col, "spark")
-    expr = "CASE " + " ".join(
-        f"WHEN kind = '{k}' THEN {bucket} < {p}"
-        for k, p in pct_per_kind.items()
-    ) + " ELSE TRUE END"
-    return spans.filter(F.expr(expr))
 
 
 SHARD_STREAM_TARGET = 65_536  # aim each stream's local sort at ~64k docs

@@ -251,14 +251,6 @@ N_PLANES = 16
 N_BANDS = 8
 
 
-def _plane_component(plane: int, dim: int) -> str:
-    """Deterministic pseudo-gaussian component in [-1, 1)."""
-    return (
-        f"(CAST(conv(substr(md5(concat('{plane}:', CAST({dim} AS STRING))), "
-        f"1, 8), 16, 10) AS DOUBLE) / 2147483648.0 - 1.0)"
-    )
-
-
 def with_lsh_signature(
     df: DataFrame, vec_col: str = "embedding", n_planes: int = N_PLANES
 ) -> DataFrame:

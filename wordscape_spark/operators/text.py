@@ -86,8 +86,6 @@ def normalize(col: str = "text") -> Column:
 
 # ----------------------------------------------------------------- metrics
 
-_PUNCT_CLASS = r"[!-/:-@\[-`{-~]"  # ascii string.punctuation as a class
-
 # explicit letter alphabet: ascii + Latin-1 letters, so counts agree with
 # Python str.isalpha() over the engine's text alphabet
 _LETTERS = (

@@ -21,7 +21,6 @@ from pyspark.sql.types import StringType
 # regexes mirroring the reference's url matching intent
 # (cc_url_process.py:37; preprocess_cc_urls.py:33-69)
 _URL_START = re.compile(r"(www|http:|https:)")
-_DOC_URL = re.compile(r"^(www|http:|https:)+[^\s]+[\w]\.(doc|docx)$")
 
 
 def with_url_hash(df: DataFrame, url_col: str = "url") -> DataFrame:

@@ -43,16 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 from wordscape_spark.config import DEFAULT_CONFIG, ExtractConfig
 from wordscape_spark.operators import extract as X
 
-LINEAGE_COLS = (
-    "bucket",
-    "status",
-    "n_docs",
-    "n_ok",
-    "n_rejected",
-    "wall_secs",
-    "docs_per_sec",
-)
-
 
 def _lineage_path(out_dir: str) -> pathlib.Path:
     return pathlib.Path(out_dir) / "lineage.jsonl"

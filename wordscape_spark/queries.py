@@ -1007,8 +1007,9 @@ def _stream_run(spark: SparkSession, sf_dir: str, dedup: bool) -> DataFrame:
     datagen.make_data_dir(in_dir)
     shutil.copy(in_file, in_dir / "docs.parquet")
     out_dir, ckpt = str(base / "out"), str(base / "ckpt")
-    fn = ST.stream_dedup_extract if dedup else ST.stream_extract
-    q = fn(spark, str(in_dir), out_dir, ckpt, available_now=True)
+    q = ST.stream_extract(
+        spark, str(in_dir), out_dir, ckpt, available_now=True, dedup=dedup
+    )
     q.awaitTermination()
     return spark.read.parquet(out_dir)
 

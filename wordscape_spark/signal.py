@@ -284,12 +284,3 @@ def fontprop_string(size: float, bold: bool | None, italic: bool | None) -> str:
         cached = str(size) + (suffix or "n")
         _FONTPROP_CACHE[key] = cached
     return cached
-
-
-def is_whitespace(text: str) -> bool:
-    """A run is whitespace if empty after removing space/newline/tab/CR
-    (ref: heuristics/utils.py:200-213).  strip() of exactly those chars is
-    equivalent to the reference's remove-all test (empty-after-removal ⇔
-    every char is in the set ⇔ empty-after-strip) without building four
-    intermediate strings."""
-    return not text.strip(" \n\t\r")

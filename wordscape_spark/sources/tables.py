@@ -1,4 +1,4 @@
-"""Source/sink layer.
+"""Source layer.
 
 Reads (SURVEY §2.1 A1/A5, §2.5 E5):
 * ``read_docs`` — the interleaved documents table.  Prefers an Iceberg
@@ -6,15 +6,6 @@ Reads (SURVEY §2.1 A1/A5, §2.5 E5):
   snapshot isolation at 10^12 rows; needs the iceberg-spark runtime jar on a
   real cluster — not shipped in this sandbox, so the parquet path is the
   tested one), else a parquet directory/file with an enforced schema.
-* ``read_jsonl`` — schema-checked union of jsonl shards (the reference's
-  merge_annotations_metadata.py:28-116 as a plain multi-path read).
-* ``read_binary_dir`` — raw byte payloads via Spark's binaryFile source
-  (the WAT/tar-member scan analog, cc_url_process.py:81-183).
-
-Sinks (B5/annotation shard rotation):
-* ``write_sharded`` — parquet with bounded records per file (the tar-shard
-  rotation analog, download_process.py:163-179) — at scale prefer Iceberg
-  write.target-file-size-bytes.
 """
 
 from __future__ import annotations
@@ -23,7 +14,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, IntegerType, StringType, StructType
 
-from wordscape_spark.operators.extract import INPUT_SCHEMA, SPAN_TYPE
+from wordscape_spark.operators.extract import SPAN_TYPE
 
 
 def _spans_canonical(dt) -> bool:
@@ -91,29 +82,3 @@ def read_docs(spark: SparkSession, location: str) -> DataFrame:
     else:
         df = spark.read.parquet(location)
     return normalize_docs(df)
-
-
-def read_jsonl(spark: SparkSession, location: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(location)
-
-
-def read_binary_dir(spark: SparkSession, location: str, glob: str = "*") -> DataFrame:
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(location)
-    )
-
-
-def write_sharded(
-    df: DataFrame, path: str, max_records_per_file: int = 50_000,
-    mode: str = "overwrite",
-) -> None:
-    (
-        df.write.option("maxRecordsPerFile", max_records_per_file)
-        .mode(mode)
-        .parquet(path)
-    )

@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 # the reference's document-URL intent (cc_url_process.py:37 doc_pattern;
-# same pattern the stage-A filter reuses, operators/urls.py:_DOC_URL)
+# the stage-A filter query reuses it)
 DOC_URL_PATTERN = r"^(www|http:|https:)+[^\s]+[\w]\.(doc|docx)$"
 
 WAT_SCHEMA = "wat_path string, record_uri string, url string"

@@ -37,6 +37,7 @@ def stream_extract(
     checkpoint_dir: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
     available_now: bool = True,
+    dedup: bool = False,
 ) -> StreamingQuery:
     """Stream documents → classified spans, exactly-once into parquet.
 
@@ -44,13 +45,32 @@ def stream_extract(
     (no salted path — a streaming micro-batch is already row-bounded) and
     the same mapInArrow flat-child decode as the batch hot path (measured
     ~2x over mapInPandas on this schema; mapInArrow works unchanged on
-    streaming DataFrames)."""
+    streaming DataFrames).
+
+    ``dedup=True`` adds *stateful* content dedup: a ``bytehash`` column, and
+    the first occurrence of each content hash wins across micro-batches (the
+    streaming twin of the bytehash history anti-join, deduplicate.py:10-56 —
+    the in-driver hash set becomes Spark's state store, exactly-once via the
+    stream checkpoint).  Scale note: without a watermark the dedup state
+    grows with distinct content forever; on an unbounded production stream
+    bound it with ``withWatermark`` + ``dropDuplicatesWithinWatermark``
+    (dedup horizon) or periodically compact to the batch bytehash-history
+    anti-join."""
     docs = read_doc_stream(spark, input_dir)
-    extracted = docs.select("doc_id", "spans").mapInArrow(
+    out = docs.select("doc_id", "spans").mapInArrow(
         X._make_classify_arrow_fn(cfg), schema=X.EXTRACTED_SCHEMA
     )
+    if dedup:
+        # dedup only accepted docs: every reject has text='' and would
+        # otherwise collapse onto sha256('') — the first reject would shadow
+        # all later ones.  Rejects pass through unconditionally (they are
+        # the audit side-output).
+        hashed = out.withColumn("bytehash", F.sha2(F.col("text"), 256))
+        out = hashed.filter("ok").dropDuplicates(["bytehash"]).unionByName(
+            hashed.filter("NOT ok")
+        )
     writer = (
-        extracted.writeStream.format("parquet")
+        out.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -58,44 +78,3 @@ def stream_extract(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_dedup_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: ExtractConfig = DEFAULT_CONFIG,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming extraction with *stateful* content dedup: the first
-    occurrence of each content hash wins across micro-batches (the streaming
-    twin of the bytehash history anti-join, deduplicate.py:10-56 — the
-    in-driver hash set becomes Spark's state store, exactly-once via the
-    stream checkpoint).
-
-    Scale note: without a watermark the dedup state grows with distinct
-    content forever; on an unbounded production stream bound it with
-    ``withWatermark`` + ``dropDuplicatesWithinWatermark`` (dedup horizon) or
-    periodically compact to the batch bytehash-history anti-join."""
-    docs = read_doc_stream(spark, input_dir)
-    extracted = docs.select("doc_id", "spans").mapInArrow(
-        X._make_classify_arrow_fn(cfg), schema=X.EXTRACTED_SCHEMA
-    )
-    # dedup only accepted docs: every reject has text='' and would otherwise
-    # collapse onto sha256('') — the first reject would shadow all later ones.
-    # Rejects pass through unconditionally (they are the audit side-output).
-    hashed = extracted.withColumn("bytehash", F.sha2(F.col("text"), 256))
-    deduped = hashed.filter("ok").dropDuplicates(["bytehash"]).unionByName(
-        hashed.filter("NOT ok")
-    )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-

@@ -71,13 +71,6 @@ ID_TO_NAME: dict[int, str] = {i: n for n, i in NAME_TO_ID.items()}
 # (ref: app/src/annotation/annotation_quality.py:11-15)
 QUALITY_IGNORED = frozenset({TABLE_ROW, TABLE_CELL, TABLE_COLUMN})
 
-# categories whose spans may legitimately be empty
-# (ref: app/src/annotation/postprocessing/filters.py:92-121)
-ALLOWED_EMPTY = frozenset(
-    {TABLE, TABLE_CELL, TABLE_ROW, TABLE_COLUMN, TABLE_HEADER,
-     TABLE_HEADER_CELL, TABLE_HEADER_ROW, FIGURE, FORM_FIELD}
-)
-
 # ------------------------------------------------------------ decision sources
 SRC_BUILTIN = "builtin"
 SRC_XML_PATTERN = "xml_pattern"
@@ -85,13 +78,6 @@ SRC_CONTENT_AWARE = "content_aware_heuristic"
 SRC_HEURISTIC_USINGBUILTIN = "body_heading_heuristic_usingbuiltin"
 SRC_HEURISTIC_BASE = "body_heading_heuristic_base"
 
-DECISION_SOURCES = (
-    SRC_BUILTIN,
-    SRC_XML_PATTERN,
-    SRC_CONTENT_AWARE,
-    SRC_HEURISTIC_USINGBUILTIN,
-    SRC_HEURISTIC_BASE,
-)
 # "builtin" sources for the annotation-quality score
 # (ref: app/settings/annotation.py:17-20)
 BUILTIN_SOURCES = frozenset({SRC_BUILTIN, SRC_XML_PATTERN})
