@@ -96,7 +96,7 @@ def test_acquire_one_success_and_gates():
 
 
 # ---------------------------------------------------------------------------
-# Spark operator (mapInPandas, zero shuffle) + demo transport
+# Spark operator (one map_rows pass, zero shuffle) + demo transport
 # ---------------------------------------------------------------------------
 
 

@@ -1,6 +1,6 @@
 """Pluggable backend injection: the production swap points (PIL/ffmpeg
 decode, fastText langid, KenLM perplexity) accept injected callables that
-run through the SAME mapInPandas / pandas-UDF plumbing as the surrogates —
+run through the SAME ``map_rows`` / Arrow-UDF plumbing as the surrogates —
 a cluster user swaps backends without editing operators."""
 
 import pyspark.sql.functions as F
@@ -71,15 +71,6 @@ def test_injected_frame_decoder(media):
     assert bytes(by_key[("m1", 1)]["frame_bytes"]) == b"\x01\x02" * 4
 
 
-def test_decode_real_without_backend_still_raises(media):
-    with pytest.raises(NotImplementedError):
-        MM.extract_features(media, decode_real=True)
-    with pytest.raises(NotImplementedError):
-        MM.resize_media(media, decode_real=True)
-    with pytest.raises(NotImplementedError):
-        MM.frame_sample(media, decode_real=True)
-
-
 def test_injected_langid_model(spark):
     df = spark.createDataFrame(
         [("a", "hello world"), ("b", "")], "doc_id string, text string"
@@ -97,6 +88,18 @@ def test_injected_langid_model(spark):
     assert rows["a"]["top_lang"] == "__label__xx"
     assert rows["a"]["languages"] == {"__label__xx": 0.9, "__label__yy": 0.1}
     assert rows["b"]["top_lang"] == "__label__unknown"
+
+
+def test_injected_langid_model_empty_map(spark):
+    """A model that returns no language gives the row back with an empty
+    map and no top pick instead of failing the task."""
+    df = spark.createDataFrame(
+        [("a", "hello world")], "doc_id string, text string"
+    )
+    [row] = with_trigram_langid(df, model=lambda text: {}).collect()
+    assert row["languages"] == {}
+    assert row["languages_topk"] == ""
+    assert row["top_lang"] is None and row["top_lang_score"] is None
 
 
 def test_injected_perplexity_scorer(spark):

@@ -96,8 +96,6 @@ def test_media_pipeline_end_to_end(spark):
     assert row["n_bytes"] > 0 and len(row["phash"]) == 16
     null = feats.filter("doc_id = 'null-doc'").collect()
     assert [(r["n_bytes"], r["byte_mean"]) for r in null] == [(0, 0.0)]
-    with pytest.raises(Exception):
-        MM.extract_features(media, decode_real=True).count()
 
 
 def test_media_features_fused_matches_unfused(spark):
@@ -118,10 +116,25 @@ def test_media_features_fused_matches_unfused(spark):
 
 def test_media_resize_and_frames(spark):
     docs = SRC.read_docs(spark, datagen.ensure_interleaved(0.001))
-    media = _with_null_payload(spark, MM.media_table(docs)).persist()
+    # a NULL dimension: NULL output dimensions, content passed through
+    null_dims = spark.createDataFrame(
+        [("null-dims", "m0", bytearray(b"\x01\x02"), "png", None, 200)],
+        MM.MEDIA_SCHEMA,
+    )
+    media = (
+        _with_null_payload(spark, MM.media_table(docs))
+        .unionByName(null_dims)
+        .persist()
+    )
     resized = MM.resize_media(media, max_dim=256).collect()
     assert [r["content"] for r in resized if r["doc_id"] == "null-doc"] == [None]
+    assert [
+        (r["out_width"], r["out_height"], bytes(r["content"]))
+        for r in resized if r["doc_id"] == "null-dims"
+    ] == [(None, None, b"\x01\x02")]
     for r in resized:
+        if r["doc_id"] == "null-dims":
+            continue
         assert max(r["out_width"], r["out_height"]) <= 256
         if max(r["width"], r["height"]) <= 256:
             assert (r["out_width"], r["out_height"]) == (r["width"], r["height"])
@@ -143,10 +156,6 @@ def test_media_resize_and_frames(spark):
     # a NULL payload reads as b"": one empty frame
     null = frames.filter("doc_id = 'null-doc'").collect()
     assert [(r["frame_idx"], bytes(r["frame_bytes"])) for r in null] == [(0, b"")]
-    with pytest.raises(Exception):
-        MM.resize_media(media, decode_real=True).count()
-    with pytest.raises(Exception):
-        MM.frame_sample(media, decode_real=True).count()
     media.unpersist()
 
 

@@ -69,11 +69,7 @@ def test_extract_gates_are_native(spark, docs_path):
     assert "PushedFilters: [IsNotNull(n_spans), LessThanOrEqual(n_spans" in (
         plan
     ) or "PushedFilters: [IsNotNull(n_spans), GreaterThan(n_spans" in plan
-    assert (
-        "MapInArrow" in plan        # the hot path (no pandas round-trip)
-        or "FlatMapInPandas" in plan
-        or "MapInPandas" in plan
-    )
+    assert "MapInArrow" in plan  # the hot path (no pandas round-trip)
     # fallback path: no n_spans column → native size() filters
     plan2 = _plan(X.extract(docs.select("doc_id", "spans")))
     assert "size(spans" in plan2

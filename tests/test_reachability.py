@@ -7,8 +7,9 @@ costs a reader.  This scan parses the program sources (the package,
 ``ast`` and fails on any name that no program source references outside its
 own definition, unless ``ALLOWLIST`` says why it stays.
 
-The same parse pins the pandas UDF call sites per module, so a new one fails
-here and each Arrow port lowers the pin.
+The same parse bans pandas from the program: no pandas UDF call site in the
+package, and no program source imports the ``pandas`` module (the executor
+UDF shape is Arrow, through ``sources.ingest.map_rows`` or ``arrow_udf``).
 """
 import ast
 from collections import Counter, defaultdict
@@ -27,7 +28,7 @@ ALLOWLIST = {
     "fasttext_classifier": "import-guarded fastText seam for with_langid's classifier=, documented in README",
     "kenlm_scorer": "import-guarded KenLM seam for perplexity scoring, documented in README",
     "oleid_indicators": "import-guarded oletools seam for maldoc_check's indicator=, documented in README",
-    "pil_feature_decoder": "import-guarded Pillow seam for media_features' decoder=, documented in README",
+    "pil_feature_decoder": "import-guarded Pillow seam for extract_features' decoder=, documented in README",
     "pil_resampler": "import-guarded Pillow seam for resize_media's resampler=, documented in README",
     "urllib_fetcher": "stdlib network seam for acquire's fetcher=, documented in README",
     "extract_features": "unfused reference that tests compare media_features against, and its decoder= seam",
@@ -35,16 +36,7 @@ ALLOWLIST = {
 }
 
 PANDAS_UDFS = {"mapInPandas", "applyInPandas", "applyInPandasWithState", "pandas_udf"}
-PANDAS_SITES = {
-    "sources/wat.py": 1,
-    "sources/http.py": 1,
-    "operators/maldoc.py": 1,
-    "operators/quality_rules.py": 1,
-    "operators/multimodal.py": 3,
-    "operators/urls.py": 1,
-    "operators/perplexity.py": 1,
-    "operators/langid_trigram.py": 1,
-}
+PANDAS_SITES: dict[str, int] = {}
 
 
 def _trees():
@@ -120,3 +112,24 @@ def test_pandas_udf_sites_are_pinned_per_module():
             if name in PANDAS_UDFS:
                 sites[path.relative_to(PKG).as_posix()] += 1
     assert dict(sites) == PANDAS_SITES
+
+
+def test_no_program_source_imports_pandas():
+    """``pyspark.sql.pandas.*`` (Arrow type helpers) stays allowed; the
+    top-level ``pandas`` module does not."""
+    imports = []
+    for path, tree in _trees().items():
+        if PKG not in path.parents and ROOT / "scripts" not in path.parents:
+            continue
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                names = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom) and not n.level:
+                names = [n.module or ""]
+            else:
+                continue
+            imports += [
+                f"{path.relative_to(ROOT)}:{n.lineno} {name}"
+                for name in names if name.split(".")[0] == "pandas"
+            ]
+    assert not imports, imports

@@ -257,7 +257,7 @@ def _pil_features(content: bytes, max_pixels: int) -> dict:
     64-bit average-hash (8×8 downsample, mean threshold) hex string.
 
     Per-image fail-CLOSED markers, never task failures (the seam runs
-    inside a mapInPandas batch loop): a decompression bomb — pixel count
+    inside a map_rows batch loop): a decompression bomb — pixel count
     over ``max_pixels``, checked on the HEADER before any pixel decode,
     the reference's zip_bomb.py:63-131 gate — yields phash 'bomb'; an
     undecodable payload yields phash 'decode_error'; both with

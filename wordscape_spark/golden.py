@@ -1,7 +1,7 @@
 """Golden-oracle materialization for non-SQL-expressible operators.
 
 The driver's correctness gate compares every Spark query against DuckDB SQL.
-The span classifier, the pandas-UDF model operators (perplexity, trigram
+The span classifier, the Arrow-UDF model operators (perplexity, trigram
 language ID, media features, maldoc) and the LSH ANN are not SQL-expressible
 — their single-node oracles are pure-Python functions.  This module runs
 those oracles over the deterministic inputs *without Spark* (pyarrow in,
@@ -171,7 +171,7 @@ def _gen_extract_tables(sf: float, out: pathlib.Path) -> None:
 def _gen_model_tables(sf_dir: str, out: pathlib.Path) -> None:
     """Per-document model scores over the documents table: perplexity (E3)
     and trigram language ID (E1) — same pure-Python model functions the
-    pandas UDFs apply per Arrow batch."""
+    Arrow UDFs apply per batch."""
     from wordscape_spark.operators.langid_trigram import (
         classify_text,
         serialize_topk,

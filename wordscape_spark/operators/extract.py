@@ -32,6 +32,7 @@ from itertools import accumulate
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -46,6 +47,7 @@ from pyspark.sql.types import (
 
 from wordscape_spark.config import DEFAULT_CONFIG, ExtractConfig
 from wordscape_spark.core import classify as C
+from wordscape_spark.sources.ingest import rows_batch
 
 SPAN_TYPE = StructType(
     [
@@ -202,20 +204,6 @@ def _kinds(arr) -> list:
     return [uniq[i] for i in enc.indices.to_numpy(zero_copy_only=False).tolist()]
 
 
-def _rows_batch(rows: list[tuple], schema: StructType):
-    """A RecordBatch of the salted path's intermediate ``schema`` from row
-    tuples in field order: nested lists as lists of field tuples, maps as
-    dicts (both convert in C++ with no per-span dict)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    return pa.RecordBatch.from_arrays(
-        [pa.array(list(col), f.type) for col, f in zip(zip(*rows), arrow_schema)],
-        schema=arrow_schema,
-    )
-
-
 def _record_batch(results, arrow_schema):
     """Column-wise Arrow assembly of (doc_id, DocResult) pairs into either
     output surface, chosen by ``arrow_schema``: the slim schema ends after
@@ -355,8 +343,6 @@ def _make_classify_arrow_fn(
     (default) or the slim span-surface row (``extract_slim``)."""
 
     def classify_batches(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         arrow_schema = to_arrow_schema(out_schema)
         for batch in batches:
             results = [
@@ -449,6 +435,7 @@ def _make_chunk_fn(cfg: ExtractConfig):
     """Split each mega-doc into chunks and put the whole doc's font state on
     every chunk row.  A doc that cannot be chunked becomes one marker row
     (``chunk_idx`` -1, ``reject_reason`` set), resolved at the merge."""
+    arrow_schema = to_arrow_schema(_CHUNK_SCHEMA)
 
     def chunk_batches(batches):
         for batch in batches:
@@ -480,7 +467,7 @@ def _make_chunk_fn(cfg: ExtractConfig):
                     for idx, chunk in enumerate(chunks)
                 )
             if rows:
-                yield _rows_batch(rows, _CHUNK_SCHEMA)
+                yield rows_batch(rows, arrow_schema)
 
     return chunk_batches
 
@@ -498,6 +485,8 @@ def _heuristics_at(batch, i: int, cfg: ExtractConfig) -> C.FontHeuristics:
 
 
 def _make_chunk_classify_fn(cfg: ExtractConfig):
+    arrow_schema = to_arrow_schema(_PARTIAL_SCHEMA)
+
     def classify_chunks(batches):
         # bounded per-task LRU: evict one entry at a time so a task
         # interleaving chunks of >64 mega-docs re-derives only the coldest
@@ -553,7 +542,7 @@ def _make_chunk_classify_fn(cfg: ExtractConfig):
                     lang_tags,
                 ))
             if rows:
-                yield _rows_batch(rows, _PARTIAL_SCHEMA)
+                yield rows_batch(rows, arrow_schema)
 
     return classify_chunks
 
@@ -568,7 +557,6 @@ def _make_merge_partials_fn(cfg: ExtractConfig, out_schema: StructType):
 
     def merge_partials(key, table):
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         [batch] = table.sort_by("chunk_idx").combine_chunks().to_batches()
         res = _merged_result(batch, cfg)

@@ -19,9 +19,10 @@ from collections import Counter
 from functools import lru_cache
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     DoubleType,
     MapType,
@@ -115,26 +116,27 @@ def with_trigram_langid(
     executor loads the .ftz once.  Default: the in-sandbox trigram model.
     """
     fn = model or classify_text
+    arrow_type = to_arrow_type(LANGID_SCHEMA)
 
-    @F.pandas_udf(LANGID_SCHEMA)
-    def lid(batch_iter: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in batch_iter:
-            rows = []
-            for text in s:
-                langs = fn(text or "")
-                # classify_text sorts by (-score, lang): its first entry IS
-                # the top pick (ties broken by lexicographically smallest
-                # language, consistently with the map order)
-                top = next(iter(langs.items()))
-                rows.append(
-                    {
-                        "languages": langs,
-                        "languages_topk": serialize_topk(langs),
-                        "top_lang": top[0],
-                        "top_lang_score": top[1],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def lid_row(text: str | None) -> dict:
+        langs = fn(text or "")
+        # classify_text sorts by (-score, lang): its first entry IS the top
+        # pick (ties broken by lexicographically smallest language,
+        # consistently with the map order); an empty map has no top pick
+        top_lang, top_score = next(iter(langs.items()), (None, None))
+        return {
+            "languages": langs,
+            "languages_topk": serialize_topk(langs),
+            "top_lang": top_lang,
+            "top_lang_score": top_score,
+        }
+
+    @F.arrow_udf(LANGID_SCHEMA)
+    def lid(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for texts in batches:
+            yield pa.array(
+                [lid_row(t) for t in texts.to_pylist()], arrow_type
+            )
 
     out = df.withColumn("_lid", lid(F.col(text_col)))
     return (

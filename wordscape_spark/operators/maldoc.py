@@ -14,9 +14,6 @@ real oletools OleID) on a cluster that has the dependency.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
@@ -24,6 +21,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from wordscape_spark.sources.ingest import map_rows
 
 # indicator name -> byte pattern (deterministic OleID surrogate)
 _INDICATORS = {
@@ -77,23 +76,19 @@ def maldoc_check(
         names = sorted(indicator_names)
     fatal_set = frozenset(fatal) if fatal is not None else frozenset(names)
 
-    def scan(batch_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batch_iter:
-            rows = []
-            for doc_id, ref, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"]
-            ):
-                inds = indicators(bytes(content or b""))  # NULL reads as b""
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "media_ref": ref,
-                        **{f"ind_{k}": bool(inds.get(k, False)) for k in names},
-                        "malicious": any(
-                            bool(inds.get(k, False)) for k in fatal_set
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def scan(rows):
+        out = []
+        for doc_id, ref, content in rows:
+            inds = indicators(content or b"")  # NULL reads as b""
+            out.append((
+                doc_id,
+                ref,
+                *(bool(inds.get(k, False)) for k in names),
+                any(bool(inds.get(k, False)) for k in fatal_set),
+            ))
+        return out
 
-    return media.mapInPandas(scan, schema=maldoc_schema(names))
+    return map_rows(
+        media.select("doc_id", "media_ref", "content"), scan,
+        maldoc_schema(names),
+    )

@@ -4,21 +4,19 @@ The reference ships page images and embedded media in tar shards
 (annotator_process.py:321-348, figure.py:76-123); here media are rows of a
 ``media`` table: (doc_id, media_ref, content binary, fmt, width, height).
 Bytes in the sandbox are deterministic pseudo-payloads derived from
-media_ref; real decode (PIL/ffmpeg) is stubbed behind ``decode_real=True``
-(NotImplementedError) while the Spark-side plumbing — schema, Arrow batch
-shape, mapInPandas feature extraction — is real and tested.  On hosts
-with Pillow, ``adapters.pil_feature_decoder()`` / ``adapters.
-pil_resampler()`` plug real decode (with the reference's decompression-
-bomb gate, zip_bomb.py:63-131) into the ``decoder=``/``resampler=`` seams.
+media_ref, and the default decoders are byte-level surrogates, while the
+Spark-side plumbing — schema, Arrow batch shape, ``map_rows`` feature
+extraction — is real and tested.  On hosts with Pillow,
+``adapters.pil_feature_decoder()`` / ``adapters.pil_resampler()`` plug
+real decode (with the reference's decompression-bomb gate,
+zip_bomb.py:63-131) into the ``decoder=``/``resampler=`` seams.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -30,6 +28,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from wordscape_spark.sources.ingest import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -123,100 +123,39 @@ def media_table(docs: DataFrame) -> DataFrame:
     return figs.mapInArrow(gen_bytes, schema=MEDIA_SCHEMA)
 
 
-def extract_features(
-    media: DataFrame,
-    decoder=None,
-    decode_real: bool = False,
-) -> DataFrame:
+def _surrogate_features(content: bytes) -> dict:
+    """The default ``extract_features`` decoder: payload length, mean byte
+    value and the first 16 hex chars of the payload's md5."""
+    n = len(content)
+    return {
+        "n_bytes": n,
+        "byte_mean": round(sum(content) / n, 6) if n else 0.0,
+        "phash": hashlib.md5(content).hexdigest()[:16],
+    }
+
+
+def extract_features(media: DataFrame, decoder=None) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     ``decoder`` is the injection point for the production path: a picklable
     ``Callable[[bytes], dict]`` returning {n_bytes, byte_mean, phash}
-    (e.g. PIL decode + perceptual hash).  It runs inside the same
-    mapInPandas batch loop as the surrogate — a cluster user swaps the
-    imaging backend without editing this operator.  Heavy models should
-    lazy-load behind a module-level cache inside the callable (the
-    per-executor load pattern, reference inference.py:26-27).
-
-    ``decode_real=True`` without a decoder preserves the documented sandbox
-    boundary (no imaging libs in this container) by raising.
+    (e.g. PIL decode + perceptual hash; default: the byte-level surrogate).
+    A NULL content reads as ``b""``.  Heavy models should lazy-load behind
+    a module-level cache inside the callable (the per-executor load
+    pattern, reference inference.py:26-27).
     """
-    if decoder is None and decode_real:
-        raise NotImplementedError(
-            "real media decode requires PIL/ffmpeg (not in sandbox); "
-            "inject decoder=<callable bytes -> feature dict> to use a "
-            "real backend, or use the deterministic surrogate"
-        )
+    decode = decoder or _surrogate_features
 
-    if decoder is not None:
-        fn = decoder
+    def features(rows):
+        out = []
+        for doc_id, ref, content in rows:
+            f = decode(content or b"")
+            out.append((doc_id, ref, f["n_bytes"], f["byte_mean"], f["phash"]))
+        return out
 
-        def features(
-            batch_iter: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batch_iter:
-                rows = []
-                for doc_id, ref, content in zip(
-                    pdf["doc_id"], pdf["media_ref"], pdf["content"]
-                ):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "media_ref": ref,
-                            **fn(bytes(content or b"")),
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        return media.select("doc_id", "media_ref", "content").mapInPandas(
-            features, schema=FEATURE_SCHEMA
-        )
-
-    def features_arrow(batches):
-        # surrogate fast path: byte sums for the whole batch via one
-        # cumsum over the binary values buffer (exact integer sums, the
-        # same round()), md5 per row; only (doc_id, media_ref, content)
-        # cross the boundary
-        import pyarrow as pa
-
-        md5 = hashlib.md5
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            doc_ids = batch.column(0)
-            refs = batch.column(1)
-            contents = batch.column(2)
-            blobs = [b or b"" for b in contents.to_pylist()]  # NULL: b""
-            lens = [len(b) for b in blobs]
-            if sum(lens):
-                data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-                csum = np.concatenate(
-                    ([0], np.cumsum(data, dtype=np.int64))
-                )
-                ends = np.cumsum(np.asarray(lens, dtype=np.int64))
-                starts = ends - np.asarray(lens, dtype=np.int64)
-                sums = csum[ends] - csum[starts]
-            else:
-                sums = [0] * n
-            means = [
-                round(int(s) / ln, 6) if ln else 0.0
-                for s, ln in zip(sums, lens)
-            ]
-            phashes = [md5(b).hexdigest()[:16] for b in blobs]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    refs,
-                    pa.array(lens, type=pa.int64()),
-                    pa.array(means, type=pa.float64()),
-                    pa.array(phashes, type=pa.string()),
-                ],
-                names=[f.name for f in FEATURE_SCHEMA.fields],
-            )
-
-    return media.select("doc_id", "media_ref", "content").mapInArrow(
-        features_arrow, schema=FEATURE_SCHEMA
+    return map_rows(
+        media.select("doc_id", "media_ref", "content"), features,
+        FEATURE_SCHEMA,
     )
 
 
@@ -304,51 +243,39 @@ RESIZED_SCHEMA = StructType(
 
 
 def resize_media(
-    media: DataFrame,
-    max_dim: int = 256,
-    resampler=None,
-    decode_real: bool = False,
+    media: DataFrame, max_dim: int = 256, resampler=None
 ) -> DataFrame:
-    """Aspect-preserving resize to fit ``max_dim`` (mapInPandas batch shape).
+    """Aspect-preserving resize to fit ``max_dim``, one ``map_rows`` pass.
 
     The output *dimensions* are integer arithmetic on the metadata and are
     fully real (new_w = w·max_dim // max(w, h) when the image exceeds
     max_dim).  ``resampler`` injects the pixel backend: a picklable
     ``Callable[[bytes, int, int], bytes]`` → (content, out_w, out_h) →
-    resized bytes (e.g. PIL ``Image.resize``), applied through the same
-    batch loop.  Without one, ``decode_real=True`` raises (sandbox
-    boundary) and the default passes content through unchanged.
+    resized bytes (e.g. PIL ``Image.resize``); without one the content
+    passes through unchanged.  A NULL width or height gives NULL output
+    dimensions and passes the content through.
     """
-    if resampler is None and decode_real:
-        raise NotImplementedError(
-            "real pixel resample requires PIL (not in sandbox); inject "
-            "resampler=<callable (bytes, w, h) -> bytes> to use a real "
-            "backend"
-        )
 
-    def resize(batch_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batch_iter:
-            w = pdf["width"].astype("int64")
-            h = pdf["height"].astype("int64")
-            longest = w.combine(h, max)
-            scale_needed = longest > max_dim
-            out_w = w.where(~scale_needed, (w * max_dim) // longest)
-            out_h = h.where(~scale_needed, (h * max_dim) // longest)
-            out = pdf[["doc_id", "media_ref"]].copy()
-            out["width"] = w.astype("int32")
-            out["height"] = h.astype("int32")
-            out["out_width"] = out_w.astype("int32")
-            out["out_height"] = out_h.astype("int32")
-            if resampler is not None:
-                out["content"] = [
-                    resampler(bytes(c or b""), int(ow), int(oh))
-                    for c, ow, oh in zip(pdf["content"], out_w, out_h)
-                ]
-            else:
-                out["content"] = pdf["content"]
-            yield out
+    def resize(rows):
+        out = []
+        for doc_id, ref, content, w, h in rows:
+            out_w = out_h = None
+            if w is not None and h is not None:
+                longest = max(w, h)
+                out_w, out_h = w, h
+                if longest > max_dim:
+                    out_w = w * max_dim // longest
+                    out_h = h * max_dim // longest
+                if resampler is not None:
+                    content = resampler(content or b"", out_w, out_h)
+            out.append((doc_id, ref, w, h, out_w, out_h, content))
+        return out
 
-    return media.mapInPandas(resize, schema=RESIZED_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "media_ref", "content", "width", "height"),
+        resize,
+        RESIZED_SCHEMA,
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -362,61 +289,48 @@ FRAME_SCHEMA = StructType(
 )
 
 
+def _stride_frames(content: bytes, max_frames: int, frame_len: int) -> list:
+    """The default ``frame_sample`` decoder: the content read as a raw
+    frame stream, frame i is bytes [i·frame_len, (i+1)·frame_len), and
+    there is always at least one (possibly empty) frame."""
+    n_frames = min(max_frames, max(1, len(content) // frame_len))
+    return [
+        content[i * frame_len:(i + 1) * frame_len] for i in range(n_frames)
+    ]
+
+
 def frame_sample(
     media: DataFrame,
     frame_len: int = 256,
     max_frames: int = 4,
     frame_decoder=None,
-    decode_real: bool = False,
 ) -> DataFrame:
-    """Sample up to ``max_frames`` fixed-stride frames per media item.
+    """Sample up to ``max_frames`` frames per media item.
 
     ``frame_decoder`` injects the demux/decode backend: a picklable
     ``Callable[[bytes, int], list[bytes]]`` → (content, max_frames) → frame
     byte strings (e.g. ffmpeg keyframe extraction); ``frame_sig`` is always
-    the lowercase hex of the first 8 frame bytes.  Without one,
-    ``decode_real=True`` raises (sandbox boundary) and the surrogate treats
-    the content as a raw frame stream: frame i is bytes
-    [i·frame_len, (i+1)·frame_len) — byte-identical to the SQL oracle, so
-    the driver pins that the pandas-UDF byte handling (slicing, Arrow
-    binary round-trip) is exact, not just row counts.
+    the lowercase hex of the first 8 frame bytes.  The default decoder
+    slices fixed ``frame_len`` strides — byte-identical to the SQL oracle,
+    so the oracle pins that the Arrow byte handling (slicing, binary
+    round-trip) is exact, not just row counts.  A NULL content reads as
+    ``b""`` (one empty frame).
     """
-    if frame_decoder is None and decode_real:
-        raise NotImplementedError(
-            "real frame decode requires ffmpeg (not in sandbox); inject "
-            "frame_decoder=<callable (bytes, max_frames) -> list[bytes]> "
-            "to use a real backend"
-        )
+    decode = frame_decoder or functools.partial(
+        _stride_frames, frame_len=frame_len
+    )
 
-    def frames(batch_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batch_iter:
-            rows = []
-            for doc_id, ref, content in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["content"]
-            ):
-                b = bytes(content or b"")  # NULL: one empty frame
-                if frame_decoder is not None:
-                    # defensive slice: the documented contract is "up to
-                    # max_frames" regardless of what the injected backend
-                    # returns
-                    frame_list = frame_decoder(b, max_frames)[:max_frames]
-                else:
-                    n_frames = min(max_frames, max(1, len(b) // frame_len))
-                    frame_list = [
-                        b[i * frame_len:(i + 1) * frame_len]
-                        for i in range(n_frames)
-                    ]
-                for i, fb in enumerate(frame_list):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "media_ref": ref,
-                            "frame_idx": i,
-                            "frame_bytes": fb,
-                            "frame_sig": fb[:8].hex(),
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def frames(rows):
+        return [
+            (doc_id, ref, i, fb, fb[:8].hex())
+            for doc_id, ref, content in rows
+            # defensive slice: the documented contract is "up to
+            # max_frames" regardless of what the injected backend returns
+            for i, fb in enumerate(
+                decode(content or b"", max_frames)[:max_frames]
+            )
+        ]
 
-    return media.mapInPandas(frames, schema=FRAME_SCHEMA)
+    return map_rows(
+        media.select("doc_id", "media_ref", "content"), frames, FRAME_SCHEMA
+    )

@@ -20,7 +20,7 @@ from collections import Counter
 from functools import lru_cache
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType
@@ -65,14 +65,10 @@ def score_text(text: str, lang: str) -> float:
     return round(10 ** (-total / n), 6)
 
 
-def with_perplexity(
-    df: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    scorer=None,
-) -> DataFrame:
-    """Arrow-batched perplexity column; scored per-row with the row's
-    language model (reference: model applied only to matching-language docs).
+def with_perplexity(df: DataFrame, scorer=None) -> DataFrame:
+    """Arrow-batched perplexity column over ``text`` and ``lang``; scored
+    per-row with the row's language model (reference: model applied only
+    to matching-language docs).
 
     ``scorer`` is the KenLM swap point: a picklable ``Callable[[str, str],
     float]`` → (text, lang) → perplexity — e.g. SentencePiece tokenize +
@@ -82,14 +78,17 @@ def with_perplexity(
     """
     fn = scorer or score_text
 
-    @F.pandas_udf(DoubleType())
-    def ppl(batch_iter: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        for pdf in batch_iter:
-            yield pd.Series(
+    @F.arrow_udf(DoubleType())
+    def ppl(
+        batches: Iterator[tuple[pa.Array, pa.Array]],
+    ) -> Iterator[pa.Array]:
+        for texts, langs in batches:
+            yield pa.array(
                 [
                     fn(t or "", lang)
-                    for t, lang in zip(pdf[text_col], pdf[lang_col])
-                ]
+                    for t, lang in zip(texts.to_pylist(), langs.to_pylist())
+                ],
+                pa.float64(),
             )
 
     # the scorer is deterministic, but the non-deterministic mark stops
@@ -101,5 +100,5 @@ def with_perplexity(
     ppl_once = ppl.asNondeterministic()
 
     return df.withColumn(
-        "perplexity", ppl_once(F.struct(F.col(text_col), F.col(lang_col)))
+        "perplexity", ppl_once(F.col("text"), F.col("lang"))
     )

@@ -10,7 +10,7 @@ language) with the content-shape rules a 100 TB curation run applies
 FIRST.  Every metric is a native Spark SQL expression inside whole-stage
 codegen with an identical DuckDB-dialect formulation — except
 ``dup_ngram_coverage``, whose interval-union semantics run on the
-vectorized ``mapInPandas`` path with an independently-derived relational
+Arrow-batched ``map_rows`` path with an independently-derived relational
 oracle.
 
 Metrics (per document, over whitespace words and newline lines):
@@ -673,10 +673,7 @@ def substring_dedup(
 DUP_NGRAM_NS = (5, 6, 7, 8, 9, 10)
 
 
-def dup_ngram_coverage(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    ns: tuple = DUP_NGRAM_NS,
-) -> DataFrame:
+def dup_ngram_coverage(df: DataFrame) -> DataFrame:
     """The other half of Gopher's repetition battery (Rae et al. 2021
     §A1.1): for each n in 5..10, the fraction of normalized-content
     characters covered by the UNION of character spans of word n-grams
@@ -684,7 +681,7 @@ def dup_ngram_coverage(
     0.15, 0.14, 0.13, 0.12, 0.11, 0.10).  Coverage-union semantics need
     per-position interval merging, which has no clean per-row native
     formulation — so this is the one quality metric on the vectorized
-    python path (``mapInPandas``, the same precedent as the classifier):
+    python path (one ``map_rows`` pass, the same precedent as the classifier):
     document-local, zero shuffle, O(words · |ns|) per document with a
     byte-mask union, memory O(content) per doc (bounded by upstream
     length caps).
@@ -697,53 +694,52 @@ def dup_ngram_coverage(
     Content/offsets: lowercased whitespace words joined by single
     spaces; the gram at word i covers content chars
     [offset(i), offset(i+n-1) + len(word_{i+n-1}))."""
-    import pandas as pd
     from pyspark.sql.types import (
         DoubleType, StringType, StructField, StructType,
     )
 
-    ns = tuple(ns)
-    fields = [StructField("doc_id", StringType())] + [
-        StructField(f"dup_{n}gram_char_frac", DoubleType()) for n in ns
-    ]
-    schema = StructType(fields)
-    colnames = [f.name for f in fields]
+    from wordscape_spark.sources.ingest import map_rows
 
-    def batch_fn(it):
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["t"]):
-                words = [w for w in (text or "").lower().split() if w]
-                offs = []
-                pos = 0
-                for w in words:
-                    offs.append(pos)
-                    pos += len(w) + 1
-                content_len = max(pos - 1, 0)
-                row = [doc_id]
-                for n in ns:
-                    if content_len == 0 or len(words) < n:
-                        row.append(0.0)
+    schema = StructType([StructField("doc_id", StringType())] + [
+        StructField(f"dup_{n}gram_char_frac", DoubleType())
+        for n in DUP_NGRAM_NS
+    ])
+
+    def batch_fn(docs):
+        rows = []
+        for doc_id, text in docs:
+            words = [w for w in (text or "").lower().split() if w]
+            offs = []
+            pos = 0
+            for w in words:
+                offs.append(pos)
+                pos += len(w) + 1
+            content_len = max(pos - 1, 0)
+            row = [doc_id]
+            for n in DUP_NGRAM_NS:
+                if content_len == 0 or len(words) < n:
+                    row.append(0.0)
+                    continue
+                grams: dict = {}
+                for i in range(len(words) - n + 1):
+                    grams.setdefault(tuple(words[i:i + n]), []).append(i)
+                covered = bytearray(content_len)
+                for idxs in grams.values():
+                    if len(idxs) < 2:
                         continue
-                    grams: dict = {}
-                    for i in range(len(words) - n + 1):
-                        grams.setdefault(tuple(words[i:i + n]), []).append(i)
-                    covered = bytearray(content_len)
-                    for idxs in grams.values():
-                        if len(idxs) < 2:
-                            continue
-                        for i in idxs:
-                            a = offs[i]
-                            b = offs[i + n - 1] + len(words[i + n - 1])
-                            covered[a:b] = b"\x01" * (b - a)
-                    row.append(round(sum(covered) / content_len, 6))
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=colnames)
+                    for i in idxs:
+                        a = offs[i]
+                        b = offs[i + n - 1] + len(words[i + n - 1])
+                        covered[a:b] = b"\x01" * (b - a)
+                row.append(round(sum(covered) / content_len, 6))
+            rows.append(row)
+        return rows
 
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-    ).mapInPandas(batch_fn, schema=schema)
+    return map_rows(
+        df.select("doc_id", F.coalesce(F.col("text"), F.lit("")).alias("t")),
+        batch_fn,
+        schema,
+    )
 
 
 def _word_count_log_sum(words: str) -> str:

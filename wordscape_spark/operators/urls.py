@@ -13,7 +13,7 @@ import re
 from typing import Iterator
 from urllib.parse import unquote
 
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType
@@ -127,15 +127,17 @@ def _clean_url(url: str) -> str | None:
     return u[starts[-1]:]
 
 
-def clean_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Vectorized pandas-UDF url cleaner (branchy logic, Arrow-batched)."""
+def clean_urls(df: DataFrame) -> DataFrame:
+    """Arrow-UDF url cleaner (branchy logic, Arrow-batched)."""
 
-    @F.pandas_udf(StringType())
-    def clean(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batch_iter:
-            yield s.map(_clean_url)
+    @F.arrow_udf(StringType())
+    def clean(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for urls in batches:
+            yield pa.array(
+                [_clean_url(u) for u in urls.to_pylist()], pa.string()
+            )
 
-    return df.withColumn("clean_url", clean(F.col(url_col)))
+    return df.withColumn("clean_url", clean(F.col("url")))
 
 
 # --- RefinedWeb-style URL quality filtering ---------------------------

@@ -8,7 +8,7 @@ Conventions:
 * extraction queries run over the deterministic interleaved table derived
   from the sf (generated on demand under the repo's data/interleaved);
   their oracles read the same parquet via read_parquet();
-* genuinely non-SQL-expressible ops (the classifier itself, pandas-UDF
+* genuinely non-SQL-expressible ops (the classifier itself, Arrow-batched
   media features, LSH/IVF ANN) are pinned by golden parquet: their
   pure-Python single-node oracles run without Spark (wordscape_spark.golden)
   and the oracle SQL is SELECT ... FROM read_parquet('<golden>') — every
@@ -169,7 +169,7 @@ def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_wat_doc_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1, un-grafted: real WAT files (Common Crawl layout — WARC/1.0
-    framing, per-record gzip members) through the binaryFile+mapInPandas
+    framing, per-record gzip members) through the binaryFile+map_rows
     source, metadata-record filter, recursive JSON doc-URL harvest
     (cc_url_process.py:155-250), then stage-A hashing.  The oracle
     recomputes the expected rows from the generator's ground-truth link
@@ -477,7 +477,7 @@ def q_gopher_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal; the oracle re-derives the union RELATIONALLY (grams with
     positions → duplicated grams → char-span join → DISTINCT covered
     positions) — a fully independent algorithm from the byte-mask union
-    in the mapInPandas operator."""
+    in the map_rows operator."""
     from wordscape_spark.operators import quality_rules as QR
 
     docs = _docs(spark, sf_dir).select(
@@ -1831,7 +1831,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-stride frame sampling; frame_sig pins the pandas-UDF binary
+    """Fixed-stride frame sampling; frame_sig pins the Arrow binary
     slicing byte-for-byte against the SQL oracle."""
     media = MM.media_table(_interleaved(spark, sf_dir))
     out = MM.frame_sample(media, frame_len=256, max_frames=4)
@@ -1963,7 +1963,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_whitelist_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3+E7 composed: char-bigram perplexity (pandas UDF, per-language
+    """E3+E7 composed: char-bigram perplexity (Arrow UDF, per-language
     model) feeding the per-language 80th-percentile gate.  Golden-parquet oracle: the
     model tables live in Python; semantics pinned in tests."""
     from wordscape_spark.operators import perplexity as P
@@ -2693,7 +2693,7 @@ def build_oracle_sql() -> dict[str, str]:
     """
 
     # Gopher dup-n-gram coverage — INDEPENDENT relational re-derivation
-    # (the Spark op uses a per-doc byte-mask union in mapInPandas)
+    # (the Spark op uses a per-doc byte-mask union in map_rows)
     from wordscape_spark.operators.quality_rules import DUP_NGRAM_NS
 
     dup_ctes = []
@@ -3169,7 +3169,7 @@ def build_oracle_sql() -> dict[str, str]:
     # -----------------------------------------------------------------
     # golden-parquet oracles: the pure-Python single-node oracle's output
     # (materialized by wordscape_spark.golden without Spark) pinned with
-    # plain SQL — gives the classifier surface and the pandas-UDF model
+    # plain SQL — gives the classifier surface and the Arrow-UDF model
     # operators real rows+schema+hash driver checks
     # -----------------------------------------------------------------
 

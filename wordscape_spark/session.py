@@ -1,7 +1,7 @@
 """SparkSession factory with scale-oriented defaults.
 
-AQE on (runtime coalescing + skew-join splitting), Arrow enabled for all
-pandas-UDF traffic, shuffle partitions sized for the local harness but
+AQE on (runtime coalescing + skew-join splitting), Arrow batches sized for
+the Python UDF traffic, shuffle partitions sized for the local harness but
 overridable for cluster runs (set ``spark.sql.shuffle.partitions`` ≈ 2-3× the
 executor-core count at 100 TB; AQE coalesces down from there).
 """
@@ -47,7 +47,7 @@ def build_session(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow batches for pandas UDF traffic (the extraction hot path);
+        # Arrow batches for Python UDF traffic (the extraction hot path);
         # smaller batches keep the per-worker working set cache-friendly
         # (measured ~20% faster at high concurrency than 2048)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -11,7 +11,7 @@ is re-gated.  Every failure becomes a RECORD ROW (status/exception
 columns), never a task failure — the reference writes the same per-URL
 audit records to its sources DB.
 
-Spark shape: one ``mapInPandas`` pass over the URL table — no shuffle; the
+Spark shape: one ``map_rows`` pass over the URL table — no shuffle; the
 operator is IO-bound, so parallelism comes from the table's partitioning
 (repartition the URL list to ≫ executor-thread count upstream; each task
 runs its own fetch loop, the moral analog of the reference's worker pool).
@@ -30,10 +30,11 @@ from __future__ import annotations
 import functools
 import hashlib
 import re
-from typing import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from wordscape_spark.sources.ingest import map_rows
 
 MAX_FILESIZE = 90 * 1024 * 1024  # ref settings/download.py:4
 
@@ -126,54 +127,34 @@ def _acquire_one(url: str, fetcher, max_filesize: int) -> dict:
 
 
 def acquire_documents(
-    df: DataFrame,
-    fetcher,
-    url_col: str = "url",
-    max_filesize: int = MAX_FILESIZE,
-    max_concurrency: int = 1,
+    df: DataFrame, fetcher, max_concurrency: int = 1
 ) -> DataFrame:
-    """(urls) → one audit row per URL with the fetched bytes on success.
+    """(url) → one audit row per URL with the fetched bytes on success.
 
     ``fetcher(url, method)`` → ``(status, headers, body|None)`` is the
     injectable transport; see module docstring.  Zero shuffle; IO
     parallelism = input partition count × ``max_concurrency``: the fetch
     is latency-bound, so each task additionally overlaps up to
-    ``max_concurrency`` in-flight requests with a thread pool (the moral
-    analog of the reference's per-worker session reuse +
+    ``max_concurrency`` in-flight requests per Arrow batch with a thread
+    pool (the moral analog of the reference's per-worker session reuse +
     multiprocessing pool, download_process.py:237-263) — row order and
     content are identical to the sequential path (order-preserving map;
     pinned by test)."""
+    one = functools.partial(
+        _acquire_one, fetcher=fetcher, max_filesize=MAX_FILESIZE
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
+    def fetch(rows):
+        urls = [url for (url,) in rows]
+        if max_concurrency > 1:
+            with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
+                out = list(pool.map(one, urls))
+        else:
+            out = [one(url) for url in urls]
+        # _acquire_one's dict keys are in ACQUIRE_SCHEMA order
+        return [tuple(row.values()) for row in out]
 
-        pool = (
-            ThreadPoolExecutor(max_workers=max_concurrency)
-            if max_concurrency > 1
-            else None
-        )
-        try:
-            for pdf in batches:
-                urls = list(pdf[url_col])
-                if pool is not None:
-                    rows = list(
-                        pool.map(
-                            lambda u: _acquire_one(u, fetcher, max_filesize),
-                            urls,
-                        )
-                    )
-                else:
-                    rows = [
-                        _acquire_one(url, fetcher, max_filesize)
-                        for url in urls
-                    ]
-                if rows:
-                    yield pd.DataFrame(rows)
-        finally:
-            if pool is not None:
-                pool.shutdown()
-
-    return df.mapInPandas(run, schema=ACQUIRE_SCHEMA)
+    return map_rows(df.select("url"), fetch, ACQUIRE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -19,11 +19,18 @@ to Catalyst (there are no per-format columns to prune).  Zero shuffle;
 per-document fault isolation (a corrupt container of ANY format yields
 an empty spans array + its detected format, never a task failure; a
 NULL content reads as an empty, ``unknown`` payload).
+
+``binary_to_rows`` runs on :func:`map_rows`, the one executor row step of
+the package: every Python producer that builds rows (WAT harvest, HTTP
+acquisition, maldoc scan, dup-n-gram coverage, media operators) is one
+``mapInArrow`` pass that decodes each Arrow batch to row tuples and builds
+each output column with one ``pa.array``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 #: container magics (each a real file-format signature, not an extension)
@@ -97,16 +104,48 @@ def parse_any_bytes(data: bytes) -> tuple[str, list[dict]]:
         return fmt, []
 
 
+def rows_batch(rows: list[tuple], arrow_schema):
+    """A RecordBatch of ``arrow_schema`` from row tuples in field order:
+    one ``pa.array`` per column, so nested lists (of field tuples) and maps
+    (as dicts) convert in C++ with no per-row dict."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+def map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
+    """The one executor row step: ``df`` → ``schema`` rows in one
+    ``mapInArrow`` pass, zero shuffle.
+
+    ``fn(rows)`` gets one Arrow batch as a list of input tuples (columns in
+    ``df`` order, NULL as ``None``) and returns a list of output tuples in
+    ``schema`` field order, zero or more per input row; a batch with no
+    output yields nothing."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            rows = fn(list(zip(*(c.to_pylist() for c in batch.columns))))
+            if rows:
+                yield rows_batch(rows, arrow_schema)
+
+    return df.mapInArrow(run, schema)
+
+
 def binary_to_rows(df: DataFrame, parse, schema: StructType) -> DataFrame:
     """The one binary-ingestion step: (doc_id, content binary) → ``schema``
-    rows in one ``mapInArrow`` pass, zero shuffle.
+    rows through :func:`map_rows`.
 
     ``parse(content)`` returns the row's columns after ``doc_id``: the spans
     list alone when ``schema`` has two columns, else a tuple of them.  A
     NULL content parses as ``b""``.  Per-document fault isolation: a parse
     that raises yields empty spans (NULL for any other column) instead of
-    failing the task.  Each output column is one ``pa.array`` against the
-    schema's Arrow type, so the nested spans convert in C++ without pandas."""
+    failing the task."""
     width = len(schema.fields) - 1
 
     def parse_one(content: bytes | None) -> tuple:
@@ -116,22 +155,11 @@ def binary_to_rows(df: DataFrame, parse, schema: StructType) -> DataFrame:
             return (None,) * (width - 1) + ([],)
         return row if width > 1 else (row,)
 
-    def parse_batches(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(schema)
-        for batch in batches:
-            rows = [parse_one(c) for c in batch.column(1).to_pylist()]
-            if not rows:
-                continue
-            cols = [batch.column(0)] + [
-                pa.array(col, t)
-                for col, t in zip(zip(*rows), arrow_schema.types[1:])
-            ]
-            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-    return df.select("doc_id", "content").mapInArrow(parse_batches, schema)
+    return map_rows(
+        df.select("doc_id", "content"),
+        lambda rows: [(d, *parse_one(c)) for d, c in rows],
+        schema,
+    )
 
 
 def mixed_to_spans(df: DataFrame) -> DataFrame:

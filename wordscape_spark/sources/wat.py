@@ -10,9 +10,9 @@ any nesting depth — that matches the document-URL pattern
 (``find_matching_values``, cc_url_process.py:205-229; re.match semantics,
 i.e. anchored at the start).
 
-Spark shape: ``binaryFile`` rows (one per WAT file) → ``mapInPandas``
-(Arrow-batched, zero per-row Python UDFs) → (wat_path, record_uri, url)
-rows.  At 100 TB this is the right granularity: WAT files are the
+Spark shape: ``binaryFile`` rows (one per WAT file) → one ``map_rows``
+pass (Arrow-batched, zero per-row Python UDFs) → (wat_path, record_uri,
+url) rows.  At 100 TB this is the right granularity: WAT files are the
 reference's own unit of work (one fetch per URI, cc_url_process.py:161-183)
 and ``binaryFile`` never splits a file, so each ~1 GB WAT is one task —
 thousands of files give thousands of independent tasks with no shuffle at
@@ -36,8 +36,9 @@ import re
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from wordscape_spark.sources.ingest import map_rows
 
 # the reference's document-URL intent (cc_url_process.py:37 doc_pattern;
 # the stage-A filter query reuses it)
@@ -168,10 +169,7 @@ def _wat_file_rows(
 
 
 def read_wat(
-    spark: SparkSession,
-    location: str,
-    pattern: str = DOC_URL_PATTERN,
-    glob: str = "*.wat*",
+    spark: SparkSession, location: str, glob: str = "*.wat*"
 ) -> DataFrame:
     """(wat_path, record_uri, url) rows for every document-URL mention in
     the WAT files under ``location`` — one output row per mention (the
@@ -183,17 +181,13 @@ def read_wat(
         .load(location)
         .select("path", "content")
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = re.compile(pattern)
-        for batch in batches:
-            rows = [
-                row
-                for path, content in zip(batch["path"], batch["content"])
-                for row in _wat_file_rows(path, bytes(content), compiled)
-            ]
-            yield pd.DataFrame(
-                rows, columns=["wat_path", "record_uri", "url"]
-            )
-
-    return files.mapInPandas(parse, schema=WAT_SCHEMA)
+    pattern = re.compile(DOC_URL_PATTERN)
+    return map_rows(
+        files,
+        lambda rows: [
+            row
+            for path, content in rows
+            for row in _wat_file_rows(path, content, pattern)
+        ],
+        WAT_SCHEMA,
+    )
