@@ -7,12 +7,9 @@ import struct
 
 import pytest
 
-from wordscape_spark import datagen
-from wordscape_spark.docgen_doc import (
-    build_doc,
-    ensure_doc,
-    spans_to_styled_items,
-)
+from wordscape_spark import datagen, pdfgen, rtfgen
+from wordscape_spark import signal as sig
+from wordscape_spark.docgen_doc import build_doc, doc_items, ensure_doc
 from wordscape_spark.operators import extract as X
 from wordscape_spark.operators.doc_legacy import (
     CfbFile,
@@ -107,24 +104,59 @@ def test_corrupt_bytes_become_reject_rows(spark):
 
 
 def test_interleaved_render_groups_split_paragraphs():
-    """Runs of one paragraph separated by non-run spans merge back into a
-    single paragraph (matching the SQL oracle's GROUP BY par)."""
+    """One paragraph grouping feeds every writer: runs of one paragraph
+    separated by non-run spans merge back into a single paragraph
+    (matching the SQL oracle's GROUP BY par), page breaks and figures keep
+    their places in offset order (.doc drops figures), header/footer/
+    table/meta spans are skipped, and each format maps the first run's
+    props, unknown size and bold included."""
+    def span(offset, kind, text=None, ref=None):
+        return {"kind": kind, "text": text, "offset": offset,
+                "media_ref": ref}
+
     spans = [
-        {"kind": "r;p=0;s=normal", "text": "first ", "offset": 0,
-         "media_ref": None},
-        {"kind": "tc;t=0;r=0;c=0;h=0", "text": "cell", "offset": 1,
-         "media_ref": None},
-        {"kind": "r;p=0;s=normal", "text": "part", "offset": 2,
-         "media_ref": None},
-        {"kind": "pb", "text": None, "offset": 3, "media_ref": None},
-        {"kind": "r;p=1;s=normal", "text": "second", "offset": 4,
-         "media_ref": None},
+        span(0, "pb"),
+        span(1, "r;p=0;s=normal", "first "),
+        span(2, "tc;t=0;r=0;c=0;h=0", "cell"),
+        span(3, "r;p=0;s=normal", "part"),
+        span(4, "hp;p=0", "header"),
+        span(5, "pb"),
+        span(6, sig.encode_run(1, "heading 1", size=14.0, bold=True),
+             "second"),
+        span(7, "fig", ref="img1.png"),
+        span(8, "fp;p=0", "footer"),
+        span(9, sig.encode_meta("core_title"), "Title"),
+        span(10, sig.encode_run(2, "", size=-1.0, bold=None), "third"),
+        span(11, sig.encode_run(2, "x", size=9.0, bold=False), " more"),
+    ][::-1]  # the grouping walks offset order, not input order
+    assert [
+        item if item is None else item["text"] for item in doc_items(spans)
+    ] == [None, "first part", None, "second", "third more"]
+    assert [
+        None if it is None else (it["bold"], it["hps"], it["style"])
+        for it in doc_items(spans)
+    ] == [None, (None, None, "normal"), None, (True, 28, "heading 1"),
+          (None, None, "")]
+    pb, fig = {"type": "pb"}, {"type": "fig", "ref": "img1.png"}
+    assert sig.body_items(spans, rtfgen.par_item) == [
+        pb,
+        {"type": "par", "text": "first part", "hps": 22, "bold": False,
+         "style": "normal"},
+        pb,
+        {"type": "par", "text": "second", "hps": 28, "bold": True,
+         "style": "heading 1"},
+        fig,
+        {"type": "par", "text": "third more", "hps": 22, "bold": False,
+         "style": ""},
     ]
-    items = [
-        item if item is None else item["text"]
-        for item in spans_to_styled_items(spans)
+    assert sig.body_items(spans, pdfgen.par_item) == [
+        pb,
+        {"type": "par", "text": "first part", "size": 11.0, "bold": False},
+        pb,
+        {"type": "par", "text": "second", "size": 14.0, "bold": True},
+        fig,
+        {"type": "par", "text": "third more", "size": 11.0, "bold": False},
     ]
-    assert items == ["first part", None, "second"]
 
 
 def test_sf0001_doc_chain_matches_interleaved_serialization(spark):

@@ -15,7 +15,8 @@ from wordscape_spark.operators.pdf import (
     parse_pdf_bytes,
     pdf_to_spans,
 )
-from wordscape_spark.pdfgen import build_pdf, spans_to_pdf_items
+from wordscape_spark import signal as sig
+from wordscape_spark.pdfgen import build_pdf, par_item
 
 
 def par(text, size=11.0, bold=False):
@@ -382,7 +383,7 @@ def test_lexer_always_advances_on_stray_delimiters():
 
 
 def test_differential_vs_interleaved_corpus():
-    """parse(build(spans)) == spans_to_pdf_items(spans) for every real
+    """parse(build(spans)) == body_items(spans, par_item) for every real
     sf0.001 document — the projection is the contract both sides meet.
     Layout bits mirror ensure_pdf's corpus policy (md5-derived), so all
     four compress × modern combinations appear."""
@@ -394,7 +395,7 @@ def test_differential_vs_interleaved_corpus():
     assert table
     seen = set()
     for row in table:
-        items = spans_to_pdf_items(row["spans"])
+        items = sig.body_items(row["spans"], par_item)
         digest = hashlib.md5(row["doc_id"].encode()).digest()
         compress = digest[-1] % 2 == 0
         modern = digest[-2] % 2 == 0

@@ -10,6 +10,7 @@ own definition, unless ``ALLOWLIST`` says why it stays.
 The same parse bans pandas from the program: no pandas UDF call site in the
 package, and no program source imports the ``pandas`` module (the executor
 UDF shape is Arrow, through ``sources.ingest.map_rows`` or ``arrow_udf``).
+It also keeps span ``kind``-field regexes inside ``signal.py``.
 """
 import ast
 from collections import Counter, defaultdict
@@ -133,3 +134,36 @@ def test_no_program_source_imports_pandas():
                 for name in names if name.split(".")[0] == "pandas"
             ]
     assert not imports, imports
+
+
+KIND_FIELDS = ("p=", "sz=", "b=", "s=")
+
+
+def test_kind_fields_parse_only_in_signal():
+    """Span ``kind`` fields (``p=``, ``sz=``, ``b=``, ``s=``) are parsed in
+    ``signal.py`` alone (``parse_run`` and the writers' ``body_items``),
+    so a second regex reader of the span grammar cannot land unnoticed.
+    Any ``re`` call whose literal pattern names a kind field counts;
+    Spark ``regexp_extract`` columns run in the JVM and are not ``re``
+    calls."""
+    holders = set()
+    for path, tree in _trees().items():
+        if PKG not in path.parents and ROOT / "scripts" not in path.parents:
+            continue
+        re_names = {
+            a.asname or a.name
+            for n in ast.walk(tree) if isinstance(n, ast.Import)
+            for a in n.names if a.name == "re"
+        }
+        for n in ast.walk(tree):
+            if not (isinstance(n, ast.Call) and n.args
+                    and isinstance(n.func, ast.Attribute)
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id in re_names):
+                continue
+            pattern = n.args[0]
+            if isinstance(pattern, ast.Constant) and isinstance(pattern.value, (str, bytes)):
+                text = pattern.value if isinstance(pattern.value, str) else pattern.value.decode("latin-1")
+                if any(field in text for field in KIND_FIELDS):
+                    holders.add(path.relative_to(PKG).as_posix())
+    assert holders <= {"signal.py"}, holders

@@ -12,12 +12,13 @@ import hashlib
 import pytest
 
 from wordscape_spark import datagen
+from wordscape_spark import signal as sig
 from wordscape_spark.operators.rtf import parse_rtf_bytes, rtf_to_spans
 from wordscape_spark.rtfgen import (
     build_rtf,
     escape_text,
+    par_item,
     render_doc,
-    spans_to_rtf_items,
 )
 
 
@@ -189,7 +190,7 @@ def test_not_rtf_raises():
 
 
 def test_differential_vs_interleaved_corpus():
-    """parse(build(spans)) == spans_to_rtf_items(spans) for every real
+    """parse(build(spans)) == body_items(spans, par_item) for every real
     sf0.001 document — layout bits mirror ensure_rtf's corpus policy, so
     all eight pict × hex × grouped combinations appear."""
     import pyarrow.parquet as pq
@@ -198,9 +199,7 @@ def test_differential_vs_interleaved_corpus():
     assert table
     seen = set()
     for row in table:
-        expect = []
-        for it in spans_to_rtf_items(row["spans"]):
-            expect.append(it)
+        expect = sig.body_items(row["spans"], par_item)
         digest = hashlib.md5(row["doc_id"].encode()).digest()
         seen.add((digest[-1] % 2, digest[-2] % 2, digest[-3] % 2))
         got = parsed_items(render_doc(row["doc_id"], row["spans"]))

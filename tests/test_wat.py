@@ -3,6 +3,7 @@ JSON harvest, gzip truncation tolerance, and the Spark read path."""
 
 import gzip
 import json
+import pathlib
 import re
 
 import pytest
@@ -163,3 +164,26 @@ def test_warcio_parity_on_bundled_fixture():
     wio = [(h.get("warc-type"), h.get("warc-target-uri"), p)
            for h, p in W._iter_records_warcio(raw)]
     assert fb == wio and len(fb) > 0
+
+
+@pytest.mark.parametrize("failing", ["part", "truth"])
+def test_failed_write_leaves_no_tmp(tmp_path, monkeypatch, failing):
+    """A write that raises part-way leaves neither its temp file nor the
+    final file in the data dir (``datagen.write_atomic``)."""
+    def boom(*args, **kwargs):
+        target = next(a for a in args if isinstance(a, (str, pathlib.Path)))
+        pathlib.Path(target).write_text("partial")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(watgen, "BASE_DIR", tmp_path)
+    if failing == "part":
+        monkeypatch.setattr(pathlib.Path, "write_bytes", boom)
+    else:
+        monkeypatch.setattr(watgen.pq, "write_table", boom)
+    with pytest.raises(OSError, match="disk full"):
+        watgen.ensure_wat(0.001)
+    names = sorted(p.name for p in tmp_path.rglob("*") if p.is_file())
+    if failing == "part":
+        assert names == []
+    else:
+        assert names == ["part-00000.wat.gz", "part-00001.wat.gz"]

@@ -18,6 +18,7 @@ import pathlib
 import random
 import re
 import tempfile
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -441,29 +442,62 @@ def make_data_dir(path: os.PathLike | str) -> pathlib.Path:
     return path
 
 
-def ensure_interleaved(sf: float, base_dir: os.PathLike | str = BASE_DIR) -> str:
-    """Idempotently materialize the interleaved table for a scale factor.
+def write_atomic(path: os.PathLike | str, write: Callable[[str], object]) -> str:
+    """Write ``path`` through ``write(tmp)`` on a temp file beside it, then
+    ``os.replace``: readers and concurrent writers see the whole file or
+    none, and a failed write leaves neither the file nor the temp file."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    os.close(fd)
+    try:
+        write(tmp)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    return str(path)
 
-    Returns the parquet path.  Atomic (tmp + rename) so concurrent callers
-    are safe.
-    """
-    out_dir = pathlib.Path(base_dir) / f"v{DATAGEN_VERSION}" / f"sf{sf:g}"
+
+def ensure_interleaved(sf: float) -> str:
+    """Idempotently materialize the interleaved table for a scale factor;
+    returns the parquet path."""
+    out_dir = BASE_DIR / f"v{DATAGEN_VERSION}" / f"sf{sf:g}"
     out = out_dir / "docs.parquet"
     if out.exists():
         return str(out)
     make_data_dir(out_dir)
     table = generate_table(sf)
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        # row-group sizing: small groups so Spark can split the scan across
-        # many tasks even for a single local file
-        pq.write_table(table, tmp, row_group_size=256)
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return str(out)
+    # row-group sizing: small groups so Spark can split the scan across
+    # many tasks even for a single local file
+    return write_atomic(
+        out, lambda tmp: pq.write_table(table, tmp, row_group_size=256)
+    )
+
+
+def ensure_rendered(
+    version_dir: pathlib.Path,
+    sf: float,
+    render: Callable[[str, list[dict]], bytes],
+) -> str:
+    """Idempotently materialize ``version_dir/sf{sf}/docs.parquet``, one
+    ``(doc_id, content)`` row per interleaved document with ``content =
+    render(doc_id, spans)``: the write step of every binary-format writer
+    (docxgen, docgen_doc, pdfgen, rtfgen, odtgen)."""
+    out_dir = version_dir / f"sf{sf:g}"
+    out = out_dir / "docs.parquet"
+    if out.exists():
+        return str(out)
+    make_data_dir(out_dir)
+    docs = pq.read_table(ensure_interleaved(sf)).to_pylist()
+    table = pa.table(
+        {
+            "doc_id": [d["doc_id"] for d in docs],
+            "content": [render(d["doc_id"], d["spans"]) for d in docs],
+        },
+        schema=pa.schema([("doc_id", pa.string()), ("content", pa.binary())]),
+    )
+    return write_atomic(
+        out, lambda tmp: pq.write_table(table, tmp, row_group_size=256)
+    )
 
 
 if __name__ == "__main__":

@@ -36,10 +36,8 @@ fidelity the reference gets by converting through LibreOffice
 
 from __future__ import annotations
 
-import os
 import re
 import struct
-import tempfile
 
 from wordscape_spark import datagen
 from wordscape_spark import signal as sig
@@ -597,125 +595,40 @@ def _build_cfb(streams: dict[str, bytes]) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-_PAR_RE = re.compile(r"p=(\d+)")
-_BOLD_RE = re.compile(r";b=([^;]+)")
-_SIZE_RE = re.compile(r";sz=([^;]+)")
-_STYLE_RE = re.compile(r";s=([^;]*)")
+def _par_item(run: sig.RunSignal) -> dict:
+    """One body paragraph → .doc item: the first run's tri-state bold,
+    half-points via floor(sz*2 + 0.5) (``None`` when unknown) and style.
+    Python's banker's rounding diverges from SQL round() on exact halves,
+    so the writer and the dual-dialect oracle share the floor form."""
+    return {
+        "type": "par",
+        "text": run.text,
+        "bold": run.bold,
+        "hps": None if run.size < 0 else int(run.size * 2 + 0.5),
+        "style": run.style,
+    }
 
 
-def _run_props(kind: str) -> tuple[bool | None, int | None]:
-    """(bold, half-points) of one interleaved run kind; ``-``/negative size
-    = unknown.  Half-points via floor(sz*2 + 0.5) — Python's banker's
-    rounding diverges from SQL round() on exact halves, so both the writer
-    and the dual-dialect oracle use the same floor formulation."""
-    bold: bool | None = None
-    m = _BOLD_RE.search(kind)
-    if m and m.group(1) in ("0", "1"):
-        bold = m.group(1) == "1"
-    hps: int | None = None
-    m = _SIZE_RE.search(kind)
-    if m:
-        try:
-            sz = float(m.group(1))
-        except ValueError:
-            sz = -1.0
-        if sz >= 0:
-            hps = int(sz * 2 + 0.5)
-    return bold, hps
-
-
-def spans_to_styled_items(spans: list[dict]) -> list[dict | None]:
-    """Body paragraphs (+ ``None`` page breaks) from interleaved spans, as
-    ``{"text", "bold", "hps"}`` dicts — formatting is the paragraph's
-    FIRST run's resolved bold/size (the .doc writer emits one CHPX run per
-    paragraph; per-run fidelity inside a paragraph is docx-only scope).
-
-    Scope of the .doc rendering: body ``r`` runs grouped per paragraph in
-    offset order, page breaks kept in position; header/footer/table/sdt/
-    figure/meta spans are not representable at .doc text level and are
-    skipped (doc_legacy.py scope note)."""
-    pars: dict[int, list[tuple[int, str, str]]] = {}
-    breaks: list[tuple[int, int]] = []  # (after_par, seq)
-    last_par = -1
-    for span in sorted(spans, key=lambda s: s["offset"]):
-        kind = span["kind"]
-        if kind == sig.PAGE_BREAK:
-            breaks.append((last_par, span["offset"]))
-        elif kind.startswith("r;"):
-            m = _PAR_RE.search(kind)
-            if not m:
-                continue
-            p = int(m.group(1))
-            pars.setdefault(p, []).append(
-                (span["offset"], span["text"] or "", kind)
-            )
-            last_par = p
-    items: list[dict | None] = []
-    by_par = sorted(pars)
-    break_after: dict[int, int] = {}
-    for after, _ in breaks:
-        break_after[after] = break_after.get(after, 0) + 1
-    for count in range(break_after.get(-1, 0)):
-        items.append(None)
-    for p in by_par:
-        runs = sorted(pars[p])
-        bold, hps = _run_props(runs[0][2])
-        m = _STYLE_RE.search(runs[0][2])
-        items.append(
-            {
-                "text": "".join(t for _, t, _ in runs),
-                "bold": bold,
-                "hps": hps,
-                "style": m.group(1) if m else None,
-            }
-        )
-        for _ in range(break_after.get(p, 0)):
-            items.append(None)
-    return items
+def doc_items(spans: list[dict]) -> list[dict | None]:
+    """Body paragraphs (+ ``None`` page breaks) of one interleaved
+    document: the writer emits one CHPX run per paragraph, so per-run
+    fidelity inside a paragraph is docx-only scope; figures are not
+    representable at .doc text level and are dropped (doc_legacy.py scope
+    note)."""
+    return [
+        None if it["type"] == "pb" else it
+        for it in sig.body_items(spans, _par_item)
+        if it["type"] != "fig"
+    ]
 
 
 def ensure_doc(sf: float) -> str:
-    """Materialize a (doc_id, content) parquet of real .doc bytes rendered
-    from the interleaved table — the legacy-binary twin of
-    docxgen.ensure_docx."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    """Materialize the (doc_id, content) parquet of .doc bytes."""
     # local format version: bump when the RENDERED BYTES change for the
     # same interleaved input (v2: CHPX bold/size formatting runs;
     # v3: STSH stylesheet + PAPX istd runs — paragraph style names)
-    out_dir = (
-        BASE_DIR
-        / f"v{datagen.DATAGEN_VERSION}.3"
-        / f"sf{sf:g}"
+    return datagen.ensure_rendered(
+        BASE_DIR / f"v{datagen.DATAGEN_VERSION}.3",
+        sf,
+        lambda _doc_id, spans: build_doc(doc_items(spans)),
     )
-    out = out_dir / "docs.parquet"
-    if out.exists():
-        return str(out)
-    datagen.make_data_dir(out_dir)
-    table = pq.read_table(datagen.ensure_interleaved(sf)).to_pylist()
-    rows = [
-        {
-            "doc_id": row["doc_id"],
-            "content": build_doc(spans_to_styled_items(row["spans"])),
-        }
-        for row in table
-    ]
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [("doc_id", pa.string()), ("content", pa.binary())]
-                ),
-            ),
-            tmp,
-            row_group_size=256,
-        )
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return str(out)

@@ -19,8 +19,6 @@ from __future__ import annotations
 
 import hashlib
 import io
-import os
-import tempfile
 import zipfile
 from xml.sax.saxutils import escape, quoteattr
 
@@ -389,41 +387,9 @@ def _zip_parts(b: _Builder) -> bytes:
 
 
 def ensure_docx(sf: float) -> str:
-    """Materialize a (doc_id, content) parquet of real .docx bytes rendered
-    from the interleaved table — the binary-source twin of
-    datagen.ensure_interleaved."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out_dir = (
-        BASE_DIR
-        / f"v{datagen.DATAGEN_VERSION}"
-        / f"sf{sf:g}"
+    """Materialize the (doc_id, content) parquet of .docx bytes."""
+    return datagen.ensure_rendered(
+        BASE_DIR / f"v{datagen.DATAGEN_VERSION}",
+        sf,
+        lambda _doc_id, spans: build_docx(spans),
     )
-    out = out_dir / "docs.parquet"
-    if out.exists():
-        return str(out)
-    datagen.make_data_dir(out_dir)
-    table = pq.read_table(datagen.ensure_interleaved(sf)).to_pylist()
-    rows = [
-        {"doc_id": row["doc_id"], "content": build_docx(row["spans"])}
-        for row in table
-    ]
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [("doc_id", pa.string()), ("content", pa.binary())]
-                ),
-            ),
-            tmp,
-            row_group_size=256,
-        )
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return str(out)

@@ -49,12 +49,10 @@ is the fourth Word-family container next to .doc/.docx/RTF.
 from __future__ import annotations
 
 import hashlib
-import os
-import tempfile
 import zipfile
 
-from wordscape_spark import datagen
-from wordscape_spark.rtfgen import spans_to_rtf_items
+from wordscape_spark import datagen, rtfgen
+from wordscape_spark import signal as sig
 
 BASE_DIR = datagen.DATA_DIR / "odt"
 
@@ -319,7 +317,7 @@ def render_doc(doc_id: str, spans: list[dict]) -> bytes:
     direct-named paragraph styling)."""
     digest = hashlib.md5(doc_id.encode()).digest()
     return build_odt(
-        spans_to_rtf_items(spans),
+        sig.body_items(spans, rtfgen.par_item),
         embed_figs=digest[-1] % 2 == 0,
         char_refs=digest[-2] % 2 == 0,
         auto_par_styles=digest[-3] % 2 == 0,
@@ -327,44 +325,7 @@ def render_doc(doc_id: str, spans: list[dict]) -> bytes:
 
 
 def ensure_odt(sf: float) -> str:
-    """Materialize a (doc_id, content) parquet of real .odt packages
-    rendered from the interleaved table — the ODT twin of
-    rtfgen.ensure_rtf."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out_dir = (
-        BASE_DIR
-        / f"v{datagen.DATAGEN_VERSION}.1"
-        / f"sf{sf:g}"
+    """Materialize the (doc_id, content) parquet of .odt packages."""
+    return datagen.ensure_rendered(
+        BASE_DIR / f"v{datagen.DATAGEN_VERSION}.1", sf, render_doc
     )
-    out = out_dir / "docs.parquet"
-    if out.exists():
-        return str(out)
-    datagen.make_data_dir(out_dir)
-    table = pq.read_table(datagen.ensure_interleaved(sf)).to_pylist()
-    rows = [
-        {
-            "doc_id": row["doc_id"],
-            "content": render_doc(row["doc_id"], row["spans"]),
-        }
-        for row in table
-    ]
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [("doc_id", pa.string()), ("content", pa.binary())]
-                ),
-            ),
-            tmp,
-            row_group_size=256,
-        )
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return str(out)

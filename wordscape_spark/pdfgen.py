@@ -46,7 +46,7 @@ paragraph's first run), ``fig`` spans as Image XObjects drawn with ``Do``
 — the in-file analog of the zip-internal media path a .docx carries),
 ``pb`` spans as page boundaries.  Header/footer/table/sdt/meta spans are
 not representable in this flat layout and are skipped, mirroring the
-.doc text-level scope (docgen_doc.spans_to_styled_items).
+.doc text-level scope (``signal.body_items``).
 
 The reference never writes PDFs; its PDF surface is pdfplumber word
 extraction over rendered pages (reference
@@ -59,12 +59,10 @@ end-to-end without that render loop.
 from __future__ import annotations
 
 import hashlib
-import os
-import re
-import tempfile
 import zlib
 
 from wordscape_spark import datagen
+from wordscape_spark import signal as sig
 
 BASE_DIR = datagen.DATA_DIR / "pdf"
 
@@ -79,10 +77,6 @@ _NAME_REGULAR = set(
         if chr(c) not in "()<>[]{}/%#"
     )
 )
-
-_PAR_RE = re.compile(r";p=(\d+)(?:;|$)")
-_SZ_RE = re.compile(r";sz=([^;]+)")
-_BOLD_RE = re.compile(r";b=([^;]+)")
 
 
 def _fmt_num(x: float) -> str:
@@ -137,50 +131,15 @@ def _text_token(text: str) -> tuple[bytes, bool]:
 # ---------------------------------------------------------------------------
 
 
-def spans_to_pdf_items(spans: list[dict]) -> list[dict]:
-    """Interleaved spans → ordered PDF items.
-
-    Body paragraphs group contiguous ``r`` runs sharing ``p`` (text is the
-    offset-ordered concatenation; size/bold are the FIRST run's resolved
-    properties, ``sz=-1`` ⇒ the 11 pt default); ``fig`` spans become
-    figure items carrying their media_ref; ``pb`` spans become page
-    boundaries.  Items are ordered by each item's first span offset
-    (paragraph runs are contiguous by the span-grammar contract, so this
-    is document order)."""
-    pars: dict[int, dict] = {}
-    items: list[tuple[int, dict]] = []
-    for span in sorted(spans, key=lambda s: s["offset"]):
-        kind = span["kind"]
-        if kind == "pb":
-            items.append((span["offset"], {"type": "pb"}))
-        elif kind == "fig":
-            items.append(
-                (span["offset"],
-                 {"type": "fig", "ref": span["media_ref"] or ""})
-            )
-        elif kind.startswith("r;"):
-            m = _PAR_RE.search(kind)
-            if not m:
-                continue
-            p = int(m.group(1))
-            par = pars.get(p)
-            if par is None:
-                ms = _SZ_RE.search(kind)
-                mb = _BOLD_RE.search(kind)
-                try:
-                    size = float(ms.group(1)) if ms else -1.0
-                except ValueError:
-                    size = -1.0
-                par = {
-                    "type": "par",
-                    "text": "",
-                    "size": _DEFAULT_SIZE if size < 0 else size,
-                    "bold": bool(mb and mb.group(1) == "1"),
-                }
-                pars[p] = par
-                items.append((span["offset"], par))
-            par["text"] += span["text"] or ""
-    return [it for _, it in sorted(items, key=lambda t: t[0])]
+def par_item(run: sig.RunSignal) -> dict:
+    """One body paragraph → PDF item: font size/bold from its first run
+    (``sz=-1`` ⇒ the 11 pt default)."""
+    return {
+        "type": "par",
+        "text": run.text,
+        "size": _DEFAULT_SIZE if run.size < 0 else run.size,
+        "bold": run.bold is True,
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -347,27 +306,20 @@ def _page_ops(
 
 
 def build_pdf(
-    spans_or_items: list,
-    compress: bool | None = None,
+    items: list[dict],
+    compress: bool = False,
     modern: bool = False,
     permute: bool = False,
 ) -> bytes:
-    """Render interleaved spans (or pre-projected items) into PDF bytes.
+    """Render ordered items into PDF bytes.
 
-    ``compress=None`` (ensure_pdf path) is decided per call site; tests
-    pass both explicitly.  ``modern=True`` emits the PDF 1.5 layout:
+    ``compress=True`` Flate-compresses the content streams.
+    ``modern=True`` emits the PDF 1.5 layout:
     non-stream objects packed into an object stream, cross-reference as
     an xref stream (PNG-Up-predicted when ``compress`` is also set).
     ``permute=True`` reverses each page's content-stream op order (the
     page renders identically; document order is recoverable only from
     geometry)."""
-    if spans_or_items and isinstance(spans_or_items[0], dict) and \
-            "type" in spans_or_items[0]:
-        items = spans_or_items
-    else:
-        items = spans_to_pdf_items(spans_or_items)
-    compress = bool(compress)
-
     # split items into pages at pb boundaries
     pages: list[list[dict]] = [[]]
     for it in items:
@@ -482,57 +434,24 @@ def build_pdf(
 # ---------------------------------------------------------------------------
 
 
-def ensure_pdf(sf: float) -> str:
-    """Materialize a (doc_id, content) parquet of real PDF bytes rendered
-    from the interleaved table — the PDF twin of docgen_doc.ensure_doc.
-    Three independent md5(doc_id) bits pick each document's layout so
-    every reader path appears at every sf: digest[-1] even → FlateDecode
-    content streams, digest[-2] even → the PDF 1.5 layout (object stream
-    + xref stream, PNG-predicted when also compressed), digest[-3] even
-    → content-stream ops emitted in REVERSED order per page (document
-    order recoverable only by the reader's geometry tracking)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out_dir = (
-        BASE_DIR
-        / f"v{datagen.DATAGEN_VERSION}.2"
-        / f"sf{sf:g}"
+def render_doc(doc_id: str, spans: list[dict]) -> bytes:
+    """One interleaved document → PDF bytes, layout picked by md5 bits
+    (digest[-1]: FlateDecode content streams; digest[-2]: the PDF 1.5
+    layout, object stream + xref stream, PNG-predicted when also
+    compressed; digest[-3]: content-stream ops REVERSED per page, so
+    document order is recoverable only by the reader's geometry
+    tracking)."""
+    digest = hashlib.md5(doc_id.encode()).digest()
+    return build_pdf(
+        sig.body_items(spans, par_item),
+        compress=digest[-1] % 2 == 0,
+        modern=digest[-2] % 2 == 0,
+        permute=digest[-3] % 2 == 0,
     )
-    out = out_dir / "docs.parquet"
-    if out.exists():
-        return str(out)
-    datagen.make_data_dir(out_dir)
-    table = pq.read_table(datagen.ensure_interleaved(sf)).to_pylist()
-    rows = []
-    for row in table:
-        digest = hashlib.md5(row["doc_id"].encode()).digest()
-        rows.append(
-            {
-                "doc_id": row["doc_id"],
-                "content": build_pdf(
-                    spans_to_pdf_items(row["spans"]),
-                    compress=digest[-1] % 2 == 0,
-                    modern=digest[-2] % 2 == 0,
-                    permute=digest[-3] % 2 == 0,
-                ),
-            }
-        )
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [("doc_id", pa.string()), ("content", pa.binary())]
-                ),
-            ),
-            tmp,
-            row_group_size=256,
-        )
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return str(out)
+
+
+def ensure_pdf(sf: float) -> str:
+    """Materialize the (doc_id, content) parquet of PDF bytes."""
+    return datagen.ensure_rendered(
+        BASE_DIR / f"v{datagen.DATAGEN_VERSION}.2", sf, render_doc
+    )

@@ -1239,12 +1239,22 @@ def q_pdf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = pdfgen.ensure_pdf(datagen.sf_from_dir(sf_dir))
     spans = P.pdf_to_spans(spark.read.parquet(path))
-    s = spans.select("doc_id", F.explode("spans").alias("s")).select(
+    return _media_rows(spans).drop("style")
+
+
+def _media_rows(spans: DataFrame) -> DataFrame:
+    """Parsed spans → the ``*_media`` pins' ordered projection: seq, tag,
+    text, media_ref, and a run's style, size and bold."""
+    return spans.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id",
         F.col("s.offset").cast("long").alias("seq"),
         F.split(F.col("s.kind"), ";").getItem(0).alias("tag"),
         F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
         F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref"),
+        F.when(
+            F.col("s.kind").startswith("r;"),
+            F.regexp_extract("s.kind", ";s=([^;]*)", 1),
+        ).otherwise("").alias("style"),
         F.when(
             F.col("s.kind").startswith("r;"),
             F.round(
@@ -1257,7 +1267,6 @@ def q_pdf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.regexp_extract("s.kind", ";b=([^;]+)", 1) == "1").cast("int"),
         ).alias("bold"),
     )
-    return s
 
 
 def q_rtf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1293,29 +1302,7 @@ def q_rtf_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wordscape_spark.operators import rtf as R
 
     path = rtfgen.ensure_rtf(datagen.sf_from_dir(sf_dir))
-    spans = R.rtf_to_spans(spark.read.parquet(path))
-    return spans.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("seq"),
-        F.split(F.col("s.kind"), ";").getItem(0).alias("tag"),
-        F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
-        F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref"),
-        F.when(
-            F.col("s.kind").startswith("r;"),
-            F.regexp_extract("s.kind", ";s=([^;]*)", 1),
-        ).otherwise("").alias("style"),
-        F.when(
-            F.col("s.kind").startswith("r;"),
-            F.round(
-                F.regexp_extract("s.kind", ";sz=([^;]+)", 1).cast("double"),
-                6,
-            ),
-        ).alias("sz"),
-        F.when(
-            F.col("s.kind").startswith("r;"),
-            (F.regexp_extract("s.kind", ";b=([^;]+)", 1) == "1").cast("int"),
-        ).alias("bold"),
-    )
+    return _media_rows(R.rtf_to_spans(spark.read.parquet(path)))
 
 
 def q_odt_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1348,29 +1335,7 @@ def q_odt_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wordscape_spark.operators import odt as O
 
     path = odtgen.ensure_odt(datagen.sf_from_dir(sf_dir))
-    spans = O.odt_to_spans(spark.read.parquet(path))
-    return spans.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("seq"),
-        F.split(F.col("s.kind"), ";").getItem(0).alias("tag"),
-        F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
-        F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref"),
-        F.when(
-            F.col("s.kind").startswith("r;"),
-            F.regexp_extract("s.kind", ";s=([^;]*)", 1),
-        ).otherwise("").alias("style"),
-        F.when(
-            F.col("s.kind").startswith("r;"),
-            F.round(
-                F.regexp_extract("s.kind", ";sz=([^;]+)", 1).cast("double"),
-                6,
-            ),
-        ).alias("sz"),
-        F.when(
-            F.col("s.kind").startswith("r;"),
-            (F.regexp_extract("s.kind", ";b=([^;]+)", 1) == "1").cast("int"),
-        ).alias("bold"),
-    )
+    return _media_rows(O.odt_to_spans(spark.read.parquet(path)))
 
 
 def q_mixed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,67 +39,26 @@ third Word-family container next to .doc and .docx.
 from __future__ import annotations
 
 import hashlib
-import os
-import re
-import tempfile
 
 from wordscape_spark import datagen
+from wordscape_spark import signal as sig
 
 BASE_DIR = datagen.DATA_DIR / "rtf"
-
-_PAR_RE = re.compile(r"[;^]p=(\d+)")
-_SZ_RE = re.compile(r";sz=([^;]+)")
-_BOLD_RE = re.compile(r";b=([^;]+)")
-_STYLE_RE = re.compile(r";s=([^;]*)")
 
 #: default body size when the run carries none (matches pdfgen)
 _DEFAULT_HPS = 22  # 11 pt in half-points
 
 
-def spans_to_rtf_items(spans: list[dict]) -> list[dict]:
-    """Interleaved spans → ordered RTF items (same grouping contract as
-    pdfgen.spans_to_pdf_items, plus the paragraph STYLE: body paragraphs
-    group contiguous ``r`` runs sharing ``p``; style/size/bold are the
-    FIRST run's resolved properties; ``fig``/``pb`` spans keep their own
-    positions; items order by first-span offset)."""
-    pars: dict[int, dict] = {}
-    items: list[tuple[int, dict]] = []
-    for span in sorted(spans, key=lambda s: s["offset"]):
-        kind = span["kind"]
-        if kind == "pb":
-            items.append((span["offset"], {"type": "pb"}))
-        elif kind == "fig":
-            items.append(
-                (span["offset"],
-                 {"type": "fig", "ref": span["media_ref"] or ""})
-            )
-        elif kind.startswith("r;"):
-            m = _PAR_RE.search(kind)
-            if not m:
-                continue
-            p = int(m.group(1))
-            par = pars.get(p)
-            if par is None:
-                ms = _SZ_RE.search(kind)
-                mb = _BOLD_RE.search(kind)
-                mst = _STYLE_RE.search(kind)
-                try:
-                    size = float(ms.group(1)) if ms else -1.0
-                except ValueError:
-                    size = -1.0
-                par = {
-                    "type": "par",
-                    "text": "",
-                    "hps": _DEFAULT_HPS
-                    if size < 0
-                    else int(size * 2 + 0.5),
-                    "bold": bool(mb and mb.group(1) == "1"),
-                    "style": mst.group(1) if mst else "",
-                }
-                pars[p] = par
-                items.append((span["offset"], par))
-            par["text"] += span["text"] or ""
-    return [it for _, it in sorted(items, key=lambda t: t[0])]
+def par_item(run: sig.RunSignal) -> dict:
+    """One body paragraph → RTF item: the paragraph STYLE plus character
+    formatting from its first run (half-points, unknown size ⇒ 11 pt)."""
+    return {
+        "type": "par",
+        "text": run.text,
+        "hps": _DEFAULT_HPS if run.size < 0 else int(run.size * 2 + 0.5),
+        "bold": run.bold is True,
+        "style": run.style,
+    }
 
 
 def escape_text(text: str, hex_mode: bool = False) -> bytes:
@@ -208,7 +167,7 @@ def render_doc(doc_id: str, spans: list[dict]) -> bytes:
     escapes; digest[-3]: grouped vs flat character formatting)."""
     digest = hashlib.md5(doc_id.encode()).digest()
     return build_rtf(
-        spans_to_rtf_items(spans),
+        sig.body_items(spans, par_item),
         pict_figs=digest[-1] % 2 == 0,
         hex_mode=digest[-2] % 2 == 0,
         grouped=digest[-3] % 2 == 0,
@@ -216,43 +175,7 @@ def render_doc(doc_id: str, spans: list[dict]) -> bytes:
 
 
 def ensure_rtf(sf: float) -> str:
-    """Materialize a (doc_id, content) parquet of real RTF bytes rendered
-    from the interleaved table — the RTF twin of pdfgen.ensure_pdf."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out_dir = (
-        BASE_DIR
-        / f"v{datagen.DATAGEN_VERSION}.1"
-        / f"sf{sf:g}"
+    """Materialize the (doc_id, content) parquet of RTF bytes."""
+    return datagen.ensure_rendered(
+        BASE_DIR / f"v{datagen.DATAGEN_VERSION}.1", sf, render_doc
     )
-    out = out_dir / "docs.parquet"
-    if out.exists():
-        return str(out)
-    datagen.make_data_dir(out_dir)
-    table = pq.read_table(datagen.ensure_interleaved(sf)).to_pylist()
-    rows = [
-        {
-            "doc_id": row["doc_id"],
-            "content": render_doc(row["doc_id"], row["spans"]),
-        }
-        for row in table
-    ]
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [("doc_id", pa.string()), ("content", pa.binary())]
-                ),
-            ),
-            tmp,
-            row_group_size=256,
-        )
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return str(out)

@@ -49,7 +49,7 @@ same fallback logic.
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import Any, Callable, NamedTuple
 
 FONT_UNKNOWN = -1.0
 
@@ -179,6 +179,32 @@ def _parse_run_uncached(kind: str, text: str) -> RunSignal:
         numbered=f.get("n", "0") == "1",
         text=text,
     )
+
+
+def body_items(spans: list[dict], par: Callable[[RunSignal], Any]) -> list:
+    """One document's body as the binary-format writers render it, in
+    offset order: ``{"type": "pb"}`` per page break, ``{"type": "fig",
+    "ref": media_ref}`` per figure, and ``par(run)`` per body paragraph at
+    its first run, where ``run`` is that first run's ``RunSignal`` carrying
+    the text of every run sharing its ``p`` (runs split by other spans
+    join).  Header/footer/table/sdt/meta spans are skipped."""
+    items: list = []
+    pars: dict[int, tuple[int, RunSignal, list[str]]] = {}
+    for span in sorted(spans, key=lambda s: s["offset"]):
+        kind = span["kind"]
+        if kind == PAGE_BREAK:
+            items.append({"type": "pb"})
+        elif kind == "fig":
+            items.append({"type": "fig", "ref": span["media_ref"] or ""})
+        elif kind.startswith("r;"):
+            run = parse_run(kind, span["text"] or "")
+            if run.par not in pars:
+                pars[run.par] = (len(items), run, [])
+                items.append(None)
+            pars[run.par][2].append(run.text)
+    for i, run, texts in pars.values():
+        items[i] = par(run._replace(text="".join(texts)))
+    return items
 
 
 def parse_cell(kind: str, text: str) -> CellSignal:

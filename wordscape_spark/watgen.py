@@ -27,9 +27,8 @@ from __future__ import annotations
 
 import gzip
 import json
-import os
+import pathlib
 import random
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -142,7 +141,8 @@ def generate(sf: float) -> tuple[list[bytes], list[dict]]:
 def ensure_wat(sf: float) -> tuple[str, str]:
     """Idempotently materialize the WAT fixture for a scale factor.
 
-    Returns ``(wat_dir, truth_parquet_path)``; atomic via tmp + rename."""
+    Returns ``(wat_dir, truth_parquet_path)``; every file is written
+    atomically (``datagen.write_atomic``), the truth table last."""
     out_dir = BASE_DIR / f"v{datagen.DATAGEN_VERSION}.{WATGEN_VERSION}" / f"sf{sf:g}"
     truth = out_dir / "links.parquet"
     if truth.exists():
@@ -150,28 +150,19 @@ def ensure_wat(sf: float) -> tuple[str, str]:
     datagen.make_data_dir(out_dir)
     file_bytes, rows = generate(sf)
     for i, data in enumerate(file_bytes):
-        fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        os.replace(tmp, out_dir / f"part-{i:05d}.wat.gz")
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(
-            pa.Table.from_pylist(
-                rows,
-                schema=pa.schema(
-                    [
-                        ("record_uri", pa.string()),
-                        ("rec_type", pa.string()),
-                        ("url", pa.string()),
-                    ]
-                ),
-            ),
-            tmp,
+        datagen.write_atomic(
+            out_dir / f"part-{i:05d}.wat.gz",
+            lambda tmp: pathlib.Path(tmp).write_bytes(data),
         )
-        os.replace(tmp, truth)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+    table = pa.Table.from_pylist(
+        rows,
+        schema=pa.schema(
+            [
+                ("record_uri", pa.string()),
+                ("rec_type", pa.string()),
+                ("url", pa.string()),
+            ]
+        ),
+    )
+    datagen.write_atomic(truth, lambda tmp: pq.write_table(table, tmp))
     return str(out_dir), str(truth)
