@@ -107,7 +107,13 @@ def _build_nodes(df):
     listed, its build is not entered)."""
     rel = df._jdf.queryExecution().withCachedData()
     assert rel.getClass().getSimpleName() == "InMemoryRelation"
-    todo, nodes = [rel.cacheBuilder().cachedPlan()], []
+    return _nodes_under(rel.cacheBuilder().cachedPlan())
+
+
+def _nodes_under(plan):
+    """``plan`` and every physical node below it, as ``_build_nodes``
+    walks them."""
+    todo, nodes = [plan], []
     while todo:
         p = todo.pop()
         kind = p.getClass().getSimpleName()
@@ -151,3 +157,43 @@ def test_gate_runs_once_in_the_cached_quality_frame(stages):
         scans = [n.relation().cacheBuilder() for n in nodes
                  if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
         assert scans and all(s.equals(builder[upstream]) for s in scans), name
+
+
+def test_one_row_group_input_spreads_one_partition_per_core(
+    spark, corpus, stages, tmp_path
+):
+    """A one-row-group parquet input scans as one task; the gated frame is
+    spread by doc_id before its pin, so the three pinned frames each hold
+    one partition per core, the gate still runs once below the exchange
+    (only survivors cross it), and the survivors are those of the
+    in-memory run."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "corpus.parquet")
+    pq.write_table(corpus.toArrow(), path)
+    assert pq.ParquetFile(path).num_row_groups == 1
+    got = CU.curate(
+        spark.read.parquet(path), budget_per_lang=400, n_streams=2
+    )
+    try:
+        CU.funnel(got)  # materializes the three pins
+        cores = spark.sparkContext.defaultParallelism
+        for name in CU.STAGES[1:4]:
+            rel = got[name]._jdf.queryExecution().withCachedData()
+            parts = rel.cacheBuilder().cachedColumnBuffers().getNumPartitions()
+            assert parts == cores, name
+        nodes = _build_nodes(got["quality"])
+        below = [
+            n for s in nodes
+            if s.getClass().getSimpleName() == "ShuffleExchangeExec"
+            for n in _nodes_under(s)
+        ]
+        assert len(_gate_filters(nodes)) == len(_gate_filters(below)) == 1
+        for name in CU.STAGES[1:]:
+            cols = ["doc_id", "lang", "tokens"]
+            assert sorted(got[name].select(cols).collect()) == sorted(
+                stages[name].select(cols).collect()
+            ), name
+    finally:
+        for name in CU.STAGES[1:4]:
+            got[name].unpersist()

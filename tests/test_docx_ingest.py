@@ -116,3 +116,28 @@ def test_malformed_docx_rejects(spark):
     rows = X.extract(spans).collect()
     assert sorted(r["doc_id"] for r in rows) == ["junk-1", "junk-2", "junk-3"]
     assert all(not r["ok"] for r in rows)
+
+
+def test_binary_test_data_is_byte_reproducible(docs, monkeypatch):
+    """The .docx, ODT and WAT writers stamp no clock time: rendering the
+    same docs at two different instants gives the same bytes (zip entries
+    carry the fixed 1980-01-01 stamp, gzip members mtime 0)."""
+    import time
+
+    from wordscape_spark import odtgen, watgen
+
+    real_localtime = time.localtime
+
+    def render_at(instant):
+        monkeypatch.setattr(time, "time", lambda: instant)
+        monkeypatch.setattr(
+            time, "localtime",
+            lambda t=None: real_localtime(instant if t is None else t),
+        )
+        return (
+            [docxgen.build_docx(d["spans"]) for d in docs[:20]],
+            [odtgen.render_doc(d["doc_id"], d["spans"]) for d in docs[:20]],
+            watgen.generate(0.001)[0],
+        )
+
+    assert render_at(1_000_000_000.0) == render_at(1_700_000_000.0)

@@ -353,31 +353,34 @@ def _zip_parts(b: _Builder) -> bytes:
         + "</cp:coreProperties>"
     )
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr(
-            "[Content_Types].xml",
+    parts = {
+        "[Content_Types].xml": (
             '<Types xmlns="http://schemas.openxmlformats.org/package/2006/'
             'content-types"><Default Extension="xml" ContentType="'
             'application/xml"/><Default Extension="png" ContentType="'
-            'image/png"/></Types>',
+            'image/png"/></Types>'
+        ),
+        "word/document.xml": document_xml,
+        "word/styles.xml": "".join(styles_xml),
+        "word/_rels/document.xml.rels": rels_xml,
+        "docProps/core.xml": core_xml,
+    }
+    if b.headers["hp"]:
+        parts["word/header1.xml"] = (
+            f'<w:hdr {_W_NS}>' + "".join(b.headers["hp"]) + "</w:hdr>"
         )
-        zf.writestr("word/document.xml", document_xml)
-        zf.writestr("word/styles.xml", "".join(styles_xml))
-        zf.writestr("word/_rels/document.xml.rels", rels_xml)
-        zf.writestr("docProps/core.xml", core_xml)
-        if b.headers["hp"]:
-            zf.writestr(
-                "word/header1.xml",
-                f'<w:hdr {_W_NS}>' + "".join(b.headers["hp"]) + "</w:hdr>",
-            )
-        if b.headers["fp"]:
-            zf.writestr(
-                "word/footer1.xml",
-                f'<w:ftr {_W_NS}>' + "".join(b.headers["fp"]) + "</w:ftr>",
-            )
-        for target, content in b.media.items():
-            zf.writestr(f"word/{target}", content)
+    if b.headers["fp"]:
+        parts["word/footer1.xml"] = (
+            f'<w:ftr {_W_NS}>' + "".join(b.headers["fp"]) + "</w:ftr>"
+        )
+    parts.update((f"word/{target}", data) for target, data in b.media.items())
+
+    # a bare-name writestr stamps the entry with the clock; a ZipInfo keeps
+    # its fixed 1980-01-01 date_time, so the same parts give the same bytes
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in parts.items():
+            zf.writestr(zipfile.ZipInfo(name), data, zipfile.ZIP_DEFLATED)
     return buf.getvalue()
 
 

@@ -294,19 +294,14 @@ def build_odt(
             MIMETYPE,
             compress_type=zipfile.ZIP_STORED,
         )
-        zf.writestr(
-            "META-INF/manifest.xml",
-            manifest_xml,
-            compress_type=zipfile.ZIP_DEFLATED,
-        )
-        zf.writestr(
-            "content.xml", content_xml, compress_type=zipfile.ZIP_DEFLATED
-        )
-        zf.writestr(
-            "styles.xml", styles_xml, compress_type=zipfile.ZIP_DEFLATED
-        )
-        for href, png in pictures:
-            zf.writestr(href, png, compress_type=zipfile.ZIP_DEFLATED)
+        parts = [
+            ("META-INF/manifest.xml", manifest_xml),
+            ("content.xml", content_xml),
+            ("styles.xml", styles_xml),
+            *pictures,
+        ]
+        for name, data in parts:  # ZipInfo: fixed 1980-01-01 stamp
+            zf.writestr(zipfile.ZipInfo(name), data, zipfile.ZIP_DEFLATED)
     return buf.getvalue()
 
 

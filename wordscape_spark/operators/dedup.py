@@ -113,13 +113,20 @@ def band_key_expr(band: int, dialect: str, rows: int = MINHASH_K // LSH_BANDS) -
 def with_minhash(
     df: DataFrame, text_col: str = "text", fast: bool = False
 ) -> DataFrame:
-    """doc_id + shingles + minhash signature + LSH band keys."""
+    """doc_id + shingles + minhash signature + LSH band keys: ``sh``, then
+    ``mh0..mh{MINHASH_K-1}``, then ``band0..band{LSH_BANDS-1}``, appended in
+    that order.  The signature and the band keys are one ``withColumns``
+    projection each (the bands read the ``mh*`` columns), so building the
+    frame runs three plan analyses, not one per column."""
     df = df.withColumn("sh", F.expr(shingles_expr(text_col, "spark")))
-    for i, e in enumerate(minhash_exprs("spark", fast=fast)):
-        df = df.withColumn(f"mh{i}", F.expr(e))
-    for b in range(LSH_BANDS):
-        df = df.withColumn(f"band{b}", F.expr(band_key_expr(b, "spark")))
-    return df
+    df = df.withColumns({
+        f"mh{i}": F.expr(e)
+        for i, e in enumerate(minhash_exprs("spark", fast=fast))
+    })
+    return df.withColumns({
+        f"band{b}": F.expr(band_key_expr(b, "spark"))
+        for b in range(LSH_BANDS)
+    })
 
 
 def minhash_duplicate_pairs(

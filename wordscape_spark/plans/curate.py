@@ -13,6 +13,16 @@ Scale shape (100 TB):
 * the quality gate is a per-row flag on the corpus scan (zero Exchange —
   `gopher_quality(keep_cols=...)` rides the payload columns through, no
   join back);
+* the gate's survivors are hash-partitioned by doc_id into one partition
+  per core (`defaultParallelism`) before their pin.  The gate still runs
+  in the scan stage, below that exchange, so only survivors cross it.
+  The count is explicit because AQE coalesces a count-less repartition
+  by bytes, and a few hundred KB of text would come back as one task; a
+  one-row-group input scans as one task too, and `exact`'s semi-join
+  against the small keep aggregate is a broadcast that keeps whatever
+  partitioning it gets.  Spread here, the MinHash signature, band,
+  verify and survivor stages run one task per core, and the later
+  doc_id joins reuse the partitioning;
 * exact dedup aggregates (bytehash, doc_id) only and rejoins by doc_id —
   the text column never shuffles for it;
 * near-dedup shuffles MinHash signatures and band keys, never text
@@ -74,15 +84,22 @@ def curate(
     # aggregate, its semi-join and the funnel; exact feeds the MinHash
     # stage, the survivor join and the funnel; near feeds the budget and
     # the funnel.  Unpinned, each consumer re-runs the upstream chain: the
-    # gate would run four times per pass, each a single task on a
-    # one-row-group input.  On a real 100 TB run the stage boundaries
-    # commit through plans.checkpoint instead.
+    # gate would run four times per pass.  On a real 100 TB run the stage
+    # boundaries commit through plans.checkpoint instead.
+    #
+    # The gated survivors are spread by doc_id, one partition per core,
+    # before the pin (see "Scale shape"): on a one-row-group input every
+    # later stage, the md5 signatures included, would otherwise run on
+    # one core.  The gate stays in the scan stage, below the exchange.
     quality = (
         QR.gopher_quality(
             base, min_words=min_words, keep_cols=("lang", "text", "tokens")
         )
         .filter("gopher_pass")
         .select("doc_id", "lang", "text", "tokens")
+        .repartition(
+            docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
+        )
         .persist()
     )
 

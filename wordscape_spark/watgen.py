@@ -128,7 +128,7 @@ def generate(sf: float) -> tuple[list[bytes], list[dict]]:
             payload = b'{"Envelope": [truncated'
             links = []
         files[i % 2].append(
-            gzip.compress(_warc_record(rec_type, uri, payload))
+            gzip.compress(_warc_record(rec_type, uri, payload), mtime=0)
         )
         truth.extend(
             {"record_uri": uri, "rec_type": rec_type, "url": u}
