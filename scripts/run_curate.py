@@ -21,10 +21,7 @@ The input table needs (doc_id, lang, text) columns.  At cluster scale,
 size ``--n-streams`` ≫ executor-thread count (each budget stream is one
 sort partition).  The plan persists the gated and the two dedup survivor
 frames itself, and the funnel is computed once, so neither the write nor
-the read-out below re-derives upstream stages.  The gated frame is
-hash-spread by doc_id into ``defaultParallelism`` partitions before its
-pin, so the dedup stages run one task per core however few row groups
-the input has.
+the read-out below re-derives upstream stages.
 """
 
 from __future__ import annotations

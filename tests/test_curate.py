@@ -159,41 +159,80 @@ def test_gate_runs_once_in_the_cached_quality_frame(stages):
         assert scans and all(s.equals(builder[upstream]) for s in scans), name
 
 
+def _curate_parquet(spark, path, stages):
+    """curate over the parquet at ``path``, checked against the in-memory
+    run's survivors at every stage; returns the stage frames, with the
+    three pins materialized (the caller unpersists them)."""
+    got = CU.curate(spark.read.parquet(path), budget_per_lang=400, n_streams=2)
+    CU.funnel(got)
+    for name in CU.STAGES[1:]:
+        cols = ["doc_id", "lang", "tokens"]
+        assert sorted(got[name].select(cols).collect()) == sorted(
+            stages[name].select(cols).collect()
+        ), name
+    return got
+
+
+def _pinned_partitions(got):
+    return {
+        name: got[name]._jdf.queryExecution().withCachedData()
+        .cacheBuilder().cachedColumnBuffers().getNumPartitions()
+        for name in CU.STAGES[1:4]
+    }
+
+
+def _kinds(nodes, kind):
+    return [n for n in nodes if n.getClass().getSimpleName() == kind]
+
+
 def test_one_row_group_input_spreads_one_partition_per_core(
     spark, corpus, stages, tmp_path
 ):
     """A one-row-group parquet input scans as one task; the gated frame is
     spread by doc_id before its pin, so the three pinned frames each hold
-    one partition per core, the gate still runs once below the exchange
-    (only survivors cross it), and the survivors are those of the
-    in-memory run."""
+    one partition per core, and the gate still runs once below the
+    exchange (only survivors cross it)."""
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "corpus.parquet")
     pq.write_table(corpus.toArrow(), path)
     assert pq.ParquetFile(path).num_row_groups == 1
-    got = CU.curate(
-        spark.read.parquet(path), budget_per_lang=400, n_streams=2
-    )
+    got = _curate_parquet(spark, path, stages)
     try:
-        CU.funnel(got)  # materializes the three pins
         cores = spark.sparkContext.defaultParallelism
-        for name in CU.STAGES[1:4]:
-            rel = got[name]._jdf.queryExecution().withCachedData()
-            parts = rel.cacheBuilder().cachedColumnBuffers().getNumPartitions()
-            assert parts == cores, name
+        assert set(_pinned_partitions(got).values()) == {cores}
         nodes = _build_nodes(got["quality"])
         below = [
-            n for s in nodes
-            if s.getClass().getSimpleName() == "ShuffleExchangeExec"
+            n for s in _kinds(nodes, "ShuffleExchangeExec")
             for n in _nodes_under(s)
         ]
         assert len(_gate_filters(nodes)) == len(_gate_filters(below)) == 1
-        for name in CU.STAGES[1:]:
-            cols = ["doc_id", "lang", "tokens"]
-            assert sorted(got[name].select(cols).collect()) == sorted(
-                stages[name].select(cols).collect()
-            ), name
+    finally:
+        for name in CU.STAGES[1:4]:
+            got[name].unpersist()
+
+
+def test_input_of_a_split_per_core_is_not_spread(
+    spark, corpus, stages, tmp_path
+):
+    """A scan that already plans a split per core, as a large input does,
+    keeps its splits: the gated frame's build crosses no exchange."""
+    import pyarrow.parquet as pq
+
+    cores = spark.sparkContext.defaultParallelism
+    table = corpus.toArrow()
+    step = -(-table.num_rows // cores)
+    for i in range(cores):
+        pq.write_table(
+            table.slice(i * step, step), str(tmp_path / f"part-{i}.parquet")
+        )
+    assert spark.read.parquet(str(tmp_path)).rdd.getNumPartitions() == cores
+    got = _curate_parquet(spark, str(tmp_path), stages)
+    try:
+        assert _pinned_partitions(got)["quality"] == cores
+        nodes = _build_nodes(got["quality"])
+        assert not _kinds(nodes, "ShuffleExchangeExec")
+        assert len(_gate_filters(nodes)) == 1
     finally:
         for name in CU.STAGES[1:4]:
             got[name].unpersist()

@@ -13,12 +13,14 @@ Written with pyarrow directly (no Spark session needed at generation time).
 
 from __future__ import annotations
 
+import io
 import os
 import pathlib
 import random
 import re
 import tempfile
-from typing import Callable
+import zipfile
+from typing import Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -455,6 +457,21 @@ def write_atomic(path: os.PathLike | str, write: Callable[[str], object]) -> str
         if os.path.exists(tmp):
             os.unlink(tmp)
     return str(path)
+
+
+def zip_bytes(
+    entries: Iterable[tuple[str, bytes | str]], stored: tuple[str, ...] = ()
+) -> bytes:
+    """A zip of ``(name, data)`` entries in order, DEFLATED except the
+    names in ``stored``.  Each entry is written through a ``ZipInfo``,
+    whose fixed 1980-01-01 ``date_time`` replaces the clock stamp a bare
+    name gets, so the same entries give the same bytes."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in entries:
+            kind = zipfile.ZIP_STORED if name in stored else zipfile.ZIP_DEFLATED
+            zf.writestr(zipfile.ZipInfo(name), data, kind)
+    return buf.getvalue()
 
 
 def ensure_interleaved(sf: float) -> str:

@@ -18,8 +18,6 @@ the grammar contract documented in signal.py / operators/docx.py.
 from __future__ import annotations
 
 import hashlib
-import io
-import zipfile
 from xml.sax.saxutils import escape, quoteattr
 
 from wordscape_spark import datagen
@@ -375,13 +373,7 @@ def _zip_parts(b: _Builder) -> bytes:
         )
     parts.update((f"word/{target}", data) for target, data in b.media.items())
 
-    # a bare-name writestr stamps the entry with the clock; a ZipInfo keeps
-    # its fixed 1980-01-01 date_time, so the same parts give the same bytes
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        for name, data in parts.items():
-            zf.writestr(zipfile.ZipInfo(name), data, zipfile.ZIP_DEFLATED)
-    return buf.getvalue()
+    return datagen.zip_bytes(parts.items())
 
 
 # ---------------------------------------------------------------------------

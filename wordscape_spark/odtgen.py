@@ -49,7 +49,6 @@ is the fourth Word-family container next to .doc/.docx/RTF.
 from __future__ import annotations
 
 import hashlib
-import zipfile
 
 from wordscape_spark import datagen, rtfgen
 from wordscape_spark import signal as sig
@@ -285,24 +284,16 @@ def build_odt(
         ' manifest:version="1.2">%s</manifest:manifest>' % entries
     ).encode("utf-8")
 
-    import io
-
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr(
-            zipfile.ZipInfo("mimetype"),
-            MIMETYPE,
-            compress_type=zipfile.ZIP_STORED,
-        )
-        parts = [
+    return datagen.zip_bytes(
+        [
+            ("mimetype", MIMETYPE),
             ("META-INF/manifest.xml", manifest_xml),
             ("content.xml", content_xml),
             ("styles.xml", styles_xml),
             *pictures,
-        ]
-        for name, data in parts:  # ZipInfo: fixed 1980-01-01 stamp
-            zf.writestr(zipfile.ZipInfo(name), data, zipfile.ZIP_DEFLATED)
-    return buf.getvalue()
+        ],
+        stored=("mimetype",),
+    )
 
 
 def render_doc(doc_id: str, spans: list[dict]) -> bytes:

@@ -13,16 +13,17 @@ Scale shape (100 TB):
 * the quality gate is a per-row flag on the corpus scan (zero Exchange —
   `gopher_quality(keep_cols=...)` rides the payload columns through, no
   join back);
-* the gate's survivors are hash-partitioned by doc_id into one partition
-  per core (`defaultParallelism`) before their pin.  The gate still runs
-  in the scan stage, below that exchange, so only survivors cross it.
-  The count is explicit because AQE coalesces a count-less repartition
-  by bytes, and a few hundred KB of text would come back as one task; a
-  one-row-group input scans as one task too, and `exact`'s semi-join
-  against the small keep aggregate is a broadcast that keeps whatever
-  partitioning it gets.  Spread here, the MinHash signature, band,
-  verify and survivor stages run one task per core, and the later
-  doc_id joins reuse the partitioning;
+* a scan that plans fewer partitions than cores (a small input; one
+  row group scans as one task) has its gate survivors hash-partitioned
+  by doc_id into one partition per core before their pin, so the
+  MinHash signature, band, verify and survivor stages run one task per
+  core.  The gate still runs in the scan stage, below that exchange, so
+  only survivors cross it.  The count is explicit because AQE coalesces
+  a count-less repartition of a few hundred KB into one task.  A scan
+  of at least one split per core, as any 100 TB scan is, keeps its
+  splits and crosses no exchange, so the spread costs nothing at scale.
+  The rule reads planned splits, not non-empty ones: one row group
+  larger than cores x the split size still scans as one task;
 * exact dedup aggregates (bytehash, doc_id) only and rejoins by doc_id —
   the text column never shuffles for it;
 * near-dedup shuffles MinHash signatures and band keys, never text
@@ -42,6 +43,7 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
+import sys
 from functools import reduce
 
 import pyspark.sql.functions as F
@@ -84,24 +86,20 @@ def curate(
     # aggregate, its semi-join and the funnel; exact feeds the MinHash
     # stage, the survivor join and the funnel; near feeds the budget and
     # the funnel.  Unpinned, each consumer re-runs the upstream chain: the
-    # gate would run four times per pass.  On a real 100 TB run the stage
-    # boundaries commit through plans.checkpoint instead.
-    #
-    # The gated survivors are spread by doc_id, one partition per core,
-    # before the pin (see "Scale shape"): on a one-row-group input every
-    # later stage, the md5 signatures included, would otherwise run on
-    # one core.  The gate stays in the scan stage, below the exchange.
+    # gate would run four times per pass, each a single task on a
+    # one-row-group input.  On a real 100 TB run the stage boundaries
+    # commit through plans.checkpoint instead.
     quality = (
         QR.gopher_quality(
             base, min_words=min_words, keep_cols=("lang", "text", "tokens")
         )
         .filter("gopher_pass")
         .select("doc_id", "lang", "text", "tokens")
-        .repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, "doc_id"
-        )
-        .persist()
     )
+    cores = docs.sparkSession.sparkContext.defaultParallelism
+    if _planned_partitions(docs) < cores:  # see "Scale shape"
+        quality = quality.repartition(cores, "doc_id")
+    quality = quality.persist()
 
     keep = D.exact_duplicate_groups(quality).select(
         F.col("keep_doc_id").alias("doc_id")
@@ -123,6 +121,16 @@ def curate(
         "near_dedup": near,
         "token_budget": budget,
     }
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """How many partitions ``df``'s physical plan reads, found without a
+    job.  A plan with an exchange is adaptive, and AQE would run its
+    stages to answer, so it counts as already spread."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return sys.maxsize
+    return plan.execute().getNumPartitions()
 
 
 def funnel(stages: dict[str, DataFrame]) -> DataFrame:
