@@ -81,10 +81,9 @@ def fuzz_doc(rng: random.Random) -> list[tuple]:
 
 
 def test_fuzz_salted_matches_oracle(spark):
+    """The full salted row, min-text gate included: with no minimum every
+    doc classifies, and the default minimum rejects salted docs too."""
     rng = random.Random(20260816)
-    cfg = dataclasses.replace(
-        DEFAULT_CONFIG, min_text_chars=0, salt_threshold=5, salt_chunk_spans=4
-    )
     docs = {f"fz-{i:04d}": fuzz_doc(rng) for i in range(300)}
 
     rows = [
@@ -98,20 +97,37 @@ def test_fuzz_salted_matches_oracle(spark):
         for doc_id, spans in docs.items()
     ]
     df = spark.createDataFrame(rows, schema=X.INPUT_SCHEMA)
-    got = {r["doc_id"]: r for r in X.extract(df, cfg).collect()}
-
-    for doc_id, spans in docs.items():
-        expected = C.classify_document(spans, cfg)
-        g = got[doc_id]
-        assert g["ok"] == expected.ok, doc_id
-        got_spans = [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in g["spans"]
-        ]
-        assert got_spans == expected.spans, doc_id
-        assert g["text"] == expected.text, doc_id
-        assert dict(g["counts"]) == expected.counts, doc_id
-        assert g["quality"] == pytest.approx(expected.quality), doc_id
+    for min_text in (0, DEFAULT_CONFIG.min_text_chars):
+        cfg = dataclasses.replace(
+            DEFAULT_CONFIG, min_text_chars=min_text, salt_threshold=5,
+            salt_chunk_spans=4,
+        )
+        got = {r["doc_id"]: r for r in X.extract(df, cfg).collect()}
+        salted_min_text = 0
+        for doc_id, spans in docs.items():
+            expected = C.classify_document(spans, cfg)
+            g = got[doc_id]
+            assert g["ok"] == expected.ok, doc_id
+            assert g["reject_reason"] == expected.reject_reason, doc_id
+            salted_min_text += (
+                expected.reject_reason == "min_text" and len(spans) > 5
+            )
+            got_spans = [
+                (s["kind"], s["text"], s["media_ref"], s["offset"])
+                for s in g["spans"]
+            ]
+            assert got_spans == expected.spans, doc_id
+            assert [s["page"] for s in g["spans"]] == expected.span_pages
+            assert g["text"] == expected.text, doc_id
+            assert dict(g["counts"]) == expected.counts, doc_id
+            assert g["quality"] == pytest.approx(expected.quality), doc_id
+            assert [
+                (p["page"], p["text"], dict(p["counts"])) for p in g["pages"]
+            ] == [(p, t, dict(c)) for p, t, c in expected.pages], doc_id
+            assert dict(g["props"]) == expected.props, doc_id
+            assert list(g["lang_tags"]) == expected.lang_tags, doc_id
+        # the default minimum reaches the salted merge's min-text gate
+        assert min_text == 0 or salted_min_text > 0
 
 
 def test_fuzz_flat_decode_path(spark):

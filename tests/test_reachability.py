@@ -167,3 +167,25 @@ def test_kind_fields_parse_only_in_signal():
                 if any(field in text for field in KIND_FIELDS):
                     holders.add(path.relative_to(PKG).as_posix())
     assert holders <= {"signal.py"}, holders
+
+
+def test_accepted_doc_results_are_built_only_by_merge_parts():
+    """An accepted ``DocResult`` (``ok`` argument ``True``) is built in
+    ``core/classify.merge_parts`` alone: the whole-document kernel and the
+    salted mega-doc merge both assemble a document through that one merge
+    of classified parts, so a second document assembly cannot land
+    unnoticed."""
+    sites = []
+    for path, tree in _trees().items():
+        for top in tree.body:
+            for n in ast.walk(top):
+                if not (isinstance(n, ast.Call) and "DocResult" in (
+                        getattr(n.func, "id", None),
+                        getattr(n.func, "attr", None))):
+                    continue
+                ok = n.args[0] if n.args else next(
+                    (k.value for k in n.keywords if k.arg == "ok"), None)
+                if isinstance(ok, ast.Constant) and ok.value is True:
+                    sites.append(f"{path.relative_to(ROOT).as_posix()}:"
+                                 f"{getattr(top, 'name', n.lineno)}")
+    assert sites == ["wordscape_spark/core/classify.py:merge_parts"], sites

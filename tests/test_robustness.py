@@ -60,6 +60,10 @@ def mega_docs(base_spans):
         ],
         # offsets arrive out of order
         "shuffled": shuffled,
+        # salted, yet under min_text_chars: the merge's min-text gate
+        "short": [
+            (k, t[:5] if t else t, m, o) for k, t, m, o in base_spans[:12]
+        ],
     }
 
 
@@ -91,6 +95,9 @@ def test_salted_adversarial_docs_match_small_path_and_oracle(spark, mega_docs):
     assert oracle["null_kind"][1].startswith("error:")
     assert oracle["control"][0] and oracle["shuffled"][0]
     assert oracle["shuffled"] == oracle["control"]
+    assert len(mega_docs["short"]) > SALTED.salt_threshold
+    assert oracle["short"][:2] == (False, "min_text")
+    assert oracle["short"][3]  # a rejected doc keeps its text
 
     assert _extracted(spark, mega_docs, SALTED) == oracle
     assert _extracted(spark, mega_docs, SMALL) == oracle

@@ -252,25 +252,6 @@ def serialize_table(tbl: TableEl) -> str:
     return tbl._text
 
 
-def serialize_text(elements: Iterable[Element]) -> str:
-    """Body-order document text (ref: text_extraction.py:85-118).
-
-    Nested tables are excluded: the reference walks top-level body children
-    and ``_Cell.text`` covers the cell's paragraphs only, so nested-table
-    content never reaches the document text (text_extraction.py:96-118)."""
-    parts = []
-    for el in elements:
-        if isinstance(el, BodyPar):
-            s = el.text
-        elif isinstance(el, TableEl) and el.parent is None:
-            s = serialize_table(el)
-        else:
-            continue  # header/footer/textbox/sdt/figure are not body children
-        if len(s) > 0:
-            parts.append(s)
-    return "\n".join(parts)
-
-
 # --------------------------------------------------------------------------
 # font heuristics (C10)
 # --------------------------------------------------------------------------
@@ -291,9 +272,8 @@ class FontHeuristics:
     """Per-document fontprop→level map (ref: build_heuristics.py:27-263).
 
     The accumulation state (font_size_count / appearances / tracker) is
-    strictly additive per paragraph, so it can be computed on paragraph-
-    aligned chunks of a skewed mega-document and merged before ``build()`` —
-    the engine's salted path relies on this.
+    strictly additive per paragraph, so the salted path computes it once per
+    skewed mega-document and rebuilds the map per chunk with ``from_state``.
     """
 
     def __init__(self, cfg: ExtractConfig):
@@ -313,24 +293,22 @@ class FontHeuristics:
         h._build_map()
         return h
 
-    def merge_state(
-        self,
+    @classmethod
+    def from_state(
+        cls,
+        cfg: ExtractConfig,
         font_size_count: dict[str, int],
         font_size_appearances: dict[str, int],
         tracker: Iterable[tuple[str, int]],
-    ) -> None:
-        for k, v in font_size_count.items():
-            self.font_size_count[k] = self.font_size_count.get(k, 0) + v
-        for k, v in font_size_appearances.items():
-            self.font_size_appearances[k] = (
-                self.font_size_appearances.get(k, 0) + v
-            )
-        self.builtin_heading_tracker.extend(
-            (fp, int(level)) for fp, level in tracker
-        )
-
-    def build(self) -> None:
-        self._build_map()
+    ) -> "FontHeuristics":
+        """The map from a whole document's accumulated state (the salted
+        path's chunk rows carry it)."""
+        h = cls(cfg)
+        h.font_size_count = font_size_count
+        h.font_size_appearances = font_size_appearances
+        h.builtin_heading_tracker = list(tracker)
+        h._build_map()
+        return h
 
     def _evaluate_paragraph(self, par: BodyPar) -> None:
         heading_level = _HEADING_STYLE_LEVEL.get(par.style)
@@ -932,30 +910,38 @@ def _classify_table(
         counts[tax.TABLE_HEADER] = counts.get(tax.TABLE_HEADER, 0) + 1
 
 
-def classify_elements(
-    elements: Sequence[Element],
-    heuristics: FontHeuristics,
-) -> tuple[
+# One classified part of a document, mergeable with its neighbours by
+# ``merge_parts``: (out_spans, span_pages, pages, counts, char_counter,
+# props, lang_tags).
+Part = tuple[
     list[tuple[str, str, str | None]],
-    dict[int, list[float]],
-    dict[str, int],
     list[int],
     list[tuple[int, str, dict[str, int]]],
-]:
+    dict[str, int],
+    dict[int, list[float]],
+    dict[str, str],
+    list[str],
+]
+
+
+def classify_elements(
+    elements: Sequence[Element], heuristics: FontHeuristics
+) -> Part:
     """Classify pre-parsed elements with a prebuilt heuristic map.
 
-    Returns (out_spans, char_counter, counts, span_pages, pages) where
+    Returns the ``Part`` (out_spans, span_pages, pages, counts,
+    char_counter, props, lang_tags): ``span_pages[i]`` is the 1-based page
+    of ``out_spans[i]``; ``pages`` is one (page_number, page_text,
+    page_counts) record per physical page (PageMetadataRecordDB analog,
+    orm/models.py:132-187), empty pages included like blank rendered pages;
     ``char_counter`` is the builtin/heuristic char mass per entity id
-    (annotation_quality.py input; mergeable by summation) and
-    ``span_pages[i]`` is the 1-based page of ``out_spans[i]`` and ``pages``
-    is one (page_number, page_text, page_counts) record per physical page
-    (PageMetadataRecordDB analog, orm/models.py:132-187) — empty pages
-    included, like blank rendered pages.
+    (annotation_quality.py input); ``props`` and ``lang_tags`` are the
+    document-intrinsic metadata (oxml_metadata.py:33-58) in element order.
 
-    Shared by the whole-document path and the salted mega-document chunk
-    path (the classification of an element depends only on the element and
-    the document-level font map, never on neighboring elements; page numbers
-    are offset at chunk-merge time).
+    The elements are a whole document or one chunk of a salted mega-document
+    (the classification of an element depends only on the element and the
+    document-level font map, never on neighboring elements); ``merge_parts``
+    turns the parts into the ``DocResult``.
     """
     out_spans: list[tuple[str, str, str | None]] = []
     counter: dict[int, list[float]] = {}
@@ -965,6 +951,8 @@ def classify_elements(
     n_pages = 1
     page_counts: dict[int, dict[str, int]] = {}
     page_text_parts: dict[int, list[str]] = {}
+    props: dict[str, str] = {}
+    lang_tags: list[str] = []
 
     for el in elements:
         if isinstance(el, PageBreak):
@@ -972,6 +960,10 @@ def classify_elements(
             n_pages = page
             continue
         if isinstance(el, Meta):
+            if el.key == "lang_tag":
+                lang_tags.append(el.value)
+            elif el.key:
+                props[el.key] = el.value
             continue
 
         before = len(out_spans)
@@ -1035,7 +1027,11 @@ def classify_elements(
                     pc[k] = pc.get(k, 0) + v
                     counts[k] = counts.get(k, 0) + v
 
-        # per-page body text (same serialization rule as serialize_text)
+        # per-page body text, the one text serialization
+        # (ref: text_extraction.py:85-118): body paragraphs and top-level
+        # tables only.  The reference walks top-level body children and
+        # ``_Cell.text`` covers the cell's paragraphs only, so nested-table
+        # content never reaches the text (text_extraction.py:96-118)
         if isinstance(el, BodyPar):
             s = el.text
         elif isinstance(el, TableEl) and el.parent is None:
@@ -1051,7 +1047,57 @@ def classify_elements(
         (p, "\n".join(page_text_parts.get(p, [])), page_counts.get(p, {}))
         for p in range(1, n_pages + 1)
     ]
-    return out_spans, counter, counts, span_pages, pages
+    return out_spans, span_pages, pages, counts, counter, props, lang_tags
+
+
+def merge_parts(parts: Iterable[Part], cfg: ExtractConfig) -> DocResult:
+    """The ``DocResult`` of one document from its classified parts in
+    document order: the whole document is the case of one part.
+
+    Spans are renumbered in order; a part's page 1 continues the previous
+    part's last page (a part boundary is never a page break), so pages merge
+    their texts and counts and stay in ascending order.  The document text
+    is the non-empty page texts joined by "\n", then the min-text gate and
+    the quality score apply to the whole."""
+    spans: list[tuple[str, str, str | None, int]] = []
+    span_pages: list[int] = []
+    merged: dict[int, tuple[list[str], dict[str, int]]] = {}
+    counts: dict[str, int] = {}
+    counter: dict[int, list[float]] = {}
+    props: dict[str, str] = {}
+    lang_tags: set[str] = set()
+    offset = 0
+    for out, out_pages, pages, part_counts, part_counter, meta, tags in parts:
+        spans += [(k, t, m, i) for i, (k, t, m) in enumerate(out, len(spans))]
+        span_pages += [p + offset for p in out_pages] if offset else out_pages
+        for p, text, page_counts in pages:
+            texts, pc = merged.setdefault(p + offset, ([], {}))
+            if text:
+                texts.append(text)
+            for k, v in page_counts.items():
+                pc[k] = pc.get(k, 0) + v
+        offset += len(pages) - 1
+        for k, v in part_counts.items():
+            counts[k] = counts.get(k, 0) + v
+        for entity_id, (b, h) in part_counter.items():
+            rec = counter.setdefault(entity_id, [0.0, 0.0])
+            rec[0] += b
+            rec[1] += h
+        props.update(meta)
+        lang_tags.update(tags)
+    doc_pages = [(p, "\n".join(ts), pc) for p, (ts, pc) in merged.items()]
+    text = "\n".join(t for _, t, _ in doc_pages if t)
+    if len(text) < cfg.min_text_chars:
+        # min-text gate (ref: annotator_process.py:461-465)
+        return DocResult(False, "min_text", [], text, {}, 0.0, {})
+    quality, builtin_props = quality_from_counter(counter, counts)
+    return DocResult(
+        True, None, spans, text, counts, quality, builtin_props,
+        span_pages=span_pages, pages=doc_pages, props=props,
+        # the reference returns list(set(...)) (oxml_metadata.py:33-41);
+        # sorted here so distributed results are deterministic
+        lang_tags=sorted(lang_tags),
+    )
 
 
 def classify_document(
@@ -1061,40 +1107,11 @@ def classify_document(
     """Classify one interleaved document into its ordered span sequence."""
     if len(spans) > cfg.max_doc_spans:
         return DocResult(False, "too_many_spans", [], "", {}, 0.0, {})
-
     elements = parse_elements(spans)
-    doc_text = serialize_text(elements)
-    if len(doc_text) < cfg.min_text_chars:
-        # min-text gate (ref: annotator_process.py:461-465)
-        return DocResult(False, "min_text", [], doc_text, {}, 0.0, {})
-
     heuristics = FontHeuristics.from_pars(
         [el for el in elements if isinstance(el, BodyPar)], cfg
     )
-    out_spans, char_counter, counts, span_pages, pages = classify_elements(
-        elements, heuristics
-    )
-
-    quality, builtin_props = quality_from_counter(char_counter, counts)
-    final = [
-        (kind, text, media_ref, i)
-        for i, (kind, text, media_ref) in enumerate(out_spans)
-    ]
-    props: dict[str, str] = {}
-    lang_tags: set[str] = set()
-    for el in elements:
-        if isinstance(el, Meta):
-            if el.key == "lang_tag":
-                lang_tags.add(el.value)
-            elif el.key:
-                props[el.key] = el.value
-    return DocResult(
-        True, None, final, doc_text, counts, quality, builtin_props,
-        span_pages=span_pages, pages=pages, props=props,
-        # the reference returns list(set(...)) (oxml_metadata.py:33-41);
-        # sorted here so distributed results are deterministic
-        lang_tags=sorted(lang_tags),
-    )
+    return merge_parts([classify_elements(elements, heuristics)], cfg)
 
 
 def quality_from_counter(

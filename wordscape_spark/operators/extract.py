@@ -10,15 +10,17 @@ Execution strategy (designed for 10^12-row scale):
 * Skewed mega-documents (more than ``cfg.salt_threshold`` spans) would
   stall a task the way one huge doc stalls a reference worker (SURVEY
   §4.1).  They take the *salted path*: a ``mapInArrow`` task chunks each
-  mega-doc at element boundaries and computes the doc's font-heuristic
-  state (additive per paragraph, so one pass in chunk order), which rides
-  on every chunk row as typed columns; a ``repartition`` over (doc_id,
-  chunk_idx) spreads the chunks over the cluster (the salt); a second
-  ``mapInArrow`` classifies chunks in parallel, and a grouped
-  ``applyInArrow`` re-merges the partial results in chunk order.  Every
-  Python stage decodes spans with the same flat-child Arrow decode, and
-  both paths build their output rows with the one ``_record_batch``
-  builder.  Results are bit-identical to the single-pass path (tested).
+  mega-doc at element boundaries and builds the doc's font-heuristic state
+  (``FontHeuristics.from_pars`` over the chunks' body paragraphs), which
+  rides on every chunk row as typed columns; a ``repartition`` over
+  (doc_id, chunk_idx) spreads the chunks over the cluster (the salt); a
+  second ``mapInArrow`` classifies chunks in parallel into the kernel's
+  classified parts, and a grouped ``applyInArrow`` hands a doc's parts in
+  chunk order to ``merge_parts``, the kernel's own document assembly (the
+  whole-document kernel is the case of one part).  Every Python stage
+  decodes spans with the same flat-child Arrow decode, and both paths build
+  their output rows with the one ``_record_batch`` builder.  Results are
+  bit-identical to the single-pass path (tested).
 * Oversized documents (more than ``cfg.max_doc_spans`` spans) are rejected
   inside the Python pass that first sees them — the kernel
   (``classify_document``) or the chunk UDF — before any classification
@@ -27,7 +29,6 @@ Execution strategy (designed for 10^12-row scale):
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from itertools import accumulate
 
 import pyspark.sql.functions as F
@@ -142,14 +143,15 @@ _CHUNK_SCHEMA = StructType(
     ]
 )
 
+# a chunk's classified part: ``C.Part``'s fields in order, pages chunk-local
 _PARTIAL_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("chunk_idx", IntegerType()),
         StructField("reject_reason", StringType()),
-        StructField("spans", ArrayType(OUT_SPAN_TYPE)),  # page is chunk-local
-        StructField("pages", ArrayType(PAGE_TYPE)),      # chunk-local pages
-        StructField("text", StringType()),
+        StructField("spans", ArrayType(StructType(SPAN_TYPE.fields[:3]))),
+        StructField("span_pages", ArrayType(IntegerType())),
+        StructField("pages", ArrayType(PAGE_TYPE)),
         StructField("counts", MapType(StringType(), LongType())),
         # builtin / heuristic char mass per entity id
         StructField(
@@ -245,17 +247,12 @@ def _record_batch(results, arrow_schema):
         rejects.append(r.reject_reason)
         spans = r.spans
         if spans:
-            pages = (
-                r.span_pages
-                if len(r.span_pages) == len(spans)
-                else [1] * len(spans)
-            )
             ks, ts, ms, os_ = zip(*spans)
             sk.extend(ks)
             st.extend(ts)
             sm.extend(ms)
             so.extend(os_)
-            sp.extend(pages)
+            sp.extend(r.span_pages)
             stot += len(spans)
         soff.append(stot)
     columns = [
@@ -417,20 +414,6 @@ def _chunk_spans(spans: list[tuple], target: int) -> list[list[tuple]]:
     return chunks
 
 
-def _font_state_of(
-    chunks: list[list[tuple]], cfg: ExtractConfig
-) -> C.FontHeuristics:
-    """The document's font-heuristic state, not yet built.  The state is
-    additive over paragraphs in document order, so one pass over the
-    chunks' elements in chunk order yields exactly the single-pass state."""
-    h = C.FontHeuristics(cfg)
-    for chunk in chunks:
-        for el in C.parse_elements(chunk):
-            if isinstance(el, C.BodyPar):
-                h._evaluate_paragraph(el)
-    return h
-
-
 def _make_chunk_fn(cfg: ExtractConfig):
     """Split each mega-doc into chunks and put the whole doc's font state on
     every chunk row.  A doc that cannot be chunked becomes one marker row
@@ -455,7 +438,12 @@ def _make_chunk_fn(cfg: ExtractConfig):
                 else:
                     try:
                         chunks = _chunk_spans(spans, cfg.salt_chunk_spans)
-                        h = _font_state_of(chunks, cfg)
+                        h = C.FontHeuristics.from_pars(
+                            [el for chunk in chunks
+                             for el in C.parse_elements(chunk)
+                             if isinstance(el, C.BodyPar)],
+                            cfg,
+                        )
                     except Exception as exc:  # noqa: BLE001 — fault isolation
                         reason = f"error:{type(exc).__name__}"
                 if reason is not None:
@@ -472,75 +460,34 @@ def _make_chunk_fn(cfg: ExtractConfig):
     return chunk_batches
 
 
-def _heuristics_at(batch, i: int, cfg: ExtractConfig) -> C.FontHeuristics:
-    """The built font heuristics from chunk row ``i``'s typed state."""
-    h = C.FontHeuristics(cfg)
-    h.merge_state(
-        dict(batch.column("font_counts")[i].as_py()),
-        dict(batch.column("font_apps")[i].as_py()),
-        [(t["fp"], t["level"]) for t in batch.column("font_tracker")[i].as_py()],
-    )
-    h.build()
-    return h
-
-
 def _make_chunk_classify_fn(cfg: ExtractConfig):
+    """Classify each chunk row into its ``C.Part`` with the heuristics
+    built from the row's font state; a fault becomes the row's reject."""
     arrow_schema = to_arrow_schema(_PARTIAL_SCHEMA)
+    no_part = ([], [], [], {}, {}, {}, [])
 
     def classify_chunks(batches):
-        # bounded per-task LRU: evict one entry at a time so a task
-        # interleaving chunks of >64 mega-docs re-derives only the coldest
-        # heuristics map, not all of them
-        heuristics_cache: OrderedDict[str, C.FontHeuristics] = OrderedDict()
         for batch in batches:
             rows = []
-            for i, (doc_id, chunk_idx, reason, spans) in enumerate(zip(
+            for doc_id, chunk_idx, reason, spans, fc, fa, tracker in zip(
                 batch.column("doc_id").to_pylist(),
                 batch.column("chunk_idx").to_pylist(),
                 batch.column("reject_reason").to_pylist(),
                 _struct_rows(batch.column("spans")),
-            )):
+                batch.column("font_counts").to_pylist(),
+                batch.column("font_apps").to_pylist(),
+                _struct_rows(batch.column("font_tracker"), ("fp", "level")),
+            ):
+                part = no_part
                 if reason is None:
                     try:
-                        h = heuristics_cache.get(doc_id)
-                        if h is None:
-                            h = _heuristics_at(batch, i, cfg)
-                            heuristics_cache[doc_id] = h
-                            if len(heuristics_cache) > 64:
-                                heuristics_cache.popitem(last=False)
-                        else:
-                            heuristics_cache.move_to_end(doc_id)
-                        elements = C.parse_elements(spans)
-                        out_spans, char_counter, counts, span_pages, pages = (
-                            C.classify_elements(elements, h)
+                        h = C.FontHeuristics.from_state(
+                            cfg, dict(fc), dict(fa), tracker
                         )
+                        part = C.classify_elements(C.parse_elements(spans), h)
                     except Exception as exc:  # noqa: BLE001 — fault isolation
                         reason = f"error:{type(exc).__name__}"
-                if reason is not None:
-                    rows.append((doc_id, chunk_idx, reason, [], [], "",
-                                 {}, {}, {}, []))
-                    continue
-                props: dict[str, str] = {}
-                lang_tags: list[str] = []
-                for el in elements:
-                    if isinstance(el, C.Meta):
-                        if el.key == "lang_tag":
-                            lang_tags.append(el.value)
-                        elif el.key:
-                            props[el.key] = el.value
-                rows.append((
-                    doc_id,
-                    chunk_idx,
-                    None,
-                    [(k, t, m, j, p) for j, ((k, t, m), p) in enumerate(
-                        zip(out_spans, span_pages))],
-                    pages,
-                    C.serialize_text(elements),
-                    counts,
-                    char_counter,
-                    props,
-                    lang_tags,
-                ))
+                rows.append((doc_id, chunk_idx, reason, *part))
             if rows:
                 yield rows_batch(rows, arrow_schema)
 
@@ -548,10 +495,8 @@ def _make_chunk_classify_fn(cfg: ExtractConfig):
 
 
 def _make_merge_partials_fn(cfg: ExtractConfig, out_schema: StructType):
-    """The grouped ``applyInArrow`` merge of one mega-doc's chunk results:
-    the first reject in chunk order rejects the doc, otherwise the partial
-    spans, pages, counts, char counters and metadata are summed in chunk
-    order into one ``C.DocResult``, which ``_record_batch`` turns into an
+    """The grouped ``applyInArrow`` merge of one mega-doc's chunk results
+    into one ``C.DocResult``, which ``_record_batch`` turns into an
     ``out_schema`` row (full or slim: the merge logic is identical, only the
     returned row, and therefore the Arrow return-leg volume, differs)."""
 
@@ -569,67 +514,25 @@ def _make_merge_partials_fn(cfg: ExtractConfig, out_schema: StructType):
 
 def _merged_result(batch, cfg: ExtractConfig) -> C.DocResult:
     """One mega-doc's DocResult from its ``_PARTIAL_SCHEMA`` rows in chunk
-    order."""
+    order: the first reject rejects the doc, otherwise the decoded parts go
+    to ``C.merge_parts``."""
     for reason in batch.column("reject_reason").to_pylist():
         if reason is not None:
             return C.DocResult(False, reason, [], "", {}, 0.0, {})
-    text = "\n".join(t for t in batch.column("text").to_pylist() if len(t) > 0)
-    if len(text) < cfg.min_text_chars:
-        return C.DocResult(False, "min_text", [], text, {}, 0.0, {})
-    spans: list[tuple] = []
-    span_pages: list[int] = []
-    counts: dict[str, int] = {}
-    counter: dict[int, list[float]] = {}
-    # page renumbering: chunk-local pages are 1-based; chunk i's page 1
-    # continues the last page of chunk i-1 (a chunk boundary is never a
-    # page break), so the running offset grows by (chunk_pages - 1)
-    page_offset = 0
-    merged_pages: dict[int, tuple[list[str], dict[str, int]]] = {}
-    doc_props: dict[str, str] = {}
-    lang_tags: set[str] = set()
-    for chunk_spans, chunk_pages, chunk_counts, chunk_counter, props, tags in zip(
-        _struct_rows(batch.column("spans"), ("kind", "text", "media_ref", "page")),
-        _struct_rows(batch.column("pages"), ("page", "text", "counts")),
-        batch.column("counts").to_pylist(),
-        batch.column("char_counter").to_pylist(),
-        batch.column("props").to_pylist(),
-        batch.column("lang_tags").to_pylist(),
-    ):
-        for k, t, m, p in chunk_spans:
-            spans.append((k, t, m, len(spans)))
-            span_pages.append(p + page_offset)
-        for p, t, page_counts in chunk_pages:
-            rec = merged_pages.setdefault(p + page_offset, ([], {}))
-            if t:
-                rec[0].append(t)
-            for k, v in page_counts:
-                rec[1][k] = rec[1].get(k, 0) + v
-        page_offset += max(len(chunk_pages) - 1, 0)
-        for k, v in chunk_counts:
-            counts[k] = counts.get(k, 0) + v
-        for ent_id, (b, h) in chunk_counter:
-            slot = counter.setdefault(ent_id, [0.0, 0.0])
-            slot[0] += b
-            slot[1] += h
-        doc_props.update(props)
-        lang_tags.update(tags)
-    quality, builtin_props = C.quality_from_counter(counter, counts)
-    return C.DocResult(
-        True,
-        None,
-        spans,
-        text,
-        counts,
-        quality,
-        builtin_props,
-        span_pages=span_pages,
-        pages=[
-            (p, "\n".join(parts), pc)
-            for p, (parts, pc) in sorted(merged_pages.items())
-        ],
-        props=doc_props,
-        lang_tags=sorted(lang_tags),
+    spans = _struct_rows(batch.column("spans"), ("kind", "text", "media_ref"))
+    pages = _struct_rows(batch.column("pages"), ("page", "text", "counts"))
+    span_pages, counts, counters, props, tags = (
+        batch.column(name).to_pylist() for name in
+        ("span_pages", "counts", "char_counter", "props", "lang_tags")
     )
+    parts = [
+        (s, sp, [(p, t, dict(c)) for p, t, c in pg], dict(n), dict(cc),
+         dict(pr), tg)
+        for s, sp, pg, n, cc, pr, tg in zip(
+            spans, span_pages, pages, counts, counters, props, tags
+        )
+    ]
+    return C.merge_parts(parts, cfg)
 
 
 # ---------------------------------------------------------------------------
@@ -712,9 +615,9 @@ def _extract_salted(
     ``mapInArrow`` classify → grouped ``applyInArrow`` merge, three Python
     stages and two shuffles.
 
-    The chunk task holds the whole doc and parses every chunk anyway, so it
-    also computes the doc's font state and puts it on every chunk row as
-    typed columns (``map<string,bigint>`` counts and appearances, an
+    The chunk task holds the whole doc, so it builds the doc's font state
+    (``FontHeuristics.from_pars`` over the chunks' body paragraphs) and puts
+    it on every chunk row as typed columns (``map<string,bigint>`` counts and appearances, an
     ``array<struct<fp,level>>`` heading tracker): no per-chunk states to
     merge, no join back to the chunks, and no persist of a frame read
     twice.  A doc's fault travels as a nullable ``reject_reason`` column to
