@@ -160,35 +160,58 @@ def test_media_resize_and_frames(spark):
 
 
 def test_scalable_doc_id_equals_window(spark):
-    """The range-bucketed scalable doc-id path must equal the single-window
-    variant bit-for-bit (bucket = ordering-key prefix ⇒ same global order)."""
+    """The range-bucketed doc-id rank must equal one window per source
+    bit-for-bit (bucket = ordering-key prefix ⇒ same global order),
+    NULL urls and NULL sources included.  Each source gets one NULL-url
+    row and gives one row to the NULL source: ties among NULL keys are
+    unordered in both forms, so no partition holds two."""
     import pyspark.sql.functions as F
+    from pyspark.sql.window import Window
 
     from wordscape_spark.operators import urls as U
 
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    ends = df.groupBy("source").agg(
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+    ).collect()
+    null_url = [r["lo"] for r in ends]
+    null_source = [r["hi"] for r in ends]
     df = U.with_url_hash(
         df.withColumn(
             "url",
-            F.expr(
+            F.when(~F.col("doc_id").isin(null_url), F.expr(
                 "concat('https://example.com/', source, '/', "
                 "CAST(doc_id AS STRING), '.docx')"
-            ),
+            )),
+        ).withColumn(
+            "source",
+            F.when(~F.col("doc_id").isin(null_source), F.col("source")),
         )
     )
+    w = Window.partitionBy("source").orderBy("url_hash")
+    window = df.withColumn(
+        "assigned_doc_id",
+        F.concat_ws(
+            "-", "source",
+            F.lpad(F.row_number().over(w).cast("string"), 9, "0"),
+        ),
+    )
     a = {
+        r["doc_id"]: r["assigned_doc_id"]
+        for r in window.select("doc_id", "assigned_doc_id").collect()
+    }
+    b = {
         r["doc_id"]: r["assigned_doc_id"]
         for r in U.assign_doc_ids(df).select(
             "doc_id", "assigned_doc_id"
         ).collect()
     }
-    b = {
-        r["doc_id"]: r["assigned_doc_id"]
-        for r in U.assign_doc_ids(df, scalable=True).select(
-            "doc_id", "assigned_doc_id"
-        ).collect()
-    }
+    assert len(a) == df.count()
     assert a == b
+    # NULL keys rank first in their source
+    assert {b[d] for d in null_url} == {
+        f"{r['source']}-000000001" for r in ends
+    }
 
 
 def test_percentile_approx_is_tight(spark):
@@ -415,26 +438,6 @@ def test_url_quality_filter_plan_zero_exchange(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
-
-
-def test_url_quality_filter_blocklist_df_matches_literal(spark):
-    from wordscape_spark.operators import urls as U
-
-    urls = [(f"https://{d}/x.docx",) for d in U.DEFAULT_BLOCKLIST]
-    urls += [("https://ok.example/y.docx",), (None,)]
-    df = spark.createDataFrame(urls, "url string")
-    lit = U.url_quality_filter(df).orderBy("url").collect()
-    bl = spark.createDataFrame(
-        [(d,) for d in U.DEFAULT_BLOCKLIST], "domain string"
-    )
-    joined = (U.url_quality_filter(df, blocklist_df=bl)
-              .select(*lit[0].asDict().keys()).orderBy("url").collect())
-    assert [r.asDict() for r in lit] == [r.asDict() for r in joined]
-    # and the join side stays broadcast: no shuffle of the url corpus
-    plan = (U.url_quality_filter(df, blocklist_df=bl)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan
-    assert "ShuffledHashJoin" not in plan and "SortMergeJoin" not in plan
 
 
 # ------------------------------------------------------------- domain cap

@@ -22,14 +22,13 @@ def _stream(doc_id: int) -> int:
     return int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) % N_STREAMS
 
 
-def _py_pack(add_eos=True):
-    eos = 1 if add_eos else 0
+def _py_pack():
     rows = []
     by_stream: dict[int, list[tuple[int, int]]] = {}
     for doc_id, nt in DOCS:
         if nt == 0:
             continue
-        by_stream.setdefault(_stream(doc_id), []).append((doc_id, nt + eos))
+        by_stream.setdefault(_stream(doc_id), []).append((doc_id, nt + 1))
     for stream, docs in by_stream.items():
         off = 0
         for doc_id, n in sorted(docs):
@@ -95,14 +94,6 @@ def test_sequences_full_except_stream_tail(packed):
             assert 0 < n <= SEQ_LEN
         else:
             assert n == SEQ_LEN, sid
-
-
-def test_no_eos_variant(docs):
-    got = shaping.pack_sequences(
-        docs, seq_len=SEQ_LEN, n_streams=N_STREAMS, add_eos=False
-    ).collect()
-    total = sum(r["doc_to"] - r["doc_from"] for r in got)
-    assert total == sum(n for _, n in DOCS)
 
 
 def test_exchange_only_on_stream(docs):

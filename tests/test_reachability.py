@@ -189,3 +189,60 @@ def test_accepted_doc_results_are_built_only_by_merge_parts():
                     sites.append(f"{path.relative_to(ROOT).as_posix()}:"
                                  f"{getattr(top, 'name', n.lineno)}")
     assert sites == ["wordscape_spark/core/classify.py:merge_parts"], sites
+
+
+OPTION_DIRS = ("operators", "sources", "plans", "streaming")
+
+
+def _params(fn):
+    a = fn.args
+    return [*a.posonlyargs, *a.args, *a.kwonlyargs]
+
+
+def test_every_bool_option_is_passed_by_a_program_caller():
+    """A ``bool`` parameter of a function in ``operators/``, ``sources/``,
+    ``plans/`` or ``streaming/`` selects between code paths; one that no
+    program caller passes selects a path only tests run.  A call passes a
+    parameter by keyword or by position; an argument that merely forwards
+    the calling function's own parameter counts only when that parameter
+    is itself passed."""
+    positions = defaultdict(dict)  # function name -> {param: index}
+    calls = []  # (callee, position, keyword, forwarded (caller, param) or None)
+    options = []
+    for path, tree in _trees().items():
+        scanned = PKG in path.parents and path.relative_to(PKG).parts[0] in OPTION_DIRS
+
+        def visit(node, fn):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for i, p in enumerate(_params(node)):
+                    positions[node.name].setdefault(p.arg, i)
+                    if scanned and getattr(p.annotation, "id", None) == "bool":
+                        options.append((node.name, p.arg, f"{path.relative_to(ROOT)}:{node.lineno}"))
+                fn = node
+            elif isinstance(node, ast.Call):
+                callee = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                own = {p.arg for p in _params(fn)} if fn else set()
+                args = [(i, None, a) for i, a in enumerate(node.args)]
+                args += [(None, k.arg, k.value) for k in node.keywords if k.arg]
+                for i, name, value in args:
+                    fwd = value.id if isinstance(value, ast.Name) and value.id in own else None
+                    calls.append((callee, i, name, (fn.name, fwd) if fwd else None))
+            for child in ast.iter_child_nodes(node):
+                visit(child, fn)
+
+        visit(tree, None)
+    passed: set = set()
+    grew = True
+    while grew:
+        grew = False
+        for callee, i, name, fwd in calls:
+            params = positions.get(callee, {})
+            param = name if name is not None else next(
+                (p for p, j in params.items() if j == i), None)
+            if param is None or (callee, param) in passed:
+                continue
+            if fwd is None or fwd in passed:
+                passed.add((callee, param))
+                grew = True
+    unpassed = sorted(f"{where} {fn}({p}=)" for fn, p, where in options if (fn, p) not in passed)
+    assert not unpassed, "no program caller passes these options; delete the path they select:\n" + "\n".join(unpassed)

@@ -124,22 +124,6 @@ def test_gate_keeps_only_allowed(urls_df, rules_df):
     assert kept == {u for u in URLS if _py_allowed(u)}
 
 
-def test_shuffle_path_agrees_with_broadcast_path(urls_df, rules_df):
-    a = {
-        (r["url"], r["allowed"])
-        for r in robots.robots_verdicts(
-            urls_df, rules_df, broadcast_rules=True
-        ).collect()
-    }
-    b = {
-        (r["url"], r["allowed"])
-        for r in robots.robots_verdicts(
-            urls_df, rules_df, broadcast_rules=False
-        ).collect()
-    }
-    assert a == b
-
-
 def test_broadcast_plan_never_shuffles_urls(urls_df, rules_df):
     plan = (
         robots.robots_verdicts(urls_df, rules_df)

@@ -26,10 +26,11 @@ class ExtractConfig:
     # ---- scale plumbing (ours) ----
     # documents with more spans than this take the salted (chunked) path.
     # Measured tradeoff: the chunk/merge machinery costs ~6× the raw classify
-    # time in extra Arrow/shuffle passes, and classification runs ~2k
-    # spans/ms-core — so docs under ~150k spans are cheaper to classify in
-    # place (a ≤2s task, no visible stall), while true outliers above it
-    # would straggle a task for many seconds and win from chunking.
+    # time in extra Arrow/shuffle passes, and classification runs ~75-85
+    # spans/ms-core (classify_document over the 2,000-doc sf0.01 table) —
+    # so docs under ~150k spans are cheaper to classify in place (a ≤2s
+    # task, no visible stall), while true outliers above it would
+    # straggle a task for many seconds and win from chunking.
     salt_threshold: int = 150_000
     # target spans per salted chunk
     salt_chunk_spans: int = 8_000

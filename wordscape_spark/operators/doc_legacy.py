@@ -482,31 +482,11 @@ def parse_doc_bytes(data: bytes) -> list[dict]:
     with REAL font signals from the CHPX runs AND real paragraph style
     names from the PAPX→STSH chain (r6) — builtin-styled Word-97 headings
     classify via the C8 name path; page breaks as ``pb`` spans."""
-    rows = []
-    par = 0
-    for item in extract_doc_paragraph_runs(data):
-        if item is None:
-            rows.append(
-                {"kind": sig.PAGE_BREAK, "text": None, "media_ref": None}
-            )
-            continue
-        text, bold, size, style = item
-        rows.append(
-            {
-                "kind": sig.encode_run(
-                    par=par,
-                    style=style,
-                    size=sig.FONT_UNKNOWN if size is None else size,
-                    bold=bold,
-                ),
-                "text": text,
-                "media_ref": None,
-            }
-        )
-        par += 1
-    return [
-        {**r, "offset": i} for i, r in enumerate(rows)
-    ]
+    return sig.item_spans(
+        sig.PAGE_BREAK if it is None else
+        (it[0], it[3], sig.FONT_UNKNOWN if it[2] is None else it[2], it[1])
+        for it in extract_doc_paragraph_runs(data)
+    )
 
 
 def doc_to_spans(df: DataFrame) -> DataFrame:

@@ -199,7 +199,7 @@ def parse_odt_bytes(data: bytes) -> list[dict]:
     if office_text is None:
         raise ValueError("no office:text body")
 
-    items: list[tuple] = []
+    items: list = []
 
     def handle_paragraph(p: ET.Element) -> None:
         ref = p.get(_A_STYLE_NAME)
@@ -229,12 +229,11 @@ def parse_odt_bytes(data: bytes) -> list[dict]:
             bold = s_bold if s_bold is not None else bold
 
         if brk:
-            items.append(("pb",))
+            items.append(sig.PAGE_BREAK)
         if not (carrier and not text and not figs):
             if text or not figs:
                 items.append(
                     (
-                        "par",
                         text,
                         style_name,
                         size if size is not None else _DEFAULT_PT,
@@ -252,29 +251,7 @@ def parse_odt_bytes(data: bytes) -> list[dict]:
                 walk_body(child)
 
     walk_body(office_text)
-
-    out: list[dict] = []
-    par = 0
-    for offset, it in enumerate(items):
-        if it[0] == "par":
-            _, text, style, size, bold = it
-            kind = sig.encode_run(par=par, style=style, size=size, bold=bold)
-            par += 1
-            out.append(
-                {"kind": kind, "text": text, "media_ref": None,
-                 "offset": offset}
-            )
-        elif it[0] == "fig":
-            out.append(
-                {"kind": "fig", "text": "", "media_ref": it[1],
-                 "offset": offset}
-            )
-        else:
-            out.append(
-                {"kind": sig.PAGE_BREAK, "text": None, "media_ref": None,
-                 "offset": offset}
-            )
-    return out
+    return sig.item_spans(items)
 
 
 def odt_to_spans(df: DataFrame) -> DataFrame:

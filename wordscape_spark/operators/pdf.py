@@ -583,36 +583,30 @@ def _font_table(pdf: PdfFile, res: dict) -> dict[str, tuple[bool, str]]:
     return out
 
 
-def parse_pdf_bytes(
-    data: bytes, reading_order: str = "layout"
-) -> list[dict]:
+def parse_pdf_bytes(data: bytes) -> list[dict]:
     """One PDF byte string → ordered span rows in the interleaved grammar:
     each text-show op is one body paragraph (font size from Tf, bold from
     the active font), each /Image Do is a ``fig`` span carrying the
     XObject's /Name as media_ref, page boundaries are ``pb`` spans.
 
-    ``reading_order`` is the LAYOUT-PARSE switch (north rule "PDF/layout
-    parse"):
-
-    * ``"layout"`` (default): the interpreter tracks geometry — the text
-      matrix through ``Tm``/``Td``/``TD``/``T*`` (+ leading via ``TL``,
-      ``'``/``"`` implying a line advance) and the CTM through
-      ``cm``/``q``/``Q`` (translation × scale composition; rotation out
-      of scope) — and each page's items are re-sorted top-to-bottom,
-      left-to-right by anchor (text: line-matrix origin; image: TOP edge,
-      ``f + d`` of the placing CTM).  Content streams that emit ops out
-      of document order (multi-column generators, object-reuse writers,
-      pdfgen's ``permute`` mode) still yield reading order.
-    * ``"stream"``: content-stream emission order, geometry ignored.
+    Spans follow LAYOUT reading order (north rule "PDF/layout parse"):
+    the interpreter tracks geometry — the text matrix through
+    ``Tm``/``Td``/``TD``/``T*`` (+ leading via ``TL``, ``'``/``"``
+    implying a line advance) and the CTM through ``cm``/``q``/``Q``
+    (translation × scale composition; rotation out of scope) — and each
+    page's items are re-sorted top-to-bottom, left-to-right by anchor
+    (text: line-matrix origin; image: TOP edge, ``f + d`` of the placing
+    CTM).  Content streams that emit ops out of document order
+    (multi-column generators, object-reuse writers, pdfgen's ``permute``
+    mode) still yield reading order; paragraph numbers and offsets follow
+    that order.
     """
     pdf = PdfFile(data)
-    rows: list[dict] = []
+    items: list = []
     first_page = True
     for page, res in _iter_pages(pdf):
         if not first_page:
-            rows.append(
-                {"kind": sig.PAGE_BREAK, "text": None, "media_ref": None}
-            )
+            items.append(sig.PAGE_BREAK)
         first_page = False
         fonts = _font_table(pdf, res)
         xobjects = pdf.resolve(res.get("XObject")) or {}
@@ -631,25 +625,17 @@ def parse_pdf_bytes(
         # graphics state: CTM as (a, d, e, f) — scale + translation
         ctm = (1.0, 1.0, 0.0, 0.0)
         gs_stack: list[tuple[float, float, float, float]] = []
-        #: (sort_y, sort_x, emit_idx, row) for THIS page
-        page_items: list[tuple[float, float, int, dict]] = []
+        #: (sort_y, sort_x, emit_idx, item) for THIS page
+        page_items: list[tuple[float, float, int, tuple]] = []
 
         def show(raw) -> None:
             if isinstance(raw, list):  # TJ: strings interleave kerning nums
                 raw = b"".join(x for x in raw if isinstance(x, bytes))
             if not isinstance(raw, bytes):
                 return
+            text = raw.decode(cur_codec, errors="replace")
             page_items.append(
-                (
-                    tm_y,
-                    tm_x,
-                    len(page_items),
-                    {
-                        "kind": ("r", cur_size, cur_bold),
-                        "text": raw.decode(cur_codec, errors="replace"),
-                        "media_ref": None,
-                    },
-                )
+                (tm_y, tm_x, len(page_items), (text, "", cur_size, cur_bold))
             )
 
         def fnum(v) -> float:
@@ -709,26 +695,13 @@ def parse_pdf_bytes(
                             ctm[3] + ctm[1],  # top edge: f + d (height)
                             ctm[2],
                             len(page_items),
-                            {"kind": "fig", "text": "",
-                             "media_ref": ref
-                             if isinstance(ref, str) else ""},
+                            ("fig", ref if isinstance(ref, str) else ""),
                         )
                     )
             stack.clear()
-        if reading_order == "layout":
-            page_items.sort(key=lambda t: (-t[0], t[1], t[2]))
-        rows.extend(r for *_, r in page_items)
-    # paragraph numbers + offsets follow FINAL (reading) order
-    out = []
-    par = 0
-    for i, r in enumerate(rows):
-        kind = r["kind"]
-        if isinstance(kind, tuple):
-            _, size, bold = kind
-            kind = sig.encode_run(par=par, style="", size=size, bold=bold)
-            par += 1
-        out.append({**r, "kind": kind, "offset": i})
-    return out
+        page_items.sort(key=lambda t: (-t[0], t[1], t[2]))
+        items.extend(it for *_, it in page_items)
+    return sig.item_spans(items)
 
 
 def pdf_to_spans(df: DataFrame) -> DataFrame:

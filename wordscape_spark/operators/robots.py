@@ -16,15 +16,12 @@ Semantics implemented (RFC 9309 §2):
   allow and a disallow tie, allow wins.  No matching rule → allowed.
 
 Scale shape: rule prep shuffles only the rules table (≤ a few rules per
-host).  The verdict path folds each host's group into one row
-(``collect_list`` bounded by ``max_rules_per_host``), broadcasts the
-folded table, and evaluates longest-match as a PER-ROW expression
-(``filter`` + ``array_max`` over the rule array — struct comparison is
-lexicographic, so ``(len, is_allow)`` encodes the RFC precedence) — the
-URL corpus itself never shuffles.  When the folded table outgrows a
-broadcast (billions of hosts), pass ``broadcast_rules=False`` for a
-host-keyed shuffle join instead (AQE skew-splits mega-hosts); the
-per-row verdict expression is unchanged.
+host).  The verdict path folds each host's group into one row (a
+``collect_list``, so the folded row grows with the host's rule count),
+broadcasts the folded table, and evaluates longest-match as a PER-ROW
+expression (``filter`` + ``array_max`` over the rule array — struct
+comparison is lexicographic, so ``(len, is_allow)`` encodes the RFC
+precedence) — the URL corpus itself never shuffles.
 
 Beyond-reference operator (acquisition battery): the reference fetches
 CommonCrawl-hosted bodies and never re-crawls origins, so it has no
@@ -83,33 +80,26 @@ def path_expr(url_col: str) -> str:
     )
 
 
-def select_agent_group(
-    rules: DataFrame, agent: str = DEFAULT_AGENT, broadcast_hosts: bool = False
-) -> DataFrame:
+def select_agent_group(rules: DataFrame, agent: str = DEFAULT_AGENT) -> DataFrame:
     """RFC 9309 §2.2.1 group selection over a (host, agent, rule,
     pattern) table: hosts publishing a group for ``agent`` contribute
     ONLY those lines; every other host contributes its ``*`` group.
-    Empty patterns impose no restriction and are dropped here.
-    Shuffles at most the rules table (anti-join keyed on host);
-    ``broadcast_hosts=True`` broadcasts the specific-group host set so
-    even that shuffle disappears — valid whenever the folded rule table
-    itself is broadcastable (the ``robots_verdicts`` broadcast path)."""
+    Empty patterns impose no restriction and are dropped here.  The
+    specific-group host set is broadcast into the anti-join, so the
+    rules table does not shuffle for it either — it is never larger than
+    the folded rule table ``robots_verdicts`` broadcasts."""
     rules = rules.filter(F.col("pattern") != "")
     specific = rules.filter(F.lower(F.col("agent")) == agent.lower())
-    hosts = specific.select("host").distinct()
-    if broadcast_hosts:
-        hosts = F.broadcast(hosts)
+    hosts = F.broadcast(specific.select("host").distinct())
     fallback = rules.filter(F.col("agent") == "*").join(hosts, "host", "left_anti")
     return specific.unionByName(fallback)
 
 
-def _folded_group(
-    rules: DataFrame, agent: str, broadcast_hosts: bool = False
-) -> DataFrame:
+def _folded_group(rules: DataFrame, agent: str) -> DataFrame:
     """One row per host: the selected group as an array of
     (match_len, is_allow, regex) structs — the broadcastable form the
     per-row verdict folds over."""
-    g = select_agent_group(rules, agent, broadcast_hosts)
+    g = select_agent_group(rules, agent)
     return (
         g.select(
             "host",
@@ -140,16 +130,11 @@ def robots_verdicts(
     rules: DataFrame,
     url_col: str = "url",
     agent: str = DEFAULT_AGENT,
-    broadcast_rules: bool = True,
 ) -> DataFrame:
-    """The input plus an ``allowed`` column.  Broadcast path: the URL
-    corpus never shuffles (folded rules ride in by host-keyed broadcast
-    join and the verdict is per-row).  Shuffle path
-    (``broadcast_rules=False``): both sides key on host — for when the
-    folded rule table outgrows a broadcast."""
-    folded = _folded_group(rules, agent, broadcast_hosts=broadcast_rules)
-    if broadcast_rules:
-        folded = F.broadcast(folded)
+    """The input plus an ``allowed`` column.  The URL corpus never
+    shuffles: the folded rules ride in by host-keyed broadcast join and
+    the verdict is per-row."""
+    folded = F.broadcast(_folded_group(rules, agent))
     with_host = urls.withColumn("_robots_host", F.expr(host_expr(url_col)))
     joined = with_host.join(
         folded, with_host["_robots_host"] == folded["host"], "left"
@@ -168,9 +153,8 @@ def robots_gate(
     rules: DataFrame,
     url_col: str = "url",
     agent: str = DEFAULT_AGENT,
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """URLs the crawler may fetch — the compliance filter itself."""
-    return robots_verdicts(urls, rules, url_col, agent, broadcast_rules).filter(
+    return robots_verdicts(urls, rules, url_col, agent).filter(
         F.col("allowed")
     ).drop("allowed")

@@ -81,7 +81,7 @@ def parse_rtf_bytes(data: bytes) -> list[dict]:
     stack: list[dict] = []
 
     styles: dict[int, str] = {}
-    items: list[tuple] = []
+    items: list = []  # sig.item_spans items; paragraphs unresolved
     cur_text: list[str] = []
     cur_props: tuple | None = None
     par_open = False
@@ -90,8 +90,8 @@ def parse_rtf_bytes(data: bytes) -> list[dict]:
 
     def flush_par() -> None:
         nonlocal cur_props, par_open
-        props = cur_props or (state["bold"], state["fs"], state["istd"])
-        items.append(("par", "".join(cur_text), *props))
+        props = cur_props or (state["istd"], state["fs"], state["bold"])
+        items.append(("".join(cur_text), *props))
         cur_text.clear()
         cur_props = None
         par_open = False
@@ -113,7 +113,7 @@ def parse_rtf_bytes(data: bytes) -> list[dict]:
             return  # picture binary/hex payload
         par_open = True
         if cur_props is None:
-            cur_props = (state["bold"], state["fs"], state["istd"])
+            cur_props = (state["istd"], state["fs"], state["bold"])
         cur_text.append(ch)
 
     def handle_word(word: str, param: int | None) -> None:
@@ -175,7 +175,7 @@ def parse_rtf_bytes(data: bytes) -> list[dict]:
             par_open = True
             cur_props = None
         elif word == "page":
-            items.append(("pb",))
+            items.append(sig.PAGE_BREAK)
         elif word == "plain":
             state["bold"] = False
             state["fs"] = None
@@ -283,32 +283,12 @@ def parse_rtf_bytes(data: bytes) -> list[dict]:
             i += 1
     if cur_text:
         flush_par()
-
-    out: list[dict] = []
-    par = 0
-    for offset, it in enumerate(items):
-        if it[0] == "par":
-            _, text, bold, fs, istd = it
-            size = (fs / 2.0) if fs else _DEFAULT_PT
-            kind = sig.encode_run(
-                par=par, style=styles.get(istd, ""), size=size, bold=bold
-            )
-            par += 1
-            out.append(
-                {"kind": kind, "text": text, "media_ref": None,
-                 "offset": offset}
-            )
-        elif it[0] == "fig":
-            out.append(
-                {"kind": "fig", "text": "", "media_ref": it[1],
-                 "offset": offset}
-            )
-        else:
-            out.append(
-                {"kind": sig.PAGE_BREAK, "text": None, "media_ref": None,
-                 "offset": offset}
-            )
-    return out
+    # a paragraph is (text, istd, fs, bold) until the stylesheet is read
+    return sig.item_spans(
+        (it[0], styles.get(it[1], ""), it[2] / 2.0 if it[2] else _DEFAULT_PT,
+         it[3]) if len(it) == 4 else it
+        for it in items
+    )
 
 
 def rtf_to_spans(df: DataFrame) -> DataFrame:

@@ -151,15 +151,14 @@ def pack_sequences(
     tokens_col: str = "n_tokens",
     id_col: str = "doc_id",
     n_streams: int | None = None,
-    add_eos: bool = True,
 ) -> DataFrame:
     """Concat-and-slice sequence packing — the GPT-pretraining step that
-    concatenates every document's tokens (plus one EOS separator when
-    ``add_eos``) into a stream and slices it into fixed ``seq_len``
-    training sequences, documents splitting across sequence boundaries
-    (the standard causal-LM loader geometry; contrast ``shard_pack``,
-    which never splits a document, and ``chunk_documents``, which
-    windows each document independently).
+    concatenates every document's tokens (plus one EOS separator) into a
+    stream and slices it into fixed ``seq_len`` training sequences,
+    documents splitting across sequence boundaries (the standard causal-LM
+    loader geometry; contrast ``shard_pack``, which never splits a
+    document, and ``chunk_documents``, which windows each document
+    independently).
 
     Returns one row per (document × sequence it overlaps):
     ``(seq_id, doc_id, doc_from, doc_to, seq_off)`` — tokens
@@ -181,7 +180,6 @@ def pack_sequences(
         raise ValueError("seq_len must be positive")
     if n_streams is None:
         n_streams = shard_pack_streams(df.count())
-    eos = 1 if add_eos else 0
     w = (
         Window.partitionBy("_ps_stream")
         .orderBy("doc_id")
@@ -191,9 +189,9 @@ def pack_sequences(
     return (
         df.select(
             F.col(id_col).alias("doc_id"),
-            (F.col(tokens_col).cast("long") + F.lit(eos)).alias("_ps_n"),
+            (F.col(tokens_col).cast("long") + F.lit(1)).alias("_ps_n"),
         )
-        .filter(F.col("_ps_n") > eos)  # empty docs contribute nothing
+        .filter(F.col("_ps_n") > 1)  # empty docs contribute nothing
         .withColumn(
             "_ps_stream", F.expr(stream_expr("doc_id", n_streams, "spark"))
         )

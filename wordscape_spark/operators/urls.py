@@ -34,49 +34,43 @@ def dedup_by(df: DataFrame, *cols: str) -> DataFrame:
 
 
 def assign_doc_ids(df: DataFrame, source_col: str = "source",
-                   order_col: str = "url_hash",
-                   scalable: bool = False) -> DataFrame:
+                   order_col: str = "url_hash") -> DataFrame:
     """A10: per-source running index, zero-padded (preprocess_cc_urls.py:128-131).
 
-    ``scalable=False``: one window per source — correct but each source
-    funnels through a single reducer (fine while sources are shard-sized).
-
-    ``scalable=True`` (the 10^12-row path): the hex ``order_col`` is range-
-    bucketed by its first two characters, row numbers are computed per
-    (source, bucket) — 256× the reducer parallelism — and converted to the
-    identical global rank by adding per-bucket offsets (a tiny count
-    aggregate, cumulated over the 256-row-per-source frame and broadcast
-    back).  Output is equal to the window variant because the bucket is a
-    prefix of the ordering key, so (bucket, key) order == key order;
-    equality is pinned by a test.
+    A single window per source would funnel each source through one
+    reducer.  Instead the hex ``order_col`` is range-bucketed by its first
+    two characters, row numbers are computed per (source, bucket) — 256×
+    the reducer parallelism — and converted to the global rank by adding
+    per-bucket offsets (a tiny count aggregate, cumulated over the
+    256-row-per-source frame and broadcast back).  The bucket is a prefix
+    of the ordering key, so (bucket, key) order == key order.  The offsets
+    join null-safe on both keys: a NULL source or ``order_col`` (a NULL
+    url) keeps its row, and NULL keys rank first, as in an ascending
+    window over ``order_col``.
     """
     from pyspark.sql.window import Window
 
-    if not scalable:
-        w = Window.partitionBy(source_col).orderBy(order_col)
-        return df.withColumn(
-            "assigned_doc_id",
-            F.concat_ws(
-                "-",
-                F.col(source_col),
-                F.lpad(F.row_number().over(w).cast("string"), 9, "0"),
-            ),
-        )
-
-    bucket = F.substring(F.col(order_col), 1, 2)
-    df = df.withColumn("_bkt", bucket)
-    counts = df.groupBy(source_col, "_bkt").agg(F.count("*").alias("_n"))
+    df = df.withColumn("_bkt", F.substring(F.col(order_col), 1, 2))
     w_off = (
         Window.partitionBy(source_col)
         .orderBy("_bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.withColumn(
-        "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))
-    ).drop("_n")
+    offsets = (
+        df.groupBy(source_col, "_bkt").count()
+        .select(
+            F.col(source_col).alias("_off_src"),
+            F.col("_bkt").alias("_off_bkt"),
+            F.coalesce(F.sum("count").over(w_off), F.lit(0)).alias("_off"),
+        )
+    )
     w_local = Window.partitionBy(source_col, "_bkt").orderBy(order_col)
     return (
-        df.join(F.broadcast(offsets), [source_col, "_bkt"])
+        df.join(
+            F.broadcast(offsets),
+            F.col(source_col).eqNullSafe(F.col("_off_src"))
+            & F.col("_bkt").eqNullSafe(F.col("_off_bkt")),
+        )
         .withColumn(
             "assigned_doc_id",
             F.concat_ws(
@@ -90,7 +84,7 @@ def assign_doc_ids(df: DataFrame, source_col: str = "source",
                 ),
             ),
         )
-        .drop("_bkt", "_off")
+        .drop("_bkt", "_off_src", "_off_bkt", "_off")
     )
 
 
@@ -147,14 +141,13 @@ def clean_urls(df: DataFrame) -> DataFrame:
 # (RefinedWeb, Penedo et al. 2023 §3.1 + App. G.1): an exact domain
 # blocklist (UT1-style) plus a weighted soft-word score over the whole
 # URL.  Both are per-row expressions — the blocklist compiles to an In
-# predicate (or a broadcast semi-join for big lists), the score to a
-# CASE sum — so the operator is zero-Exchange at any corpus size.
+# predicate, the score to a CASE sum — so the operator is zero-Exchange
+# at any corpus size.
 
 DOMAIN_PATTERN = r"^(?:https?://)?(?:www\.)?([^/:?#]+)"
 
 # mechanism-demonstrating stand-ins for the UT1 adult/spam lists (the
-# real lists are ~4M domains — see url_quality_filter(blocklist_df=...)
-# for the broadcast-join path they'd take)
+# real lists are ~4M domains)
 DEFAULT_BLOCKLIST: tuple[str, ...] = (
     "casino-winners.example", "cheap-pills.example",
     "adult-content.example", "spam-farm.example",
@@ -177,7 +170,6 @@ def url_quality_filter(
     blocklist: tuple[str, ...] = DEFAULT_BLOCKLIST,
     words: tuple[tuple[str, float], ...] = DEFAULT_URL_WORDS,
     score_cutoff: float = DEFAULT_SCORE_CUTOFF,
-    blocklist_df: DataFrame | None = None,
 ) -> DataFrame:
     """(urls) → (url, domain, blocked_domain, url_score, url_pass).
 
@@ -188,9 +180,7 @@ def url_quality_filter(
     < ``score_cutoff``.
 
     Scale shape: with the in-literal ``blocklist`` the whole operator is
-    one projection (zero Exchange, pinned in test).  For a real UT1-size
-    list pass ``blocklist_df`` (one ``domain`` column): it is broadcast
-    and applied as a left-semi mark — still no corpus shuffle.
+    one projection (zero Exchange, pinned in test).
     """
     lower_url = F.lower(F.coalesce(F.col(url_col), F.lit("")))
     domain = F.regexp_extract(lower_url, DOMAIN_PATTERN, 1)
@@ -199,25 +189,20 @@ def url_quality_filter(
         term = F.when(F.contains(lower_url, F.lit(word)),
                       F.lit(float(weight))).otherwise(F.lit(0.0))
         score = term if score is None else score + term
-    out = df.withColumn("domain", domain).withColumn(
-        "url_score", F.round(score if score is not None else F.lit(0.0), 6)
-    )
-    if blocklist_df is not None:
-        hits = F.broadcast(
-            blocklist_df.select(F.col("domain")).distinct()
-            .withColumn("_blocked", F.lit(True))
+    return (
+        df.withColumn("domain", domain)
+        .withColumn(
+            "url_score",
+            F.round(score if score is not None else F.lit(0.0), 6),
         )
-        out = out.join(hits, "domain", "left").withColumn(
-            "blocked_domain", F.coalesce(F.col("_blocked"), F.lit(False))
-        ).drop("_blocked")
-    else:
-        out = out.withColumn(
+        .withColumn(
             "blocked_domain",
             F.col("domain").isin(*blocklist) if blocklist else F.lit(False),
         )
-    return out.withColumn(
-        "url_pass",
-        ~F.col("blocked_domain") & (F.col("url_score") < score_cutoff),
+        .withColumn(
+            "url_pass",
+            ~F.col("blocked_domain") & (F.col("url_score") < score_cutoff),
+        )
     )
 
 

@@ -280,8 +280,8 @@ def _page_ops(
     explicit position (Td for text, cm for images) at a strictly
     descending y, so ``permute=True`` can emit the ops in REVERSED order
     — the rendered page is identical, but only a geometry-tracking
-    reader (operators/pdf.py ``reading_order="layout"``) recovers
-    document order from the stream."""
+    reader (operators/pdf.py's layout reading order) recovers document
+    order from the stream."""
     ops = []
     y = 760.0
     fig_i = 0

@@ -207,6 +207,30 @@ def body_items(spans: list[dict], par: Callable[[RunSignal], Any]) -> list:
     return items
 
 
+def item_spans(items) -> list[dict]:
+    """The binary readers' twin of ``body_items``: one document's items in
+    reading order → span rows.  An item is ``PAGE_BREAK`` (a ``pb`` span),
+    a 2-tuple ``("fig", media_ref)`` (a ``fig`` span) or a 4-tuple
+    ``(text, style, size, bold)`` (a body paragraph, numbered ``p=0,1,…``
+    in order).  The tuple's length, not its first field, marks a figure,
+    so a paragraph whose text is ``fig`` stays a paragraph.  ``offset``
+    numbers every span."""
+    out = []
+    par = 0
+    for offset, it in enumerate(items):
+        if it == PAGE_BREAK:
+            span = {"kind": PAGE_BREAK, "text": None, "media_ref": None}
+        elif len(it) == 2:
+            span = {"kind": "fig", "text": "", "media_ref": it[1]}
+        else:
+            text, style, size, bold = it
+            kind = encode_run(par=par, style=style, size=size, bold=bold)
+            span = {"kind": kind, "text": text, "media_ref": None}
+            par += 1
+        out.append({**span, "offset": offset})
+    return out
+
+
 def parse_cell(kind: str, text: str) -> CellSignal:
     # fast path: canonical encode_cell field order (no pt field)
     parts = kind.split(";")

@@ -19,18 +19,15 @@ thousands of files give thousands of independent tasks with no shuffle at
 all until stage-A dedup.  The parse is record-streaming per file; only one
 file's bytes are resident per task at a time.
 
-WARC parsing prefers ``warcio`` when installed (the reference's parser,
-cc_url_process.py:17,174-183); the sandbox has no warcio, so a
-standards-faithful fallback reads the WARC/1.x framing directly (version
-line + headers, Content-Length payload, CRLF CRLF separators, multi-member
-gzip per the Common Crawl layout).  Both paths produce identical rows —
-the fallback is what CI pins; the warcio path is exercised wherever the
-dependency exists.
+WARC parsing is one stdlib walk over the WARC/1.x framing (version line +
+headers, Content-Length payload, CRLF CRLF separators, multi-member gzip
+per the Common Crawl layout) in place of the reference's ``warcio``
+iterator (cc_url_process.py:17,174-183), so the source needs no
+dependency beyond pyspark.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import re
 import zlib
@@ -111,18 +108,6 @@ def iter_warc_records(raw: bytes) -> Iterator[tuple[dict[str, str], bytes]]:
         pos = payload_start + length
 
 
-def _iter_records_warcio(raw: bytes) -> Iterator[tuple[dict[str, str], bytes]]:
-    """warcio-backed record walk, normalized to the fallback's contract."""
-    from warcio.archiveiterator import ArchiveIterator
-
-    for record in ArchiveIterator(io.BytesIO(raw)):
-        headers = {
-            k.lower(): v for k, v in record.rec_headers.headers
-        }
-        headers.setdefault("warc-type", record.rec_type or "")
-        yield headers, record.content_stream().read()
-
-
 def find_matching_strings(value, pattern: re.Pattern) -> list[str]:
     """Depth-first collection of pattern-matching strings inside a parsed
     JSON value — the reference's ``find_matching_values``
@@ -148,15 +133,7 @@ def find_matching_strings(value, pattern: re.Pattern) -> list[str]:
 def _wat_file_rows(
     path: str, content: bytes, pattern: re.Pattern
 ) -> Iterator[tuple[str, str, str]]:
-    try:
-        # probe eagerly: _iter_records_warcio is a generator, so its body
-        # (and the warcio import) wouldn't run until first next()
-        import warcio  # noqa: F401
-
-        records = _iter_records_warcio(content)
-    except ImportError:
-        records = iter_warc_records(content)
-    for headers, payload in records:
+    for headers, payload in iter_warc_records(content):
         if headers.get("warc-type") != "metadata":
             continue  # request/response records also carry links: skip
         try:
